@@ -41,8 +41,8 @@ prunes bulk segments at the parquet row-group level (op is constant
 BM25 is incremental BY ADDITIVITY: N, sum_dl, df(term), tf are all
 per-doc sums, so an index built from ANY batch split scores
 bit-identically to the one-shot batch scorer (queries.py
-_bm25_scored, whose fixed-point micro-nat discipline topk() mirrors
-expression-for-expression). That equivalence is the oracle:
+_bm25_scored_sparksql, whose fixed-point micro-nat discipline topk()
+mirrors expression-for-expression). That equivalence is the oracle:
 bm25_incremental_topk ingests in 3 batches and must hash-match
 text_bm25_topk's one-shot DuckDB SQL.
 
@@ -57,8 +57,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.windows import bounded_rank_window
 
 from .dedup_index import _AppendOnlyIndex
 from .hashing import analyze, h32, h32_py
@@ -262,17 +260,16 @@ class BM25Index(_AppendOnlyIndex):
 
     def topk(self, terms: tuple[str, ...], k: int = 10) -> DataFrame:
         """BM25 top-k over the held corpus for ``terms`` — the same
-        fixed-point micro-nat arithmetic as queries._bm25_scored
+        fixed-point micro-nat arithmetic as queries._bm25_scored_sparksql
         (floor-snapped idf per term, bigint per-term contributions),
         so results are bit-identical to one-shot scoring of the same
         docs. Output: (doc_id, lang, source, score_micro, rank).
 
-        Construction: ONE spark.sql over memoized parts views (the
-        Column construction was 819 py4j round-trips per call — the
-        dominant cost of every serving/hybrid BM25 leg; guide §7.3).
-        The Column twin ``_topk_df`` stays as the parity reference
-        (tests/test_topk_sql_parity.py: sameResult + byte-equal
-        rows, CDC and no-CDC)."""
+        Construction: ONE spark.sql over memoized parts views (a
+        Column-API construction was 819 py4j round-trips per call —
+        the dominant cost of every serving/hybrid BM25 leg; guide
+        §7.3). tests/test_topk_sql_parity.py pins the rows against
+        the one-shot DuckDB scorer, CDC and no-CDC."""
         if self.keys is None or not terms:
             # empty index, or a query whose every term was filtered
             # away upstream (stopword removal): a typed empty result,
@@ -285,11 +282,23 @@ class BM25Index(_AppendOnlyIndex):
         return self.spark.sql(self._topk_sql(terms, k))
 
     def _topk_sql(self, terms: tuple[str, ...], k: int) -> str:
-        """The whole topk plan as ONE Spark SQL text — expression-
-        for-expression the Column form (_topk_df); shared subtrees
+        """The whole topk plan as ONE Spark SQL text; shared subtrees
         expanded textually, never as CTEs (see _AppendOnlyIndex
         one-SQL notes). Terms ride through the _spark_sql_str escaper
-        so arbitrary query text can never break out of the literal."""
+        so arbitrary query text can never break out of the literal.
+
+        Per-term document frequency comes straight off the pruned
+        slice: a doc holds at most one live posting per term (ingest
+        groups per (doc, term); the CDC fold keeps one version), so
+        count(slice rows with term=t AND tf>0) is the df. The dfs ride
+        the SAME one-row broadcast as the corpus stats — a map-side-
+        combined aggregate, NOT an unpartitioned window (that funnels
+        every candidate through ONE partition, a serial stage whenever
+        a term is near-stopword-frequent, guide §2.5) and NOT an
+        aggregate over the candidate pivot (a second evaluation of the
+        GROUP BY = the slice shuffled twice per query). A term absent
+        from the whole held corpus has no df row and scores 0, like
+        the one-shot scorer's sum over no hits."""
         from ..operators.filters import _spark_sql_str as _sq
         from ..queries import bm25_term_micro
 
@@ -303,9 +312,9 @@ class BM25Index(_AppendOnlyIndex):
             f"AND term IN ({in_terms}))"
         )
         if self._has_cdc:
-            # CDC fold applied AFTER term pruning, exactly like the
-            # Column path: the anti/semi overlay joins run over the
-            # |terms|-band slice, never the whole postings corpus
+            # CDC fold applied AFTER term pruning: the anti/semi
+            # overlay joins run over the |terms|-band slice, never the
+            # whole postings corpus (same result — the fold is per-row)
             sl = f"({self._cdc_live_sql(sl, kcols)})"
             vsub = f"({self._cdc_live_sql(vview, vcols)})"
         else:
@@ -345,111 +354,3 @@ class BM25Index(_AppendOnlyIndex):
        CAST(ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS INT) AS rank
 FROM (SELECT /*+ BROADCAST(t) */ v.doc_id, v.lang, v.source, t.score_micro
       FROM (SELECT doc_id, lang, source FROM {vsub}) v JOIN {top} t USING (doc_id))"""
-
-    def _topk_df(self, terms: tuple[str, ...], k: int = 10) -> DataFrame:
-        """Column-API twin of _topk_sql (the parity reference)."""
-        # the term expression lives with the one-shot scorer — ONE
-        # tree for the bit-parity the oracle asserts, never two
-        # hand-synchronized copies (import at call time: queries.py
-        # imports this module's sibling packages at build)
-        from ..queries import bm25_term_micro
-
-        keys, vals = self.keys, self.vals
-        if keys is None or not terms:
-            # empty index, or a query whose every term was filtered
-            # away upstream (stopword removal): a typed empty result,
-            # not a Spark analysis crash over zero agg columns
-            return self.spark.createDataFrame(
-                [],
-                "doc_id bigint, lang string, source string, "
-                "score_micro bigint, rank int",
-            )
-        bands = sorted({_band_of(t) for t in terms})
-        sl = keys.filter(
-            F.col("band").isin(bands) & F.col("term").isin(list(terms))
-        )
-        if self._has_cdc:
-            # CDC fold (shared _AppendOnlyIndex overlay machinery),
-            # applied AFTER term pruning: the anti/semi overlay joins
-            # run over the |terms|-band slice, not the whole postings
-            # corpus — same result (the fold is per-row), strictly
-            # cheaper. Skipped entirely on append-only indexes.
-            overlay = self._cdc_overlay(vals)
-            vals = self._cdc_live(vals, overlay)
-            sl = self._cdc_live(sl, overlay)
-        cand = sl.groupBy("doc_id", "dl").agg(
-            *[
-                F.coalesce(
-                    F.max(F.when(F.col("term") == t, F.col("tf"))),
-                    F.lit(0).cast("long"),
-                ).alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-        # per-term document frequency straight off the pruned slice:
-        # a doc holds at most one live posting per term (ingest groups
-        # per (doc, term); the CDC fold keeps one version), so
-        # count(sl rows with term=t AND tf>0) == count(cand rows with
-        # tf_t > 0) — identical df values. The dfs ride the SAME
-        # one-row broadcast as the corpus stats (_bm25_scored's
-        # agg+crossJoin shape): a map-side-combined aggregate, NOT a
-        # W.partitionBy() window (that window funneled every candidate
-        # row through ONE partition — a serial stage whenever a term
-        # is near-stopword-frequent at scale, guide §2.5) and NOT an
-        # agg over cand (a second evaluation of the groupBy pivot =
-        # the slice shuffled twice per query; aggregating the slice
-        # itself is partial-agg + a 1-row merge, no shuffle).
-        dfs = sl.agg(
-            *[
-                F.sum(
-                    ((F.col("term") == t) & (F.col("tf") > 0)).cast(
-                        "long"
-                    )
-                ).alias(f"df{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-        stats = (
-            vals.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("sum_dl"),
-            )
-            .withColumn(
-                "avgdl",
-                F.col("sum_dl").cast("double")
-                / F.col("n_docs").cast("double"),
-            )
-            .crossJoin(dfs)
-        )
-        scored = cand.crossJoin(F.broadcast(stats))
-
-        # a term absent from the whole held corpus has no df row: 0,
-        # like the one-shot scorer's sum over no hits. Single F.expr
-        # parse of the summed per-term contributions (same tree —
-        # bm25_term_micro is the shared text builder).
-        score = F.expr(
-            " + ".join(
-                bm25_term_micro(
-                    f"tf{i}",
-                    f"coalesce(df{i}, CAST(0 AS BIGINT))",
-                    "n_docs",
-                    "dl",
-                    "avgdl",
-                )
-                for i in range(len(terms))
-            )
-        )
-        top = (
-            scored.select("doc_id", score.alias("score_micro"))
-            .filter(F.col("score_micro") > 0)
-            .orderBy(F.col("score_micro").desc(), "doc_id")
-            .limit(k)
-        )
-        w = bounded_rank_window(F.col("score_micro").desc(), "doc_id")
-        return (
-            vals.select("doc_id", "lang", "source")
-            .join(F.broadcast(top), "doc_id")
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .select("doc_id", "lang", "source", "score_micro", "rank")
-        )
-

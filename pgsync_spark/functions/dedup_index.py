@@ -1025,23 +1025,17 @@ class _AppendOnlyIndex:
 
     # -- one-SQL topk plumbing (BM25Index / VectorIndex serving path) --------
     #
-    # The Column-API topk constructions were the single largest
-    # remaining driver cost of the serving paths: every DataFrame op
-    # is an eager py4j round-trip plus a JVM analysis sweep (568
-    # round-trips per VectorIndex.topk, 819 per BM25Index.topk,
-    # cProfiled on this host — guide §7.3). The one-SQL form builds
-    # the whole query as TEXT (zero round-trips) over session temp
-    # views of the parts unions and submits ONE spark.sql. Parity with
-    # the Column twin (_topk_df, kept as the reference and the IVF
-    # subclass path) is pinned by tests/test_topk_sql_parity.py:
-    # optimized-plan sameResult + byte-equal rows, CDC and no-CDC.
+    # topk is built as TEXT over global temp views of the parts
+    # unions and submitted as ONE spark.sql: a Column-API construction
+    # pays an eager py4j round-trip plus a JVM analysis sweep per
+    # DataFrame op (568 round-trips per VectorIndex.topk, 819 per
+    # BM25Index.topk, cProfiled — guide §7.3), the single largest
+    # driver cost of the serving paths. tests/test_topk_sql_parity.py
+    # pins the rows against the DuckDB mirrors, CDC and no-CDC.
     #
-    # Text discipline (learned against sameResult): NO CTEs — a CTE
-    # referenced twice is inlined with alias-Project wrappers that
-    # survive canonicalization, while the Column path's reused plan
-    # objects deduplicate leaf ids with no extra node. Shared
-    # subtrees are expanded textually instead, exactly like the lazy
-    # Column plans duplicate them.
+    # Text discipline: NO CTEs — a CTE referenced twice is inlined
+    # with alias-Project wrappers that stay in the plan. Shared
+    # subtrees are expanded textually instead.
 
     def _global_temp_db(self) -> str:
         try:
@@ -1105,11 +1099,10 @@ class _AppendOnlyIndex:
 
     def _cdc_live_sql(self, frame_sub: str, cols: list[str]) -> str:
         """``_cdc_live(frame, _cdc_overlay(vals))`` as Spark SQL text
-        (same tree — the parity tests pin it). ``frame_sub`` is a
-        parenthesized subquery or view name; ``cols`` its columns.
-        Column order mirrors the Column path exactly: the keyed
-        semi/anti joins put the join key first and unionByName
-        realigns the semi branch to the anti branch's order."""
+        (same result). ``frame_sub`` is a parenthesized subquery or
+        view name; ``cols`` its columns. The id column comes first in
+        both union branches, the order _cdc_live's keyed joins
+        produce."""
         idc = self._ID_COL
         vview, _vcols = self._parts_view("vals")
         ordered = [idc] + [c for c in cols if c != idc]

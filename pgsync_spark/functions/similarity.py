@@ -111,38 +111,12 @@ def _norm_sql(a: str) -> str:
     )
 
 
-def _bruteforce_topk_df(df: DataFrame) -> DataFrame:
-    """Column-API twin of the one-SQL ann_bruteforce_topk (parity
-    reference and the _recall_eval_df building block)."""
-    q = df.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    c = df.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine6("qv", "cv").alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ann_bruteforce_topk(df: DataFrame) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector, deterministic
     tiebreak (score desc, neighbor id asc). Construction is one
     spark.sql over a view of ``df`` (guide §7.3 — the recall-eval
     one-SQL discipline; ~320 py4j round-trips saved per build); values
-    pinned to the Column twin and the DuckDB oracle."""
-    if not _SQL_ANN:
-        return _bruteforce_topk_df(df)
+    pinned to the DuckDB oracle."""
     df.createOrReplaceTempView("__annq_emb")
     return df.sparkSession.sql(
         f"SELECT query_id, neighbor_id, cosine, rank FROM "
@@ -347,9 +321,9 @@ def _cell_scores(df: DataFrame) -> DataFrame:
 def _ivf_ranked(df: DataFrame) -> DataFrame:
     """Per-vector cell ranking (vec_id, cell_id, cos, rn) — rn=1 is
     the vector's IVF cell, rn<=nprobe its probe set. One corpus-sized
-    window; ann_recall_eval computes it ONCE and shares it across the
-    ivf / ivfpq / ivfpq_trained legs (r8: three identical windows
-    collapsed to one)."""
+    window (ann_recall_eval persists its SQL text form,
+    _ivf_ranked_sparksql, ONCE for the ivf / ivfpq / ivfpq_trained
+    legs)."""
     w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cell_id"))
     return _cell_scores(df).withColumn("rn", F.row_number().over(w))
 
@@ -392,7 +366,7 @@ def _ivf_exact_rerank(df: DataFrame, cand: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf_topk(df: DataFrame, ranked: DataFrame | None = None) -> DataFrame:
+def ann_ivf_topk(df: DataFrame) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their nearest
     codebook cell once; a query probes only its IVF_NPROBE nearest
     cells and exact-ranks the candidates. At 100 TB the corpus scan is
@@ -401,8 +375,7 @@ def ann_ivf_topk(df: DataFrame, ranked: DataFrame | None = None) -> DataFrame:
     map-side top-k as the brute-force path. Rounded-cosine ties break
     by cell_id, so the approximation itself is engine-deterministic
     and the DuckDB oracle reproduces it exactly."""
-    cand = _ivf_candidates(ranked if ranked is not None else _ivf_ranked(df))
-    return _ivf_exact_rerank(df, cand)
+    return _ivf_exact_rerank(df, _ivf_candidates(_ivf_ranked(df)))
 
 
 def ann_ivf_topk_sql() -> str:
@@ -1111,187 +1084,20 @@ def cdc_semantic_probe_sql(probe_hamming: int = PROBE_HAMMING) -> str:
     """
 
 
-def _recall_eval_df(df: DataFrame) -> DataFrame:
-    """Column-API twin of the one-SQL recall eval (parity reference
-    and fallback — see ann_recall_eval). Recall@k of each approximate
-    index (LSH bucket probe, IVF nprobe) against the exact brute-force
-    neighbors — the evaluation loop every ANN deployment runs before
-    trusting an index (the reference stack measures its search quality
-    the same way, ref: pgsync/search_client.py search read-backs).
-    Output one row per (query, method): hits among the exact top-k and
-    recall = hits/k.
-
-    Scale shape: this is offline QC over a sampled query set, not a
-    serving path — three corpus scans (exact, lsh, ivf), each keeping
-    the corpus unshuffled via broadcast queries/codebook; the per-query
-    hit join touches only 3 * N_QUERIES * TOP_K rows, driver-free. At
-    100 TB you run it on a sampled corpus slice; the plan shape is
-    sample-size-independent.
-
-    On the synthetic near-orthogonal corpus the verdicts are real
-    signal, not artifacts: IVF(nprobe=3) lands ~0.2-0.6, single-probe
-    sign-LSH lands 0.0 (one bucket of 2^8 holds almost none of the
-    true neighbors) — i.e. the eval correctly says "this index needs
-    multi-probe before you trust it", which is exactly what the
-    operator is for. What this corpus CANNOT show is what training
-    buys (hash vectors have no modes to align cells to) — that is
-    ann_recall_eval_clustered's job, the same eval over the
-    mixture-of-centers corpus, where ivf_trained demonstrably beats
-    ivf (r12)."""
-    from .. import caching
-
-    # the exact set feeds one hit-join per method plus the query-id
-    # spine — persist it or the brute-force corpus scan reruns per
-    # consumer (the caching.py multi-consumer discipline); it is
-    # N_QUERIES * TOP_K rows, so every downstream join broadcasts it
-    exact = (
-        _bruteforce_topk_df(df).select("query_id", "neighbor_id").persist()
-    )
-    qids = exact.select("query_id").distinct()
-    # every shared cache built below is tracked so a failure in ANY
-    # method leg releases all of them instead of leaking them for the
-    # session (r8 advice: the persisted scope grew from one cache to
-    # three and had no failure path)
-    held: list[DataFrame] = [exact]
-    scoped: list[DataFrame] = []
-    method_frames: list[DataFrame] = []
-    try:
-        # ONE codebook collect + ADC-table build + persisted codes
-        # frame feeds both PQ methods (r7 advice: each re-collected
-        # and re-persisted identical state); the eval result owns the
-        # cache. Same sharing for the trained twins. The query and
-        # codebook rows arrive in one fused collect
-        # (_pq_query_codebook_rows).
-        qcb = _pq_query_codebook_rows(df)
-        pq = _pq_artifacts(df, rows=qcb)
-        held.append(pq[3])
-        scoped.append(pq[2])
-        pqt = _pq_trained_artifacts(df, qrows=qcb[0])
-        held.append(pqt[3])
-        scoped.append(pqt[2])
-        # ONE corpus cell-ranking window shared by all three IVF legs
-        ranked = _ivf_ranked(df).persist()
-        held.append(ranked)
-        # the TRAINED cell ranking, computed once (Lloyd fit + one
-        # Arrow assignment pass) — prices what training the coarse
-        # quantizer buys against the hash-cell ivf leg
-        tranked = ivf_assign_trained(df).persist()
-        held.append(tranked)
-        methods = (
-            ("ivf", lambda d: ann_ivf_topk(d, ranked=ranked)),
-            ("ivf_trained",
-             lambda d: ann_ivf_trained_topk(d, ranked=tranked)),
-            ("lsh", ann_lsh_topk),
-            ("lsh_multiprobe", ann_lsh_multiprobe_topk),
-            # the probe-width dial priced one step wider: Hamming-2
-            # probes 1 + planes + C(planes,2) buckets (~14% of a
-            # uniform corpus at 8 planes) — what you pay when
-            # Hamming-1 recall still isn't enough
-            ("lsh_multiprobe2", lambda d: ann_lsh_multiprobe_topk(d, 2)),
-            # PQ-ADC competes on the SAME metric: vectors are
-            # normalized, so ascending L2-squared is descending cosine
-            # and its recall measures pure quantization loss
-            # (4 bytes/vector vs 256)
-            ("pq_adc", lambda d: ann_pq_adc_topk(d, shared=pq)),
-            # the TRAINED codebook priced against the hash codebook
-            # just above — identical serving plan and byte budget, so
-            # the recall delta is purely what Lloyd training buys
-            ("pq_adc_trained",
-             lambda d: ann_pq_adc_trained_topk(d, shared=pqt)),
-            ("ivfpq_trained", lambda d: ann_ivfpq_trained_topk(
-                d, shared=pqt, ranked=ranked
-            )),
-            # both dials trained — isolates the coarse quantizer's
-            # contribution inside the composition
-            ("ivfpq_fully_trained", lambda d: ann_ivfpq_fully_trained_topk(
-                d, shared=pqt, ranked=tranked
-            )),
-            # prune x compress composed (the FAISS IVF-PQ serving
-            # shape): its recall shows the two losses stacking
-            ("ivfpq", lambda d: ann_ivfpq_topk(d, shared=pq, ranked=ranked)),
-        )
-        # ONE hit-join + ONE aggregation over the union of every
-        # method's tagged candidates, then ONE left join against the
-        # (query × method) spine — the former per-method
-        # join/groupBy/left-join triple repeated the tiny-frame
-        # pipeline 10×, putting 10 distinct/agg Exchanges and 20 joins
-        # in the plan and ~10× the eager-analysis work on the driver
-        # (guide §2.4: share one exchange between operations keyed the
-        # same way). Row-for-row identical: per (query, method) the
-        # hit count over that method's candidates, 0 when absent.
-        from functools import reduce as _reduce
-
-        tagged = []
-        for method, fn in methods:
-            mdf = fn(df)
-            method_frames.append(mdf)
-            tagged.append(
-                mdf.select(
-                    "query_id",
-                    "neighbor_id",
-                    F.lit(method).alias("method"),
-                )
-            )
-        hits = (
-            _reduce(DataFrame.unionByName, tagged)
-            .join(F.broadcast(exact), ["query_id", "neighbor_id"])
-            .groupBy("query_id", "method")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        spine = qids.crossJoin(
-            df.sparkSession.createDataFrame(
-                [(m,) for m, _ in methods], "method string"
-            )
-        )
-        n = F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint")
-        out = spine.join(
-            F.broadcast(hits), ["query_id", "method"], "left"
-        ).select(
-            "query_id",
-            "method",
-            n.alias("n_hits"),
-            round6(n / F.lit(float(TOP_K))).alias("recall"),
-        )
-    except BaseException:
-        for mdf in method_frames:
-            caching.release(mdf)
-        for s in scoped:
-            caching.release(s)
-        for f in held:
-            f.unpersist()
-        raise
-    for mdf in method_frames:
-        # a method may persist its own intermediates: transfer that
-        # ownership to the eval result so one release frees everything
-        caching.adopt(out, mdf)
-    # [3] is each shared codes cache; [2] the encode frame whose
-    # scope (if any) rides along
-    caching.adopt(out, pq[2])
-    caching.adopt(out, pqt[2])
-    return caching.owned(out, held)
-
-
 # -- one-SQL recall eval (guide §7.3 — the §16/topk-SQL pattern at
-# eval scope). The Column construction of the 10 method legs + tail
-# was ~6,200 py4j round-trips (~2.2s of pure driver time at this
-# host's ~0.35ms/call floor — the metric's dominant cost at sf0.1);
-# the text form builds the identical query in one JVM parse over temp
-# views of the artifact frames. _recall_eval_df stays as the parity
-# reference (tests/test_recall_eval_sql_parity.py) and fallback.
-_SQL_RECALL_EVAL = True
-
-# same dial for the standalone ANN registry queries' one-SQL fast
-# paths (bruteforce / ivf_trained / pq_adc / pq_adc_trained / ivfpq):
-# each keeps its Column twin for the parity tests, and every internal
-# shared-artifact call (_recall_eval_df's methods tuple, trained
-# variants passing shared=) stays on the Column path.
-_SQL_ANN = True
+# eval scope). A Column-API construction of the 10 method legs + tail
+# was ~6,200 py4j round-trips (~2.2s of pure driver time at a
+# ~0.35ms/call floor — the metric's dominant cost at sf0.1); the text
+# form builds the query in one JVM parse over temp views of the
+# artifact frames. The standalone ANN registry queries (bruteforce /
+# ivf_trained / pq_adc / pq_adc_trained / ivfpq) share the same leg
+# builders.
 
 
 def _rank_leg_sql(src: str, score: str, order: str, full: bool = False) -> str:
     """A leg's per-query top-k: score the (qv, cv | __qt, codes) pairs
     of ``src``, rank per query, keep rank <= TOP_K — the shared window
-    tail every Column leg ends with. ``full`` keeps the score and rank
+    tail every leg ends with. ``full`` keeps the score and rank
     columns (the standalone registry queries' output contract); the
     eval's union projects (query_id, neighbor_id) only."""
     scored = f"(SELECT query_id, neighbor_id, {score} FROM {src})"
@@ -1308,8 +1114,8 @@ def _rank_leg_sql(src: str, score: str, order: str, full: bool = False) -> str:
 
 
 def _bruteforce_sparksql(E: str, full: bool = False) -> str:
-    """ann_bruteforce_topk as Spark-SQL text over the ``E`` view —
-    expression-for-expression the Column form."""
+    """ann_bruteforce_topk as Spark-SQL text over the ``E`` view:
+    the query side broadcasts against the unshuffled corpus."""
     cos = cosine6_sparksql("qv", "cv")
     src = f"""(SELECT /*+ BROADCAST(q) */ q.query_id, c.neighbor_id, q.qv, c.cv
   FROM (SELECT vec_id AS neighbor_id, embedding AS cv FROM {E}) c
@@ -1398,7 +1204,10 @@ def _ivf_leg_sparksql(E: str, ranked: str, full: bool = False) -> str:
 
 
 def _adc_micro_sparksql() -> str:
-    """_adc_micro as Spark-SQL text (__qt lookups over codes)."""
+    """Sum of the 8 per-subspace table lookups for a candidate's
+    codes (__qt lookups over codes) — the ONE ADC scoring expression
+    pq_adc and ivfpq share, so the two can never drift apart (the
+    bm25_term_micro rule)."""
     return " + ".join(
         f"element_at(element_at(__qt, {m + 1}), "
         f"(element_at(codes, {m + 1}) + 1))"
@@ -1452,18 +1261,32 @@ def _recall_eval_sparksql(
     trained PQ codes, QF/TQF = the broadcast ADC query frames.
     Shared subtrees are expanded textually, never as CTEs (the
     one-SQL discipline from plans/sqlgen.py and the index topk)."""
-    # method order mirrors the Column form's `methods` tuple
     legs = (
         ("ivf", _ivf_leg_sparksql(E, R)),
+        # the trained cell ranking prices what training the coarse
+        # quantizer buys against the hash-cell ivf leg
         ("ivf_trained", _ivf_leg_sparksql(E, T)),
         ("lsh", _lsh_leg_sparksql(E, None)),
         ("lsh_multiprobe", _lsh_leg_sparksql(E, PROBE_HAMMING)),
+        # the probe-width dial one step wider: Hamming-2 probes
+        # 1 + planes + C(planes,2) buckets (~14% of a uniform corpus
+        # at 8 planes) — what you pay when Hamming-1 recall still
+        # isn't enough
         ("lsh_multiprobe2", _lsh_leg_sparksql(E, 2)),
+        # PQ-ADC competes on the SAME metric: vectors are normalized,
+        # so ascending L2-squared is descending cosine and its recall
+        # measures pure quantization loss (4 bytes/vector vs 256)
         ("pq_adc", _adc_leg_sparksql(C, QF, None)),
+        # same serving plan and byte budget as pq_adc, so the recall
+        # delta is purely what Lloyd training buys
         ("pq_adc_trained", _adc_leg_sparksql(TC, TQF, None)),
         ("ivfpq_trained", _adc_leg_sparksql(TC, TQF, _ivf_cand_sparksql(R))),
+        # both dials trained — isolates the coarse quantizer's
+        # contribution inside the composition
         ("ivfpq_fully_trained",
          _adc_leg_sparksql(TC, TQF, _ivf_cand_sparksql(T))),
+        # prune x compress composed (the FAISS IVF-PQ serving shape):
+        # its recall shows the two losses stacking
         ("ivfpq", _adc_leg_sparksql(C, QF, _ivf_cand_sparksql(R))),
     )
     union = "\nUNION ALL\n".join(
@@ -1483,17 +1306,47 @@ FROM {spine} s LEFT JOIN {hits} h USING (query_id, method)"""
 
 
 def ann_recall_eval(df: DataFrame) -> DataFrame:
-    """Recall@k of each approximate index against the exact brute-force
-    neighbors — see _recall_eval_df for the full operator contract.
-    Construction is ONE spark.sql over temp views of the artifact
-    frames (the Column form was ~6,200 py4j round-trips per build —
-    the metric's dominant cost); artifacts (codebook collects, Lloyd
-    training, the persisted exact/ranked/codes frames) are built
-    exactly as before, and the executed values are pinned row-for-row
-    to the Column twin by tests/test_recall_eval_sql_parity.py plus
-    the DuckDB oracle gate."""
-    if not _SQL_RECALL_EVAL:
-        return _recall_eval_df(df)
+    """Recall@k of each approximate index (LSH bucket probe, IVF
+    nprobe, PQ-ADC and their compositions) against the exact
+    brute-force neighbors — the evaluation loop every ANN deployment
+    runs before trusting an index (the reference stack measures its
+    search quality the same way, ref: pgsync/search_client.py search
+    read-backs). Output one row per (query, method): hits among the
+    exact top-k and recall = hits/k.
+
+    Scale shape: this is offline QC over a sampled query set, not a
+    serving path — one corpus scan per method, each keeping the
+    corpus unshuffled via broadcast queries/codebook; the per-query
+    hit join touches only methods * N_QUERIES * TOP_K rows,
+    driver-free. At 100 TB you run it on a sampled corpus slice; the
+    plan shape is sample-size-independent.
+
+    On the synthetic near-orthogonal corpus the verdicts are real
+    signal, not artifacts: IVF(nprobe=3) lands ~0.2-0.6, single-probe
+    sign-LSH lands 0.0 (one bucket of 2^8 holds almost none of the
+    true neighbors) — i.e. the eval correctly says "this index needs
+    multi-probe before you trust it", which is exactly what the
+    operator is for. What this corpus CANNOT show is what training
+    buys (hash vectors have no modes to align cells to) — that is
+    ann_recall_eval_clustered's job, the same eval over the
+    mixture-of-centers corpus, where ivf_trained demonstrably beats
+    ivf (r12).
+
+    Construction is ONE spark.sql (_recall_eval_sparksql) over temp
+    views of the artifact frames, each built once and shared by every
+    leg that reads it: the persisted exact pairs feed the hit join
+    and the query spine; ONE codebook collect + ADC-table build +
+    persisted codes frame feeds both hash-codebook PQ legs, the same
+    for the trained codebook (the query and codebook rows arrive in
+    one fused collect, _pq_query_codebook_rows); ONE persisted hash
+    cell ranking feeds the ivf / ivfpq / ivfpq_trained legs and ONE
+    persisted trained ranking (Lloyd fit + one Arrow assignment
+    pass) the ivf_trained / ivfpq_fully_trained legs. The tail is ONE
+    hit-join + ONE aggregation over the union of every method's
+    candidates, then ONE left join against the (query × method)
+    spine (guide §2.4: share one exchange between operations keyed
+    the same way). Every artifact cache is tracked, so a failure in
+    any leg releases all of them; the eval result owns them."""
     from .. import caching
 
     spark = df.sparkSession
@@ -1505,7 +1358,7 @@ def ann_recall_eval(df: DataFrame) -> DataFrame:
     # frame's plan UNCACHES that frame (CacheManager cascade), which
     # silently made every leg recompute its artifact subtree inline
     # (measured: 17 InMemoryTableScans → 0). Replacement does not
-    # uncache (probed; pinned by the parity test's plan check).
+    # uncache (probed; pinned by tests/test_recall_eval_sql_parity.py).
     # Assumes single-threaded query CONSTRUCTION per session (true of
     # the bench, the oracle harness and the engine): spark.sql
     # analyzes eagerly, so the views only need to be stable between
@@ -1536,8 +1389,8 @@ def ann_recall_eval(df: DataFrame) -> DataFrame:
         held.append(ranked)
         tranked = ivf_assign_trained(df).persist()
         held.append(tranked)
-        qf, _qt = _adc_query_frame(spark, pq[1])
-        tqf, _tqt = _adc_query_frame(spark, pqt[1])
+        qf = _adc_query_frame(spark, pq[1])
+        tqf = _adc_query_frame(spark, pqt[1])
         out = spark.sql(
             _recall_eval_sparksql(
                 E=E,
@@ -2128,15 +1981,14 @@ def _pq_artifacts(df: DataFrame, rows=None):
     codebook collect, per-query ADC tables, the encode frame, and the
     persisted 4-byte codes (persisted BEFORE any query crossJoin — the
     encode argmin would otherwise re-evaluate per (doc × query) OUTPUT
-    row). ann_recall_eval computes this ONCE and hands it to both
-    pq_adc and ivfpq (r7 advice: each method re-collected the codebook
-    and ADC tables and persisted its own identical codes frame).
+    row). ann_recall_eval computes this ONCE and serves both its
+    pq_adc and ivfpq legs from it.
     ``rows``: a prefetched (qrows, cbrows) pair from
     _pq_query_codebook_rows — the eval fuses the three bounded
     collects into one."""
     qrows, cbrows = rows if rows is not None else (None, None)
     cents = _pq_centroids(df, rows=cbrows)
-    tables = _AdcTables(_adc_tables_micro(df, cents, rows=qrows))
+    tables = _adc_tables_micro(df, cents, rows=qrows)
     enc = pq_encode(df, cents)
     codes = enc.select(
         F.col("vec_id").alias("neighbor_id"), "codes"
@@ -2144,7 +1996,7 @@ def _pq_artifacts(df: DataFrame, rows=None):
     return cents, tables, enc, codes
 
 
-def ann_pq_adc_topk(df: DataFrame, shared=None) -> DataFrame:
+def ann_pq_adc_topk(df: DataFrame) -> DataFrame:
     """Asymmetric-distance top-k: queries stay full precision; each
     candidate's distance is the sum of per-subspace micro-L2² between
     the query's subvector and the candidate's CODE centroid, read from
@@ -2156,26 +2008,14 @@ def ann_pq_adc_topk(df: DataFrame, shared=None) -> DataFrame:
     query-table frame broadcasts; per-query top-k is the brute-force
     window shape over 4-byte codes instead of 256-byte vectors).
 
-    Standalone construction (shared None) is one spark.sql over views
-    of the codes/query-table frames (guide §7.3 — the recall-eval
-    one-SQL discipline); shared-artifact callers keep the Column
-    path."""
-    cents, tables, enc, codes = shared or _pq_artifacts(
+    Construction is one spark.sql over views of the codes/query-table
+    frames (guide §7.3 — the recall-eval one-SQL discipline)."""
+    cents, tables, enc, codes = _pq_artifacts(
         df, rows=_pq_query_codebook_rows(df)
     )
-    qf, qt = _adc_query_frame(df.sparkSession, tables)
-    if shared is None and _SQL_ANN:
-        out = _adc_topk_sql(df.sparkSession, codes, qf, cand=None)
-    else:
-        pairs = codes.crossJoin(F.broadcast(qf)).filter(
-            F.col("neighbor_id") != F.col("query_id")
-        )
-        scored = pairs.select(
-            "query_id", "neighbor_id", _adc_micro(qt).alias("adc_micro")
-        )
-        out = _adc_rank(scored)
-    if shared is not None:
-        return out  # the caller owns the shared artifacts' lifetime
+    out = _adc_topk_sql(
+        df.sparkSession, codes, _adc_query_frame(df.sparkSession, tables)
+    )
     from ..caching import adopt, owned
 
     # own the codes cache AND adopt the encode frame's scope so one
@@ -2183,38 +2023,16 @@ def ann_pq_adc_topk(df: DataFrame, shared=None) -> DataFrame:
     return adopt(owned(out, [codes]), enc)
 
 
-class _AdcTables(dict):
-    """tables[query_id][m][c] plus a memo slot for the derived
-    (query frame, literal-table column) pair: every PQ-family leg of
-    one artifact set shares ONE construction instead of each paying
-    the ~N_QUERIES·M·KS expression build (measured ~0.5s of pure
-    driver/py4j time per leg — 6 legs inside ann_recall_eval)."""
-
-    __slots__ = ("qfqt",)
-
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self.qfqt = None
-
-
 def _adc_query_frame(spark, tables):
-    """(query frame carrying each query's 2-level ADC table as a DATA
-    column ``__qt``, the per-row table column to index): the tiny
-    frame broadcasts, and each candidate's 8 lookups read the joined
-    row's array — the same integer values the former 3-level literal
-    array held.
+    """The query frame carrying each query's 2-level ADC table as a
+    DATA column ``__qt``: the tiny frame broadcasts, and each
+    candidate's 8 lookups read the joined row's array.
 
-    Why data, not literals: Spark analyzes eagerly on every DataFrame
-    operation, and the scoring sum embedded its own copy of the
-    N_QUERIES·M·KS literal array per subspace term — thousands of
-    literal leaves re-traversed by every subsequent select/join on
-    the leg (measured ~15ms per DataFrame op inside ann_recall_eval,
-    guide §7.3 driver-side work). As a column the table is one
-    attribute reference; values, join shape (broadcast) and the
-    adc_micro result are unchanged."""
-    memo = getattr(tables, "qfqt", None)
-    if memo is not None:
-        return memo
+    Why data, not literals: an N_QUERIES·M·KS literal array embedded
+    in the scoring sum is thousands of literal leaves that every
+    analysis pass re-traverses (measured ~15ms per DataFrame op
+    inside ann_recall_eval, guide §7.3 driver-side work). As a column
+    the table is one attribute reference."""
     qids = sorted(tables)
     rows = [
         (
@@ -2226,10 +2044,9 @@ def _adc_query_frame(spark, tables):
         )
         for qid in qids
     ]
-    # element type mirrors the former nested-F.lit coercion: one
-    # value beyond int32 anywhere (trained tables hold micro-L2² in
-    # the 1e11 range) made the WHOLE coerced literal array — and the
-    # adc_micro sum's schema — bigint; all-int32 tables stayed int
+    # one value beyond int32 anywhere (trained tables hold micro-L2²
+    # in the 1e11 range) makes the element type — and the adc_micro
+    # sum's schema — bigint; all-int32 tables stay int
     elem = (
         "int"
         if all(
@@ -2240,54 +2057,8 @@ def _adc_query_frame(spark, tables):
         )
         else "bigint"
     )
-    qf = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, f"query_id bigint, __qt array<array<{elem}>>"
-    )
-    out = (qf, _AdcQt(F.col("__qt")))
-    if isinstance(tables, _AdcTables):
-        tables.qfqt = out
-    return out
-
-
-class _AdcQt:
-    """The per-query ADC table column plus a memo slot for the derived
-    scoring sum: the 5 PQ-family legs of one artifact set share ONE
-    _adc_micro construction (Columns are immutable trees, so reuse
-    cannot change a plan). A plain wrapper, not an attribute on the
-    Column — Column.__getattr__ turns attribute probes into field
-    accesses."""
-
-    __slots__ = ("col", "adc")
-
-    def __init__(self, col):
-        self.col = col
-        self.adc = None
-
-
-def _adc_micro(qt) -> F.Column:
-    """Sum of the 8 per-subspace table lookups for a candidate's
-    codes — the shared ADC scoring expression (pq_adc and ivfpq must
-    never drift apart, same rule as bm25_term_micro)."""
-    if isinstance(qt, _AdcQt):
-        if qt.adc is None:
-            qt.adc = _adc_micro(qt.col)
-        return qt.adc
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(
-            F.element_at(qt, m + 1),
-            (F.element_at(F.col("codes"), m + 1) + F.lit(1)),
-        )
-        adc = term if adc is None else adc + term
-    return adc
-
-
-def _adc_rank(scored: DataFrame) -> DataFrame:
-    w = W.partitionBy("query_id").orderBy("adc_micro", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
     )
 
 
@@ -2301,35 +2072,31 @@ def ann_ivfpq_topk(df: DataFrame, shared=None, ranked=None) -> DataFrame:
     each dial alone (ivf = prune + exact rerank; pq_adc = no pruning +
     compressed scoring). Same engine-exact discipline throughout
     (deterministic codebooks, integer micro distances, rounded-cosine
-    cell ranks), so the oracle is a full value match."""
-    standalone = shared is None and ranked is None
+    cell ranks), so the oracle is a full value match.
+
+    ``shared``: a (cents, tables, enc, codes) artifact set the caller
+    owns (the trained variants pass _pq_trained_artifacts);
+    ``ranked``: a persisted (vec_id, cell_id, rn) cell ranking to
+    prune by, read through a view so its cache serves both candidate
+    consumers (None ranks by the hash codebook inline). Construction
+    is one spark.sql either way (_adc_topk_sql)."""
     cents, tables, enc, codes = shared or _pq_artifacts(
         df, rows=_pq_query_codebook_rows(df)
     )
-    qf, qt = _adc_query_frame(df.sparkSession, tables)
-    if standalone and _SQL_ANN:
+    qf = _adc_query_frame(df.sparkSession, tables)
+    if ranked is None:
         # the unpersisted cell-ranking subtree is expanded textually
-        # twice inside the candidate join, exactly as the lazy Column
-        # plan duplicates it (assign + qprobe consumers)
+        # twice inside the candidate join (assign + qprobe consumers)
         df.createOrReplaceTempView("__annq_emb")
-        out = _adc_topk_sql(
-            df.sparkSession,
-            codes,
-            qf,
-            cand=_ivf_cand_sparksql(f"({_ivf_ranked_sparksql('__annq_emb')})"),
-        )
+        rsub = f"({_ivf_ranked_sparksql('__annq_emb')})"
     else:
-        cand = _ivf_candidates(
-            ranked if ranked is not None else _ivf_ranked(df)
-        )
-        scored = (
-            cand.join(codes, "neighbor_id")
-            .join(F.broadcast(qf), "query_id")
-            .select(
-                "query_id", "neighbor_id", _adc_micro(qt).alias("adc_micro")
-            )
-        )
-        out = _adc_rank(scored)
+        # replaced, never dropped: dropping a view over a persisted
+        # frame uncaches it (see ann_recall_eval)
+        ranked.createOrReplaceTempView("__annq_tranked")
+        rsub = "__annq_tranked"
+    out = _adc_topk_sql(
+        df.sparkSession, codes, qf, cand=_ivf_cand_sparksql(rsub)
+    )
     if shared is not None:
         return out  # the caller owns the shared artifacts' lifetime
     from ..caching import adopt, owned
@@ -2630,11 +2397,11 @@ def _adc_tables_trained(
 
 def _pq_trained_artifacts(df: DataFrame, qrows=None):
     """(cents, tables, enc, codes) under the trained codebook — the
-    trained twin of _pq_artifacts, shared the same way by
+    trained counterpart of _pq_artifacts, shared the same way by
     ann_recall_eval. ``qrows``: prefetched query rows (see
     _pq_query_codebook_rows)."""
     cents = _pq_trained_centroids(df)
-    tables = _AdcTables(_adc_tables_trained(df, cents, rows=qrows))
+    tables = _adc_tables_trained(df, cents, rows=qrows)
     enc = pq_encode_trained(df, cents)
     codes = enc.select(
         F.col("vec_id").alias("neighbor_id"), "codes"
@@ -2642,27 +2409,17 @@ def _pq_trained_artifacts(df: DataFrame, qrows=None):
     return cents, tables, enc, codes
 
 
-def ann_pq_adc_trained_topk(df: DataFrame, shared=None) -> DataFrame:
+def ann_pq_adc_trained_topk(df: DataFrame) -> DataFrame:
     """ann_pq_adc_topk under a TRAINED codebook: identical serving
-    plan (persisted 4-byte codes × broadcast per-query literal tables,
-    8 lookups per candidate), codebook fit by integer-exact Lloyd so
+    plan (persisted 4-byte codes × broadcast per-query tables, 8
+    lookups per candidate), codebook fit by integer-exact Lloyd so
     the oracle replays training bit-for-bit. ann_recall_eval prices
     this against the hash-codebook form — the measured value of
     training, at zero serving-cost difference."""
-    cents, tables, enc, codes = shared or _pq_trained_artifacts(df)
-    qf, qt = _adc_query_frame(df.sparkSession, tables)
-    if shared is None and _SQL_ANN:
-        out = _adc_topk_sql(df.sparkSession, codes, qf, cand=None)
-    else:
-        pairs = codes.crossJoin(F.broadcast(qf)).filter(
-            F.col("neighbor_id") != F.col("query_id")
-        )
-        scored = pairs.select(
-            "query_id", "neighbor_id", _adc_micro(qt).alias("adc_micro")
-        )
-        out = _adc_rank(scored)
-    if shared is not None:
-        return out  # the caller owns the shared artifacts' lifetime
+    cents, tables, enc, codes = _pq_trained_artifacts(df)
+    out = _adc_topk_sql(
+        df.sparkSession, codes, _adc_query_frame(df.sparkSession, tables)
+    )
     from ..caching import adopt, owned
 
     return adopt(owned(out, [codes]), enc)
@@ -2763,19 +2520,16 @@ def pq_codes_trained_json_sql() -> str:
     """
 
 
-def ann_ivfpq_trained_topk(df: DataFrame, shared=None, ranked=None) -> DataFrame:
+def ann_ivfpq_trained_topk(df: DataFrame) -> DataFrame:
     """IVF-PQ under the TRAINED codebook: the same prune × compress
     composition as ann_ivfpq_topk with the Lloyd-trained codes/tables
     swapped in — completing the trained serving story (recall eval
     prices all four: pq_adc, pq_adc_trained, ivfpq, ivfpq_trained)."""
-    own = shared is None
-    art = shared or _pq_trained_artifacts(df)
-    out = ann_ivfpq_topk(df, shared=art, ranked=ranked)
-    if own:
-        from ..caching import adopt, owned
+    from ..caching import adopt, owned
 
-        out = adopt(owned(out, [art[3]]), art[2])
-    return out
+    art = _pq_trained_artifacts(df)
+    out = ann_ivfpq_topk(df, shared=art)
+    return adopt(owned(out, [art[3]]), art[2])
 
 
 def ann_ivfpq_trained_topk_sql() -> str:
@@ -2800,31 +2554,21 @@ def ann_ivfpq_trained_topk_sql() -> str:
     """
 
 
-def ann_ivfpq_fully_trained_topk(
-    df: DataFrame, shared=None, ranked=None
-) -> DataFrame:
+def ann_ivfpq_fully_trained_topk(df: DataFrame) -> DataFrame:
     """BOTH dials trained — Lloyd cells for the pruning AND Lloyd
     codes for the scoring (the full FAISS production configuration;
     ivfpq_trained keeps hash cells, so the recall delta between the
     two isolates what training the COARSE quantizer buys inside the
     composition). Serving plan identical to ann_ivfpq_topk."""
-    own = shared is None
-    art = shared or _pq_trained_artifacts(df)
-    extra = []
-    if ranked is None:
-        # persist: _ivf_candidates consumes the ranking twice (assign
-        # + qprobe) and the Arrow assignment pass is the dominant
-        # corpus scan (review pass 4)
-        ranked = ivf_assign_trained(df).persist()
-        extra.append(ranked)
-    out = ann_ivfpq_topk(df, shared=art, ranked=ranked)
-    if own or extra:
-        from ..caching import adopt, owned
+    from ..caching import adopt, owned
 
-        out = owned(out, extra + ([art[3]] if own else []))
-        if own:
-            out = adopt(out, art[2])
-    return out
+    art = _pq_trained_artifacts(df)
+    # persist: the candidate join consumes the ranking twice (assign
+    # + qprobe) and the Arrow assignment pass is the dominant corpus
+    # scan
+    ranked = ivf_assign_trained(df).persist()
+    out = ann_ivfpq_topk(df, shared=art, ranked=ranked)
+    return adopt(owned(out, [ranked, art[3]]), art[2])
 
 
 def ann_ivfpq_fully_trained_topk_sql() -> str:
@@ -3078,41 +2822,27 @@ def ivf_assign_trained(
     return df.select("vec_id", "embedding").mapInPandas(assign, schema)
 
 
-def ann_ivf_trained_topk(
-    df: DataFrame, ranked: DataFrame | None = None
-) -> DataFrame:
+def ann_ivf_trained_topk(df: DataFrame) -> DataFrame:
     """ann_ivf_topk with a TRAINED coarse quantizer: identical serving
-    plan (assign once, probe IVF_NPROBE cells, exact-cosine re-rank
-    via the shared tail) — the recall delta against the hash-cell ivf
-    leg in ann_recall_eval is purely what Lloyd buys the cell
-    geometry."""
-    extra = []
-    if ranked is None:
-        # persist: _ivf_candidates consumes the ranking twice (assign
-        # rn=1 + qprobe) and the Arrow assignment is the dominant
-        # corpus pass — same reason ann_ivfpq_fully_trained_topk
-        # persists its internally-computed ranking (r9 advice)
-        ranked = ivf_assign_trained(df).persist()
-        extra.append(ranked)
-        if _SQL_ANN:
-            # standalone construction: one spark.sql over views of the
-            # corpus and the persisted trained ranking (guide §7.3)
-            spark = df.sparkSession
-            df.createOrReplaceTempView("__annq_emb")
-            ranked.createOrReplaceTempView("__annq_tranked")
-            out = spark.sql(
-                "SELECT query_id, neighbor_id, cosine, rank FROM "
-                + _ivf_leg_sparksql("__annq_emb", "__annq_tranked", full=True)
-            )
-            from ..caching import owned
+    plan (assign once, probe IVF_NPROBE cells, exact-cosine re-rank)
+    — the recall delta against the hash-cell ivf leg in
+    ann_recall_eval is purely what Lloyd buys the cell geometry.
 
-            return owned(out, extra)
-    out = _ivf_exact_rerank(df, _ivf_candidates(ranked))
-    if extra:
-        from ..caching import owned
+    Construction: one spark.sql over views of the corpus and the
+    persisted trained ranking (guide §7.3). Persisted because the
+    candidate join consumes the ranking twice (assign rn=1 + qprobe)
+    and the Arrow assignment is the dominant corpus pass."""
+    from ..caching import owned
 
-        out = owned(out, extra)
-    return out
+    ranked = ivf_assign_trained(df).persist()
+    spark = df.sparkSession
+    df.createOrReplaceTempView("__annq_emb")
+    ranked.createOrReplaceTempView("__annq_tranked")
+    out = spark.sql(
+        "SELECT query_id, neighbor_id, cosine, rank FROM "
+        + _ivf_leg_sparksql("__annq_emb", "__annq_tranked", full=True)
+    )
+    return owned(out, [ranked])
 
 
 def _ivf_trained_sql_ctes(

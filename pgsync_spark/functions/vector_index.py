@@ -48,7 +48,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from .dedup_index import DEFAULT_OVERLAY_CAP, EmbeddingIndex, _AppendOnlyIndex
 
@@ -364,11 +363,6 @@ class VectorIndex(_AppendOnlyIndex):
         finally:
             base.unpersist()
 
-    # the sign-LSH probe has an exact SQL text form; IVF's trained
-    # probe is an Arrow pass (ivf_assign_trained) and keeps the
-    # Column path
-    _SQL_TOPK = True
-
     def topk(
         self,
         queries: DataFrame,
@@ -390,41 +384,33 @@ class VectorIndex(_AppendOnlyIndex):
         frames are never shuffled, and with a store the keys scan is
         band/bucket row-group-prunable.
 
-        Construction: ONE spark.sql over memoized parts views (the
-        Column construction was 568 py4j round-trips per call, the
-        dominant serving-path cost — guide §7.3); the Column twin
-        ``_topk_df`` stays as the IVF path and the parity reference
-        (tests/test_topk_sql_parity.py pins sameResult + bytes)."""
+        Construction: ONE spark.sql over memoized parts views (a
+        Column-API construction was 568 py4j round-trips per call,
+        the dominant serving-path cost — guide §7.3);
+        tests/test_topk_sql_parity.py pins the rows against the
+        DuckDB vector_topk_sql mirror."""
         from .similarity import TOP_K
 
         if k is None:
             k = TOP_K
         if self.keys is None:
             return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        if not self._SQL_TOPK:
-            return self._topk_df(queries, k, exclude_self)
         qref = self._register_view(queries, f"{self._view_prefix}_q")
-        return self.spark.sql(self._topk_sql(qref, k, exclude_self))
+        return self.spark.sql(
+            self._topk_sql(qref, k, exclude_self, queries)
+        )
 
     def _extra_view_names(self) -> list[str]:
         return [f"{self._view_prefix}_q"]
 
     def _topk_sql(
-        self, qview: str, k: int, exclude_self: bool
+        self, qview: str, k: int, exclude_self: bool, queries: DataFrame
     ) -> str:
-        """The whole topk plan as ONE Spark SQL text — expression-
-        for-expression the Column form (_topk_df). Shared subtrees
+        """The whole topk plan as ONE Spark SQL text. Shared subtrees
         (the query frame, the CDC overlay) are expanded textually,
         never as CTEs (see _AppendOnlyIndex one-SQL notes)."""
-        from .similarity import (
-            N_BANDS,
-            PLANES_PER_BAND,
-            _dot_sparksql,
-            _norm_sparksql,
-            _probe_masks,
-        )
+        from .similarity import _dot_sparksql, _norm_sparksql
 
-        P = PLANES_PER_BAND
         kview, kcols = self._parts_view("keys")
         vview, vcols = self._parts_view("vals")
         if self._has_cdc:
@@ -436,32 +422,7 @@ class VectorIndex(_AppendOnlyIndex):
             f"(SELECT CAST(query_id AS BIGINT) AS query_id, "
             f"embedding AS qv FROM {qview})"
         )
-        bands = ", ".join(
-            "0 + "
-            + " + ".join(
-                f"(CASE WHEN element_at(embedding, {b * P + i + 1}) >= 0 "
-                f"THEN {2 ** i} ELSE 0 END)"
-                for i in range(P)
-            )
-            for b in range(N_BANDS)
-        )
-        bk = (
-            f"(SELECT vec_id, posexplode(array({bands})) AS (band, bucket) "
-            f"FROM (SELECT query_id AS vec_id, qv AS embedding FROM {q_sub}))"
-        )
-        if self.probe_hamming:
-            masks = _probe_masks(P, self.probe_hamming)
-            arr = (
-                "array("
-                + ", ".join(f"(bucket ^ {m})" for m in masks)
-                + ")"
-            )
-            probe = (
-                f"(SELECT query_id, band, explode({arr}) AS bucket "
-                f"FROM (SELECT vec_id AS query_id, band, bucket FROM {bk}))"
-            )
-        else:
-            probe = f"(SELECT vec_id AS query_id, band, bucket FROM {bk})"
+        probe = self._probe_sql(q_sub, queries)
         self_pred = (
             "\n  WHERE k.neighbor_id != p.query_id" if exclude_self else ""
         )
@@ -484,64 +445,40 @@ class VectorIndex(_AppendOnlyIndex):
   FROM {scored})
 WHERE rank <= {k}"""
 
-    def _topk_df(
-        self,
-        queries: DataFrame,
-        k: int,
-        exclude_self: bool = False,
-    ) -> DataFrame:
-        """Column-API twin of _topk_sql (the IVF path — its probe is
-        an Arrow pass — and the parity reference for the tests)."""
-        from .similarity import cosine6
+    def _probe_sql(self, q_sub: str, queries: DataFrame) -> str:
+        """(query_id, band, bucket) probe keys as SQL text over the
+        ``q_sub`` query subquery (query_id, qv) — the _probe_frame
+        scheme: sign-LSH buckets plus every Hamming<=probe_hamming
+        perturbation. ``queries`` is the caller's frame, for
+        subclasses whose probe has no SQL text form."""
+        from .similarity import N_BANDS, PLANES_PER_BAND, _probe_masks
 
-        keys, vals = self.keys, self.vals
-        if keys is None:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        q = queries.select(
-            F.col("query_id").cast("bigint").alias("query_id"),
-            F.col("embedding").alias("qv"),
-        )
-        qkeys = q.select(
-            F.col("query_id").alias("vec_id"), F.col("qv").alias("embedding")
-        )
-        probe = self._probe_frame(qkeys)
-        if self._has_cdc:
-            # shared overlay fold — tombstoned/shadowed versions never
-            # serve (see _AppendOnlyIndex._cdc_live)
-            overlay = self._cdc_overlay(vals)
-            keys = self._cdc_live(keys, overlay)
-            vals = self._cdc_live(vals, overlay)
-        cand = (
-            keys.select(F.col("vec_id").alias("neighbor_id"), "band", "bucket")
-            .join(F.broadcast(probe), ["band", "bucket"])
-            .select("query_id", "neighbor_id")
-        )
-        if exclude_self:
-            cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        cand = cand.distinct()
-        scored = (
-            cand.join(
-                vals.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("cv"),
-                ),
-                "neighbor_id",
+        P = PLANES_PER_BAND
+        bands = ", ".join(
+            "0 + "
+            + " + ".join(
+                f"(CASE WHEN element_at(embedding, {b * P + i + 1}) >= 0 "
+                f"THEN {2 ** i} ELSE 0 END)"
+                for i in range(P)
             )
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine6("qv", "cv").alias("cosine"),
+            for b in range(N_BANDS)
+        )
+        bk = (
+            f"(SELECT vec_id, posexplode(array({bands})) AS (band, bucket) "
+            f"FROM (SELECT query_id AS vec_id, qv AS embedding FROM {q_sub}))"
+        )
+        if self.probe_hamming:
+            masks = _probe_masks(P, self.probe_hamming)
+            arr = (
+                "array("
+                + ", ".join(f"(bucket ^ {m})" for m in masks)
+                + ")"
             )
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-        )
+            return (
+                f"(SELECT query_id, band, explode({arr}) AS bucket "
+                f"FROM (SELECT vec_id AS query_id, band, bucket FROM {bk}))"
+            )
+        return f"(SELECT vec_id AS query_id, band, bucket FROM {bk})"
 
 
 class IVFVectorIndex(VectorIndex):
@@ -571,10 +508,6 @@ class IVFVectorIndex(VectorIndex):
     Centroids are INDEX STATE: persisted in the manifest
     (_manifest_extra) and restored by load(), like BM25's analyzer —
     keys assigned under one codebook are unreadable under another."""
-
-    # the trained probe is an Arrow (mapInPandas) pass — no SQL text
-    # form exists, so IVF keeps the Column topk (_topk_df)
-    _SQL_TOPK = False
 
     def __init__(
         self,
@@ -902,6 +835,21 @@ class IVFVectorIndex(VectorIndex):
                 F.col("cell_id").alias("bucket"),
             )
         )
+
+    def _extra_view_names(self) -> list[str]:
+        return super()._extra_view_names() + [f"{self._view_prefix}_p"]
+
+    def _probe_sql(self, q_sub: str, queries: DataFrame) -> str:
+        """The trained probe is an Arrow (mapInPandas) pass with no
+        SQL text form: it registers as one more per-index view that
+        the shared topk text reads in place of the sign-LSH probe."""
+        qkeys = queries.select(
+            F.col("query_id").cast("bigint").alias("vec_id"), "embedding"
+        )
+        pref = self._register_view(
+            self._probe_frame(qkeys), f"{self._view_prefix}_p"
+        )
+        return f"(SELECT query_id, band, bucket FROM {pref})"
 
     def _probe_frame(self, qkeys: DataFrame) -> DataFrame:
         from .similarity import ivf_assign_trained

@@ -2186,7 +2186,7 @@ BM25_ONE_MINUS_B = "0.25"
 def bm25_term_micro(tf, dfq, n_docs, dl, avgdl):
     """ONE query term's fixed-point BM25 contribution — floor-snapped
     idf micro-nats × tf normalization, floored to bigint BEFORE the
-    cross-term sum (see _bm25_scored for why). This is the single
+    cross-term sum (see _bm25_scored_sparksql for why). This is the single
     expression tree both the one-shot scorer and BM25Index.topk build
     from: the bit-parity contract between them (the additivity oracle)
     must not rest on two hand-synchronized copies.
@@ -2210,9 +2210,10 @@ def bm25_term_micro(tf, dfq, n_docs, dl, avgdl):
     return f"CAST(floor({idf_micro} * ({tfn}) + 0.5D) AS BIGINT)"
 
 
-def _bm25_scored(df):
-    """Per-doc BM25 micro-score frame (doc_id, lang, source,
-    score_micro) for the fixed query BM25_QUERY_TERMS.
+def _bm25_scored_sparksql(D: str) -> str:
+    """Per-doc BM25 micro-score (doc_id, lang, source, score_micro)
+    for the fixed query BM25_QUERY_TERMS, as Spark-SQL text over a
+    documents view ``D``.
 
     Engine-portability design: the only transcendental (ln in the idf)
     is snapped to FIXED-POINT micro-nats per term — floor(ln(..)*1e6
@@ -2226,64 +2227,11 @@ def _bm25_scored(df):
     Scale shape: tf per query term is computed IN THE SCAN as
     size(filter(tokens, = term)) — no explode, no (doc, term) shuffle.
     Corpus stats (N, avgdl, per-term df) are ONE 1-row aggregate
-    broadcast back by crossJoin. The corpus side has zero exchanges;
-    the whole scorer is scan + broadcast + project, so it survives any
-    corpus size (the classic explode→groupBy tf materializes |tokens|
-    rows and shuffles them — this form never does)."""
-    from .operators.filters import _spark_sql_str as _sq
-
-    ts = hashing.tokens_sparksql("text")
-    # single-parse per-doc projection (guide §7.3): size/filter trees
-    # identical to the former F.size(F.filter(toks, =t)) chain — the
-    # filter-lambda builders were ~30 py4j round-trips per term.
-    # Terms ride through the _spark_sql_str escaper (no-op for the
-    # current constants) so the text form can never drift from F.lit.
-    per_doc = df.selectExpr(
-        "doc_id",
-        "lang",
-        "source",
-        f"size({ts}) AS dl",
-        *[
-            f"size(filter({ts}, x -> x = {_sq(t)})) AS tf{i}"
-            for i, t in enumerate(BM25_QUERY_TERMS)
-        ],
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("long")).alias(f"df{i}")
-            for i in range(len(BM25_QUERY_TERMS))
-        ],
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    scored = per_doc.crossJoin(F.broadcast(stats)).withColumn(
-        "avgdl", avgdl
-    )
-    score = F.expr(
-        " + ".join(
-            bm25_term_micro(f"tf{i}", f"df{i}", "n_docs", "dl", "avgdl")
-            for i in range(len(BM25_QUERY_TERMS))
-        )
-    )
-    return scored.select(
-        "doc_id", "lang", "source", score.alias("score_micro")
-    )
-
-
-# one-SQL construction dial for the lexical/hybrid retrieval registry
-# queries (text_bm25_topk, hybrid_search_rrf): the Column forms stay
-# as parity references (tests/test_recall_eval_sql_parity.py pins
-# byte-equal rows), mirroring functions/similarity._SQL_ANN.
-_SQL_TEXTQ = True
-
-
-def _bm25_scored_sparksql(D: str) -> str:
-    """_bm25_scored as Spark-SQL text over a documents view ``D`` —
-    expression-for-expression the Column form (same tokens fragment,
-    same stats aggregate, same broadcast fold, same bm25_term_micro
-    score text). One spark.sql parse instead of the per-call
-    selectExpr/agg/crossJoin chain (guide §7.3)."""
+    broadcast back by a cross join. The corpus side has zero
+    exchanges; the whole scorer is scan + broadcast + project, so it
+    survives any corpus size (the classic explode→groupBy tf
+    materializes |tokens| rows and shuffles them — this form never
+    does). Terms ride through the _spark_sql_str escaper."""
     from .operators.filters import _spark_sql_str as _sq
 
     ts = hashing.tokens_sparksql("text")
@@ -2320,9 +2268,9 @@ def _bm25_scored_sql(
     terms: tuple[str, ...] = BM25_QUERY_TERMS,
     analyzer: str = "whitespace",
 ) -> str:
-    """The DuckDB mirror of _bm25_scored — identical expression tree.
-    ``analyzer`` must match the BM25Index (or _bm25_scored tokenizer)
-    being oracled."""
+    """The DuckDB mirror of _bm25_scored_sparksql — identical
+    expression tree. ``analyzer`` must match the BM25Index (or
+    _bm25_scored_sparksql tokenizer) being oracled."""
     toks = hashing.analyze_sql("text", analyzer)
     tf_cols = ", ".join(
         f"len(list_filter(toks, x -> x = '{t}')) AS tf{i}"
@@ -2377,15 +2325,13 @@ def text_bm25_topk(spark, sf_dir):
     k1=1.2 b=0.75) — the lexical-retrieval primitive of a RAG /
     eval-search pipeline, and the lexical leg of hybrid_search_rrf.
 
-    Scale shape (see _bm25_scored): zero corpus shuffles — tf in-scan,
-    one 1-row stats broadcast, and the global top-10 is TakeOrdered
-    (per-partition heaps merged on the driver), not a global sort.
-    The rank window runs on the 10 surviving rows.
+    Scale shape (see _bm25_scored_sparksql): zero corpus shuffles —
+    tf in-scan, one 1-row stats broadcast, and the global top-10 is
+    TakeOrdered (per-partition heaps merged on the driver), not a
+    global sort. The rank window runs on the 10 surviving rows.
 
-    Construction is one spark.sql over a documents view (_SQL_TEXTQ;
-    guide §7.3); _text_bm25_topk_df is the Column parity twin."""
-    if not _SQL_TEXTQ:
-        return _text_bm25_topk_df(spark, sf_dir)
+    Construction is one spark.sql over a documents view (guide
+    §7.3)."""
     df = Catalog(spark, sf_dir).df("documents")
     df.createOrReplaceTempView("__docq_docs")
     return spark.sql(
@@ -2396,18 +2342,6 @@ FROM (SELECT doc_id, lang, source, score_micro
       WHERE score_micro > 0
       ORDER BY score_micro DESC, doc_id LIMIT 10)"""
     )
-
-
-def _text_bm25_topk_df(spark, sf_dir):
-    """Column-API twin of text_bm25_topk (parity reference)."""
-    scored = _bm25_scored(Catalog(spark, sf_dir).df("documents"))
-    top = (
-        scored.filter(F.col("score_micro") > 0)
-        .orderBy(F.col("score_micro").desc(), "doc_id")
-        .limit(10)
-    )
-    w = bounded_rank_window(F.col("score_micro").desc(), "doc_id")
-    return top.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
 @register(
@@ -2432,7 +2366,7 @@ def bm25_incremental_topk(spark, sf_dir):
     fixed query runs against the HELD state. Must hash-match the
     one-shot scorer's oracle: BM25's sufficient statistics are all
     additive, and the index's fixed-point scoring mirrors
-    _bm25_scored expression-for-expression.
+    _bm25_scored_sparksql expression-for-expression.
 
     Scale shape (functions/bm25_index.py): ingest pays one O(batch)
     explode→(doc,term) shuffle per batch so queries never rescan the
@@ -3677,12 +3611,9 @@ def dsir_select(spark, sf_dir):
     dictionary-encoded) so no second corpus-sized join is needed to
     re-attach them.
 
-    Construction is one spark.sql over a documents view (_SQL_TEXTQ;
-    guide §7.3 — the bucketed subtree is expanded textually twice,
-    exactly as the lazy Column plan duplicates it for the histogram
-    and the weight sides); _dsir_select_df is the Column twin."""
-    if not _SQL_TEXTQ:
-        return _dsir_select_df(spark, sf_dir)
+    Construction is one spark.sql over a documents view (guide §7.3
+    — the bucketed subtree is expanded textually twice, once for the
+    histogram and once for the weight side)."""
     from .operators.filters import _spark_sql_str as _sq
 
     df = Catalog(spark, sf_dir).df("documents")
@@ -3699,6 +3630,10 @@ def dsir_select(spark, sf_dir):
         f"sum(CAST((lang = {_sq(DSIR_TARGET_LANG)}) AS BIGINT)) AS t_b "
         f"FROM {b} GROUP BY bucket)"
     )
+    # corpus totals ride a window over the <= DSIR_BUCKETS-row
+    # histogram itself (single tiny partition) instead of a separate
+    # aggregate branch, which would re-run the whole tokenize+explode
+    # corpus scan inside the broadcast build
     lr = (
         f"(SELECT bucket, CAST(floor(ln("
         f"((t_b + 1.0D) * (sum(r_b) OVER () + {float(DSIR_BUCKETS)!r}D)) / "
@@ -3716,66 +3651,6 @@ def dsir_select(spark, sf_dir):
   CAST(ROW_NUMBER() OVER (ORDER BY weight_micro DESC, doc_id) AS INT) AS rank
 FROM (SELECT doc_id, lang, source, weight_micro FROM {w}
       ORDER BY weight_micro DESC, doc_id LIMIT {DSIR_SELECT_N})"""
-    )
-
-
-def _dsir_select_df(spark, sf_dir):
-    """Column-API twin of dsir_select (parity reference)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    toks = df.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.explode(hashing.tokens("text")).alias("term"),
-    )
-    b = toks.select(
-        "doc_id",
-        "lang",
-        "source",
-        (hashing.h32(F.col("term")) % F.lit(DSIR_BUCKETS)).alias("bucket"),
-    )
-    bc = b.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("r_b"),
-        F.sum(
-            (F.col("lang") == DSIR_TARGET_LANG).cast("long")
-        ).alias("t_b"),
-    )
-    # corpus totals ride a window over the <= DSIR_BUCKETS-row
-    # histogram itself (single tiny partition) instead of a separate
-    # bc.agg() branch — the agg branch re-evaluated bc's whole
-    # tokenize+explode corpus scan a second time inside the broadcast
-    # build (bc is unpersisted by design; the _ccnet_scored frame
-    # already uses this exact shape for the same reason)
-    rt = F.sum("r_b").over(W.partitionBy())
-    tt = F.sum("t_b").over(W.partitionBy())
-    lr = bc.select(
-        "bucket",
-        F.floor(
-            F.log(
-                ((F.col("t_b") + F.lit(1.0))
-                 * (rt + F.lit(float(DSIR_BUCKETS))))
-                / ((F.col("r_b") + F.lit(1.0))
-                   * (tt + F.lit(float(DSIR_BUCKETS))))
-            )
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("bigint").alias("lr_micro"),
-    )
-    w = (
-        b.join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id", "lang", "source")
-        .agg(F.sum("lr_micro").alias("weight_micro"))
-    )
-    top = w.orderBy(F.col("weight_micro").desc(), "doc_id").limit(
-        DSIR_SELECT_N
-    )
-    rank_w = bounded_rank_window(F.col("weight_micro").desc(), "doc_id")
-    return top.select(
-        "doc_id",
-        "lang",
-        "source",
-        "weight_micro",
-        F.row_number().over(rank_w).cast("int").alias("rank"),
     )
 
 
@@ -3822,9 +3697,12 @@ _CCNET_CE_SQL = f"""WITH docs AS (
 
 
 def _ccnet_scored_sparksql(D: str) -> str:
-    """_ccnet_scored as Spark-SQL text over a documents view ``D`` —
-    expression-for-expression the Column form (one spark.sql parse for
-    both bucket assigners' fast paths; guide §7.3)."""
+    """The shared CCNet scored subquery (doc_id, lang, ce_micro) over a
+    documents view ``D``: hashed-bigram cross-entropy in exact
+    fixed-point micro-nats. Both bucket assigners (exact ntile
+    terciles; sampled thresholds) consume this unchanged — see
+    ccnet_perplexity_buckets for the full story. Text, not Columns:
+    one spark.sql parse per query (guide §7.3)."""
     from .operators.filters import _spark_sql_str as _sq
 
     ts = hashing.tokens_sparksql("text")
@@ -3844,6 +3722,10 @@ def _ccnet_scored_sparksql(D: str) -> str:
         f"WHERE lang = {_sq(PPL_REF_LANG)} GROUP BY bucket)"
     )
     dom = f"(SELECT CAST(id AS BIGINT) AS bucket FROM range({PPL_BUCKETS}))"
+    # the model total rides a window over the <= PPL_BUCKETS-row cost
+    # frame itself (single tiny partition) instead of a separate
+    # aggregate branch, which would recompute the reference histogram
+    # from the corpus scan
     cost = (
         f"(SELECT bucket, CAST(floor(ln("
         f"CAST((sum(COALESCE(c_b, 0)) OVER () + {PPL_BUCKETS}) AS DOUBLE) "
@@ -3856,70 +3738,6 @@ def _ccnet_scored_sparksql(D: str) -> str:
         f"sum(cost_micro) AS tm, count(1) AS nb "
         f"FROM {b} bb JOIN {cost} c USING (bucket) GROUP BY doc_id, lang))"
     )
-
-
-def _ccnet_scored(spark, sf_dir):
-    """The shared CCNet scored frame (doc_id, lang, ce_micro): hashed-
-    bigram cross-entropy in exact fixed-point micro-nats. Both bucket
-    assigners (exact ntile terciles; sampled thresholds) consume this
-    unchanged — see ccnet_perplexity_buckets for the full story."""
-    df = Catalog(spark, sf_dir).df("documents")
-    docs = df.select(
-        "doc_id", "lang", hashing.tokens("text").alias("t")
-    ).filter(F.size("t") >= 2)
-    bigrams = F.zip_with(
-        F.expr("slice(t, 1, size(t) - 1)"),
-        F.expr("slice(t, 2, size(t) - 1)"),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    b = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(bigrams).alias("bg"),
-    ).select(
-        "doc_id",
-        "lang",
-        (hashing.h32(F.col("bg")) % F.lit(PPL_BUCKETS)).alias("bucket"),
-    )
-    rc = (
-        b.filter(F.col("lang") == PPL_REF_LANG)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_b"))
-    )
-    dom = spark.range(PPL_BUCKETS).select(
-        F.col("id").cast("bigint").alias("bucket")
-    )
-    # the model total rides a window over the <= PPL_BUCKETS-row cost
-    # frame itself (single tiny partition) instead of a separate
-    # rc.agg() branch — a second branch would recompute the reference
-    # histogram from the corpus scan (rc is unpersisted by design).
-    c_b = F.coalesce(F.col("c_b"), F.lit(0))
-    c_tot = F.sum(c_b).over(W.partitionBy())
-    cost = dom.join(rc, "bucket", "left").select(
-        "bucket",
-        F.floor(
-            F.log(
-                (c_tot + F.lit(PPL_BUCKETS)).cast("double")
-                / (c_b + F.lit(1.0))
-            )
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("bigint").alias("cost_micro"),
-    )
-    ce = (
-        b.join(F.broadcast(cost), "bucket")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("cost_micro").alias("tm"),
-            F.count(F.lit(1)).alias("nb"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr("CAST(tm div nb AS BIGINT)").alias("ce_micro"),
-        )
-    )
-    return ce
 
 
 @register(
@@ -3963,10 +3781,8 @@ def ccnet_perplexity_buckets(spark, sf_dir):
     own method: fit thresholds on a sample, assign by comparison),
     which shares the scored frame and drops the corpus window.
 
-    Construction is one spark.sql over a documents view (_SQL_TEXTQ;
-    guide §7.3); _ccnet_perplexity_buckets_df is the Column twin."""
-    if not _SQL_TEXTQ:
-        return _ccnet_perplexity_buckets_df(spark, sf_dir)
+    Construction is one spark.sql over a documents view (guide
+    §7.3)."""
     df = Catalog(spark, sf_dir).df("documents")
     df.createOrReplaceTempView("__docq_docs")
     nt = "ntile(3) OVER (PARTITION BY lang ORDER BY ce_micro, doc_id)"
@@ -3975,22 +3791,6 @@ def ccnet_perplexity_buckets(spark, sf_dir):
   CASE WHEN {nt} = 1 THEN 'head' WHEN {nt} = 2 THEN 'middle'
        ELSE 'tail' END AS ppl_bucket
 FROM {_ccnet_scored_sparksql('__docq_docs')}"""
-    )
-
-
-def _ccnet_perplexity_buckets_df(spark, sf_dir):
-    """Column-API twin of ccnet_perplexity_buckets (parity
-    reference)."""
-    ce = _ccnet_scored(spark, sf_dir)
-    n = F.ntile(3).over(W.partitionBy("lang").orderBy("ce_micro", "doc_id"))
-    return ce.select(
-        "doc_id",
-        "lang",
-        "ce_micro",
-        F.when(n == 1, "head")
-        .when(n == 2, "middle")
-        .otherwise("tail")
-        .alias("ppl_bucket"),
     )
 
 
@@ -4061,12 +3861,9 @@ def ccnet_perplexity_buckets_sampled(spark, sf_dir):
     (test-asserted); the residual is boundary docs whose sampled
     threshold sits a few ranks off the exact tercile edge.
 
-    Construction is one spark.sql over a documents view (_SQL_TEXTQ;
-    the scored subtree is expanded textually twice, exactly as the
-    lazy Column plan duplicates it for the sample and the corpus
-    sides); _ccnet_perplexity_buckets_sampled_df is the Column twin."""
-    if not _SQL_TEXTQ:
-        return _ccnet_perplexity_buckets_sampled_df(spark, sf_dir)
+    Construction is one spark.sql over a documents view (the scored
+    subtree is expanded textually twice, once for the sample and once
+    for the corpus side)."""
     df = Catalog(spark, sf_dir).df("documents")
     df.createOrReplaceTempView("__docq_docs")
     ce = _ccnet_scored_sparksql("__docq_docs")
@@ -4093,43 +3890,6 @@ def ccnet_perplexity_buckets_sampled(spark, sf_dir):
        WHEN ce_micro <= t2 THEN 'middle'
        ELSE 'tail' END AS ppl_bucket
 FROM {ce} LEFT JOIN {th} t USING (lang)"""
-    )
-
-
-def _ccnet_perplexity_buckets_sampled_df(spark, sf_dir):
-    """Column-API twin of ccnet_perplexity_buckets_sampled (parity
-    reference)."""
-    ce = _ccnet_scored(spark, sf_dir)
-    s = ce.filter(
-        hashing.h32(F.col("doc_id").cast("string"))
-        % F.lit(PPL_SAMPLE_MOD)
-        == 0
-    )
-    win = W.partitionBy("lang").orderBy("ce_micro", "doc_id")
-    r = s.select(
-        "lang",
-        "ce_micro",
-        F.row_number().over(win).alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("lang")).alias("n"),
-    )
-    th = r.groupBy("lang").agg(
-        F.max(
-            F.when(F.expr("rn <= CAST((n + 2) div 3 AS BIGINT)"),
-                   F.col("ce_micro"))
-        ).alias("t1"),
-        F.max(
-            F.when(F.expr("rn <= CAST((2 * n + 2) div 3 AS BIGINT)"),
-                   F.col("ce_micro"))
-        ).alias("t2"),
-    )
-    return ce.join(F.broadcast(th), "lang", "left").select(
-        "doc_id",
-        "lang",
-        "ce_micro",
-        F.when(F.col("ce_micro") <= F.col("t1"), "head")
-        .when(F.col("ce_micro") <= F.col("t2"), "middle")
-        .otherwise("tail")
-        .alias("ppl_bucket"),
     )
 
 
@@ -4227,11 +3987,8 @@ def hybrid_search_rrf(spark, sf_dir):
     the ann_ivf_topk / ann_lsh_topk operators supply the same
     (doc_id, cos) contract from a pruned candidate set.
 
-    Construction is one spark.sql over a documents view (_SQL_TEXTQ;
-    guide §7.3 — ~1,800 py4j round-trips on the Column path);
-    _hybrid_search_rrf_df is the Column parity twin."""
-    if not _SQL_TEXTQ:
-        return _hybrid_search_rrf_df(spark, sf_dir)
+    Construction is one spark.sql over a documents view (guide §7.3
+    — a Column-API construction was ~1,800 py4j round-trips)."""
     df = Catalog(spark, sf_dir).df("documents")
     df.createOrReplaceTempView("__docq_docs")
     q = _hybrid_query_vec()
@@ -4279,93 +4036,6 @@ FROM (SELECT doc_id, lex_rank, sem_rank,
              ({leg('lex_rank')} + {leg('sem_rank')}) AS rrf_micro
       FROM {lex} l FULL OUTER JOIN {sem} s USING (doc_id)
       ORDER BY rrf_micro DESC, doc_id LIMIT {HYBRID_TOP_N})"""
-    )
-
-
-def _hybrid_search_rrf_df(spark, sf_dir):
-    """Column-API twin of hybrid_search_rrf (parity reference)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    q = _hybrid_query_vec()
-
-    lex = (
-        _bm25_scored(df)
-        .filter(F.col("score_micro") > 0)
-        .orderBy(F.col("score_micro").desc(), "doc_id")
-        .limit(HYBRID_CAND_K)
-    )
-    lex = lex.select(
-        "doc_id",
-        F.row_number()
-        .over(bounded_rank_window(F.col("score_micro").desc(), "doc_id"))
-        .cast("int")
-        .alias("lex_rank"),
-    )
-
-    # single-parse embedding projection (guide §7.3): the 8 _hash_dim
-    # Column chains measured ~0.9s of pure py4j construction per build
-    emb = df.selectExpr(
-        "doc_id",
-        *[
-            f"{_hash_dim_sparksql('text', i)} AS e{i}"
-            for i in range(HYBRID_EMB_DIMS)
-        ],
-    )
-    dot = sum(
-        (F.col(f"e{i}") * F.lit(q[i]).cast("bigint")
-         for i in range(HYBRID_EMB_DIMS)),
-        start=F.lit(0).cast("bigint"),
-    )
-    nd = sum(
-        (F.col(f"e{i}") * F.col(f"e{i}") for i in range(HYBRID_EMB_DIMS)),
-        start=F.lit(0).cast("bigint"),
-    )
-    nq = float(sum(v * v for v in q))
-    sem = emb.select(
-        "doc_id",
-        (
-            dot.cast("double")
-            / (F.sqrt(nd.cast("double")) * F.sqrt(F.lit(nq)))
-        ).alias("cos_sim"),
-    )
-    sem = (
-        sem.orderBy(F.col("cos_sim").desc(), "doc_id")
-        .limit(HYBRID_CAND_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(bounded_rank_window(F.col("cos_sim").desc(), "doc_id"))
-            .cast("int")
-            .alias("sem_rank"),
-        )
-    )
-
-    rrf_k = float(HYBRID_RRF_K)
-
-    def leg(rank_col):
-        return F.coalesce(
-            F.floor(F.lit(1e9) / (F.lit(rrf_k) + rank_col) + F.lit(0.5))
-            .cast("bigint"),
-            F.lit(0).cast("bigint"),
-        )
-
-    fused = (
-        lex.join(sem, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            "lex_rank",
-            "sem_rank",
-            (leg(F.col("lex_rank")) + leg(F.col("sem_rank"))).alias(
-                "rrf_micro"
-            ),
-        )
-        .orderBy(F.col("rrf_micro").desc(), "doc_id")
-        .limit(HYBRID_TOP_N)
-    )
-    return fused.withColumn(
-        "fused_rank",
-        F.row_number()
-        .over(bounded_rank_window(F.col("rrf_micro").desc(), "doc_id"))
-        .cast("int"),
     )
 
 

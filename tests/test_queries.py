@@ -684,6 +684,36 @@ def test_global_windows_use_bounded_chokepoint():
     )
 
 
+def test_one_production_form_per_query():
+    """Every registry query and index topk has ONE Spark form; the
+    DuckDB oracle is its independent second form. A Column-API twin
+    kept beside the production form, or a module/class ``_SQL_*``
+    switch choosing between two forms, is flagged here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pgsync_spark"
+    pats = (
+        re.compile(r"^(?:    )?_SQL_[A-Z_]+\s*="),
+        re.compile(r"\bdef (?:_topk|_recall_eval|_bruteforce_topk)_df\b"),
+        re.compile(r"\bdef _\w+_df\(\s*spark\s*,\s*sf_dir\s*\)"),
+    )
+    bad = []
+    n_files = 0
+    for f in pkg.rglob("*.py"):
+        if "__pycache__" in f.parts:
+            continue
+        n_files += 1
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if any(p.search(line) for p in pats):
+                bad.append(f"{f}:{i}: {line.strip()}")
+    assert n_files > 20, f"package scan found only {n_files} files"
+    assert not bad, (
+        "second Spark form of a query (delete it; the DuckDB oracle "
+        "is the reference):\n" + "\n".join(bad)
+    )
+
+
 @pytest.mark.slow
 def test_clustered_recall_orderings(spark):
     """r11 verdict item 1: on the mixture-of-centers corpus the

@@ -1,42 +1,31 @@
-"""Pinned parity: the one-SQL topk path (BM25Index._topk_sql /
-VectorIndex._topk_sql) must produce the IDENTICAL Catalyst tree — and
-byte-identical rows — as the Column-API twin (_topk_df) it replaces on
-the serving paths.
-
-The pin is optimized-plan ``sameResult`` (canonical plan equality)
-PLUS byte-equality of collected rows, across: no-CDC and CDC-overlay
-stores, multi-part unions, exclude_self on/off, probe_hamming 0/1/2,
-single- and multi-term BM25 queries, and post-compact stores. The
-sqlgen discipline (tests/test_sqlgen_parity.py) applied to the index
-serving paths."""
+"""The one-SQL topk serving paths (BM25Index._topk_sql /
+VectorIndex._topk_sql) against independent references: the DuckDB
+mirrors (vector_topk_sql, _bm25_scored_sql) for single-part stores,
+and a one-shot index over the post-CDC corpus for multi-part CDC and
+post-compact stores. Covers exclude_self on/off, probe_hamming 0/1/2,
+single- and multi-term BM25 queries, hostile query terms and frames
+bound to a cloned session."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from pgsync_spark.functions.bm25_index import BM25Index
-from pgsync_spark.functions.vector_index import VectorIndex
-from pgsync_spark.queries import BM25_QUERY_TERMS
+from pgsync_spark.functions.similarity import N_QUERIES
+from pgsync_spark.functions.vector_index import VectorIndex, vector_topk_sql
+from pgsync_spark.queries import BM25_QUERY_TERMS, _bm25_scored_sql
+from pgsync_spark.testing import compare
 
 from conftest import SF_DIR
-
-
-def _same_optimized(a, b) -> bool:
-    return (
-        a._jdf.queryExecution()
-        .optimizedPlan()
-        .sameResult(b._jdf.queryExecution().optimizedPlan())
-    )
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _check(old, new, label):
-    assert _same_optimized(old, new), f"{label}: optimized plans differ"
-    ro, rn = _rows(old), _rows(new)
-    assert ro == rn, f"{label}: rows differ"
-    assert len(rn) > 0, f"{label}: vacuous (no rows)"
+def _check_oracle(df, sql, label):
+    ok, msg = compare(df, sql, SF_DIR)
+    assert ok, f"{label}: {msg}"
+    assert df.count() > 0, f"{label}: vacuous (no rows)"
 
 
 @pytest.fixture(scope="module")
@@ -51,8 +40,6 @@ def docs(spark):
 
 @pytest.fixture()
 def queries(emb):
-    from pgsync_spark.functions.similarity import N_QUERIES
-
     return emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -68,6 +55,24 @@ def _vcdc(emb):
     )
 
 
+def _vector_oneshot(spark, corpus, queries, k, exclude_self):
+    ref = VectorIndex(spark)
+    try:
+        ref.ingest(corpus)
+        return _rows(ref.topk(queries, k=k, exclude_self=exclude_self))
+    finally:
+        ref.close()
+
+
+def _bm25_oneshot(spark, corpus, terms, k):
+    ref = BM25Index(spark)
+    try:
+        ref.ingest(corpus)
+        return _rows(ref.topk(terms, k=k))
+    finally:
+        ref.close()
+
+
 @pytest.mark.parametrize(
     "k,exclude_self,hamming",
     [(10, True, 1), (3, False, 1), (10, True, 0), (10, True, 2)],
@@ -76,14 +81,38 @@ def test_vector_topk_sql_parity(spark, emb, queries, k, exclude_self, hamming):
     vidx = VectorIndex(spark, probe_hamming=hamming)
     try:
         vidx.ingest(emb)
-        old = vidx._topk_df(queries, k, exclude_self)
-        new = vidx.topk(queries, k=k, exclude_self=exclude_self)
-        _check(old, new, f"vector k={k} self={exclude_self} h={hamming}")
+        oracle = (
+            f"WITH vq AS (SELECT vec_id AS query_id, embedding "
+            f"FROM embeddings WHERE vec_id < {N_QUERIES}), "
+            + vector_topk_sql(
+                "embeddings",
+                "vq",
+                k=k,
+                probe_hamming=hamming,
+                exclude_self=exclude_self,
+            )
+        )
+        _check_oracle(
+            vidx.topk(queries, k=k, exclude_self=exclude_self),
+            oracle,
+            f"vector k={k} self={exclude_self} h={hamming}",
+        )
     finally:
         vidx.close()
 
 
 def test_vector_topk_sql_parity_cdc_and_compact(spark, emb, queries):
+    # the corpus the CDC batch leaves behind: ids 5..14 negated, 15..24
+    # deleted
+    post = (
+        emb.select("vec_id", "embedding")
+        .filter("vec_id < 5 or vec_id >= 25")
+        .unionByName(
+            _vcdc(emb).filter("op = 'u'").select("vec_id", "embedding")
+        )
+    )
+    expected = _vector_oneshot(spark, post, queries, 10, True)
+    assert expected, "vacuous (no rows)"
     vidx = VectorIndex(spark)
     try:
         # two bulk parts + a CDC epoch: multi-part union AND overlay
@@ -91,20 +120,24 @@ def test_vector_topk_sql_parity_cdc_and_compact(spark, emb, queries):
         vidx.ingest(emb.filter("vec_id % 2 = 1"))
         vidx.apply_cdc(_vcdc(emb))
         assert vidx._has_cdc
-        old = vidx._topk_df(queries, 10, True)
-        new = vidx.topk(queries, exclude_self=True)
-        _check(old, new, "vector cdc")
+        assert _rows(vidx.topk(queries, exclude_self=True)) == expected
         # compact folds the overlay physically and swaps the parts —
-        # the memoized views must re-register, and the SQL path must
-        # drop the overlay fold exactly like the Column path does
+        # the memoized views must re-register and the overlay fold
+        # must drop out of the text
         vidx.compact(force=True)
         assert not vidx._has_cdc
-        old2 = vidx._topk_df(queries, 10, True)
-        new2 = vidx.topk(queries, exclude_self=True)
-        _check(old2, new2, "vector post-compact")
-        assert _rows(new) == _rows(new2), "compact changed results"
+        assert _rows(vidx.topk(queries, exclude_self=True)) == expected
     finally:
         vidx.close()
+
+
+def _bm25_oracle(terms, k):
+    return f"""SELECT doc_id, lang, source, score_micro,
+               CAST(ROW_NUMBER() OVER (
+                 ORDER BY score_micro DESC, doc_id) AS INT) AS rank
+        FROM ({_bm25_scored_sql(terms)})
+        WHERE score_micro > 0
+        ORDER BY score_micro DESC, doc_id LIMIT {k}"""
 
 
 @pytest.mark.parametrize(
@@ -115,18 +148,19 @@ def test_bm25_topk_sql_parity(spark, docs, terms, k):
     bidx = BM25Index(spark)
     try:
         bidx.ingest(docs)
-        old = bidx._topk_df(terms, k)
-        new = bidx.topk(terms, k=k)
-        _check(old, new, f"bm25 terms={terms}")
+        _check_oracle(
+            bidx.topk(terms, k=k), _bm25_oracle(terms, k), f"bm25 {terms}"
+        )
     finally:
         bidx.close()
 
 
 def test_bm25_topk_sql_parity_cdc(spark, docs):
-    bidx = BM25Index(spark)
-    try:
-        bidx.ingest(docs)
-        cdc = docs.limit(40).select(
+    # eager checkpoint: the post-CDC corpus below must see exactly the
+    # rows the index applied
+    cdc = (
+        docs.limit(40)
+        .select(
             "doc_id",
             F.concat(F.lit("spark vector updated "), F.col("text")).alias(
                 "text"
@@ -137,27 +171,38 @@ def test_bm25_topk_sql_parity_cdc(spark, docs):
             .otherwise(F.lit("u"))
             .alias("op"),
         )
+        .localCheckpoint()
+    )
+    cols = ("doc_id", "text", "lang", "source")
+    post = (
+        docs.select(*cols)
+        .join(cdc.select("doc_id"), "doc_id", "left_anti")
+        .unionByName(cdc.filter("op = 'u'").select(*cols))
+    )
+    expected = _bm25_oneshot(spark, post, BM25_QUERY_TERMS, 10)
+    assert expected, "vacuous (no rows)"
+    bidx = BM25Index(spark)
+    try:
+        bidx.ingest(docs)
         bidx.apply_cdc(cdc)
         assert bidx._has_cdc
-        old = bidx._topk_df(BM25_QUERY_TERMS, 10)
-        new = bidx.topk(BM25_QUERY_TERMS, k=10)
-        _check(old, new, "bm25 cdc")
+        assert _rows(bidx.topk(BM25_QUERY_TERMS, k=10)) == expected
     finally:
         bidx.close()
 
 
 def test_bm25_topk_escapes_hostile_terms(spark, docs):
     """A query term with a quote/backslash must stay a literal (the
-    _spark_sql_str escaper), matching the Column form's F.lit verbatim
-    semantics — no parse error, no injection, same (empty) result."""
+    _spark_sql_str escaper): no parse error, no injection. It matches
+    no posting, so its df is 0 and it adds 0 to every score — the
+    result equals the query without it."""
     bidx = BM25Index(spark)
     try:
         bidx.ingest(docs)
-        hostile = ("spark", "o'brien\\x) OR (1=1")
-        old = bidx._topk_df(hostile, 10)
-        new = bidx.topk(hostile, k=10)
-        assert _same_optimized(old, new)
-        assert _rows(old) == _rows(new)
+        hostile = _rows(bidx.topk(("spark", "o'brien\\x) OR (1=1"), k=10))
+        plain = _rows(bidx.topk(("spark",), k=10))
+        assert plain, "vacuous (no rows)"
+        assert hostile == plain
     finally:
         bidx.close()
 
@@ -178,15 +223,16 @@ def test_topk_sql_from_cloned_session_frames(spark, docs):
     """foreachBatch hands the index frames bound to a CLONED
     SparkSession whose session-temp-view catalog is isolated — the
     one-SQL path must still resolve (global temp views). Clone via
-    newSession(), the same catalog-isolation shape."""
+    newSession(), the same catalog-isolation shape; the answer must
+    equal an index whose parts are bound to the index's own
+    session."""
+    expected = _bm25_oneshot(spark, docs, BM25_QUERY_TERMS, 10)
+    assert expected, "vacuous (no rows)"
     clone = spark.newSession()
     cdocs = clone.read.parquet(f"{SF_DIR}/documents.parquet")
     bidx = BM25Index(spark)
     try:
         bidx.ingest(cdocs)  # parts bound to the clone
-        old = bidx._topk_df(BM25_QUERY_TERMS, 10)
-        new = bidx.topk(BM25_QUERY_TERMS, k=10)
-        assert _rows(old) == _rows(new)
-        assert len(_rows(new)) > 0
+        assert _rows(bidx.topk(BM25_QUERY_TERMS, k=10)) == expected
     finally:
         bidx.close()

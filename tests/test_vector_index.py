@@ -586,7 +586,8 @@ def test_ivf_topk_plan_shape_after_rebuild(spark):
     """The IVF family keeps the same serving-plan discipline,
     including after a rebuild: the probe is one Arrow assignment of
     the QUERY frame (mapInPandas with the codebook broadcast in the
-    closure), candidates resolve by broadcast joins, and the held
+    closure, served to the shared topk SQL text through a per-index
+    view), candidates resolve by broadcast joins, and the held
     corpus is never shuffled — no sort-merge join, candidate-sized
     hash exchanges only."""
     from pgsync_spark.functions.vector_index import IVFVectorIndex
@@ -602,7 +603,13 @@ def test_ivf_topk_plan_shape_after_rebuild(spark):
     assert "SortMergeJoin" not in final, final
     assert final.count("BroadcastHashJoin") >= 2, final
     assert final.count("Exchange hashpartitioning") <= 2, final
+    assert "MapInPandas" in final or "PythonMapInArrow" in final, final
+    views = idx._extra_view_names()
+    assert all(spark.catalog.tableExists(f"global_temp.{v}") for v in views)
     idx.close()
+    assert not any(
+        spark.catalog.tableExists(f"global_temp.{v}") for v in views
+    )
 
 
 @pytest.mark.slow

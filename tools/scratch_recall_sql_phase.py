@@ -41,8 +41,8 @@ for _ in range(2):
     t["tranked"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    qf, _ = S._adc_query_frame(spark, pq[1])
-    tqf, _ = S._adc_query_frame(spark, pqt[1])
+    qf = S._adc_query_frame(spark, pq[1])
+    tqf = S._adc_query_frame(spark, pqt[1])
     for frame, nm in ((exact, "x"), (ranked, "r"), (tranked, "t"),
                       (pq[3], "c"), (pqt[3], "tc"), (qf, "qf"), (tqf, "tqf")):
         frame.createOrReplaceTempView(f"__p_{nm}")
