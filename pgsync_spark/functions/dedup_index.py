@@ -501,28 +501,51 @@ class _AppendOnlyIndex:
         extra_dead: DataFrame | None = None,
     ) -> DataFrame:
         """Fold ``frame`` (any keys/vals frame carrying (_ID_COL, ver))
-        to current-version rows: untouched ids pass the anti-join,
-        touched ids keep only their latest live version's rows.
-        ``extra_dead`` (single id column): ids treated dead regardless
-        — an apply_cdc probe passes its own batch's ids so an update
-        never matches its own superseded version.
+        to current-version rows: untouched ids pass, touched ids keep
+        only their latest live version's rows. ``extra_dead`` (single
+        id column): ids treated dead regardless — an apply_cdc probe
+        passes its own batch's ids so an update never matches its own
+        superseded version.
 
-        The broadcast hints are SAFE by construction: the overlay is
+        ONE broadcast left join on the id alone, then a filter: the
+        overlay holds one row per id, so the join never duplicates a
+        row, and a single integral key builds a LongHashedRelation. A
+        semi-join on (id, ver) would build an UnsafeHashedRelation,
+        whose map claims a whole memory page (spark.buffer.pageSize,
+        16 MB on a 3 GB driver) per broadcast however few rows it
+        holds, pinned in the driver block store until the broadcast
+        is garbage-collected and cleaned.
+
+        The broadcast hint is SAFE by construction: the overlay is
         bounded by ``overlay_cap`` + one batch (_maybe_autocompact
         compacts past the cap even if the stream's compact_every
-        cadence never fires), so the dead/alive frames stay far under
-        any broadcast/driver-memory limit."""
+        cadence never fires), so it stays far under any
+        broadcast/driver-memory limit."""
         idc = self._ID_COL
-        dead = overlay.select(idc)
-        alive = overlay.filter(F.col("op") != "d").select(idc, "ver")
+        touched = overlay.select(
+            idc,
+            F.col("ver").alias("__live_ver"),
+            (F.col("op") != "d").alias("__live"),
+        )
         if extra_dead is not None:
-            dead = dead.unionByName(extra_dead.select(idc)).distinct()
-            alive = alive.join(
-                F.broadcast(extra_dead.select(idc)), idc, "left_anti"
+            extra = extra_dead.select(idc).distinct()
+            touched = touched.join(
+                F.broadcast(extra), idc, "left_anti"
+            ).unionByName(
+                extra.select(
+                    idc,
+                    F.lit(None).cast("long").alias("__live_ver"),
+                    F.lit(False).alias("__live"),
+                )
             )
-        clean = frame.join(F.broadcast(dead), idc, "left_anti")
-        current = frame.join(F.broadcast(alive), [idc, "ver"], "left_semi")
-        return clean.unionByName(current)
+        live = F.col("__live").isNull() | (
+            F.col("__live") & (F.col("ver") == F.col("__live_ver"))
+        )
+        return (
+            frame.join(F.broadcast(touched), idc, "left")
+            .filter(live)
+            .drop("__live_ver", "__live")
+        )
 
     def bind_stream(self, stream_id: str, allow_rebind: bool = False) -> None:
         """Pair the index's REPLAY bookkeeping with one stream
@@ -831,127 +854,121 @@ class _AppendOnlyIndex:
         footer reads per probe); in memory, the lazy union deepens by
         one frame per batch, growing every probe's plan linearly.
 
-        Cutover is atomic (the same CURRENT discipline as ingest):
-        write the combined segment as an UNLISTED ghost dir, persist
-        the read-back, flip the manifest to the single new segment,
-        then delete the old segment dirs (a crash between flip and
-        delete leaves orphans that are never read). The applied-epoch
-        set and the per-epoch decision dirs are untouched —
-        ``epoch_applied`` / ``stored_decisions`` answer identically
-        after compaction, so stream replay semantics survive.
+        One fold, one wave. With CDC state held (the exact
+        ``_overlay_rows`` counter is non-zero — no emptiness job), the
+        overlay is aggregated ONCE into a small leaf checkpoint, and
+        each side folds against it (_cdc_live: one single-key
+        broadcast) in the same projection that finalizes it: shadowed
+        versions and tombstoned ids drop, survivors get op='a' and
+        ver=-1. Without CDC state the fold is
+        just that projection over the parts union. Both folded sides
+        then checkpoint in ONE concurrent wave
+        (caching.local_checkpoint_parallel); the keys row count rides
+        that checkpoint as an Observation (an empty keys side is
+        dropped — a partitioned write of an empty frame leaves an
+        unreadable dir, and _append gates the same way). The vals side
+        stays even when empty: an all-deleted corpus must still flip
+        the manifest off the old segments.
 
-        With CDC state held (``_has_cdc``), compaction is also the
-        Lucene merge: the overlay folds physically FIRST — shadowed
-        versions and tombstoned ids drop from both frames, survivors
-        reset to op='a' — then the folded single frames cut over. The
-        fold materializes via eager localCheckpoint BEFORE
+        Every rewrite resets ver to the -1 sentinel (the value the
+        pre-CDC load shim uses): compacted rows are all live and
+        versionless, and a REBOUND stream reuses epoch numbers —
+        keeping old vers would let a rebound apply_cdc's (id, ver=N)
+        overlay row match a compacted survivor written at the old
+        epoch N, resurrecting and duplicating the stale
+        version (r8 review pass 2). -1 is strictly older than every
+        real epoch, so the max-ver fold always prefers genuine CDC
+        rows.
+
+        Store-backed cutover is atomic (the same CURRENT discipline as
+        ingest): the folded checkpoints are written as an UNLISTED
+        ghost segment, the read-back is persisted, the manifest flips
+        to the single new segment, then the old segment dirs are
+        deleted (a crash between flip and delete leaves orphans that
+        are never read). Store-less, the checkpoints ARE the new
+        parts. Either way the new frames materialize BEFORE
         _swap_parts releases the old parts' blocks (a lazy fold over
-        released localCheckpoints has nothing to recompute from), and
-        dirty rows only exist in epoch=N segments appended since the
-        last compact, so force=True always reaches the needs_rename
-        rewrite and disk can never diverge from the folded memory."""
+        released localCheckpoints has nothing to recompute from). The
+        applied-epoch set and the per-epoch decision dirs are
+        untouched — ``epoch_applied`` / ``stored_decisions`` answer
+        identically after compaction, so stream replay semantics
+        survive.
+
+        ``force`` (the bind_stream rebind path) rewrites even a single
+        held segment: a store-backed epoch=N dir must vacate for the
+        rebound stream's reused epoch numbers, and a store-less part
+        may carry real epoch vers that would collide with them."""
         import shutil
+
+        from pyspark.sql import Observation
+
+        from .. import caching
 
         if not self._key_parts and not self._val_parts:
             return
-        stale_flag_cleared = False
-        if self._has_cdc:
-            from .. import caching
-
-            vals = self.vals
-            had_dirty = (
-                vals is not None
-                and "op" in vals.columns
-                and not vals.filter(F.col("op") != "a").isEmpty()
-            )
-            if not had_dirty:
-                # the flag is stale (set, but zero dirty rows held —
-                # e.g. every CDC epoch since the last compact carried
-                # only rows that dropped): the reset below must reach
-                # the MANIFEST too, or a reloaded store pays the
-                # overlay scan + two joins per query forever (r8
-                # advice) — the early return skips the rewrite that
-                # would otherwise commit it
-                stale_flag_cleared = self.store_dir is not None
-            if had_dirty:
-                overlay = self._cdc_overlay(vals)
-                fv = (
-                    self._cdc_live(vals, overlay)
-                    .withColumn("op", F.lit("a"))
-                    .localCheckpoint(eager=True)
-                )
-                fk = None
-                keys = self.keys
-                if keys is not None:
-                    fk = self._cdc_live(keys, overlay).localCheckpoint(
-                        eager=True
-                    )
-                    if fk.count() == 0:
-                        # a partitioned write of an empty frame leaves
-                        # an unreadable dir — drop the side (_append
-                        # gates the same way)
-                        caching.release_local_checkpoint(fk)
-                        fk = None
-                # vals stays even when empty: the non-partitioned write
-                # round-trips an empty frame with schema, and an
-                # all-deleted corpus must still flip the manifest off
-                # the old segments
-                self._swap_parts(fk, fv)
-                # the fold already materialized the exact live keys —
-                # reconcile the occupancy counters from it (gross
-                # append-counting drifts by at most the overlay being
-                # folded away here), before any commit below persists
-                # them
-                self._track_folded_keys(fk)
-                force = True
-            # the overlay is now provably empty either way (folded
-            # above, or there were no dirty rows at all): drop the
-            # flag so readers/probes return to the append-only fast
-            # path — leaving it set costs an overlay scan + two joins
-            # per query FOREVER (r8 review finding). The reset reaches
-            # the manifest via this compact's cutover commit, or via
-            # the stale_flag_cleared commit at the early return.
-            self._has_cdc = False
-            self._overlay_rows = 0
-        # force (the bind_stream rebind path) must still rewrite even a
-        # SINGLE epoch=N segment: the rebound stream reuses epoch
-        # numbers, and its epoch=N write would clobber a dir the
-        # manifest still lists
+        dirty = self._has_cdc and self._overlay_rows > 0 and bool(
+            self._val_parts
+        )
         needs_rename = force and (
-            # store-backed: epoch=N dirs must vacate for a rebound
-            # stream's reused epoch numbers
             (
                 self.store_dir is not None
                 and any(s.startswith("epoch=") for s in self._segments)
             )
-            # store-less: a forced (rebind) compact must still rewrite
-            # a single held part — its rows can carry real epoch vers
-            # that a rebound stream's reused epoch numbers would
-            # collide with (the _reset_ver hazard below)
             or (self.store_dir is None and bool(self._val_parts))
         )
         if (
-            len(self._key_parts) <= 1
+            not dirty
+            and len(self._key_parts) <= 1
             and len(self._val_parts) <= 1
             and not needs_rename
         ):
-            if stale_flag_cleared:
-                self._commit_manifest()
+            if self._has_cdc:
+                # the flag is stale (set, but zero dirty rows held —
+                # e.g. every CDC epoch since the last compact carried
+                # only rows that dropped): clear it and commit, or a
+                # reloaded store pays the overlay scan + two joins per
+                # query forever (r8 advice)
+                self._has_cdc = False
+                self._overlay_rows = 0
+                if self.store_dir is not None:
+                    self._commit_manifest()
             return
         # either side may be None (one-sided segments: BM25 batches of
         # stats-only docs hold vals, no keys)
         keys, vals = self.keys, self.vals
-        # every compact rewrite resets ver to the -1 sentinel (the
-        # same value the pre-CDC load shim uses): compacted rows are
-        # all live and versionless, and a REBOUND stream reuses epoch
-        # numbers — keeping old vers would let a rebound apply_cdc's
-        # (id, ver=N) overlay row semi-join-match a compacted survivor
-        # that happened to be written at the old epoch N, resurrecting
-        # and duplicating the stale version (r8 review pass 2,
-        # confirmed live). -1 is strictly older than every real epoch,
-        # so the max-ver fold always prefers genuine CDC rows.
-        keys = _reset_ver(keys)
-        vals = _reset_ver(vals)
+        overlay = None
+        try:
+            if dirty:
+                overlay = self._cdc_overlay(vals).localCheckpoint(
+                    eager=True
+                )
+                vals = self._cdc_live(vals, overlay).withColumn(
+                    "op", F.lit("a")
+                )
+                if keys is not None:
+                    keys = self._cdc_live(keys, overlay)
+            keys, vals = _reset_ver(keys), _reset_ver(vals)
+            obs = Observation()
+            if keys is not None:
+                keys = keys.observe(obs, F.count(F.lit(1)).alias("n"))
+            frames = caching.local_checkpoint_parallel(
+                [f for f in (keys, vals) if f is not None]
+            )
+        finally:
+            if overlay is not None:
+                caching.release_local_checkpoint(overlay)
+        new_keys = frames.pop(0) if keys is not None else None
+        new_vals = frames.pop(0) if vals is not None else None
+        if new_keys is not None and not obs.get["n"]:
+            caching.release_local_checkpoint(new_keys)
+            new_keys = None
+        if dirty:
+            # the fold materialized the exact live keys — reconcile
+            # the occupancy counters from them (gross append-counting
+            # drifts by at most the overlay folded away here), before
+            # the commit below persists them
+            self._track_folded_keys(new_keys)
+        old_segments: list[str] = []
         if self.store_dir is not None:
             seg = f"compacted-{self.next_epoch()}"
             n = 0
@@ -963,54 +980,36 @@ class _AppendOnlyIndex:
                 # from crashed compacts are skipped too, harmlessly
                 n += 1
                 seg = f"compacted-{self.next_epoch()}-{n}"
-            new_keys = new_vals = None
-            if keys is not None:
-                keys.write.mode("overwrite").partitionBy("band").parquet(
-                    os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                )
-                new_keys = self.spark.read.parquet(
-                    os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                ).persist()
+            if new_keys is not None:
+                path = os.path.join(self.store_dir, self._KEYS_NAME, seg)
+                new_keys.write.mode("overwrite").partitionBy(
+                    "band"
+                ).parquet(path)
+                caching.release_local_checkpoint(new_keys)
+                new_keys = self.spark.read.parquet(path).persist()
                 new_keys.count()
-            if vals is not None:
-                vals.write.mode("overwrite").parquet(
-                    os.path.join(self.store_dir, self._VALS_NAME, seg)
-                )
-                new_vals = self.spark.read.parquet(
-                    os.path.join(self.store_dir, self._VALS_NAME, seg)
-                ).persist()
+            if new_vals is not None:
+                path = os.path.join(self.store_dir, self._VALS_NAME, seg)
+                new_vals.write.mode("overwrite").parquet(path)
+                caching.release_local_checkpoint(new_vals)
+                new_vals = self.spark.read.parquet(path).persist()
                 new_vals.count()
             old_segments, self._segments = self._segments, [seg]
+        # the overlay is now physically empty: readers and probes
+        # return to the append-only fast path (leaving the flag set
+        # costs an overlay scan + two joins per query FOREVER, r8
+        # review finding); the cutover commit persists it
+        self._has_cdc = False
+        self._overlay_rows = 0
+        if self.store_dir is not None:
             self._commit_manifest()
-            self._swap_parts(new_keys, new_vals)
-            for s in old_segments:
-                for name in (self._KEYS_NAME, self._VALS_NAME):
-                    shutil.rmtree(
-                        os.path.join(self.store_dir, name, s),
-                        ignore_errors=True,
-                    )
-        else:
-            # eager checkpoint (not persist): the union's lineage spans
-            # every old part — truncate it so the compacted frame is a
-            # leaf and old parts' blocks can actually be freed
-            from .. import caching
-
-            if keys is not None and vals is not None:
-                new_keys, new_vals = caching.local_checkpoint_parallel(
-                    [keys, vals]
+        self._swap_parts(new_keys, new_vals)
+        for s in old_segments:
+            for name in (self._KEYS_NAME, self._VALS_NAME):
+                shutil.rmtree(
+                    os.path.join(self.store_dir, name, s),
+                    ignore_errors=True,
                 )
-            else:
-                new_keys = (
-                    keys.localCheckpoint(eager=True)
-                    if keys is not None
-                    else None
-                )
-                new_vals = (
-                    vals.localCheckpoint(eager=True)
-                    if vals is not None
-                    else None
-                )
-            self._swap_parts(new_keys, new_vals)
 
     def _swap_parts(
         self, new_keys: DataFrame | None, new_vals: DataFrame | None

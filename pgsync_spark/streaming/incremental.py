@@ -37,6 +37,8 @@ identical.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -199,6 +201,23 @@ def materialize_tree(
     return materialize_combined(combined, compiled.keys_cols, count_obs)
 
 
+def _consumer_wave(calls: list) -> None:
+    """Run the doc consumers' calls of one batch concurrently, wait for
+    EVERY one of them, then re-raise the first failure in registration
+    order — a raising consumer never leaves another mid-apply when the
+    batch's temporaries are released."""
+    if len(calls) <= 1:
+        for call in calls:
+            call()
+        return
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(calls)) as ex:
+        futures = [ex.submit(call) for call in calls]
+    for f in futures:
+        f.result()
+
+
 class IncrementalEngine:
     """Maintains (docs, lineage) for one Tree against a mutable Catalog."""
 
@@ -331,7 +350,12 @@ class IncrementalEngine:
         # SearchIndexMaintainer): each gets apply(upserts, deleted_ids)
         # after the stores commit, and truncate() on a root TRUNCATE —
         # the reference's sync→search-index leg with the index owned
-        # by the engine (ref: pgsync/sync.py:1495-1528)
+        # by the engine (ref: pgsync/sync.py:1495-1528). The consumers
+        # of one batch run CONCURRENTLY, one thread each: they must
+        # own disjoint state (no shared view names or files) and must
+        # not read each other's effects within the batch. Every call
+        # returns before process_batch does; the first failure (in
+        # registration order) re-raises after all of them finished.
         self.doc_consumers: list = []
 
     # -- store plumbing ------------------------------------------------
@@ -840,231 +864,235 @@ class IncrementalEngine:
         # keep is copied into eager overlay checkpoints before the
         # batch ends, so ALL temporaries release at batch end
         batch_tmp: list[DataFrame] = [events]
-
-        if root_trunc:
-            # TRUNCATE of the root empties the stores as of its stream
-            # position (ref: _truncate_op). Events ordered AFTER the
-            # truncate still apply — the materializer's LWW fold keeps
-            # them in the bronze snapshots (exact (txid, seq) cut), and
-            # any INSERT/UPDATE new images re-enter the normal resolve/
-            # recompute below against the emptied stores: old images
-            # resolve against the now-empty lineage (nothing to
-            # delete), new-image keys recompute from the post-batch
-            # snapshots, where pre-truncate rows no longer exist — so
-            # only rows that survive serial replay come back.
-            if apply_snapshots:
-                self.materializer.apply(events, materialized=True, stats=per_table)
-            apply_snapshots = False  # applied here; skip below
-            mark("materializer")
-            docs_ck = self.docs.limit(0).localCheckpoint(eager=True)
-            lin_ck = self.lineage.limit(0).localCheckpoint(eager=True)
-            self._docs_store.reset(docs_ck, owns_base=True)
-            self._lineage_store.reset(lin_ck, owns_base=True)
-            self._maybe_release_shared()
-            for consumer in self.doc_consumers:
+        try:
+            if root_trunc:
+                # TRUNCATE of the root empties the stores as of its stream
+                # position (ref: _truncate_op). Events ordered AFTER the
+                # truncate still apply — the materializer's LWW fold keeps
+                # them in the bronze snapshots (exact (txid, seq) cut), and
+                # any INSERT/UPDATE new images re-enter the normal resolve/
+                # recompute below against the emptied stores: old images
+                # resolve against the now-empty lineage (nothing to
+                # delete), new-image keys recompute from the post-batch
+                # snapshots, where pre-truncate rows no longer exist — so
+                # only rows that survive serial replay come back.
+                if apply_snapshots:
+                    self.materializer.apply(events, materialized=True, stats=per_table)
+                apply_snapshots = False  # applied here; skip below
+                mark("materializer")
+                docs_ck = self.docs.limit(0).localCheckpoint(eager=True)
+                lin_ck = self.lineage.limit(0).localCheckpoint(eager=True)
+                self._docs_store.reset(docs_ck, owns_base=True)
+                self._lineage_store.reset(lin_ck, owns_base=True)
+                self._maybe_release_shared()
                 # the doc corpus was cleared as of this stream position
-                # — engine-owned indexes clear too; post-truncate
-                # events in this same batch re-enter below and reach
-                # the consumers as ordinary upserts
-                consumer.truncate()
-            if sum(new_counts.values()) == 0:
-                # no new images anywhere in the batch — nothing after
-                # the truncate can materialize
-                caching.release_local_checkpoints(batch_tmp)
+                # — engine-owned indexes clear too; post-truncate events
+                # in this same batch re-enter below and reach the
+                # consumers as ordinary upserts
+                _consumer_wave([c.truncate for c in self.doc_consumers])
+                if sum(new_counts.values()) == 0:
+                    # no new images anywhere in the batch — nothing after
+                    # the truncate can materialize
+                    return
+            if n_active == 0:
+                # only suppressed no-op UPDATEs: keep snapshots exact (their
+                # unwatched columns may have changed) but skip all doc work
+                if apply_snapshots:
+                    self.materializer.apply(events, materialized=True, stats=per_table)
                 return
-        if n_active == 0:
-            # only suppressed no-op UPDATEs: keep snapshots exact (their
-            # unwatched columns may have changed) but skip all doc work
+
+            # suppressed events never resolve or recompute (ref:
+            # pgsync/trigger.py:58-71), but they DO reach the materializer
+            # so snapshots stay exact on unwatched columns
+            active = events if n_total == n_active else events.filter(keep)
+
+            # ---- wave 1: bronze apply ∥ old-image ids ∥ new-image keys ---
+            # All three depend only on the events checkpoint and PRE-batch
+            # state, so they run as ONE concurrent wave of jobs instead of
+            # three serial driver round-trips:
+            #  - the materializer folds the batch into the bronze snapshots;
+            #  - old images resolve against the lineage index (pre-batch by
+            #    construction);
+            #  - new images resolve their FK chains against the PRE-batch
+            #    snapshots. Exact by induction: an event whose ancestor
+            #    chain crosses a row created in THIS batch is covered by
+            #    that row's own event, whose chain is one hop shorter and
+            #    starts from its event image (never a snapshot read), so
+            #    the affected-root union over all events is the same set
+            #    serial replay reaches — rows linked through since-updated
+            #    parents over-approximate, and recompute is idempotent.
+            #    (The runner path, apply_snapshots=False, resolves against
+            #    POST-batch snapshots — also exact, same argument.)
+            ids_old = self._resolve_old_images(
+                active,
+                n_active,
+                has_truncate=any_trunc,
+                old_tables=old_tables,
+            )
+            new_keys = self._resolve_new_images(active, new_counts)
+            mark("resolve_build")
+            wave: list = []
+            # frames the materializer supersedes (prev overlays, compacted
+            # bases) must NOT unpersist mid-wave: the new_keys/ids jobs in
+            # this same wave scan the PRE-batch snapshot views, and a lost
+            # localCheckpoint block is unrecoverable (no lineage). They
+            # defer into batch_tmp and release with the other temporaries
+            # after every consumer is done.
+            deferred: list[DataFrame] = []
             if apply_snapshots:
-                self.materializer.apply(events, materialized=True, stats=per_table)
+                # per-table stats from the events checkpoint ride along —
+                # the materializer skips its own aggregation action
+                wave.append(
+                    lambda: self.materializer.apply(
+                        events,
+                        materialized=True,
+                        stats=per_table,
+                        defer_release=deferred,
+                    )
+                )
+            wave.append(lambda: ids_old.localCheckpoint(eager=True))
+            if new_keys is not None:
+                wave.append(lambda nk=new_keys: nk.localCheckpoint(eager=True))
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(len(wave)) as ex:
+                results = [f.result() for f in [ex.submit(t) for t in wave]]
+            if apply_snapshots:
+                results = results[1:]
+            batch_tmp.extend(deferred)
+            ids = results[0]
+            batch_tmp.append(ids)
+            if new_keys is not None:
+                new_keys = results[-1]
+                batch_tmp.append(new_keys)
+            mark("bronze_resolve_wave")
+
+            # broadcast guards below use event-derived UPPER BOUNDS instead
+            # of exact counts — each exact count is a driver sync point (a
+            # full Spark job), and an upper bound decides the broadcast the
+            # same way where it matters: a bulk backfill / child TRUNCATE
+            # makes the bound huge → shuffle path, a normal batch keeps it
+            # tiny → broadcast. n_new bound: every resolved root key traces
+            # to at least one INSERT/UPDATE event.
+            n_new = sum(new_counts.values()) if new_keys is not None else 0
+            if new_keys is not None:
+                key_ids = new_keys.select(
+                    F.concat_ws("|", *[F.col(c).cast("string") for c in self.root_pks]).alias(
+                        "_id"
+                    )
+                )
+                ids = ids.unionByName(key_ids)  # semi-join side: dupes harmless
+            # old-image ids ≤ n_active events ... except a child TRUNCATE,
+            # whose lineage sweep can return the whole store — no bound is
+            # knowable without counting, so count only then (cheap: ids is
+            # already checkpointed).
+            n_ids = ids.count() if any_trunc else n_active + n_new
+            mark("ids_count")
+
+            # ONE store materialization covers every downstream need: the
+            # affected ids that exist in the store, with their typed root
+            # PKs riding along, UNIONED with the new-image keys — a single
+            # checkpoint feeds both the store maintenance and the
+            # recompute. Ids absent from the store (new inserts)
+            # anti-remove nothing, so restricting the store anti-join side
+            # to the in-store subset is exact; recompute keys for new
+            # inserts ride in via the __new rows.
+            affected = self.docs.join(
+                maybe_broadcast(ids, known_rows=n_ids), "_id", "left_semi"
+            ).select("_id", *self.root_pks).withColumn("__new", F.lit(False))
+            if new_keys is not None:
+                affected = affected.unionByName(
+                    new_keys.select(
+                        F.concat_ws(
+                            "|", *[F.col(c).cast("string") for c in self.root_pks]
+                        ).alias("_id"),
+                        *self.root_pks,
+                    ).withColumn("__new", F.lit(True))
+                )
+            affected = affected.localCheckpoint(eager=True)
+            mark("affected_ckpt")
+            batch_tmp.append(affected)
+            n_affected = n_ids  # affected ⊆ ids ∪ new: same broadcast decision
+            affected_ids = affected.filter(~F.col("__new")).select("_id")
+
+            # recompute those roots from the CURRENT snapshots (both inputs
+            # checkpointed → the compiler's fan-out re-reads, never recomputes;
+            # it dedups root_keys itself)
+            affected_keys = affected.select(*self.root_pks)
+
+            from ..plans.sqlgen import compile_assembled
+
+            combined_plan, cmeta = compile_assembled(
+                self.catalog,
+                self.tree,
+                root_keys=affected_keys,
+                root_keys_rows=n_affected + n_new,
+                include_pks=True,
+                include_keys=True,
+                scope=self._view_scope,
+            )
+            # upsert + implicit delete: affected docs that did not recompute
+            # (root row gone) simply don't come back (ref: _delete_op).
+            # The recomputed-doc count rides the combined checkpoint via
+            # observe — no separate count() action.
+            count_obs = Observation()
+            new_docs, new_lineage, new_combined = materialize_combined(
+                combined_plan, cmeta.keys_cols, count_obs=count_obs
+            )
+            batch_tmp.append(new_combined)
+            self.stats["recomputed_docs"] += int(count_obs.get["n_docs"])
+            mark("recompute_tree")
+            # store maintenance is O(batch + overlay): replace the affected
+            # keys' rows in each overlay store (a key whose doc did not
+            # recompute simply has no replacement rows — the implicit
+            # delete). New-insert ids ride in via the rows side; they were
+            # never in the base, so the touched-key anti-join is exact.
+            # Both stores' overlay checkpoints go out in ONE concurrent wave
+            # (4 serial driver round-trips → 1).
+            apply_overlays_parallel(
+                [
+                    (self._docs_store, affected_ids, new_docs, n_affected),
+                    (self._lineage_store, affected_ids, new_lineage, n_affected),
+                ]
+            )
+            mark("stores_overlay")
+            self._maybe_release_shared()
+            if self.doc_consumers:
+                # the sink-facing doc DELTA: recomputed docs through the
+                # tree's plugin chain (a plugin-dropped doc is simply not
+                # re-indexed — the reference drops at indexing time too,
+                # leaving whatever the sink held; ref: pgsync/sync.py:
+                # 1571-1572), plus the ids whose docs vanished (root row
+                # gone — the engine's implicit delete, made explicit for
+                # consumers). Both frames derive from this batch's eager
+                # checkpoints (new_combined / affected), so consumers run
+                # BEFORE the release below — as ONE concurrent wave: each
+                # index's apply + compaction is mostly driver-side
+                # scheduling, so serially the indexes took turns idling
+                # the executors (see the doc_consumers contract in
+                # __init__).
+                ups = new_docs
+                if self.plugins:
+                    from ..plugin import apply_plugins
+
+                    ups = apply_plugins(
+                        ups,
+                        self.plugins,
+                        index=self.tree.index or self.tree.root.table,
+                        passthrough=tuple(
+                            c for c in ups.columns if c == "_routing"
+                        ),
+                    )
+                gone = affected_ids.join(
+                    new_docs.select("_id"), "_id", "left_anti"
+                )
+                _consumer_wave(
+                    [partial(c.apply, ups, gone) for c in self.doc_consumers]
+                )
+                mark("doc_consumers")
+        finally:
+            # overlay checkpoints are eager — every batch temporary
+            # (events, resolved keys, affected set, recompute output)
+            # is fully copied out by the time the body ends, and a
+            # raising consumer must not leak them either
             caching.release_local_checkpoints(batch_tmp)
-            return
-
-        # suppressed events never resolve or recompute (ref:
-        # pgsync/trigger.py:58-71), but they DO reach the materializer
-        # so snapshots stay exact on unwatched columns
-        active = events if n_total == n_active else events.filter(keep)
-
-        # ---- wave 1: bronze apply ∥ old-image ids ∥ new-image keys ---
-        # All three depend only on the events checkpoint and PRE-batch
-        # state, so they run as ONE concurrent wave of jobs instead of
-        # three serial driver round-trips:
-        #  - the materializer folds the batch into the bronze snapshots;
-        #  - old images resolve against the lineage index (pre-batch by
-        #    construction);
-        #  - new images resolve their FK chains against the PRE-batch
-        #    snapshots. Exact by induction: an event whose ancestor
-        #    chain crosses a row created in THIS batch is covered by
-        #    that row's own event, whose chain is one hop shorter and
-        #    starts from its event image (never a snapshot read), so
-        #    the affected-root union over all events is the same set
-        #    serial replay reaches — rows linked through since-updated
-        #    parents over-approximate, and recompute is idempotent.
-        #    (The runner path, apply_snapshots=False, resolves against
-        #    POST-batch snapshots — also exact, same argument.)
-        ids_old = self._resolve_old_images(
-            active,
-            n_active,
-            has_truncate=any_trunc,
-            old_tables=old_tables,
-        )
-        new_keys = self._resolve_new_images(active, new_counts)
-        mark("resolve_build")
-        wave: list = []
-        # frames the materializer supersedes (prev overlays, compacted
-        # bases) must NOT unpersist mid-wave: the new_keys/ids jobs in
-        # this same wave scan the PRE-batch snapshot views, and a lost
-        # localCheckpoint block is unrecoverable (no lineage). They
-        # defer into batch_tmp and release with the other temporaries
-        # after every consumer is done.
-        deferred: list[DataFrame] = []
-        if apply_snapshots:
-            # per-table stats from the events checkpoint ride along —
-            # the materializer skips its own aggregation action
-            wave.append(
-                lambda: self.materializer.apply(
-                    events,
-                    materialized=True,
-                    stats=per_table,
-                    defer_release=deferred,
-                )
-            )
-        wave.append(lambda: ids_old.localCheckpoint(eager=True))
-        if new_keys is not None:
-            wave.append(lambda nk=new_keys: nk.localCheckpoint(eager=True))
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(wave)) as ex:
-            results = [f.result() for f in [ex.submit(t) for t in wave]]
-        if apply_snapshots:
-            results = results[1:]
-        batch_tmp.extend(deferred)
-        ids = results[0]
-        batch_tmp.append(ids)
-        if new_keys is not None:
-            new_keys = results[-1]
-            batch_tmp.append(new_keys)
-        mark("bronze_resolve_wave")
-
-        # broadcast guards below use event-derived UPPER BOUNDS instead
-        # of exact counts — each exact count is a driver sync point (a
-        # full Spark job), and an upper bound decides the broadcast the
-        # same way where it matters: a bulk backfill / child TRUNCATE
-        # makes the bound huge → shuffle path, a normal batch keeps it
-        # tiny → broadcast. n_new bound: every resolved root key traces
-        # to at least one INSERT/UPDATE event.
-        n_new = sum(new_counts.values()) if new_keys is not None else 0
-        if new_keys is not None:
-            key_ids = new_keys.select(
-                F.concat_ws("|", *[F.col(c).cast("string") for c in self.root_pks]).alias(
-                    "_id"
-                )
-            )
-            ids = ids.unionByName(key_ids)  # semi-join side: dupes harmless
-        # old-image ids ≤ n_active events ... except a child TRUNCATE,
-        # whose lineage sweep can return the whole store — no bound is
-        # knowable without counting, so count only then (cheap: ids is
-        # already checkpointed).
-        n_ids = ids.count() if any_trunc else n_active + n_new
-        mark("ids_count")
-
-        # ONE store materialization covers every downstream need: the
-        # affected ids that exist in the store, with their typed root
-        # PKs riding along, UNIONED with the new-image keys — a single
-        # checkpoint feeds both the store maintenance and the
-        # recompute. Ids absent from the store (new inserts)
-        # anti-remove nothing, so restricting the store anti-join side
-        # to the in-store subset is exact; recompute keys for new
-        # inserts ride in via the __new rows.
-        affected = self.docs.join(
-            maybe_broadcast(ids, known_rows=n_ids), "_id", "left_semi"
-        ).select("_id", *self.root_pks).withColumn("__new", F.lit(False))
-        if new_keys is not None:
-            affected = affected.unionByName(
-                new_keys.select(
-                    F.concat_ws(
-                        "|", *[F.col(c).cast("string") for c in self.root_pks]
-                    ).alias("_id"),
-                    *self.root_pks,
-                ).withColumn("__new", F.lit(True))
-            )
-        affected = affected.localCheckpoint(eager=True)
-        mark("affected_ckpt")
-        batch_tmp.append(affected)
-        n_affected = n_ids  # affected ⊆ ids ∪ new: same broadcast decision
-        affected_ids = affected.filter(~F.col("__new")).select("_id")
-
-        # recompute those roots from the CURRENT snapshots (both inputs
-        # checkpointed → the compiler's fan-out re-reads, never recomputes;
-        # it dedups root_keys itself)
-        affected_keys = affected.select(*self.root_pks)
-
-        from ..plans.sqlgen import compile_assembled
-
-        combined_plan, cmeta = compile_assembled(
-            self.catalog,
-            self.tree,
-            root_keys=affected_keys,
-            root_keys_rows=n_affected + n_new,
-            include_pks=True,
-            include_keys=True,
-            scope=self._view_scope,
-        )
-        # upsert + implicit delete: affected docs that did not recompute
-        # (root row gone) simply don't come back (ref: _delete_op).
-        # The recomputed-doc count rides the combined checkpoint via
-        # observe — no separate count() action.
-        count_obs = Observation()
-        new_docs, new_lineage, new_combined = materialize_combined(
-            combined_plan, cmeta.keys_cols, count_obs=count_obs
-        )
-        batch_tmp.append(new_combined)
-        self.stats["recomputed_docs"] += int(count_obs.get["n_docs"])
-        mark("recompute_tree")
-        # store maintenance is O(batch + overlay): replace the affected
-        # keys' rows in each overlay store (a key whose doc did not
-        # recompute simply has no replacement rows — the implicit
-        # delete). New-insert ids ride in via the rows side; they were
-        # never in the base, so the touched-key anti-join is exact.
-        # Both stores' overlay checkpoints go out in ONE concurrent wave
-        # (4 serial driver round-trips → 1).
-        apply_overlays_parallel(
-            [
-                (self._docs_store, affected_ids, new_docs, n_affected),
-                (self._lineage_store, affected_ids, new_lineage, n_affected),
-            ]
-        )
-        mark("stores_overlay")
-        self._maybe_release_shared()
-        if self.doc_consumers:
-            # the sink-facing doc DELTA: recomputed docs through the
-            # tree's plugin chain (a plugin-dropped doc is simply not
-            # re-indexed — the reference drops at indexing time too,
-            # leaving whatever the sink held; ref: pgsync/sync.py:
-            # 1571-1572), plus the ids whose docs vanished (root row
-            # gone — the engine's implicit delete, made explicit for
-            # consumers). Both frames derive from this batch's eager
-            # checkpoints (new_combined / affected), so consumers run
-            # BEFORE the release below.
-            ups = new_docs
-            if self.plugins:
-                from ..plugin import apply_plugins
-
-                ups = apply_plugins(
-                    ups,
-                    self.plugins,
-                    index=self.tree.index or self.tree.root.table,
-                    passthrough=tuple(
-                        c for c in ups.columns if c == "_routing"
-                    ),
-                )
-            gone = affected_ids.join(
-                new_docs.select("_id"), "_id", "left_anti"
-            )
-            for consumer in self.doc_consumers:
-                consumer.apply(ups, gone)
-            mark("doc_consumers")
-        # overlay checkpoints are eager — every batch temporary
-        # (events, resolved keys, affected set, recompute output) is
-        # fully copied out; free the blocks now
-        caching.release_local_checkpoints(batch_tmp)

@@ -35,6 +35,13 @@ the overlay to the same live state. (This is deliberately weaker
 machinery than start_dedup_stream's exactly-once epoch binding: doc
 recompute is already idempotent upstream, so the stream checkpoint —
 not the index manifest — is the source of truth here.)
+
+The consumers registered on one engine run CONCURRENTLY within a
+batch: one thread each, and every apply (compaction included) finishes
+before process_batch returns or re-raises the first failure. So each
+must own disjoint state (its own index instance, whose temp views
+carry a per-instance prefix) and must not read another consumer's
+effects within the same batch.
 """
 
 from __future__ import annotations

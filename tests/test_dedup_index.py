@@ -1839,3 +1839,96 @@ def test_storeless_replay_survives_autocompact(spark):
     rows = sorted(r.doc_id for r in stored.collect())
     assert rows == [2]
     idx.close()
+
+
+# ---------------------------------------------------------------------------
+# compact(): one overlay fold, one checkpoint wave (shared base class —
+# pinned on the two engine-owned index families)
+# ---------------------------------------------------------------------------
+
+
+def _dirty_index(spark, kind, rounds=1):
+    """A store-less index seeded with 200 docs, plus ``rounds`` CDC
+    epochs (20 upserts + 1 delete each) left unfolded."""
+    import random
+
+    rnd = random.Random(7)
+    if kind == "bm25":
+        from pgsync_spark.functions.bm25_index import BM25Index
+
+        idx = BM25Index(spark)
+        schema = "doc_id bigint, text string, lang string, source string"
+
+        def payload(i, r):
+            return (f"alpha w{i} w{i % 7} r{r}", None, None)
+    else:
+        from pgsync_spark.functions.vector_index import VectorIndex
+
+        idx = VectorIndex(spark)
+        schema = "vec_id bigint, embedding array<double>"
+
+        def payload(i, r):
+            return ([rnd.uniform(-1, 1) for _ in range(16)],)
+
+    tomb = (None,) * len(payload(0, 0))
+    idx.ingest(
+        spark.createDataFrame(
+            [(i,) + payload(i, -1) for i in range(200)], schema
+        )
+    )
+
+    def cdc(r):
+        rows = [(i,) + payload(i, r) + ("u",) for i in range(10 * r, 10 * r + 20)]
+        rows.append((150 + r,) + tomb + ("d",))
+        idx.apply_cdc(spark.createDataFrame(rows, schema + ", op string"))
+
+    for r in range(rounds):
+        cdc(r)
+    return idx, cdc
+
+
+@pytest.mark.parametrize("kind", ["bm25", "vector"])
+def test_cdc_compact_job_count(spark, kind):
+    """A CDC-dirty compaction is one overlay checkpoint plus one
+    concurrent wave folding both sides, each through one broadcast —
+    no emptiness job, no second overlay aggregation, no keys count, no
+    ver-reset rewrite. Counted as jobs the scheduler handed out around
+    compact()."""
+    idx, _ = _dirty_index(spark, kind)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    try:
+        assert idx._has_cdc and idx._overlay_rows == 21
+        jobs0 = sched.numTotalJobs()
+        idx.compact()
+        assert sched.numTotalJobs() - jobs0 == 6
+        assert not idx._has_cdc and idx._overlay_rows == 0
+        assert len(idx._key_parts) == len(idx._val_parts) == 1
+        ver_op = idx.vals.groupBy("ver", "op").count().collect()
+        assert [(r.ver, r.op, r["count"]) for r in ver_op] == [(-1, "a", 199)]
+        assert {r.ver for r in idx.keys.select("ver").distinct().collect()} == {-1}
+    finally:
+        idx.close()
+
+
+@pytest.mark.parametrize("kind", ["bm25", "vector"])
+def test_cdc_compact_holds_no_extra_blocks(spark, kind):
+    """Leak guard: rounds of apply_cdc + compact() on one index leave
+    the same number of persistent RDDs after every round — the overlay
+    checkpoint and each superseded part are released."""
+    idx, cdc = _dirty_index(spark, kind, rounds=0)
+    since = spark.sparkContext.emptyRDD().id()
+    sizes = []
+    try:
+        for r in range(4):
+            cdc(r)
+            idx.compact()
+            sizes.append(
+                sum(
+                    1
+                    for rid in spark.sparkContext._jsc.getPersistentRDDs().keys()
+                    if int(rid) > since
+                )
+            )
+        assert sizes[1] == sizes[2] == sizes[3], sizes
+    finally:
+        idx.close()

@@ -865,3 +865,153 @@ def test_occupancy_counter_fuzz_seeded(spark, tmp_path):
     check(folded=True)
     assert sum(idx.occupancy_counts.values()) == len(live_ids)
     idx.close()
+
+
+# ---------------------------------------------------------------------------
+# The consumer wave: every doc consumer of one batch applies concurrently
+# ---------------------------------------------------------------------------
+
+
+def _new_persistent_rdds(spark, since: int) -> int:
+    """Persistent RDDs with an id above ``since`` — the blocks a piece
+    of work left cached (older RDDs the ContextCleaner may drop at any
+    time are not counted)."""
+    return sum(
+        1
+        for rid in spark.sparkContext._jsc.getPersistentRDDs().keys()
+        if int(rid) > since
+    )
+
+
+def _rdd_high_water(spark) -> int:
+    return spark.sparkContext.emptyRDD().id()
+
+
+class _RaisingConsumer:
+    def apply(self, upserts, deleted_ids):
+        raise RuntimeError("consumer down")
+
+    def truncate(self):
+        pass
+
+
+def _cdc_batch(spark, cat, txid):
+    upd = _order_row(cat, 7)
+    return payloads_from_rows(
+        spark,
+        [
+            {"op": "UPDATE", "table": "orders",
+             "old": {"o_orderkey": 7},
+             "new": dict(upd, o_orderpriority="incrementalpriority"),
+             "txid": txid},
+            {"op": "DELETE", "table": "orders",
+             "old": {"o_orderkey": 5}, "txid": txid + 1},
+        ],
+    )
+
+
+def test_raising_consumer_waits_for_the_wave_and_releases(spark):
+    """A consumer that raises does not stop its neighbour: the real
+    maintainer registered AFTER it still commits its epoch before
+    process_batch re-raises, and the batch's temporaries are released
+    all the same — the session keeps exactly as many persistent RDDs
+    as a clean run of the same batch leaves."""
+    tree = schemas.tree("orders_full")
+
+    def run(extra):
+        eng = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+        eng.full_sync()
+        idx = BM25Index(spark)
+        m = SearchIndexMaintainer(idx, text_expr=TEXT_EXPR)
+        m.seed(eng.docs_for_sink())
+        eng.doc_consumers.extend(extra + [m])
+        ev = _cdc_batch(spark, eng.catalog, 50)
+        since = _rdd_high_water(spark)
+        return eng, idx, ev, since
+
+    eng, idx, ev, since = run([_RaisingConsumer()])
+    try:
+        with pytest.raises(RuntimeError, match="consumer down"):
+            eng.process_batch(ev)
+        failed = _new_persistent_rdds(spark, since)
+        assert idx.epoch_applied(1)
+        got = [tuple(r) for r in idx.topk(QUERY, k=10).collect()]
+        assert got == _oneshot_topk(spark, eng.docs_for_sink())
+    finally:
+        idx.close()
+        eng._teardown_stores()
+
+    eng, idx, ev, since = run([])
+    try:
+        eng.process_batch(ev)
+        assert idx.epoch_applied(1)
+        clean = _new_persistent_rdds(spark, since)
+    finally:
+        idx.close()
+        eng._teardown_stores()
+    assert failed == clean
+
+
+def test_concurrent_maintainers_compact_every_batch(spark):
+    """The hybrid deployment on the default tier: a BM25 and a vector
+    maintainer on ONE engine, both compacting after every batch, so
+    each batch runs two applies and two compactions in the same
+    concurrent wave. After each of two CDC batches both indexes serve
+    exactly what one-shot indexes over ``docs_for_sink()`` serve."""
+    tree = schemas.tree("orders_full")
+    eng = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+    eng.full_sync()
+    bidx, vidx = BM25Index(spark), VectorIndex(spark)
+    bm = SearchIndexMaintainer(bidx, text_expr=TEXT_EXPR, compact_every=1)
+    vm = VectorIndexMaintainer(
+        vidx, vec_expr=hash_embed_sparksql(VEC_TEXT), compact_every=1
+    )
+    docs = eng.docs_for_sink()
+    bm.seed(docs)
+    vm.seed(docs)
+    eng.doc_consumers.extend([bm, vm])
+    q = _qframe(spark, "incrementalpriority", "1-URGENT")
+    try:
+        cat = eng.catalog
+        base, row11 = _order_row(cat, 3), _order_row(cat, 11)
+        batches = [
+            _cdc_batch(spark, cat, 60),
+            payloads_from_rows(
+                spark,
+                [
+                    {"op": "INSERT", "table": "orders",
+                     "new": dict(base, o_orderkey=777010,
+                                 o_orderpriority="incrementalpriority"),
+                     "txid": 70},
+                    {"op": "DELETE", "table": "orders",
+                     "old": {"o_orderkey": 7}, "txid": 71},
+                    {"op": "UPDATE", "table": "orders",
+                     "old": {"o_orderkey": 11},
+                     "new": dict(row11, o_orderpriority="1-URGENT"),
+                     "txid": 72},
+                ],
+            ),
+        ]
+        for n, ev in enumerate(batches, start=1):
+            eng.process_batch(ev)
+            assert bidx.epoch_applied(n) and vidx.epoch_applied(n)
+            # compacted: one part per side, overlay folded away
+            for idx in (bidx, vidx):
+                assert not idx._has_cdc and idx._overlay_rows == 0
+                assert len(idx._val_parts) == 1
+            post = eng.docs_for_sink()
+            got_lex = [tuple(r) for r in bidx.topk(QUERY, k=10).collect()]
+            assert got_lex == _oneshot_topk(spark, post)
+            got_sem = [
+                tuple(r)
+                for r in vidx.topk(q, k=10)
+                .orderBy("query_id", "rank")
+                .collect()
+            ]
+            assert got_sem == _oneshot_ann(spark, post, q)
+        assert 7 not in {t[0] for t in got_lex}
+        assert 777010 in {t[0] for t in got_lex}
+    finally:
+        bidx.close()
+        vidx.close()
+        eng._teardown_stores()
