@@ -10,7 +10,7 @@ multimodal plumbing).
 from .catalog import Catalog, TableMeta, TPCH_TABLES  # noqa: F401
 from .config import config_loader  # noqa: F401
 from .node import Node, Tree, parse_tree  # noqa: F401
-from .plans.compiler import TreeCompiler  # noqa: F401
+from .plans.sqlgen import compile_assembled  # noqa: F401
 from .session import get_spark  # noqa: F401
 
 __version__ = "0.1.0"

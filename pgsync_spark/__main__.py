@@ -447,13 +447,12 @@ def _write_docs(runner, args, out=sys.stdout) -> None:
         if args.search_url:
             writer = writers[name]
             if not args.no_create_index:
-                from .plans.compiler import TreeCompiler
-                from .plans.docs import assemble_structured
+                from .plans.sqlgen import compile_assembled
 
-                compiled = TreeCompiler(runner.catalog).compile(eng.tree)
-                writer.create_index(
-                    eng.tree, assemble_structured(compiled).schema
+                typed, _ = compile_assembled(
+                    runner.catalog, eng.tree, structured=True
                 )
+                writer.create_index(eng.tree, typed.schema)
             writer.upsert(docs)
             if args.verbose:
                 print(
@@ -1890,10 +1889,11 @@ def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
             # command: compile each tree, generate its oracle SQL from
             # the SAME node config, run both against --data-dir,
             # compare row multisets. No reference analog — the
-            # reference has no second engine to check against; this
-            # repo's twin-compiler design makes it a one-flag feature.
-            from .plans.compiler import TreeCompiler
+            # reference has no second engine to check against; the
+            # DuckDB oracle compiler makes it a one-flag feature. The
+            # Spark side is the same compile every sync runs.
             from .plans.oracle import oracle_doc_sql
+            from .plans.sqlgen import compile_assembled
             from .testing import compare
 
             def columns_of(t: str) -> list:
@@ -1910,7 +1910,7 @@ def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
             failed = []
             for tree in trees:
                 name = tree.index or tree.root.table
-                df = TreeCompiler(catalog).compile_docs(tree)
+                df, _ = compile_assembled(catalog, tree)
                 sql = oracle_doc_sql(
                     tree, catalog.tables, columns_of, column_type_of
                 )
@@ -1925,16 +1925,13 @@ def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
             # body (settings + mappings) without touching any cluster
             import json as _json
 
-            from .plans.compiler import TreeCompiler
-            from .plans.docs import assemble_structured
+            from .plans.sqlgen import compile_assembled
             from .sinks.search import build_index_mapping
 
             for tree in trees:
                 name = tree.index or tree.root.table
-                compiled = TreeCompiler(catalog).compile(tree)
-                body = build_index_mapping(
-                    tree, assemble_structured(compiled).schema
-                )
+                typed, _ = compile_assembled(catalog, tree, structured=True)
+                body = build_index_mapping(tree, typed.schema)
                 print(f"== {name} ==", file=out)
                 print(_json.dumps(body, indent=2, sort_keys=True), file=out)
             return 0

@@ -14,8 +14,8 @@ config with the same surface as the reference:
                                   (ref: pgsync/node.py:197-303,
                                    pgsync/constants.py:75-80)
 
-The tree is a pure-Python IR; compilation to a Spark plan lives in
-plans/compiler.py.
+The tree is a pure-Python IR; compilation to one Spark SQL query lives
+in plans/sqlgen.py.
 """
 
 from __future__ import annotations

@@ -1,1 +1,1 @@
-from .filters import build_filters, filters_to_sql  # noqa: F401
+from .filters import filters_to_spark_sql, filters_to_sql  # noqa: F401

@@ -1,6 +1,6 @@
-"""Root-filter construction: pgsync's filter spec → Spark Column / SQL.
+"""Root-filter construction: pgsync's filter spec → Spark SQL / DuckDB SQL.
 
-Reference semantics (ref: pgsync/querybuilder.py:100-132 _build_filters):
+Reference semantics (ref: pgsync/querybuilder.py:100-132, the filter builder):
 ``filters = {table: [ {col: val, ...}, {col: val, ...} ]}`` — each dict
 is an AND over its items (supports composite keys), the list is an OR
 across dicts. Filters apply only at the root node; child-level filters
@@ -10,67 +10,14 @@ Spark plan that placement falls out of Catalyst predicate pushdown.
 At 100 TB the preferred form for LARGE key sets is a semi-join against a
 keys DataFrame (see streaming/incremental.py) — an `OR` of thousands of
 literals doesn't prune parquet row-groups and bloats the plan; a
-broadcast semi-join does. `build_filters` is the literal small-set form.
+broadcast semi-join does. `filters_to_spark_sql` is the literal
+small-set form.
 """
 
 from __future__ import annotations
 
-import functools
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 _STRINGY = ("string", "varchar", "char", "uuid")
-
-
-def _typed_eq(col: str, v, dtypes: dict[str, str] | None) -> Column:
-    """Null-safe equality with the reference's mixed-type guard
-    (ref: pgsync/querybuilder.py:81-98): comparing a uuid/text column
-    against a number can never match, so it collapses to literal FALSE
-    instead of comparing. Without the guard, Spark's ANSI-mode implicit
-    cast (string → bigint) RAISES on non-numeric values at runtime —
-    a filter must reject rows, not crash the job. Plan-time false also
-    keeps comparable predicates pushdown-eligible (no try_cast wrapper
-    on the column)."""
-    if dtypes is None or col not in dtypes:
-        return F.col(col).eqNullSafe(F.lit(v))
-    dt = dtypes[col]
-    stringy = any(dt.startswith(s) for s in _STRINGY)
-    if isinstance(v, bool) and dt != "boolean":
-        # Spark refuses boolean<=>numeric outright (AnalysisException,
-        # found by the filter fuzz) — same guard, plan-time FALSE
-        return F.lit(False)
-    if dt == "boolean" and not isinstance(v, (bool, str, type(None))):
-        return F.lit(False)
-    if not isinstance(v, (str, type(None))) and stringy:
-        return F.lit(False)
-    if isinstance(v, str) and not stringy:
-        # reverse direction of the same guard: a numeric/temporal column
-        # vs a string literal. The literal try_casts to the COLUMN's
-        # type (constant-folded at plan time): parseable → an ordinary
-        # typed equality (still pushdown-eligible — CDC images arrive
-        # stringly, '7' must match 7); unparseable → the isNotNull term
-        # folds to FALSE. Never eqNullSafe against a silently-nulled
-        # cast (that would MATCH null-keyed rows), never an ANSI cast
-        # crash.
-        typed = F.lit(v).try_cast(dt)
-        return F.col(col).eqNullSafe(typed) & typed.isNotNull()
-    return F.col(col).eqNullSafe(F.lit(v))
-
-
-def build_filters(clauses: list[dict], dtypes: dict[str, str] | None = None) -> Column:
-    """[{a: 1, b: 2}, {a: 3}] → (a=1 AND b=2) OR (a=3).
-
-    ``dtypes``: the target frame's ``dict(df.dtypes)``; enables the
-    mixed-type guard (string column vs numeric literal → FALSE)."""
-    if not clauses:
-        return F.lit(True)
-    ors = []
-    for clause in clauses:
-        ands = [_typed_eq(k, v, dtypes) for k, v in clause.items()]
-        ors.append(functools.reduce(lambda a, b: a & b, ands))
-    return functools.reduce(lambda a, b: a | b, ors)
 
 
 def _bt(name: str) -> str:
@@ -85,31 +32,15 @@ def _spark_sql_str(s: str) -> str:
 
 class UnrenderableLiteral(ValueError):
     """A filter value with no exact Spark SQL literal form (an int
-    outside bigint range — the L-suffixed rendering would not parse).
-    plans/sqlgen.py pre-checks with ``sql_renderable_filters`` and
-    routes such trees through the TreeCompiler Column path instead."""
-
-
-def sql_renderable_filters(clauses: list[dict] | None) -> bool:
-    """True when every filter value renders as an exact Spark SQL
-    literal (see UnrenderableLiteral)."""
-    for clause in clauses or []:
-        for v in clause.values():
-            if (
-                isinstance(v, int)
-                and not isinstance(v, bool)
-                and not -(2**63) <= v < 2**63
-            ):
-                return False
-    return True
+    outside bigint range — the L-suffixed rendering would not parse)."""
 
 
 def _spark_sql_lit(v) -> str:
-    """Render a Python value as the Spark SQL literal that parses to the
-    same typed Literal as ``F.lit(v)`` (int32-range ints → INT, larger →
-    BIGINT via L suffix, floats → DOUBLE via D suffix; non-finite
-    doubles via a constant-folded CAST — 'infD'/'nanD' are parse
-    errors). Raises UnrenderableLiteral for out-of-bigint ints."""
+    """Render a Python value as a typed Spark SQL literal (int32-range
+    ints → INT, larger → BIGINT via L suffix, floats → DOUBLE via D
+    suffix; non-finite doubles via a constant-folded CAST — 'infD'/'nanD'
+    are parse errors). Raises UnrenderableLiteral for out-of-bigint
+    ints."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -120,8 +51,7 @@ def _spark_sql_lit(v) -> str:
         if -(2**63) <= v < 2**63:
             return f"{v}L"
         raise UnrenderableLiteral(
-            f"int {v} is outside bigint range — no Spark SQL literal "
-            "form; use the Column (TreeCompiler) path"
+            f"int {v} is outside bigint range — no Spark SQL literal form"
         )
     if isinstance(v, float):
         if v != v:
@@ -135,20 +65,34 @@ def _spark_sql_lit(v) -> str:
 
 
 def _typed_eq_spark_sql(col: str, v, dtypes: dict[str, str] | None) -> str:
-    """``_typed_eq`` rendered as a Spark SQL fragment — branch-for-branch
-    the same predicate tree (pinned by the sqlgen parity tests), so the
-    one-SQL compile path (plans/sqlgen.py) filters identically."""
+    """Null-safe equality with the reference's mixed-type guard
+    (ref: pgsync/querybuilder.py:81-98): comparing a uuid/text column
+    against a number can never match, so it collapses to literal FALSE
+    instead of comparing. Without the guard, Spark's ANSI-mode implicit
+    cast (string → bigint) RAISES on non-numeric values at runtime —
+    a filter must reject rows, not crash the job. Plan-time FALSE also
+    keeps comparable predicates pushdown-eligible (no try_cast wrapper
+    on the column)."""
     if dtypes is None or col not in dtypes:
         return f"({_bt(col)} <=> {_spark_sql_lit(v)})"
     dt = dtypes[col]
     stringy = any(dt.startswith(s) for s in _STRINGY)
     if isinstance(v, bool) and dt != "boolean":
+        # Spark refuses boolean<=>numeric outright (AnalysisException,
+        # found by the filter fuzz) — same guard, plan-time FALSE
         return "FALSE"
     if dt == "boolean" and not isinstance(v, (bool, str, type(None))):
         return "FALSE"
     if not isinstance(v, (str, type(None))) and stringy:
         return "FALSE"
     if isinstance(v, str) and not stringy:
+        # reverse direction of the same guard: a numeric/temporal column
+        # vs a string literal. The literal try_casts to the COLUMN's
+        # type (constant-folded at plan time): parseable → an ordinary
+        # typed equality (still pushdown-eligible — CDC images arrive
+        # stringly, '7' must match 7); unparseable → the IS NOT NULL
+        # term folds to FALSE. Never <=> against a silently-nulled cast
+        # (that would MATCH null-keyed rows), never an ANSI cast crash.
         typed = f"try_cast({_spark_sql_str(v)} AS {dt})"
         return f"(({_bt(col)} <=> {typed}) AND ({typed} IS NOT NULL))"
     return f"({_bt(col)} <=> {_spark_sql_lit(v)})"
@@ -157,9 +101,11 @@ def _typed_eq_spark_sql(col: str, v, dtypes: dict[str, str] | None) -> str:
 def filters_to_spark_sql(
     clauses: list[dict], dtypes: dict[str, str] | None = None
 ) -> str:
-    """``build_filters`` rendered as ONE Spark SQL predicate — the same
-    Catalyst tree parsed in a single pass (used by plans/sqlgen.py's
-    one-SQL compile). AND binds tighter than OR in both forms."""
+    """[{a: 1, b: 2}, {a: 3}] → ``(a <=> 1) AND (b <=> 2) OR (a <=> 3)``
+    as ONE Spark SQL predicate (AND binds tighter than OR).
+
+    ``dtypes``: the target frame's ``dict(df.dtypes)``; enables the
+    mixed-type guard (see ``_typed_eq_spark_sql``)."""
     if not clauses:
         return "TRUE"
     ors = []

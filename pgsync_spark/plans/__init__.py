@@ -1,2 +1,1 @@
-from .compiler import CompiledDoc, TreeCompiler  # noqa: F401
 from .oracle import oracle_doc_sql  # noqa: F401

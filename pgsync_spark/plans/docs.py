@@ -11,44 +11,12 @@
   (the reference's documents include null columns,
   ref: tests/test_sync_root.py test_doc_includes_nulls).
 
-Everything is a Column expression — JSON serialization happens JVM-side
-in codegen, no Python in the hot path.
+The projection is SQL fragments over the compiled tree's columns
+(plans/sqlgen.py), so JSON serialization happens JVM-side in codegen,
+parsed once with the rest of the query.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .compiler import CompiledDoc
-
-
-def id_column(root_pks: list[str]) -> F.Column:
-    return F.concat_ws("|", *[F.col(pk).cast("string") for pk in root_pks])
-
-
-def meta_column(compiled: CompiledDoc) -> F.Column:
-    """Static-schema _meta struct, sorted table → sorted pk fields.
-    Composite-pk tuple keys ("pk1|pk2") are internal to the lineage
-    index and never surface in _meta (reference parity)."""
-    by_table: dict[str, list[tuple[str, str]]] = {}
-    for (tbl, pk), colname in sorted(compiled.keys_cols.items()):
-        if "|" in pk:
-            continue
-        by_table.setdefault(tbl, []).append((pk, colname))
-    meta_fields = []
-    for tbl in sorted(by_table):
-        pk_fields = []
-        for pk, colname in by_table[tbl]:
-            arr = F.col(colname)
-            sorted_arr = F.array_sort(F.array_distinct(arr))
-            # empty (all child-of-child rows missing) → null, matching the
-            # oracle's aggregate-over-empty-set semantics
-            pk_fields.append(
-                F.when(F.size(arr) > 0, sorted_arr).otherwise(F.lit(None)).alias(pk)
-            )
-        meta_fields.append(F.struct(*pk_fields).alias(tbl))
-    return F.struct(*meta_fields).alias("_meta")
 
 
 def _bt(name: str) -> str:
@@ -56,10 +24,13 @@ def _bt(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _meta_sql(compiled: CompiledDoc) -> str:
-    """``meta_column`` as ONE SQL fragment — the same Catalyst tree
-    (struct-of-structs of CASE WHEN size>0 THEN sorted-distinct arrays),
-    parsed once instead of built through dozens of py4j calls."""
+def _meta_sql(compiled) -> str:
+    """Static-schema ``_meta`` struct, sorted table → sorted pk fields
+    (struct-of-structs of CASE WHEN size>0 THEN sorted-distinct arrays;
+    an empty array — every child-of-child row missing — is null, the
+    oracle's aggregate-over-empty-set). Composite-pk tuple keys
+    ("pk1|pk2") are internal to the lineage index and never surface in
+    ``_meta`` (reference parity)."""
     by_table: dict[str, list[tuple[str, str]]] = {}
     for (tbl, pk), colname in sorted(compiled.keys_cols.items()):
         if "|" in pk:
@@ -81,31 +52,35 @@ def _meta_sql(compiled: CompiledDoc) -> str:
 
 def assemble_exprs(
     compiled,
-    include_meta: bool = True,
+    structured: bool = False,
     include_pks: bool = False,
     include_keys: bool = False,
 ) -> list[str]:
-    """The assembly projection as SQL fragments — shared between
-    ``assemble_docs`` (selectExpr over a compiled DataFrame) and the
-    one-SQL generator (plans/sqlgen.py), so both paths are
-    token-for-token the same text. ``compiled`` needs only the
-    metadata fields (keys_cols, field_names, root_pks, tree)."""
-    parts = []
-    if include_meta:
-        parts.append(_meta_sql(compiled))
+    """The assembly projection as SQL fragments over a compiled tree
+    (``keys_cols``, ``field_names``, ``root_pks``, ``tree``):
+    ``_id, doc[, _routing]``, where ``doc`` is ``to_json`` of
+    ``struct(_meta, *fields)``. ``structured`` emits those same
+    fragments as typed top-level columns instead —
+    ``_id[, _routing], _meta, *fields``, the shape a search sink maps.
+    ``_routing`` = the root row's value of ``Tree.routing`` (ref:
+    pgsync/sync.py:1562-1563). ``include_pks``/``include_keys`` append
+    the typed root PKs and the lineage key arrays (distinct,
+    stringified) under their ``__k_*`` names."""
+    parts = [_meta_sql(compiled)]
     parts.extend(
         f"{_bt('__f_' + n)} AS {_bt(n)}" for n in compiled.field_names
-    )
-    doc = (
-        "to_json(struct(" + ", ".join(parts) + "), "
-        "map('ignoreNullFields', 'false')) AS doc"
     )
     _id = (
         "concat_ws('|', "
         + ", ".join(f"cast({_bt(pk)} as string)" for pk in compiled.root_pks)
         + ") AS _id"
     )
-    cols = [_id, doc]
+    cols = [_id]
+    if not structured:
+        cols.append(
+            "to_json(struct(" + ", ".join(parts) + "), "
+            "map('ignoreNullFields', 'false')) AS doc"
+        )
     routing = compiled.tree.routing
     if routing:
         if routing not in compiled.field_names:
@@ -115,6 +90,8 @@ def assemble_exprs(
                 f"routing field {routing!r} is not a document field"
             )
         cols.append(f"cast({_bt('__f_' + routing)} as string) AS _routing")
+    if structured:
+        cols.extend(parts)
     if include_pks:
         cols.extend(_bt(pk) for pk in compiled.root_pks)
     if include_keys:
@@ -125,58 +102,3 @@ def assemble_exprs(
                 f"AS {c}"
             )
     return cols
-
-
-def assemble_docs(
-    compiled: CompiledDoc,
-    include_meta: bool = True,
-    include_pks: bool = False,
-    include_keys: bool = False,
-) -> DataFrame:
-    """Final (_id, doc[, *root_pks]) DataFrame with canonical compact
-    JSON docs. ``include_pks`` rides the typed root keys along in the
-    same projection (the incremental engine's doc store) — no re-join.
-    ``include_keys`` additionally carries each lineage key array
-    (distinct, stringified) under its ``__k_*`` name, so one
-    materialization of this projection serves both the doc store and
-    the lineage index.
-
-    The whole projection is ONE ``selectExpr`` parse: the incremental
-    engine pays this assembly per batch and the Column-by-Column form
-    was ~0.15s of driver-side py4j construction (guide §7.3). The SQL
-    fragments mirror the former Column expressions token-for-token
-    (struct field aliases, explicit ELSE NULL, map-typed to_json
-    options), so the analyzed tree — and the canonical JSON bytes the
-    oracles hash — are unchanged."""
-    return compiled.df.selectExpr(
-        *assemble_exprs(compiled, include_meta, include_pks, include_keys)
-    )
-
-
-def routing_column(compiled: CompiledDoc) -> F.Column | None:
-    """``_routing`` = the root row's value of ``Tree.routing`` (ref:
-    pgsync/sync.py:1562-1563 ``doc["_routing"] = row[self.routing]``) —
-    emitted only when the tree declares routing."""
-    routing = compiled.tree.routing
-    if not routing:
-        return None
-    if routing not in compiled.field_names:
-        from .. import exc
-
-        raise exc.ColumnNotFoundError(
-            f"routing field {routing!r} is not a document field"
-        )
-    return F.col(f"__f_{routing}").cast("string").alias("_routing")
-
-
-def assemble_structured(compiled: CompiledDoc, include_meta: bool = True) -> DataFrame:
-    """Typed (non-JSON) form: _id plus native nested columns — the shape a
-    search sink (e.g. elasticsearch-spark) would consume."""
-    cols = [id_column(compiled.root_pks).alias("_id")]
-    routing = routing_column(compiled)
-    if routing is not None:
-        cols.append(routing)
-    if include_meta:
-        cols.append(meta_column(compiled))
-    cols.extend(F.col(f"__f_{n}").alias(n) for n in compiled.field_names)
-    return compiled.df.select(*cols)

@@ -130,7 +130,7 @@ class OracleCompiler:
                 for name in c.get("columns", []):
                     if name in by_label:
                         e = by_label[name]
-                        # falsy-drop parity with transform._drop_falsy
+                        # falsy-drop parity with sqlgen._drop_falsy_sql
                         parts.append(
                             f"(CASE WHEN {e} IS NULL OR CAST({e} AS VARCHAR) IN "
                             f"('', '0', '0.0', 'false') THEN NULL ELSE CAST({e} AS VARCHAR) END)"
@@ -305,17 +305,14 @@ class OracleCompiler:
         return f"json_object({', '.join(table_args)})"
 
     # -- root ----------------------------------------------------------
-    def compile(self, tree: Tree, include_meta: bool = True) -> str:
+    def compile(self, tree: Tree) -> str:
         root = tree.root
         fields = self._fields_sql(root, "r")
         pks = self._pks(root)
         id_expr = "concat_ws('|', " + ", ".join(
             f"CAST(r.{_q(pk)} AS VARCHAR)" for pk in pks
         ) + ")"
-        parts = []
-        if include_meta:
-            parts.append(("_meta", self._meta_sql(tree)))
-        parts.extend(fields)
+        parts = [("_meta", self._meta_sql(tree)), *fields]
         doc = f"CAST({self._json_object(parts)} AS VARCHAR)"
         return (
             f"SELECT {id_expr} AS _id, {doc} AS doc FROM {self._t(root.table)} r"
@@ -327,9 +324,8 @@ def oracle_doc_sql(
     tables: dict[str, TableMeta],
     columns_of: Callable[[str], list[str]],
     column_type_of: Callable[[str, str], str],
-    include_meta: bool = True,
     table_names: dict[str, str] | None = None,
 ) -> str:
-    return OracleCompiler(tables, columns_of, column_type_of, table_names).compile(
-        tree, include_meta=include_meta
-    )
+    return OracleCompiler(
+        tables, columns_of, column_type_of, table_names
+    ).compile(tree)

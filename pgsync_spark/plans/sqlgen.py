@@ -1,38 +1,52 @@
-"""One-SQL tree compiler: the whole denormalization query as a single
-``spark.sql()`` text.
+"""Tree → one ``spark.sql()`` text: the denormalization compiler.
 
-Why this exists (guide §7.3 — driver-side plan-construction cost):
-``TreeCompiler`` builds the tree through ~50 DataFrame-level ops
-(select/join/agg), and EACH op is an eager JVM analysis pass over the
-accumulated subtree — ~1,350 py4j round-trips, ~0.34s per compile on
-the bench host. The incremental engine pays that per micro-batch (the
-restricted recompute re-compiles with the batch's root keys). Emitting
-the identical query as ONE SQL text costs one parse+analyze (~0.04s)
-plus a temp-view registration per table — the Catalyst tree, and
-therefore the canonical JSON bytes, are unchanged.
+Reference semantics being reproduced (toluaina/pgsync):
 
-Parity contract: this module mirrors ``TreeCompiler`` +
-``docs.assemble_docs`` construct-for-construct — same traversal order,
-same ``itertools.count`` name discipline (``__jk_*``/``__p_*``/
-``__k_*`` come out identical), same broadcast-hint decisions
-(operators/joins.maybe_broadcast), and the assembly layer reuses
-``docs.assemble_exprs`` verbatim. Pinned by tests/test_sqlgen_parity.py:
-optimized-plan ``sameResult`` plus byte-equality of (_id, doc) against
-the TreeCompiler path for every registered topology, and the DuckDB
-oracle gate downstream.
+- Every generated join is LEFT OUTER (ref: pgsync/querybuilder.py:78,
+  578-582, 729-733, 901-905) on equi FK pairs, composite keys iterated
+  positionally (ref: pgsync/querybuilder.py:506-510).
+- one_to_many children become grouped JSON arrays: the reference emits
+  ``JSON_AGG(JSON_BUILD_OBJECT(...)) GROUP BY fk`` inside a correlated
+  lateral subquery (ref: pgsync/querybuilder.py:936-992). Here the child
+  subquery is **decorrelated** — ``GROUP BY fk`` with a sorted
+  ``collect_list(struct(...))``, left-joined to the parent — the plan
+  Catalyst would make of the correlated form, written directly so
+  aggregation runs map-side first.
+- one_to_one children join directly and are wrapped as a struct
+  (variant=object) or inlined as a bare value (variant=scalar)
+  (ref: pgsync/querybuilder.py:941-961).
+- through tables (many-to-many): the node subquery joins the through
+  table on the node-side FK, aggregates by the through table's
+  parent-side FK, and the through table's PKs join the ``_keys``
+  lineage (ref: pgsync/querybuilder.py:584-841, through-keys 764-783).
+- self-joins (child.table == parent.table) OR-combine the onclause
+  (ref: pgsync/querybuilder.py:575-577). A single pair is an ordinary
+  equi-join; several pairs compile to a UNION ALL of one equi-join per
+  pair, deduped on (parent PK, child PK) — never a nested-loop OR join.
+- ``_keys`` lineage: every node contributes its PK values per table,
+  bubbled up the tree and squashed at the root into
+  ``_meta: {table: {pk: [sorted distinct values]}}``
+  (ref: pgsync/querybuilder.py:364-386, pgsync/transform.py:230-288).
 
-The one construct with no exact one-SQL rendering is the multi-pair
-self-join OR decomposition (``_self_or_child_plan``'s
-``dropDuplicates(subset)`` has no Spark SQL surface form) —
-``compile_assembled`` detects it and falls back to ``TreeCompiler``,
-so every tree still compiles.
+Determinism (stricter than the reference, whose JSON_AGG order is
+unspecified): object arrays are sorted by their canonical JSON
+rendering, scalar arrays by value, ``_meta`` arrays sorted + distinct,
+so output is stable across partitionings and cluster sizes.
+
+Why one text (driver-side plan-construction cost): building
+the tree through DataFrame ops pays one eager JVM analysis pass per op
+(~50 per tree, ~1,350 py4j round-trips). The incremental engine compiles
+once per micro-batch (the restricted recompute re-compiles with the
+batch's root keys); one SQL text costs one parse+analyze plus a temp-view
+registration per table. The DuckDB oracle (plans/oracle.py) is the
+independent second form every topology is checked against.
 """
 
 from __future__ import annotations
 
 import itertools
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -48,12 +62,7 @@ from ..node import (
     Node,
     Tree,
 )
-from ..operators.joins import BROADCAST_ROW_LIMIT
-
-
-class SqlgenUnsupported(Exception):
-    """Tree uses a construct with no exact one-SQL rendering; callers
-    fall back to TreeCompiler."""
+from ..operators import joins as _joins
 
 
 def _bt(name: str) -> str:
@@ -69,7 +78,9 @@ _JSON_OPTS = "map('ignoreNullFields', 'false')"
 
 
 def _json_path_sql(spec: ColumnSpec) -> str:
-    """Mirror of compiler._json_path_col as text."""
+    """A JSON path column (``doc->x->1->z``) as ``get_json_object``
+    over the string column (ref: pgsync/node.py:197-303): ``->``/``#>``
+    and ``->>``/``#>>`` both come out as the sub-tree's text."""
     path = "$"
     for token in spec.path:
         if token.lstrip("-").isdigit():
@@ -84,7 +95,8 @@ def _struct_sql(fields: list[tuple[str, str]]) -> str:
 
 
 def _drop_falsy_sql(ex: str) -> str:
-    """transform._drop_falsy as text (same Or-chain order)."""
+    """NULL out falsy values so concat_ws skips them — the reference's
+    ``filter(None, values)`` (ref: pgsync/transform.py:98-100)."""
     s = f"CAST({ex} AS STRING)"
     return (
         f"CASE WHEN ({ex} IS NULL) OR ({s} = '') OR ({s} = '0') "
@@ -96,8 +108,13 @@ def _drop_falsy_sql(ex: str) -> str:
 def _transforms_sql(
     node: Node, fields: list[tuple[str, str]]
 ) -> list[tuple[str, str]]:
-    """transform.apply_node_transforms mirrored on (label, sql) pairs:
-    replace → rename → concat, reference order preserved."""
+    """The node's transform block on (label, sql) pairs, in the
+    reference's order replace → rename → concat (ref:
+    pgsync/transform.py:211-216): ``replace`` is substring replace on
+    the string form, ``rename`` relabels, ``concat`` joins columns (or
+    literal names) with a delimiter, dropping falsy values. The
+    reference applies these per row in Python; here they are plan-time
+    expressions inside codegen."""
     spec = node.transform or {}
     if not spec:
         return fields
@@ -137,7 +154,8 @@ def _transforms_sql(
 
 @dataclass
 class SqlNodePlan:
-    """Mirror of compiler.NodePlan with SQL text instead of a frame."""
+    """One compiled child subtree: a joinable subquery, its join-key
+    and payload column names and its lineage key arrays."""
 
     sql: str
     join_keys: list[str]
@@ -147,38 +165,23 @@ class SqlNodePlan:
 
 @dataclass
 class SqlCompiled:
-    """Mirror of compiler.CompiledDoc metadata; ``sql`` is the
-    tree-level query (root pks + __f_* fields + __k_* arrays)."""
+    """The compiled tree: ``sql`` is the tree-level query (root pks +
+    ``__f_*`` fields + ``__k_*`` arrays); ``keys_cols`` maps
+    (table, pk) to its lineage array column."""
 
     sql: str
     tree: Tree
     root_pks: list[str]
     field_names: list[str]
     keys_cols: dict[tuple[str, str], str]
-    field_is_array: dict[str, bool] = field(default_factory=dict)
-
-
-def sql_expressible(catalog: Catalog, tree: Tree) -> bool:
-    """True when every construct in ``tree`` has an exact one-SQL
-    rendering (i.e. no multi-pair self-join OR decomposition)."""
-    from ..catalog import self_join_pairs
-
-    for node in tree.root.traverse_post_order():
-        for ch in node.children:
-            if (
-                not ch.relationship.through_tables
-                and ch.table == node.table
-                and len(self_join_pairs(catalog.tables, node, ch)) != 1
-            ):
-                return False
-    return True
 
 
 class SqlTreeCompiler:
-    """TreeCompiler's traversal, emitting text. ``views`` maps table →
+    """Post-order traversal emitting text. ``views`` maps table →
     registered temp-view name; ``rk_view``/``rk_cols`` name the
     root-keys view and its (positional) columns; ``broadcast_rk``
-    mirrors the maybe_broadcast decision the DataFrame path would make."""
+    hints the root-keys semi-joins (operators/joins.maybe_broadcast's
+    size rule)."""
 
     def __init__(
         self,
@@ -218,10 +221,8 @@ class SqlTreeCompiler:
         filter_only_cols: frozenset[str] = frozenset(),
     ) -> tuple[str, list[ColumnSpec], set[str], list[str]]:
         """Returns (sql, specs, needed, scan_cols). ``filter_only_cols``
-        are scanned (so a root WHERE can reference them — the
-        DataFrame path gets this via ResolveMissingReferences) but NOT
-        part of ``needed``: the caller trims them after the filter,
-        exactly like the analyzer's restored Project."""
+        are scanned so a root WHERE can reference them, but are NOT
+        part of ``needed``: the caller trims them after the filter."""
         specs = self._columns_for(node)
         table_cols = set(self.catalog.columns(node.table))
         needed = set(extra_cols)
@@ -327,13 +328,14 @@ class SqlTreeCompiler:
                 from ..catalog import self_join_pairs
 
                 pairs = self_join_pairs(self.catalog.tables, node, ch)
-                if len(pairs) != 1:
-                    raise SqlgenUnsupported(
-                        "multi-pair self-join (OR onclause) has no exact "
-                        "one-SQL form"
+                if len(pairs) == 1:
+                    fk = ForeignKey(
+                        parent=(pairs[0][0],), child=(pairs[0][1],)
                     )
-                fk = ForeignKey(parent=(pairs[0][0],), child=(pairs[0][1],))
-                parent_cols = [pairs[0][0]]
+                    parent_cols = [pairs[0][0]]
+                else:
+                    fk = pairs  # list marker → OR-join decomposition
+                    parent_cols = [p for p, _ in pairs]
                 child_extra.update(self.catalog.primary_key(node.table, node))
             else:
                 fk = self.catalog.resolve_fk(node, ch)
@@ -367,10 +369,8 @@ class SqlTreeCompiler:
         sql, specs, needed, scan_cols = self._base_sql(
             node, extra | child_extra, key_exprs, filter_only_cols=fcols
         )
-        # running output-column order of the body — the DataFrame path's
-        # USING semi-joins REORDER columns (join keys first), and that
-        # intermediate order feeds canonical attribute numbering, so the
-        # optimized-plan parity the tests pin depends on tracking it
+        # running output-column order of the body (a semi-join puts
+        # its keys first); the caller's projections select by name
         cur_cols: list[str] = scan_cols + base_key_names
         if node.parent is None and self.rk_view is not None:
             rpks = list(self.catalog.primary_key(node.table, node))
@@ -386,21 +386,16 @@ class SqlTreeCompiler:
         if node.parent is None and self.root_filters:
             from ..operators.filters import filters_to_spark_sql
 
-            # dtypes visible to the filter = the base projection the
-            # DataFrame path calls .filter() on (filter-only columns
-            # resolve as missing refs there, so they are NOT typed —
-            # the untyped plain <=> branch, mirrored here)
-            all_dtypes = dict(self.catalog.df(node.table).dtypes)
-            dtypes = {c: all_dtypes[c] for c in needed if c in all_dtypes}
+            # every table column is typed, filter-only ones included,
+            # so the mixed-type guard covers them too
+            dtypes = dict(self.catalog.df(node.table).dtypes)
             sql = (
                 f"SELECT * FROM ({sql}) WHERE "
                 f"{filters_to_spark_sql(self.root_filters, dtypes)}"
             )
             extra_scanned = [c for c in scan_cols if c not in needed]
             if extra_scanned:
-                # trim the filter-only columns back out — the analyzer's
-                # ResolveMissingReferences restores the original
-                # projection the same way
+                # trim the filter-only columns back out
                 keep = sorted(needed) + base_key_names
                 sql = (
                     f"SELECT {', '.join(_bt(c) for c in keep)} "
@@ -411,20 +406,20 @@ class SqlTreeCompiler:
 
         if child_plans:
             # flat left-deep join over the base + one subquery per child.
-            # Column ORDER mirrors the DataFrame path exactly (base scan
-            # output, then each child's jk/payload/key columns in join
-            # order; a key merge drops its two sources and appends at the
-            # end — withColumn semantics): intermediate projection order
-            # feeds canonical attribute numbering, so the optimized-plan
-            # parity the tests pin depends on it. Merged key arrays
-            # inline their concat chains (exactly what CollapseProject
-            # makes of the withColumn-per-merge form).
+            # Output columns: the base's, then each child's jk/payload/
+            # key columns in join order; a key merge drops its two
+            # sources and appends the merged array (an inline concat
+            # chain) at the end.
             ordered: list[tuple[str, str]] = [
                 (c, f"__b.{_bt(c)}") for c in cur_cols
             ]
             joins: list[str] = []
             for idx, (ch, fk, parent_cols) in enumerate(child_plans):
-                plan = self._child_plan(ch, node)
+                if isinstance(fk, list):  # multi-pair self-join (OR rule)
+                    plan = self._self_or_plan(ch, node, sql, fk)
+                    parent_cols = list(pks)
+                else:
+                    plan = self._child_plan(ch, node)
                 alias = f"__c{idx}"
                 cond = " AND ".join(
                     f"__b.{_bt(pc)} = {alias}.{_bt(jk)}"
@@ -526,6 +521,78 @@ class SqlTreeCompiler:
         )
         return SqlNodePlan(sql, jk_names, payload_name, out_keys)
 
+    def _self_or_plan(
+        self,
+        node: Node,
+        parent: Node,
+        parent_sql: str,
+        pairs: list[tuple[str, str]],
+    ) -> SqlNodePlan:
+        """Self-join child with several FK column pairs, OR-combined
+        (ref: pgsync/querybuilder.py:575-577). A literal OR join is a
+        nested loop at scale, so: one equi-join per pair against the
+        parent's distinct key rows, UNION ALL, then dedup on
+        (parent PK, child PK) — a child matching through several pairs
+        lands once — and the usual grouping by the parent PKs. Both
+        dedups are ``GROUP BY subset`` with ``first()`` for the other
+        columns, the form Catalyst rewrites ``dropDuplicates(subset)``
+        into (ReplaceDeduplicateWithAggregate)."""
+        nid = next(self._ids)
+        rel = node.relationship
+        ppks = list(self.catalog.primary_key(parent.table, parent))
+        cpks = list(self.catalog.primary_key(node.table, node))
+        cbody, specs, cfields, ckeys, ccols = self._node_body(
+            node, extra={c for _, c in pairs} | set(cpks)
+        )
+        sp = {
+            c: f"__sp_{nid}_{c}"
+            for c in dict.fromkeys(ppks + [p for p, _ in pairs])
+        }
+
+        def dedup(body: str, cols: list[str], key: list[str]) -> str:
+            sel = [_bt(c) for c in key] + [
+                f"first({_bt(c)}) AS {_bt(c)}" for c in cols if c not in key
+            ]
+            return (
+                f"SELECT {', '.join(sel)} FROM ({body}) "
+                f"GROUP BY {', '.join(_bt(c) for c in key)}"
+            )
+
+        psel = ", ".join(f"{_bt(c)} AS {_bt(a)}" for c, a in sp.items())
+        psql = dedup(
+            f"SELECT {psel} FROM ({parent_sql})",
+            list(sp.values()),
+            [sp[k] for k in ppks],
+        )
+        union = " UNION ALL ".join(
+            f"SELECT * FROM ({psql}) __p INNER JOIN ({cbody}) __c "
+            f"ON __p.{_bt(sp[p])} = __c.{_bt(c)}"
+            for p, c in pairs
+        )
+        group_cols = [sp[k] for k in ppks]
+        matched = dedup(union, list(sp.values()) + ccols, group_cols + cpks)
+        jk_names = [f"__jk_{nid}_{i}" for i in range(len(ppks))]
+        if rel.type == ONE_TO_MANY:
+            return self._aggregate_many(
+                node, nid, matched, cfields, ckeys, group_cols, jk_names
+            )
+        # one_to_one: one row per match (several OR matches duplicate the
+        # parent row — the reference's join does the same)
+        payload_name = f"__p_{nid}"
+        if rel.variant == SCALAR and len(specs) == 1 and not node.children:
+            payload = cfields[0][1]
+        else:
+            payload = _struct_sql(cfields)
+        sel = [f"{_bt(g)} AS {_bt(jk)}" for g, jk in zip(group_cols, jk_names)]
+        sel.append(f"{payload} AS {_bt(payload_name)}")
+        sel.extend(_bt(c) for c in ckeys.values())
+        return SqlNodePlan(
+            f"SELECT {', '.join(sel)} FROM ({matched})",
+            jk_names,
+            payload_name,
+            dict(ckeys),
+        )
+
     # ------------------------------------------------------------------
     def _using_semi(
         self,
@@ -534,10 +601,10 @@ class SqlTreeCompiler:
         on_cols: list[str],
         keys_sql: str,
     ) -> tuple[str, list[str]]:
-        """``df.join(maybe_broadcast(keys), on=on_cols, how="left_semi")``
-        as text. A USING join reorders output columns (join keys first,
-        then the remaining left columns in left order) — mirrored
-        explicitly; returns (sql, new column order)."""
+        """Left semi-join of ``body`` against ``keys_sql`` on
+        ``on_cols``, broadcast-hinted when ``broadcast_rk``. Output puts
+        the join keys first, then the remaining body columns in order;
+        returns (sql, new column order)."""
         hint = "/*+ BROADCAST(__sk) */ " if self.broadcast_rk else ""
         cond = " AND ".join(
             f"__b.{_bt(c)} = __sk.{_bt(c)}" for c in on_cols
@@ -642,23 +709,18 @@ class SqlTreeCompiler:
 
         sel: list[str] = [_bt(pk) for pk in pks]
         field_names: list[str] = []
-        field_is_array: dict[str, bool] = {}
         for lbl, ex in fields:
             sel.append(f"{ex} AS {_bt('__f_' + lbl)}")
             field_names.append(lbl)
         for key, colname in keys_cols.items():
             sel.append(_bt(colname))
         sql = f"SELECT {', '.join(sel)} FROM ({body})"
-        for ch in node.children:
-            if ch.relationship.type == ONE_TO_MANY:
-                field_is_array[ch.name] = True
         return SqlCompiled(
             sql=sql,
             tree=tree,
             root_pks=pks,
             field_names=field_names,
             keys_cols=dict(keys_cols),
-            field_is_array=field_is_array,
         )
 
 
@@ -723,19 +785,35 @@ def compile_assembled(
     root_keys: DataFrame | None = None,
     root_keys_rows: int | None = None,
     root_filters: list[dict] | None = None,
-    include_meta: bool = True,
+    structured: bool = False,
     include_pks: bool = False,
     include_keys: bool = False,
     scope: ViewScope | None = None,
 ):
-    """Compile + assemble in ONE ``spark.sql()`` — the fused form of
-    ``TreeCompiler(...).compile(tree)`` + ``assemble_docs(...)``.
+    """Compile + assemble ``tree`` in ONE ``spark.sql()``.
 
-    Returns ``(DataFrame, meta)`` where ``meta`` carries the compiled
-    keys inventory (``keys_cols``), root pks and field names — the
-    same metadata CompiledDoc exposes. Falls back to the TreeCompiler
-    path (identical results, more driver round-trips) for trees sqlgen
-    cannot express.
+    Returns ``(DataFrame, meta)``: the frame is ``(_id, doc[, _routing])``
+    with canonical compact JSON docs, or with ``structured`` the typed
+    shape ``(_id[, _routing], _meta, *fields)`` a search sink maps;
+    ``meta`` is the SqlCompiled inventory (``keys_cols``, root pks,
+    field names).
+
+    ``root_keys``: a frame of root PK values (positional columns); the
+    root scan is semi-joined against it, and direct children whose join
+    columns are root PKs are pre-filtered the same way, so the tree
+    recomputes only those keys (the incremental engine's
+    recompute-by-key path, ref: pgsync/sync.py:1345-1493). Broadcast
+    when ``root_keys_rows`` (counted when not given) is small.
+
+    ``root_filters``: literal filter clauses in the reference's spec
+    (list=OR of dict=AND, ref: pgsync/querybuilder.py:100-132), applied
+    at the root scan only (ref: querybuilder.py:469-471). A value with
+    no Spark SQL literal form raises ``UnrenderableLiteral``.
+
+    ``include_pks`` rides the typed root keys along; ``include_keys``
+    adds each lineage key array (distinct, stringified) under its
+    ``__k_*`` name — one materialization then serves the doc store and
+    the lineage index.
 
     ``scope``: a caller-owned ViewScope for repeated compiles (the
     incremental engine passes its own); without one, views are
@@ -743,36 +821,6 @@ def compile_assembled(
     after analysis, so concurrent compiles never collide and nothing
     leaks into the session catalog.
     """
-    from ..operators.filters import sql_renderable_filters
-
-    # root_keys + root_filters never co-occur on the hot paths (the
-    # engine restricts by key, the queries filter literals); the
-    # DataFrame analyzer's missing-ref restoration through a semi-join
-    # is a plan shape sqlgen does not mirror, so that combo falls back
-    # — as does a filter value with no exact SQL literal rendering
-    # (out-of-bigint int: F.lit takes it, 'L'-suffixed text does not)
-    if (
-        not sql_expressible(catalog, tree)
-        or (root_keys is not None and root_filters)
-        or not sql_renderable_filters(root_filters)
-    ):
-        from .compiler import TreeCompiler
-        from .docs import assemble_docs
-
-        compiled = TreeCompiler(
-            catalog,
-            root_keys=root_keys,
-            root_filters=root_filters,
-            root_keys_rows=root_keys_rows,
-        ).compile(tree)
-        df = assemble_docs(
-            compiled,
-            include_meta=include_meta,
-            include_pks=include_pks,
-            include_keys=include_keys,
-        )
-        return df, compiled
-
     spark = catalog.spark
     owns_scope = scope is None
     if owns_scope:
@@ -788,7 +836,7 @@ def compile_assembled(
             rk_view = scope.rk_view(root_keys)
             rk_cols = list(root_keys.columns)
             n = root_keys.count() if root_keys_rows is None else root_keys_rows
-            broadcast_rk = n <= BROADCAST_ROW_LIMIT
+            broadcast_rk = n <= _joins.BROADCAST_ROW_LIMIT
 
         meta = SqlTreeCompiler(
             catalog,
@@ -803,7 +851,7 @@ def compile_assembled(
 
         cols = assemble_exprs(
             meta,
-            include_meta=include_meta,
+            structured=structured,
             include_pks=include_pks,
             include_keys=include_keys,
         )

@@ -21,7 +21,7 @@ from .catalog import Catalog, TPCH_TABLES, time_micros
 from .functions import hashing
 from .functions.hashing import h32_sql, round6_sql
 from .operators.windows import bounded_rank_window
-from .operators.filters import build_filters, filters_to_sql
+from .operators.filters import filters_to_spark_sql, filters_to_sql
 from .plans.oracle import oracle_doc_sql
 from . import schemas
 
@@ -53,10 +53,8 @@ def catalog_for(spark: SparkSession, sf_dir: str) -> Catalog:
 
 def _denorm_fn(tree_name: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # one-SQL compile (plans/sqlgen.py): the identical Catalyst tree
-        # as TreeCompiler().compile_docs() — pinned by optimized-plan
-        # sameResult + byte parity in tests/test_sqlgen_parity.py — at
-        # one parse+analyze instead of ~50 eager DataFrame ops
+        # one-SQL compile (plans/sqlgen.py): one parse+analyze for the
+        # whole tree, checked against the DuckDB oracle registered below
         from .plans.sqlgen import compile_assembled
 
         cat = Catalog(spark, sf_dir)
@@ -98,7 +96,8 @@ def filter_root_or_and(spark, sf_dir):
     """pgsync root-filter semantics: list=OR of dict=AND clauses
     (ref: pgsync/querybuilder.py:100-132)."""
     df = Catalog(spark, sf_dir).df("orders")
-    return df.filter(build_filters(_ROOT_FILTERS, dict(df.dtypes))).select(
+    cond = filters_to_spark_sql(_ROOT_FILTERS, dict(df.dtypes))
+    return df.filter(cond).select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
 

@@ -353,7 +353,7 @@ class BulkHttpWriter:
 
     Input contract: a DataFrame with ``_id`` and ``doc`` (JSON string)
     columns, optionally ``_routing`` — exactly the incremental engine's
-    doc store / ``assemble_docs`` output. Deletes take an ``_id``-only
+    doc store / ``compile_assembled`` output. Deletes take an ``_id``-only
     frame. Chunk and retry defaults mirror the reference
     (ref: pgsync/settings.py:145-167 ELASTICSEARCH_CHUNK_SIZE=2000,
     MAX_CHUNK_BYTES=100MB, MAX_RETRIES/RETRY semantics).

@@ -19,7 +19,7 @@ Spark-first shape of each reference mechanism:
   table up to the root, executed against the current snapshots.
 - chunked IN-list re-sync filters (FILTER_CHUNK_SIZE=5000,
   ref: pgsync/sync.py:1464-1493) → one broadcast left_semi join
-  (TreeCompiler root_keys) — no chunking needed at any scale.
+  (compile_assembled's root_keys) — no chunking needed at any scale.
 - op decision table (ref: _insert_op/_update_op/_delete_op/_truncate_op
   pgsync/sync.py:1116-1343): INSERT/UPDATE/DELETE resolve old images via
   lineage and new images via FK chains (covers root PK change: old doc
@@ -48,7 +48,6 @@ from ..node import SYSTEM_COLUMNS, Node, Tree
 from ..operators.joins import maybe_broadcast
 from ..operators.overlay import KeyedOverlay
 from ..operators.overlay import apply_parallel as apply_overlays_parallel
-from ..plans.docs import assemble_docs
 from .cdc import DELETE, INSERT, TRUNCATE, UPDATE, TableMaterializer, _typed_image
 
 
@@ -121,7 +120,7 @@ def lineage_df(combined: DataFrame, keys_cols: dict) -> DataFrame:
     materialized combined frame.
 
     The per-(table, pk) key arrays ride along in ``combined`` (already
-    distinct + stringified, see ``assemble_docs(include_keys=True)``);
+    distinct + stringified, see ``compile_assembled(include_keys=True)``);
     packing them into an array of structs and exploding twice emits
     every lineage row in a single scan — the earlier union of one
     select per key column re-scanned the widest frame in the engine
@@ -191,14 +190,6 @@ def materialize_combined(
     docs = combined.select(*doc_cols)
     lineage = lineage_df(combined, keys_cols)
     return docs, lineage, combined
-
-
-def materialize_tree(
-    compiled, count_obs: Observation | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """materialize_combined over a CompiledDoc (assembles first)."""
-    combined = assemble_docs(compiled, include_pks=True, include_keys=True)
-    return materialize_combined(combined, compiled.keys_cols, count_obs)
 
 
 def _consumer_wave(calls: list) -> None:
@@ -465,9 +456,7 @@ class IncrementalEngine:
         # against materialized snapshots always recompiles. Only the
         # PLAN is memoized — materialize_combined below re-executes it
         # from the current files on every call. The compile itself is
-        # the one-SQL path (plans/sqlgen.py): one parse+analyze instead
-        # of ~50 eager DataFrame ops (~0.34s of driver-side py4j work;
-        # guide §7.3), byte-parity pinned by tests/test_sqlgen_parity.
+        # one parse+analyze of one SQL text (plans/sqlgen.py).
         memo = self._full_plan
         if memo is not None and memo[0] == self.catalog.version:
             combined_plan, keys_cols = memo[1], memo[2]

@@ -235,8 +235,7 @@ def test_geometry_plugin_enriches_and_maps(spark):
     import json
 
     from pgsync_spark.node import parse_tree
-    from pgsync_spark.plans.compiler import TreeCompiler
-    from pgsync_spark.plans.docs import assemble_structured
+    from pgsync_spark import compile_assembled
     from pgsync_spark.plugin import apply_plugins
     from pgsync_spark.plugin_examples import GeometryPlugin
     from pgsync_spark.sinks.search import build_index_mapping
@@ -293,8 +292,8 @@ def test_geometry_plugin_enriches_and_maps(spark):
         },
     }
     tree = parse_tree(raw)
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    body = build_index_mapping(tree, assemble_structured(compiled).schema)
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
+    body = build_index_mapping(tree, typed.schema)
     props = body["mappings"]["properties"]
     assert props["coordinates"] == {"type": "geo_point"}
     assert props["shape"] == {"type": "geo_shape"}

@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.catalog import TPCH_TABLES, TableMeta
 from pgsync_spark import exc
 
@@ -51,7 +51,7 @@ def _docs(spark, base_dir, declared=None):
     tables["orders"] = TableMeta("orders", ("o_orderkey",), schema=declared)
     cat = Catalog(spark, base_dir, tables=tables)
     tree = schemas.tree("root_only")
-    return TreeCompiler(cat).compile_docs(tree)
+    return compile_assembled(cat, tree)[0]
 
 
 def test_all_formats_agree(spark, fmt_dir):

@@ -7,7 +7,7 @@ import json
 
 import pytest
 
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.catalog import TPCH_TABLES
 from pgsync_spark.plans.oracle import oracle_doc_sql
 from pgsync_spark.testing import compare
@@ -18,7 +18,7 @@ from conftest import SF_DIR
 @pytest.mark.parametrize("name", schemas.tree_names())
 def test_topology_matches_oracle(spark, name):
     tree = schemas.tree(name)
-    df = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(tree)
+    df = compile_assembled(Catalog(spark, SF_DIR), tree)[0]
     sql = oracle_doc_sql(
         tree, TPCH_TABLES, schemas.columns_of, schemas.column_type_of
     )
@@ -27,8 +27,8 @@ def test_topology_matches_oracle(spark, name):
 
 
 def test_flagship_doc_shape(spark):
-    df = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(
-        schemas.tree("orders_full")
+    df, _ = compile_assembled(
+        Catalog(spark, SF_DIR), schemas.tree("orders_full")
     )
     row = df.orderBy("_id").limit(1).collect()[0]
     doc = json.loads(row["doc"])
@@ -44,8 +44,8 @@ def test_resync_idempotent(spark):
     """assert_resync_empty analog (ref: tests/testing_utils.py:41-67):
     running the same tree twice yields identical docs."""
     cat = Catalog(spark, SF_DIR)
-    a = TreeCompiler(cat).compile_docs(schemas.tree("orders_lineitems"))
-    b = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(
-        schemas.tree("orders_lineitems")
+    a = compile_assembled(cat, schemas.tree("orders_lineitems"))[0]
+    b, _ = compile_assembled(
+        Catalog(spark, SF_DIR), schemas.tree("orders_lineitems")
     )
     assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0

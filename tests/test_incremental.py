@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.streaming import IncrementalEngine, payloads_from_rows
 
 from conftest import SF_DIR
@@ -22,7 +22,7 @@ def _docs_equal(a, b):
 
 
 def _full_recompute(spark, engine, tree):
-    return TreeCompiler(engine.catalog).compile_docs(tree)
+    return compile_assembled(engine.catalog, tree)[0]
 
 
 @pytest.fixture()
@@ -202,7 +202,7 @@ def test_through_table_event(spark):
         ],
     )
     eng.process_batch(ev)
-    assert _docs_equal(eng.docs, TreeCompiler(eng.catalog).compile_docs(tree))
+    assert _docs_equal(eng.docs, compile_assembled(eng.catalog, tree)[0])
 
 
 def test_mixed_batch_resync_idempotent(spark, engine):
@@ -304,7 +304,6 @@ def test_routing_emitted(spark):
     """Tree.routing -> _routing column = root row's field value
     (ref: pgsync/sync.py:1562-1563)."""
     from pgsync_spark.node import parse_tree
-    from pgsync_spark.plans.docs import assemble_docs, assemble_structured
 
     raw = {
         "index": "orders",
@@ -313,13 +312,13 @@ def test_routing_emitted(spark):
     }
     tree = parse_tree(raw)
     cat = Catalog(spark, SF_DIR)
-    compiled = TreeCompiler(cat).compile(tree)
-    df = assemble_docs(compiled)
+    df, _ = compile_assembled(cat, tree)
     assert "_routing" in df.columns
     r = df.filter(F.col("_id") == "7").collect()[0]
     expected = cat.df("orders").filter(F.col("o_orderkey") == 7).collect()[0]["o_custkey"]
     assert r["_routing"] == str(expected)
-    assert "_routing" in assemble_structured(compiled).columns
+    typed, _ = compile_assembled(cat, tree, structured=True)
+    assert "_routing" in typed.columns
 
 
 def test_maybe_broadcast_guard(spark):
@@ -356,11 +355,12 @@ def test_bulk_batch_no_broadcast(spark, monkeypatch):
     eng.process_batch(payloads_from_rows(spark, evs))
     assert _docs_equal(eng.docs, _full_recompute(spark, eng, tree))
     # direct plan check: a root_keys semi-join above the limit is not
-    # broadcast (the logical plan carries no broadcast hint)
+    # broadcast (the analyzed plan carries no broadcast hint)
     keys = eng.docs.select(*eng.root_pks)
-    compiled = TreeCompiler(eng.catalog, root_keys=keys, root_keys_rows=10**6).compile(tree)
-    logical = compiled.df._jdf.queryExecution().logical().toString().lower()
-    assert "strategy=broadcast" not in logical
+    df, _ = compile_assembled(
+        eng.catalog, tree, root_keys=keys, root_keys_rows=9
+    )
+    assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
 
 
 def test_grandchild_event_three_level_tree(spark):
@@ -572,7 +572,7 @@ def test_view_event_remaps_to_node_table(spark):
     assert len(rows) == 1 and rows[0]["o_orderpriority"] == "V-VIEWED"
     doc = eng.docs.filter(F.col("_id") == "21").collect()[0]["doc"]
     assert "V-VIEWED" in doc
-    assert _docs_equal(eng.docs, TreeCompiler(eng.catalog).compile_docs(tree))
+    assert _docs_equal(eng.docs, compile_assembled(eng.catalog, tree)[0])
 
 
 def test_view_remap_in_multi_index_runner(spark):
@@ -974,7 +974,7 @@ def test_random_event_sequences_match_full_recompute(spark, seed):
     for _batch in range(3):
         events = [make_event() for _ in range(rng.randint(3, 7))]
         eng.process_batch(payloads_from_rows(spark, events))
-        full = TreeCompiler(eng.catalog).compile_docs(tree)
+        full = compile_assembled(eng.catalog, tree)[0]
         assert _docs_equal(eng.docs, full), (
             f"seed={seed} batch={_batch} events={events}"
         )

@@ -11,7 +11,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pgsync_spark import Catalog, TreeCompiler, parse_tree, schemas
+from pgsync_spark import Catalog, compile_assembled, parse_tree, schemas
 from pgsync_spark.catalog import TPCH_TABLES
 from pgsync_spark.plans.oracle import oracle_doc_sql
 from pgsync_spark.testing import compare
@@ -116,7 +116,7 @@ def tree_configs(draw, depth=2):
 @given(cfg=tree_configs())
 def test_random_tree_matches_oracle(spark, cfg):
     tree = parse_tree({"index": "prop", "nodes": cfg})
-    df = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(tree)
+    df = compile_assembled(Catalog(spark, SF_DIR), tree)[0]
     sql = oracle_doc_sql(
         tree, TPCH_TABLES, schemas.columns_of, schemas.column_type_of
     )
@@ -180,7 +180,7 @@ def _py_eq(colname, v, row):
 @pytest.mark.slow
 @given(clauses=_clauses)
 def test_filter_fuzz_matches_python_model(spark, clauses):
-    from pgsync_spark.operators.filters import build_filters
+    from pgsync_spark.operators.filters import filters_to_spark_sql
 
     df = spark.createDataFrame(
         [
@@ -193,7 +193,7 @@ def test_filter_fuzz_matches_python_model(spark, clauses):
         "o_orderpriority string",
     )
     rows = [r.asDict() for r in df.collect()]
-    cond = build_filters(clauses, dict(df.dtypes))
+    cond = filters_to_spark_sql(clauses, dict(df.dtypes))
     got = {
         tuple(r.asDict().values()) for r in df.filter(cond).collect()
     }

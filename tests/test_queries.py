@@ -232,7 +232,7 @@ def test_uuid_equality_guard_empty_not_error(spark):
     text assumed null-on-cast), so the guard now collapses mixed
     string-vs-number comparisons to plan-time FALSE, exactly the
     reference's type guard."""
-    from pgsync_spark.operators.filters import build_filters
+    from pgsync_spark.operators.filters import filters_to_spark_sql
 
     df = spark.createDataFrame(
         [("b74b3bb1-1b1a-4a0e-9d3e-6d2b8e1a0f00", "x"),
@@ -240,14 +240,16 @@ def test_uuid_equality_guard_empty_not_error(spark):
         "uid string, payload string",
     )
     dt = dict(df.dtypes)
-    out = df.filter(build_filters([{"uid": 7}], dt))
+    out = df.filter(filters_to_spark_sql([{"uid": 7}], dt))
     assert out.count() == 0  # empty, no exception
     # composite clause: int guard on uuid AND a matching string literal
-    out2 = df.filter(build_filters([{"uid": 123, "payload": "x"}], dt))
+    out2 = df.filter(filters_to_spark_sql([{"uid": 123, "payload": "x"}], dt))
     assert out2.count() == 0
     # sanity: a real uuid literal still matches
     out3 = df.filter(
-        build_filters([{"uid": "b74b3bb1-1b1a-4a0e-9d3e-6d2b8e1a0f00"}], dt)
+        filters_to_spark_sql(
+            [{"uid": "b74b3bb1-1b1a-4a0e-9d3e-6d2b8e1a0f00"}], dt
+        )
     )
     assert out3.count() == 1
 
@@ -257,19 +259,19 @@ def test_numeric_column_vs_string_literal_guard(spark):
     against a string literal. Parseable strings match their numeric
     value (CDC images arrive stringly, '7' must find key 7);
     unparseable strings yield EMPTY — not an ANSI cast crash, and NOT a
-    null-match (eqNullSafe against a silently-nulled cast would wrongly
+    null-match (<=> against a silently-nulled cast would wrongly
     match rows whose key IS NULL)."""
-    from pgsync_spark.operators.filters import build_filters
+    from pgsync_spark.operators.filters import filters_to_spark_sql
 
     df = spark.createDataFrame(
         [(7, "a"), (8, "b"), (None, "c")], "k long, payload string"
     )
     dt = dict(df.dtypes)
-    assert df.filter(build_filters([{"k": "7"}], dt)).count() == 1
+    assert df.filter(filters_to_spark_sql([{"k": "7"}], dt)).count() == 1
     # unparseable: empty, no exception, and the NULL-keyed row must NOT match
-    assert df.filter(build_filters([{"k": "abc"}], dt)).count() == 0
+    assert df.filter(filters_to_spark_sql([{"k": "abc"}], dt)).count() == 0
     # int literal on numeric col: unaffected
-    assert df.filter(build_filters([{"k": 8}], dt)).count() == 1
+    assert df.filter(filters_to_spark_sql([{"k": 8}], dt)).count() == 1
 
 
 def test_lsh_hot_bucket_drop_count_observed(spark):

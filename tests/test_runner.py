@@ -8,7 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.streaming import SyncRunner, payloads_from_rows
 
 from conftest import SF_DIR
@@ -90,7 +90,7 @@ def test_both_indices_match_full_recompute(spark, runner):
     runner.process_batch(_batch(spark, runner))
     for schema_name, idx in TREES.items():
         eng = runner.engines[idx]
-        full = TreeCompiler(runner.catalog).compile_docs(schemas.tree(schema_name))
+        full = compile_assembled(runner.catalog, schemas.tree(schema_name))[0]
         assert _docs_equal(eng.docs, full), idx
 
 
@@ -216,7 +216,7 @@ def test_runner_streams_one_feed_into_both_indices(spark, runner, tmp_path):
     assert len(snap) == 1 and snap[0]["o_orderpriority"] == "S2"
     for name, schema_name in (("orders", "orders_full"),
                               ("customer", "customer_orders_lineitems")):
-        full = TreeCompiler(runner.catalog).compile_docs(schemas.tree(schema_name))
+        full = compile_assembled(runner.catalog, schemas.tree(schema_name))[0]
         assert _docs_equal(runner.docs(name), full), name
 
 

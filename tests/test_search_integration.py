@@ -66,9 +66,8 @@ def _search_ids(index: str) -> set:
 def test_create_index_and_bulk_roundtrip(spark, index_name):
     """Generated mapping PUTs cleanly, upsert lands, a re-run is
     idempotent, deletes remove — against the real implementation."""
-    from pgsync_spark import Catalog, TreeCompiler
+    from pgsync_spark import Catalog, compile_assembled
     from pgsync_spark.node import parse_tree
-    from pgsync_spark.plans.docs import assemble_structured
     from pgsync_spark.sinks.search import BulkHttpWriter
 
     from conftest import SF_DIR
@@ -79,8 +78,8 @@ def test_create_index_and_bulk_roundtrip(spark, index_name):
             "nodes": {"table": "orders", "columns": ["o_orderkey", "o_custkey"]},
         }
     )
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    schema = assemble_structured(compiled).schema
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
+    schema = typed.schema
     w = BulkHttpWriter(ES_URL, index_name, chunk_docs=500)
     assert w.create_index(tree, schema).get("acknowledged") is True
     # second create must HEAD-skip, not 400
@@ -108,9 +107,8 @@ def test_create_index_and_bulk_roundtrip(spark, index_name):
 def test_mapping_types_accepted(spark, index_name):
     """The declared-mapping passthrough (geo_point etc.) produces a
     body the real cluster accepts."""
-    from pgsync_spark import Catalog, TreeCompiler
+    from pgsync_spark import Catalog, compile_assembled
     from pgsync_spark.node import parse_tree
-    from pgsync_spark.plans.docs import assemble_structured
     from pgsync_spark.sinks.search import BulkHttpWriter
 
     from conftest import SF_DIR
@@ -130,9 +128,9 @@ def test_mapping_types_accepted(spark, index_name):
             },
         }
     )
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
     w = BulkHttpWriter(ES_URL, index_name)
-    assert w.create_index(tree, assemble_structured(compiled).schema).get(
+    assert w.create_index(tree, typed.schema).get(
         "acknowledged"
     ) is True
     props = _get(f"/{index_name}/_mapping")[index_name]["mappings"]["properties"]

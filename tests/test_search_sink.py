@@ -11,9 +11,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, TreeCompiler
+from pgsync_spark import Catalog, compile_assembled
 from pgsync_spark.node import parse_tree
-from pgsync_spark.plans.docs import assemble_docs, assemble_structured
 from pgsync_spark.sinks.search import BulkHttpWriter, build_index_mapping
 
 from conftest import SF_DIR
@@ -262,8 +261,8 @@ def test_mapping_roundtrip_with_routing(spark, stub):
         "nodes": {"table": "orders", "columns": ["o_orderkey", "o_custkey"]},
     }
     tree = parse_tree(raw)
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    schema = assemble_structured(compiled).schema
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
+    schema = typed.schema
     mapping = build_index_mapping(tree, schema)
     assert mapping["mappings"]["_routing"] == {"required": True}
     assert "_routing" not in mapping["mappings"]["properties"]
@@ -281,7 +280,7 @@ def test_mapping_roundtrip_with_routing(spark, stub):
 
 
 def test_engine_docs_flow_to_bulk(spark, stub):
-    """assemble_docs output (with _routing) flows through upsert
+    """compile_assembled output (with _routing) flows through upsert
     unchanged — the doc-store -> sink contract end to end."""
     raw = {
         "index": "orders",
@@ -290,7 +289,7 @@ def test_engine_docs_flow_to_bulk(spark, stub):
     }
     tree = parse_tree(raw)
     cat = Catalog(spark, SF_DIR)
-    docs = assemble_docs(TreeCompiler(cat).compile(tree))
+    docs = compile_assembled(cat, tree)[0]
     n = docs.count()
     BulkHttpWriter(_url(stub), "orders").upsert(docs)
     actions = [ln for ln in _bulk_lines(stub) if "index" in ln]
@@ -312,7 +311,7 @@ def test_writer_from_tree_wires_pipeline_and_routing(spark, stub):
     w = BulkHttpWriter.from_tree(_url(stub), tree, chunk_docs=5)
     assert w.index == "orders_idx"
     assert w.pipeline == "enrich-orders"
-    docs = assemble_docs(TreeCompiler(Catalog(spark, SF_DIR)).compile(tree))
+    docs = compile_assembled(Catalog(spark, SF_DIR), tree)[0]
     w.upsert(docs.limit(3))
     actions = [ln for ln in _bulk_lines(stub) if "index" in ln]
     assert len(actions) == 3
@@ -421,8 +420,8 @@ def test_mapping_nested_declared_settings_and_validation(spark):
         },
     }
     tree = parse_tree(raw)
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    body = build_index_mapping(tree, assemble_structured(compiled).schema)
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
+    body = build_index_mapping(tree, typed.schema)
     assert body["settings"] == {
         "index": {"number_of_replicas": 0, "refresh_interval": "30s"}
     }
@@ -445,7 +444,7 @@ def test_mapping_nested_declared_settings_and_validation(spark):
         }
     )
     with pytest.raises(exc.SchemaError, match="invalid Elasticsearch type"):
-        build_index_mapping(bad_type, assemble_structured(compiled).schema)
+        build_index_mapping(bad_type, typed.schema)
 
     bad_param = parse_tree(
         {
@@ -460,7 +459,7 @@ def test_mapping_nested_declared_settings_and_validation(spark):
         }
     )
     with pytest.raises(exc.SchemaError, match="mapping parameter"):
-        build_index_mapping(bad_param, assemble_structured(compiled).schema)
+        build_index_mapping(bad_param, typed.schema)
 
 
 def test_connection_drop_mid_stream_retries_and_converges(spark, stub):
@@ -519,8 +518,8 @@ def test_declared_mapping_reserved_and_scalar_graft_guards(spark):
         },
     }
     tree = parse_tree(raw)
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    schema = assemble_structured(compiled).schema
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), tree, structured=True)
+    schema = typed.schema
     body = build_index_mapping(tree, schema)
     assert "_routing" not in body["mappings"]["properties"]
     assert body["mappings"]["_routing"] == {"required": True}
@@ -529,6 +528,6 @@ def test_declared_mapping_reserved_and_scalar_graft_guards(spark):
         "mapping": {"o_orderkey.sub": {"type": "keyword"}}
     }
     bad = parse_tree(raw)
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(bad)
+    typed, _ = compile_assembled(Catalog(spark, SF_DIR), bad, structured=True)
     with pytest.raises(exc.SchemaError, match="scalar type"):
-        build_index_mapping(bad, assemble_structured(compiled).schema)
+        build_index_mapping(bad, typed.schema)

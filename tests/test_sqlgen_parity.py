@@ -1,60 +1,49 @@
-"""Pinned parity: the one-SQL compiler (plans/sqlgen.py) must produce
-the IDENTICAL Catalyst tree — and therefore byte-identical documents —
-as the TreeCompiler + assemble_docs path it replaces on the hot paths
-(per-batch engine recompute, full sync, denorm queries).
-
-The pin is optimized-plan ``sameResult`` (canonical plan equality —
-dropDuplicates/DISTINCT and Project stacking normalize there, names
-and exprIds are erased) PLUS byte-equality of collected rows, for
-every registered topology and for the engine-shaped variants
-(root-keys restricted compile, include_pks/include_keys combined
-frame, root filters).
+"""The one tree compiler (plans/sqlgen.py) on the engine-shaped
+variants: root-keys restricted compiles, root filters (alone and with
+root keys), the multi-pair self-join OR, the filter renderer's literal
+semantics, broadcast hints, ViewScope, the full-sync memo and an engine
+batch. Every topology's documents are checked against the DuckDB
+oracle by test_queries.py::test_query_matches_oracle[denorm_*] and
+test_denorm_oracle.py.
 """
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, schemas
-from pgsync_spark.plans.compiler import TreeCompiler
-from pgsync_spark.plans.docs import assemble_docs
-from pgsync_spark.plans.sqlgen import (
-    SqlgenUnsupported,
-    SqlTreeCompiler,
-    compile_assembled,
-    sql_expressible,
+from pgsync_spark import Catalog, caching, parse_tree, schemas
+from pgsync_spark.operators.filters import (
+    UnrenderableLiteral,
+    filters_to_spark_sql,
 )
+from pgsync_spark.plans.sqlgen import compile_assembled
 
 from conftest import SF_DIR
-
-
-def _same_optimized(a, b) -> bool:
-    return (
-        a._jdf.queryExecution()
-        .optimizedPlan()
-        .sameResult(b._jdf.queryExecution().optimizedPlan())
-    )
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("name", schemas.tree_names())
-def test_sqlgen_matches_treecompiler(spark, name):
-    cat = Catalog(spark, SF_DIR)
-    tree = schemas.tree(name)
-    compiled = TreeCompiler(cat).compile(tree)
-    old = assemble_docs(compiled)
-    new, meta = compile_assembled(cat, tree)
-    if sql_expressible(cat, tree):
-        assert _same_optimized(old, new), name
-        # metadata inventory (names included — the engine's lineage
-        # consumers address key arrays by these)
-        assert meta.keys_cols == compiled.keys_cols
-        assert meta.field_names == compiled.field_names
-        assert meta.root_pks == compiled.root_pks
-        assert meta.field_is_array == compiled.field_is_array
-    assert _rows(old) == _rows(new), name
+def _canon(df):
+    """Lineage key arrays sorted: collect_list order follows execution,
+    and the arrays are sets to their consumers."""
+    return df.select(
+        *[
+            F.array_sort(c).alias(c) if c.startswith("__k_") else F.col(c)
+            for c in df.columns
+        ]
+    )
+
+
+def _restrict(df, keys, pks):
+    return df.join(keys, on=pks, how="left_semi").select(*df.columns)
+
+
+def _root_keys(cat, tree, n):
+    pks = list(cat.primary_key(tree.root.table, tree.root))
+    keys = cat.df(tree.root.table).select(*pks).orderBy(*pks).limit(n)
+    return pks, keys.localCheckpoint(eager=True)
 
 
 @pytest.mark.parametrize(
@@ -63,49 +52,64 @@ def test_sqlgen_matches_treecompiler(spark, name):
      "customer_orders_lineitems"],
 )
 def test_sqlgen_root_keys_combined_frame(spark, name):
-    """The engine's per-batch shape: restricted recompute with typed
+    """The engine's per-batch shape — restricted recompute with typed
     root keys riding along plus lineage key arrays (include_pks +
-    include_keys)."""
+    include_keys) — equals the full compile restricted to the keys."""
     cat = Catalog(spark, SF_DIR)
     tree = schemas.tree(name)
-    pks = list(cat.primary_key(tree.root.table, tree.root))
-    keys = cat.df(tree.root.table).select(*pks).limit(7)
-    keys = keys.localCheckpoint(eager=True)
+    pks, keys = _root_keys(cat, tree, 7)
     try:
-        compiled = TreeCompiler(cat, root_keys=keys, root_keys_rows=7).compile(
-            tree
+        full, fmeta = compile_assembled(
+            cat, tree, include_pks=True, include_keys=True
         )
-        old = assemble_docs(compiled, include_pks=True, include_keys=True)
         new, meta = compile_assembled(
             cat, tree, root_keys=keys, root_keys_rows=7,
             include_pks=True, include_keys=True,
         )
-        assert old.columns == new.columns
-        assert _same_optimized(old, new), name
-        assert _rows(old) == _rows(new), name
+        assert new.columns == full.columns
+        assert meta.keys_cols == fmeta.keys_cols
+        got = _rows(_canon(new))
+        assert len(got) == 7, name
+        assert got == _rows(_canon(_restrict(full, keys, pks))), name
     finally:
-        from pgsync_spark import caching
-
         caching.release_local_checkpoint(keys)
 
 
 def test_sqlgen_root_filters(spark):
+    """root_keys and root_filters together: the restricted, filtered
+    compile equals the filtered full compile restricted to the keys,
+    with a filter column (o_orderpriority) the tree does not project.
+    A filter-only column keeps the mixed-type guard: a number against
+    the string column folds to FALSE instead of an ANSI cast error."""
     from pgsync_spark.queries import _DENORM_FILTERS
 
     cat = Catalog(spark, SF_DIR)
     tree = schemas.tree("orders_lineitems")
-    old = assemble_docs(
-        TreeCompiler(cat, root_filters=_DENORM_FILTERS).compile(tree)
+    assert "o_orderpriority" not in {c.name for c in tree.root.columns}
+    pks, keys = _root_keys(cat, tree, 400)
+    try:
+        full, _ = compile_assembled(
+            cat, tree, root_filters=_DENORM_FILTERS, include_pks=True
+        )
+        new, _ = compile_assembled(
+            cat, tree, root_keys=keys, root_keys_rows=400,
+            root_filters=_DENORM_FILTERS, include_pks=True,
+        )
+        got = _rows(new)
+        assert 0 < len(got) < 400
+        assert got == _rows(_restrict(full, keys, pks))
+    finally:
+        caching.release_local_checkpoint(keys)
+    guarded, _ = compile_assembled(
+        cat, tree, root_filters=[{"o_orderpriority": 5}]
     )
-    new, _ = compile_assembled(cat, tree, root_filters=_DENORM_FILTERS)
-    assert _same_optimized(old, new)
-    assert _rows(old) == _rows(new)
+    assert guarded.count() == 0
 
 
 def test_sqlgen_broadcast_hint_parity(spark):
-    """Hints are erased from canonical plans, so sameResult cannot pin
-    them — assert the analyzed plan carries the hint exactly when the
-    DataFrame path's maybe_broadcast would apply it."""
+    """The analyzed plan carries the root-keys broadcast hint exactly
+    when the key count is within operators/joins.BROADCAST_ROW_LIMIT
+    (maybe_broadcast's rule)."""
     cat = Catalog(spark, SF_DIR)
     tree = schemas.tree("orders_lineitems")
     pks = list(cat.primary_key(tree.root.table, tree.root))
@@ -121,28 +125,86 @@ def test_sqlgen_broadcast_hint_parity(spark):
     assert "ResolvedHint" not in big._jdf.queryExecution().analyzed().toString()
 
 
-def test_sqlgen_unsupported_falls_back(spark):
-    """nation_related's multi-pair self-join has no one-SQL form; the
-    facade must fall back to TreeCompiler and still answer."""
+def test_nation_related_compiles_in_one_sql(spark, monkeypatch):
+    """The multi-pair self-join OR (nation_related) compiles through
+    one spark.sql: a UNION ALL of per-pair equi-joins deduped by
+    GROUP BY with first()."""
+    texts = []
+    real_sql = SparkSession.sql
+
+    def counting_sql(self, text, *args, **kwargs):
+        texts.append(text)
+        return real_sql(self, text, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", counting_sql)
     cat = Catalog(spark, SF_DIR)
-    tree = schemas.tree("nation_related")
-    assert not sql_expressible(cat, tree)
-    with pytest.raises(SqlgenUnsupported):
-        SqlTreeCompiler(cat, {t: t for t in tree.tables()}).compile(tree)
-    old = assemble_docs(TreeCompiler(cat).compile(tree))
-    new, _ = compile_assembled(cat, tree)
-    assert _rows(old) == _rows(new)
+    df, _ = compile_assembled(cat, schemas.tree("nation_related"))
+    assert len(texts) == 1
+    assert "UNION ALL" in texts[0] and "first(" in texts[0]
+    assert df.count() == 25
 
 
-def test_filters_to_spark_sql_matches_build_filters(spark):
-    """filters_to_spark_sql must parse to the identical predicate tree
-    as build_filters, across every _typed_eq branch (mixed-type guards,
-    try_cast, null-safe equality, AND/OR shape)."""
-    from pgsync_spark.operators.filters import (
-        build_filters,
-        filters_to_spark_sql,
+def test_one_to_one_self_or_duplicates_parent_rows(spark):
+    """DEVIATIONS #14: a one_to_one self-join with several OR pairs keeps
+    one row per match, so a parent with several matching children
+    repeats (the reference's join does the same). At sf0.001 every
+    nation matches the 5 nations of its region: 125 rows, 25 _id."""
+    tree = parse_tree(
+        {
+            "index": "nation",
+            "nodes": {
+                "table": "nation",
+                "columns": ["n_nationkey", "n_name"],
+                "children": [
+                    {
+                        "table": "nation",
+                        "label": "related",
+                        "columns": ["n_nationkey", "n_name"],
+                        "relationship": {
+                            "type": "one_to_one",
+                            "variant": "object",
+                            "foreign_key": {
+                                "parent": ["n_nationkey", "n_regionkey"],
+                                "child": ["n_regionkey", "n_regionkey"],
+                            },
+                        },
+                    }
+                ],
+            },
+        }
     )
+    df, _ = compile_assembled(Catalog(spark, SF_DIR), tree)
+    assert df.count() == 125
+    assert df.select("_id").distinct().count() == 25
 
+
+_FILTER_CASES = [
+    ([{"i": 1}], {1}),
+    ([{"i": 2**40}], set()),            # BIGINT literal
+    ([{"d": 2.0}], {2}),
+    ([{"s": "1"}], {1}),
+    ([{"s": "x'y\\z"}], set()),       # quote + backslash escaping
+    ([{"s": 1}], set()),                # stringy col vs number → FALSE
+    ([{"i": "2"}], {2}),                # numeric col vs string → try_cast
+    ([{"i": "not-a-number"}], set()),
+    ([{"dec": "1.00"}], {1}),
+    ([{"dec": "1.5"}], set()),
+    ([{"ts": "2024-01-01 00:00:00"}], {0, 1, 2}),
+    ([{"b": True}, {"b": "true"}], {0, 2}),
+    ([{"i": True}], set()),             # bool vs non-bool col → FALSE
+    ([{"b": 3}], set()),                # bool col vs number → FALSE
+    ([{"i": None}], set()),
+    ([{"n": None}], {1}),               # null-safe: NULL matches NULL
+    ([{"i": 1, "s": "1"}, {"d": 2.0}], {1, 2}),   # AND within, OR across
+    ([{"i": 1, "s": "2"}], set()),
+    ([], {0, 1, 2}),
+]
+
+
+def test_filters_to_spark_sql_expected_ids(spark):
+    """filters_to_spark_sql across every guard branch (mixed-type
+    guards, try_cast, null-safe equality, AND/OR shape) selects these
+    literal id sets."""
     df = spark.range(3).selectExpr(
         "id AS i",
         "CAST(id AS DOUBLE) AS d",
@@ -150,78 +212,40 @@ def test_filters_to_spark_sql_matches_build_filters(spark):
         "id % 2 = 0 AS b",
         "CAST(id AS DECIMAL(12,2)) AS dec",
         "TIMESTAMP '2024-01-01 00:00:00' AS ts",
+        "IF(id = 1, NULL, id) AS n",
     )
     dtypes = dict(df.dtypes)
-    cases = [
-        [{"i": 1}],
-        [{"i": 2**40}],
-        [{"d": 0.5}],
-        [{"s": "x'y\\z"}],
-        [{"s": 7}],              # stringy col vs number → FALSE
-        [{"i": "7"}],            # numeric col vs string → try_cast
-        [{"i": "not-a-number"}],
-        [{"dec": "1.5"}],
-        [{"ts": "2024-01-01 00:00:00"}],
-        [{"b": True}, {"b": "true"}],
-        [{"i": True}],           # bool vs non-bool col → FALSE
-        [{"b": 3}],              # bool col vs number → FALSE
-        [{"i": None}],
-        [{"i": 1, "s": "a"}, {"d": 2.5}],   # AND within, OR across
-        [],
-    ]
-    for clauses in cases:
-        a = df.filter(build_filters(clauses, dtypes))
-        b = df.filter(F.expr(filters_to_spark_sql(clauses, dtypes)))
-        assert (
-            a._jdf.queryExecution()
-            .analyzed()
-            .sameResult(b._jdf.queryExecution().analyzed())
-        ), clauses
+    for clauses, want in _FILTER_CASES:
+        got = df.filter(F.expr(filters_to_spark_sql(clauses, dtypes)))
+        assert {r.i for r in got.collect()} == want, clauses
 
 
 def test_filters_spark_sql_nonfinite_literals(spark):
-    """inf/nan filter values must render as parseable SQL (the former
-    'infD'/'nanD' were parse errors) that constant-folds to the SAME
-    Literal the Column path's F.lit produces — optimized-plan
-    sameResult, r14 ADVICE item."""
-    from pgsync_spark.operators.filters import (
-        build_filters,
-        filters_to_spark_sql,
+    """inf/nan filter values render as parseable SQL ('infD'/'nanD'
+    are parse errors) and each matches exactly its own row (Spark
+    orders NaN equal to itself)."""
+    df = spark.createDataFrame(
+        [(0, 0.0), (1, float("inf")), (2, float("-inf")), (3, float("nan"))],
+        "i int, d double",
     )
-
-    df = spark.range(3).selectExpr("CAST(id AS DOUBLE) AS d")
     dtypes = dict(df.dtypes)
-    for v in (float("inf"), float("-inf"), float("nan")):
-        clauses = [{"d": v}]
-        a = df.filter(build_filters(clauses, dtypes))
-        b = df.filter(F.expr(filters_to_spark_sql(clauses, dtypes)))
-        assert (
-            a._jdf.queryExecution()
-            .optimizedPlan()
-            .sameResult(b._jdf.queryExecution().optimizedPlan())
-        ), v
-        assert a.count() == b.count() == 0
+    for v, want in ((float("inf"), {1}), (float("-inf"), {2}),
+                    (float("nan"), {3})):
+        got = df.filter(F.expr(filters_to_spark_sql([{"d": v}], dtypes)))
+        assert {r.i for r in got.collect()} == want, v
 
 
-def test_filters_out_of_bigint_falls_back(spark):
-    """An int filter value outside bigint range has no SQL literal
-    form (and F.lit rejects it too) — sql_renderable_filters must
-    flag it so compile_assembled routes through TreeCompiler instead
-    of emitting an unparseable 'L' literal; _spark_sql_lit raises the
-    typed error."""
-    import pytest as _pytest
-
-    from pgsync_spark.operators.filters import (
-        UnrenderableLiteral,
-        _spark_sql_lit,
-        sql_renderable_filters,
-    )
-
-    assert sql_renderable_filters([{"o_orderkey": 2**62}])
-    assert not sql_renderable_filters([{"o_orderkey": 2**63 + 5}])
-    assert sql_renderable_filters(None)
-    with _pytest.raises(UnrenderableLiteral):
-        _spark_sql_lit(2**63 + 5)
+def test_filters_out_of_bigint_raises(spark):
+    """An int filter value outside bigint range has no Spark SQL literal
+    form: compile_assembled raises the typed error instead of emitting
+    an unparseable 'L' literal."""
+    cat = Catalog(spark, SF_DIR)
+    with pytest.raises(UnrenderableLiteral):
+        compile_assembled(
+            cat,
+            schemas.tree("orders_lineitems"),
+            root_filters=[{"o_orderkey": 2**63 + 5}],
+        )
 
 
 def test_view_scope_reuses_unchanged_frames(spark):

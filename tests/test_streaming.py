@@ -6,11 +6,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.catalog import with_event_time
 from pgsync_spark.plugin import Plugin, apply_plugins
 from pgsync_spark.sinks import build_index_mapping, write_jsonl
-from pgsync_spark.plans.docs import assemble_structured
 from pgsync_spark.streaming import IncrementalEngine
 from pgsync_spark.streaming.stream import start_cdc_stream
 
@@ -68,7 +67,7 @@ def test_cdc_stream_files(spark):
         q.stop()
     assert "STREAMED" in eng.docs.filter(F.col("_id") == "7").collect()[0]["doc"]
     assert eng.docs.filter(F.col("_id") == "8").count() == 0
-    full = TreeCompiler(eng.catalog).compile_docs(schemas.tree("orders_full"))
+    full = compile_assembled(eng.catalog, schemas.tree("orders_full"))[0]
     assert eng.docs.select("_id", "doc").subtract(full).count() == 0
 
 
@@ -88,8 +87,8 @@ class _DropAll(Plugin):
 
 
 def test_plugin_chain_order_and_drop(spark):
-    docs = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(
-        schemas.tree("root_only")
+    docs, _ = compile_assembled(
+        Catalog(spark, SF_DIR), schemas.tree("root_only")
     )
     out = apply_plugins(docs, [_Upper()], index="orders")
     assert out.count() == docs.count()
@@ -97,8 +96,8 @@ def test_plugin_chain_order_and_drop(spark):
 
 
 def test_jsonl_sink_roundtrip(spark, tmp_path):
-    docs = TreeCompiler(Catalog(spark, SF_DIR)).compile_docs(
-        schemas.tree("root_only")
+    docs, _ = compile_assembled(
+        Catalog(spark, SF_DIR), schemas.tree("root_only")
     )
     path = str(tmp_path / "out")
     write_jsonl(docs, path)
@@ -110,8 +109,9 @@ def test_jsonl_sink_roundtrip(spark, tmp_path):
 
 def test_index_mapping_generation(spark):
     tree = schemas.tree("orders_full")
-    compiled = TreeCompiler(Catalog(spark, SF_DIR)).compile(tree)
-    structured = assemble_structured(compiled)
+    structured, _ = compile_assembled(
+        Catalog(spark, SF_DIR), tree, structured=True
+    )
     mapping = build_index_mapping(tree, structured.schema)
     props = mapping["mappings"]["properties"]
     assert props["o_totalprice"] == {"type": "double"}
@@ -155,7 +155,7 @@ def test_docstore_save_restore_resume(spark, tmp_path):
             [{"op": "DELETE", "table": "orders", "old": {"o_orderkey": 6}, "txid": 8}],
         )
     )
-    full = TreeCompiler(eng2.catalog).compile_docs(tree)
+    full = compile_assembled(eng2.catalog, tree)[0]
     assert eng2.docs.select("_id", "doc").subtract(full).count() == 0
     assert full.subtract(eng2.docs.select("_id", "doc")).count() == 0
     assert store.save(eng2) == 2
@@ -285,7 +285,7 @@ def test_debezium_envelope_to_cdc(spark):
     assert "DEBEZIUM" in eng.docs.filter(F.col("_id") == "7").collect()[0]["doc"]
     assert eng.docs.filter(F.col("_id") == "9").count() == 0
     assert eng.checkpoint == 42
-    full = TreeCompiler(eng.catalog).compile_docs(schemas.tree("orders_full"))
+    full = compile_assembled(eng.catalog, schemas.tree("orders_full"))[0]
     assert eng.docs.select("_id", "doc").subtract(full).count() == 0
 
 
@@ -377,7 +377,7 @@ def test_docstore_restores_snapshots_into_fresh_catalog(spark, tmp_path):
     snap = eng2.catalog.df("orders").filter(F.col("o_orderkey") == 27).collect()
     assert len(snap) == 1 and snap[0]["o_orderpriority"] == "P-PERSISTED"
     # incremental state equals a full recompute from the restored catalog
-    full = TreeCompiler(eng2.catalog).compile_docs(tree)
+    full = compile_assembled(eng2.catalog, tree)[0]
     assert eng2.docs.select("_id", "doc").subtract(full).count() == 0
     assert full.subtract(eng2.docs.select("_id", "doc")).count() == 0
     # and a further batch applies on top of the restored snapshots

@@ -1,6 +1,6 @@
 import json
 from pyspark.sql import functions as F
-from pgsync_spark import Catalog, TreeCompiler, schemas
+from pgsync_spark import Catalog, compile_assembled, schemas
 from pgsync_spark.node import parse_tree
 from pgsync_spark.streaming import IncrementalEngine, payloads_from_rows
 from conftest import SF_DIR
@@ -38,7 +38,7 @@ def test_string_pk_full_and_incremental(spark):
         "txid": 1,
     }])
     eng.process_batch(ev)
-    full = TreeCompiler(eng.catalog).compile_docs(parse_tree(TREE))
+    full = compile_assembled(eng.catalog, parse_tree(TREE))[0]
     assert eng.docs.select("_id", "doc").subtract(full).count() == 0
     assert full.subtract(eng.docs.select("_id", "doc")).count() == 0
     # string-PK change: rename the nation -> old doc gone, new doc present
