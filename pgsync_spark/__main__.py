@@ -1028,15 +1028,13 @@ def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
                     file=sys.stderr,
                 )
                 return 2
-            vals = idx.vals
+            vals = idx.live("vals")
             if vals is None:
                 print(
                     "--ann-frontier: the store holds no vectors",
                     file=sys.stderr,
                 )
                 return 2
-            if idx._has_cdc:
-                vals = idx._cdc_live(vals, idx._cdc_overlay(vals))
             live = vals.select("vec_id", "embedding").localCheckpoint(
                 eager=True
             )
@@ -1091,9 +1089,7 @@ def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
                 .filter(F.col("rank") <= TOP_K)
                 .collect()
             }
-            keys = idx.keys
-            if idx._has_cdc:
-                keys = idx._cdc_live(keys, idx._cdc_overlay(idx.vals))
+            keys = idx.live("keys")
             widths = (
                 [
                     ("nprobe", n)
@@ -1212,11 +1208,8 @@ def _run_ann_stats(args, spark=None, out=sys.stdout) -> int:
                 print(json.dumps(stats, sort_keys=True), file=out)
                 return 0  # the enclosing finally closes the index
             stats["live_vectors"] = 0
-            keys = idx.keys
-            if keys is not None:
-                vals = idx.vals
-                if idx._has_cdc and vals is not None:
-                    vals = idx._cdc_live(vals, idx._cdc_overlay(vals))
+            if idx.keys is not None:
+                vals = idx.live("vals")
                 # THE occupancy statistic (VectorIndex.occupancy_*):
                 # the exact scan-derived counts here, the maintainer's
                 # rebuild policy reads the incremental-counter form of
@@ -1411,7 +1404,7 @@ def _run_bm25_stats(args, spark=None, out=sys.stdout) -> int:
             )
             return 2
         try:
-            keys, vals = idx.keys, idx.vals
+            keys, vals = idx.live("keys"), idx.live("vals")
             stats = {
                 "index": "BM25Index",
                 "analyzer": idx.analyzer,
@@ -1419,11 +1412,6 @@ def _run_bm25_stats(args, spark=None, out=sys.stdout) -> int:
                 "live_docs": 0,
             }
             if vals is not None:
-                if idx._has_cdc:
-                    overlay = idx._cdc_overlay(vals)
-                    vals = idx._cdc_live(vals, overlay)
-                    if keys is not None:
-                        keys = idx._cdc_live(keys, overlay)
                 drow = vals.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.avg("dl").alias("avgdl"),

@@ -29,8 +29,8 @@ search index in sync under CDC — ref: pgsync/sync.py:1254-1343 delete
 paths, search_client.py:100-212 bulk delete actions) is append-only
 Lucene-style: ``apply_cdc`` appends new-version postings/stats and
 delete tombstones; nothing is rewritten in place. Query time folds a
-CDC OVERLAY: docs never touched by CDC (op='a' only) pass through a
-broadcast anti-join untouched, docs with CDC rows resolve to their
+CDC OVERLAY (``live``): docs never touched by CDC (op='a' only) pass
+the broadcast left join untouched, docs with CDC rows resolve to their
 max-``ver`` row (tombstone on top = dead). The overlay is sized by
 CDC traffic since the last ``compact()`` — compact() folds shadowed
 versions and tombstones away physically and resets the overlay to
@@ -302,23 +302,19 @@ class BM25Index(_AppendOnlyIndex):
         from ..operators.filters import _spark_sql_str as _sq
         from ..queries import bm25_term_micro
 
-        kview, kcols = self._parts_view("keys")
-        vview, vcols = self._parts_view("vals")
+        kview = self._parts_view("keys")
+        vsub = self._parts_view("vals")
         bands = sorted({_band_of(t) for t in terms})
         in_bands = ", ".join(str(b) for b in bands)
         in_terms = ", ".join(_sq(t) for t in terms)
+        # over a CDC-folded view the slice still prunes first: Catalyst
+        # pushes this filter through the fold's left join, so the
+        # overlay join runs over the |terms|-band slice, never the
+        # whole postings corpus
         sl = (
             f"(SELECT * FROM {kview} WHERE band IN ({in_bands}) "
             f"AND term IN ({in_terms}))"
         )
-        if self._has_cdc:
-            # CDC fold applied AFTER term pruning: the anti/semi
-            # overlay joins run over the |terms|-band slice, never the
-            # whole postings corpus (same result — the fold is per-row)
-            sl = f"({self._cdc_live_sql(sl, kcols)})"
-            vsub = f"({self._cdc_live_sql(vview, vcols)})"
-        else:
-            vsub = vview
         tfs = ",\n  ".join(
             f"coalesce(max(CASE WHEN (term = {_sq(t)}) THEN tf END), "
             f"CAST(0 AS BIGINT)) AS tf{i}"

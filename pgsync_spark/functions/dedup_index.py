@@ -66,7 +66,7 @@ from .hashing import round6
 _DECISION_SCHEMA = "doc_id bigint, dup_of bigint, jaccard double"
 
 # CDC overlay auto-compaction cap (rows of op != 'a' state since the
-# last compact): the overlay folds through BROADCAST anti/semi joins,
+# last compact): the overlay folds through one BROADCAST left join,
 # so its size must stay bounded no matter how the operator tunes
 # compact_every — the same rule as the relational engine's
 # KeyedOverlay size cap (streaming/incremental.py, r3 item 10). 64k
@@ -184,12 +184,12 @@ class _AppendOnlyIndex:
         # epoch's val rows are ALL overlay rows, so the counter updates
         # before the manifest flip that persists it
         self._pending_overlay_delta = False
-        # one-SQL topk support: session temp views over the lazily
-        # unioned keys/vals parts, memoized on the parts LIST so an
+        # one-SQL topk support: global temp views over live(keys) and
+        # live(vals), memoized on the parts (and CDC state) so an
         # unchanged store re-registers nothing (see _parts_view);
         # names are per-instance so concurrent indexes never collide
         self._view_prefix = f"__aidx{next(_AIDX_VIEW_IDS)}"
-        self._topk_views: dict[str, tuple[tuple, str, list[str]]] = {}
+        self._topk_views: dict[str, tuple[tuple, str]] = {}
 
     # -- occupancy-tracking hooks (no-ops here) -------------------------------
     #
@@ -250,22 +250,23 @@ class _AppendOnlyIndex:
     # apply_cdc (BM25Index today; MinHash/Embedding via their probe
     # fold) appends NEW-VERSION rows (op='u', ver=epoch) and delete
     # tombstones (op='d') instead of rewriting held state. Readers
-    # fold the overlay: rows of untouched ids pass a broadcast
-    # anti-join; touched ids keep only rows matching their latest
-    # version (a tombstone on top = dead). The overlay is sized by CDC
-    # traffic since the last compact() — compact folds it physically
-    # (shadowed versions and tombstones dropped, op reset to 'a') and
-    # the overlay returns to zero. On disk the op != 'a' scan prunes
-    # bulk segments at the parquet row-group level (op constant 'a').
+    # fold the overlay (_cdc_live, one broadcast left join on the id):
+    # rows of untouched ids pass; touched ids keep only rows matching
+    # their latest version (a tombstone on top = dead). The overlay is
+    # sized by CDC traffic since the last compact() — compact folds it
+    # physically (shadowed versions and tombstones dropped, op reset
+    # to 'a') and the overlay returns to zero. On disk the op != 'a'
+    # scan prunes bulk segments at the parquet row-group level (op
+    # constant 'a').
 
-    def _cdc_overlay(self, vals: DataFrame) -> DataFrame:
+    def _cdc_overlay(self) -> DataFrame:
         """(id, ver, op) of each CDC-touched id's LATEST version —
-        max-ver per id over the op != 'a' rows (ver is unique per id
-        across epochs; within an epoch apply_cdc enforces one row per
-        id)."""
+        max-ver per id over the held vals' op != 'a' rows (ver is
+        unique per id across epochs; within an epoch apply_cdc
+        enforces one row per id)."""
         s = F.max(F.struct("ver", "op")).alias("s")
         return (
-            vals.filter(F.col("op") != "a")
+            self.vals.filter(F.col("op") != "a")
             .groupBy(self._ID_COL)
             .agg(s)
             .select(
@@ -283,13 +284,10 @@ class _AppendOnlyIndex:
         it) and silently discarded by the next compact (r8 review
         finding). Raise instead — re-adds go through apply_cdc
         (op='u'), whose versioned rows participate in the fold."""
-        if not self._has_cdc:
-            return
-        vals = self.vals
-        if vals is None or "op" not in vals.columns:
+        if not self._has_cdc or self.vals is None:
             return
         hit = (
-            self._cdc_overlay(vals)
+            self._cdc_overlay()
             .join(F.broadcast(batch_ids.select(self._ID_COL)), self._ID_COL)
             .limit(1)
             .collect()
@@ -460,12 +458,10 @@ class _AppendOnlyIndex:
         if epoch is None:
             epoch = self.next_epoch()
         self._check_epoch(epoch)
-        vals = self.vals
+        vals = self.live("vals")
         if vals is None:
             live = self.spark.createDataFrame([], f"{self._ID_COL} bigint")
         else:
-            if self._has_cdc and "op" in vals.columns:
-                vals = self._cdc_live(vals, self._cdc_overlay(vals))
             live = vals.select(self._ID_COL).distinct()
         # eager checkpoint BEFORE the parts it derives from are
         # released below (the lineage-truncation discipline _append
@@ -506,6 +502,11 @@ class _AppendOnlyIndex:
         id column): ids treated dead regardless — an apply_cdc probe
         passes its own batch's ids so an update never matches its own
         superseded version.
+
+        The ONE overlay fold. Its readers: live() (the top-k views,
+        truncate, IVF rebuild, live_cell_counts and the CLI), compact()
+        against its once-checkpointed overlay, and the MinHash /
+        Embedding probes with their ``extra_dead``.
 
         ONE broadcast left join on the id alone, then a filter: the
         overlay holds one row per id, so the join never duplicates a
@@ -716,9 +717,7 @@ class _AppendOnlyIndex:
                 vals = idx.vals
                 idx._overlay_rows = (
                     vals.filter(F.col("op") != "a").count()
-                    if idx._has_cdc
-                    and vals is not None
-                    and "op" in vals.columns
+                    if idx._has_cdc and vals is not None
                     else 0
                 )
         return idx
@@ -734,6 +733,16 @@ class _AppendOnlyIndex:
         if not self._val_parts:
             return None
         return reduce(DataFrame.unionByName, self._val_parts)
+
+    def live(self, side: str) -> DataFrame | None:
+        """The held ``keys`` or ``vals`` frame as readers see it: the
+        CDC overlay folded through _cdc_live while CDC state is held,
+        else the plain parts union (None when that side holds
+        nothing)."""
+        frame = self.keys if side == "keys" else self.vals
+        if frame is None or not self._has_cdc:
+            return frame
+        return self._cdc_live(frame, self._cdc_overlay())
 
     def _append(
         self,
@@ -939,9 +948,7 @@ class _AppendOnlyIndex:
         overlay = None
         try:
             if dirty:
-                overlay = self._cdc_overlay(vals).localCheckpoint(
-                    eager=True
-                )
+                overlay = self._cdc_overlay().localCheckpoint(eager=True)
                 vals = self._cdc_live(vals, overlay).withColumn(
                     "op", F.lit("a")
                 )
@@ -1024,13 +1031,15 @@ class _AppendOnlyIndex:
 
     # -- one-SQL topk plumbing (BM25Index / VectorIndex serving path) --------
     #
-    # topk is built as TEXT over global temp views of the parts
-    # unions and submitted as ONE spark.sql: a Column-API construction
-    # pays an eager py4j round-trip plus a JVM analysis sweep per
-    # DataFrame op (568 round-trips per VectorIndex.topk, 819 per
-    # BM25Index.topk, cProfiled — guide §7.3), the single largest
-    # driver cost of the serving paths. tests/test_topk_sql_parity.py
-    # pins the rows against the DuckDB mirrors, CDC and no-CDC.
+    # topk is built as TEXT over per-index global temp views and
+    # submitted as ONE spark.sql: a Column-API construction of the
+    # whole plan pays an eager py4j round-trip plus a JVM analysis
+    # sweep per DataFrame op (568 round-trips per VectorIndex.topk,
+    # 819 per BM25Index.topk, cProfiled — guide §7.3), the single
+    # largest driver cost of the serving paths. Each view is live(side)
+    # — the CDC overlay already folded by _cdc_live — so the text never
+    # repeats the fold; tests/test_topk_sql_parity.py pins the rows
+    # against the DuckDB mirrors and one-shot indexes, CDC and no-CDC.
     #
     # Text discipline: NO CTEs — a CTE referenced twice is inlined
     # with alias-Project wrappers that stay in the plan. Shared
@@ -1056,32 +1065,33 @@ class _AppendOnlyIndex:
         df.createOrReplaceGlobalTempView(name)
         return f"{self._global_temp_db()}.{name}"
 
-    def _parts_view(self, side: str) -> tuple[str, list[str]]:
-        """Register (memoized) the lazily-unioned keys/vals frame as a
-        global temp view; returns (qualified_name, columns).
-        Re-registers only when the parts list changed (append/compact/
-        truncate) — an unchanged store costs zero py4j calls here."""
-        parts = tuple(
-            self._key_parts if side == "keys" else self._val_parts
-        )
-        name = f"{self._view_prefix}_{side}"
+    def _parts_view(self, side: str) -> str:
+        """Register (memoized) ``live(side)`` as the global temp view
+        ``{_view_prefix}_{side}``; returns its qualified name. The memo
+        key is the side's parts, plus the vals parts and the CDC flag
+        while the fold applies: a keys fold reads the vals overlay, and
+        compact() can clear a stale flag without swapping parts. An
+        unchanged store costs zero py4j calls here."""
+        own = self._key_parts if side == "keys" else self._val_parts
+        fold = self._val_parts if self._has_cdc else []
+        deps = (self._has_cdc, *own, *fold)
         cur = self._topk_views.get(side)
         if (
             cur is not None
-            and len(cur[0]) == len(parts)
-            and all(a is b for a, b in zip(cur[0], parts))
+            and len(cur[0]) == len(deps)
+            and all(a is b for a, b in zip(cur[0], deps))
         ):
-            return cur[1], cur[2]
-        df = reduce(DataFrame.unionByName, parts)
-        qname = self._register_view(df, name)
-        cols = df.columns
+            return cur[1]
+        qname = self._register_view(
+            self.live(side), f"{self._view_prefix}_{side}"
+        )
         # the memoized tuple holds strong refs, so `is` identity above
         # can never alias a released-and-reallocated frame
-        self._topk_views[side] = (parts, qname, cols)
-        return qname, cols
+        self._topk_views[side] = (deps, qname)
+        return qname
 
     def _drop_topk_views(self) -> None:
-        names = [n for (_p, n, _c) in self._topk_views.values()]
+        names = [n for (_d, n) in self._topk_views.values()]
         names.extend(self._extra_view_names())
         for qname in names:
             try:
@@ -1095,32 +1105,6 @@ class _AppendOnlyIndex:
     def _extra_view_names(self) -> list[str]:
         """Subclass hook: extra per-instance temp views to drop."""
         return []
-
-    def _cdc_live_sql(self, frame_sub: str, cols: list[str]) -> str:
-        """``_cdc_live(frame, _cdc_overlay(vals))`` as Spark SQL text
-        (same result). ``frame_sub`` is a parenthesized subquery or
-        view name; ``cols`` its columns. The id column comes first in
-        both union branches, the order _cdc_live's keyed joins
-        produce."""
-        idc = self._ID_COL
-        vview, _vcols = self._parts_view("vals")
-        ordered = [idc] + [c for c in cols if c != idc]
-        fcols = ", ".join(f"f.{c}" for c in ordered)
-        ovl = (
-            f"SELECT {idc}, s.ver AS ver, s.op AS op FROM ("
-            f"SELECT {idc}, max(struct(ver, op)) AS s FROM {vview} "
-            f"WHERE op != 'a' GROUP BY {idc})"
-        )
-        dead = f"SELECT {idc} FROM ({ovl})"
-        alive = f"SELECT {idc}, ver FROM ({ovl}) WHERE op != 'd'"
-        return (
-            f"SELECT /*+ BROADCAST(d) */ {fcols} FROM {frame_sub} f "
-            f"LEFT ANTI JOIN ({dead}) d ON f.{idc} = d.{idc}\n"
-            f"UNION ALL\n"
-            f"SELECT /*+ BROADCAST(a) */ {fcols} FROM {frame_sub} f "
-            f"LEFT SEMI JOIN ({alive}) a "
-            f"ON f.{idc} = a.{idc} AND f.ver = a.ver"
-        )
 
     def close(self) -> None:
         from .. import caching
@@ -1254,14 +1238,14 @@ class MinHashIndex(_AppendOnlyIndex):
             # must NOT apply: the held copy of a re-ingested id is
             # still live and must self-block the duplicate, exactly
             # like the append-only path (r8 review pass 2 finding).
-            # Broadcast anti/semi joins — scan-shaped, no corpus
+            # Broadcast joins (_cdc_live) — scan-shaped, no corpus
             # shuffle; skipped entirely on append-only indexes.
             extra_dead = None
             if op != "a":
                 extra_dead = sigs.select(self._ID_COL)
                 if dels is not None:
                     extra_dead = extra_dead.unionByName(dels)
-            overlay = self._cdc_overlay(held_sh).persist()
+            overlay = self._cdc_overlay().persist()
             held_bands = self._cdc_live(held_bands, overlay, extra_dead)
             held_sh = self._cdc_live(held_sh, overlay, extra_dead)
         # candidate generation: shared with minhash_crosscorpus_pairs —
@@ -1610,7 +1594,7 @@ class EmbeddingIndex(_AppendOnlyIndex):
                 extra_dead = batch.select("vec_id")
                 if dels is not None:
                     extra_dead = extra_dead.unionByName(dels)
-            overlay = self._cdc_overlay(held_vecs).persist()
+            overlay = self._cdc_overlay().persist()
             held_keys = self._cdc_live(held_keys, overlay, extra_dead)
             held_vecs = self._cdc_live(held_vecs, overlay, extra_dead)
         # multi-probe expansion on the batch side only: a new key

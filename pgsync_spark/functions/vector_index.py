@@ -28,10 +28,10 @@ segments, atomic CURRENT manifest, epoch bookkeeping, ``compact()``,
 
 UPDATE/DELETE is the Lucene-style versioned overlay: ``apply_cdc``
 appends new-version rows and tombstones, queries fold the overlay
-(broadcast anti/semi joins bounded by ``overlay_cap``), ``compact()``
-folds it physically. A CDC update that changes a doc's embedding MOVES
-its buckets and its ranking — engine_sync_ann_topk (queries.py) gates
-exactly that end to end.
+(``live``: a broadcast left join bounded by ``overlay_cap``),
+``compact()`` folds it physically. A CDC update that changes a doc's
+embedding MOVES its buckets and its ranking — engine_sync_ann_topk
+(queries.py) gates exactly that end to end.
 
 Scale shape: ingest is one O(batch) band explode; a query is one
 broadcast probe join against the banded keys (≤ |queries| × N_BANDS ×
@@ -170,12 +170,8 @@ class VectorIndex(_AppendOnlyIndex):
         """EXACT per-(band, bucket) live-key occupancy, overlay
         folded — the scan-derived form of the statistic and the
         reference the incremental counters reconcile against."""
-        keys = self.keys
-        if keys is None:
-            return {}
-        if self._has_cdc:
-            keys = self._cdc_live(keys, self._cdc_overlay(self.vals))
-        return self._count_cells(keys)
+        keys = self.live("keys")
+        return {} if keys is None else self._count_cells(keys)
 
     def enable_occupancy_tracking(self) -> None:
         """Start maintaining the incremental counters (idempotent).
@@ -406,18 +402,13 @@ class VectorIndex(_AppendOnlyIndex):
     def _topk_sql(
         self, qview: str, k: int, exclude_self: bool, queries: DataFrame
     ) -> str:
-        """The whole topk plan as ONE Spark SQL text. Shared subtrees
-        (the query frame, the CDC overlay) are expanded textually,
-        never as CTEs (see _AppendOnlyIndex one-SQL notes)."""
+        """The whole topk plan as ONE Spark SQL text. The shared query
+        frame is expanded textually, never as a CTE (see
+        _AppendOnlyIndex one-SQL notes)."""
         from .similarity import _dot_sparksql, _norm_sparksql
 
-        kview, kcols = self._parts_view("keys")
-        vview, vcols = self._parts_view("vals")
-        if self._has_cdc:
-            ksub = f"({self._cdc_live_sql(kview, kcols)})"
-            vsub = f"({self._cdc_live_sql(vview, vcols)})"
-        else:
-            ksub, vsub = kview, vview
+        ksub = self._parts_view("keys")
+        vsub = self._parts_view("vals")
         q_sub = (
             f"(SELECT CAST(query_id AS BIGINT) AS query_id, "
             f"embedding AS qv FROM {qview})"
@@ -669,14 +660,12 @@ class IVFVectorIndex(VectorIndex):
         )
 
         self._require_cents()
-        vals = self.vals
+        vals = self.live("vals")
         if vals is None:
             raise ValueError(
                 "rebuild() on an empty IVFVectorIndex — nothing to "
                 "retrain on; seed with ingest() first"
             )
-        if self._has_cdc and "op" in vals.columns:
-            vals = self._cdc_live(vals, self._cdc_overlay(vals))
         # freeze the live snapshot ONCE: training samples it, the
         # reassignment scans it, and the new vals segment rewrites it
         # — one eager checkpoint instead of three overlay folds

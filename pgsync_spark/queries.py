@@ -2427,8 +2427,8 @@ def bm25_cdc_topk(spark, sf_dir):
 
     Scale shape (functions/bm25_index.py): the CDC epoch is O(batch)
     appended versions + tombstones; the query folds a broadcast
-    overlay sized by CDC traffic since the last compact (anti/semi
-    joins over the term-pruned slice — zero added shuffle)."""
+    overlay sized by CDC traffic since the last compact (one left
+    join over the term-pruned slice — zero added shuffle)."""
     from .functions.bm25_index import BM25Index
 
     df = Catalog(spark, sf_dir).df("documents")

@@ -1,10 +1,10 @@
 """The one-SQL topk serving paths (BM25Index._topk_sql /
 VectorIndex._topk_sql) against independent references: the DuckDB
 mirrors (vector_topk_sql, _bm25_scored_sql) for single-part stores,
-and a one-shot index over the post-CDC corpus for multi-part CDC and
-post-compact stores. Covers exclude_self on/off, probe_hamming 0/1/2,
-single- and multi-term BM25 queries, hostile query terms and frames
-bound to a cloned session."""
+and a one-shot index over the post-CDC corpus for multi-part,
+multi-epoch CDC and post-compact stores. Covers exclude_self on/off,
+probe_hamming 0/1/2, single- and multi-term BM25 queries, hostile
+query terms and frames bound to a cloned session."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -101,32 +101,80 @@ def test_vector_topk_sql_parity(spark, emb, queries, k, exclude_self, hamming):
         vidx.close()
 
 
-def test_vector_topk_sql_parity_cdc_and_compact(spark, emb, queries):
-    # the corpus the CDC batch leaves behind: ids 5..14 negated, 15..24
-    # deleted
-    post = (
-        emb.select("vec_id", "embedding")
-        .filter("vec_id < 5 or vec_id >= 25")
-        .unionByName(
-            _vcdc(emb).filter("op = 'u'").select("vec_id", "embedding")
+def _post_cdc(base, idc, cols, epochs):
+    """The corpus a sequence of CDC epochs leaves behind: each epoch's
+    ids leave, its non-delete rows come in."""
+    for e in epochs:
+        base = base.join(e.select(idc), idc, "left_anti").unionByName(
+            e.filter("op != 'd'").select(*cols)
         )
+    return base
+
+
+# (BroadcastHashJoin, Exchange, Union, HashAggregate) of the executed
+# topk plan: a dirty topk folds each parts view once (_cdc_live), a
+# compacted one reads the single compacted part
+_OPS = ("BroadcastHashJoin", "Exchange", "Union", "HashAggregate")
+
+
+def _shape(df):
+    from test_recall_eval_sql_parity import _counts
+
+    c = _counts(df)
+    return tuple(c[k] for k in _OPS)
+
+
+def test_vector_topk_sql_parity_cdc_and_compact(spark, emb, queries):
+    """Two CDC epochs (the second re-updates, deletes and re-adds ids
+    the first touched), a delete-only epoch after a topk already
+    registered the folded views, then compact. Each topk equals a
+    one-shot index over the corpus the epochs leave behind; the dirty
+    and compacted plans keep their operator counts."""
+    cols = ("vec_id", "embedding")
+    # ids 5..14 negated, 15..24 deleted
+    e1 = _vcdc(emb)
+    # 7 back to its original vector, 8 deleted, 16 re-added
+    e2 = emb.filter("vec_id IN (7, 8, 16)").select(
+        "vec_id",
+        "embedding",
+        F.expr("CASE WHEN vec_id = 8 THEN 'd' ELSE 'u' END").alias("op"),
     )
-    expected = _vector_oneshot(spark, post, queries, 10, True)
-    assert expected, "vacuous (no rows)"
+    epochs = []
     vidx = VectorIndex(spark)
+
+    def check():
+        post = _post_cdc(emb.select(*cols), "vec_id", cols, epochs)
+        expected = _vector_oneshot(spark, post, queries, 10, True)
+        assert expected, "vacuous (no rows)"
+        got = vidx.topk(queries, exclude_self=True)
+        assert _rows(got) == expected
+        return got
+
     try:
-        # two bulk parts + a CDC epoch: multi-part union AND overlay
+        # two bulk parts + CDC epochs: multi-part union AND overlay
         vidx.ingest(emb.filter("vec_id % 2 = 0"))
         vidx.ingest(emb.filter("vec_id % 2 = 1"))
-        vidx.apply_cdc(_vcdc(emb))
+        for e in (e1, e2):
+            vidx.apply_cdc(e)
+            epochs.append(e)
         assert vidx._has_cdc
-        assert _rows(vidx.topk(queries, exclude_self=True)) == expected
+        got = check()
+        assert _shape(got) == (10, 8, 7, 4)
+        top = _rows(got)
+        # every query's best neighbor deleted: an epoch that appends
+        # no keys must still re-register the memoized keys view
+        e3 = spark.createDataFrame(
+            sorted({(r[1], None, "d") for r in top if r[3] == 1}),
+            "vec_id bigint, embedding array<float>, op string",
+        )
+        vidx.apply_cdc(e3)
+        epochs.append(e3)
+        assert _rows(check()) != top
         # compact folds the overlay physically and swaps the parts —
-        # the memoized views must re-register and the overlay fold
-        # must drop out of the text
+        # the memoized views must re-register over the plain parts
         vidx.compact(force=True)
         assert not vidx._has_cdc
-        assert _rows(vidx.topk(queries, exclude_self=True)) == expected
+        assert _shape(check()) == (5, 11, 0, 4)
     finally:
         vidx.close()
 
@@ -156,37 +204,64 @@ def test_bm25_topk_sql_parity(spark, docs, terms, k):
 
 
 def test_bm25_topk_sql_parity_cdc(spark, docs):
-    # eager checkpoint: the post-CDC corpus below must see exactly the
-    # rows the index applied
-    cdc = (
-        docs.limit(40)
-        .select(
+    """The BM25 twin of test_vector_topk_sql_parity_cdc_and_compact.
+    The delete-only epoch appends no postings, so a keys view memoized
+    on the keys parts alone would keep scoring the deleted docs."""
+    cols = ("doc_id", "text", "lang", "source")
+
+    def epoch(where, tag, op):
+        return docs.filter(where).select(
             "doc_id",
-            F.concat(F.lit("spark vector updated "), F.col("text")).alias(
-                "text"
-            ),
+            F.concat(F.lit(tag), F.col("text")).alias("text"),
             "lang",
             "source",
-            F.when(F.col("doc_id") % 3 == 0, F.lit("d"))
-            .otherwise(F.lit("u"))
-            .alias("op"),
+            F.expr(op).alias("op"),
         )
-        .localCheckpoint()
+
+    e1 = epoch(
+        "doc_id < 40",
+        "spark vector updated ",
+        "CASE WHEN doc_id % 3 = 0 THEN 'd' ELSE 'u' END",
     )
-    cols = ("doc_id", "text", "lang", "source")
-    post = (
-        docs.select(*cols)
-        .join(cdc.select("doc_id"), "doc_id", "left_anti")
-        .unionByName(cdc.filter("op = 'u'").select(*cols))
+    # 1 re-updated, 2 deleted (both updated by e1), 3 re-added
+    e2 = epoch(
+        "doc_id IN (1, 2, 3)",
+        "spark spark again ",
+        "CASE WHEN doc_id = 2 THEN 'd' ELSE 'u' END",
     )
-    expected = _bm25_oneshot(spark, post, BM25_QUERY_TERMS, 10)
-    assert expected, "vacuous (no rows)"
+    epochs = []
     bidx = BM25Index(spark)
+
+    def check():
+        post = _post_cdc(docs.select(*cols), "doc_id", cols, epochs)
+        expected = _bm25_oneshot(spark, post, BM25_QUERY_TERMS, 10)
+        assert expected, "vacuous (no rows)"
+        got = bidx.topk(BM25_QUERY_TERMS, k=10)
+        assert _rows(got) == expected
+        return got
+
     try:
-        bidx.ingest(docs)
-        bidx.apply_cdc(cdc)
+        bidx.ingest(docs.filter("doc_id % 2 = 0"))
+        bidx.ingest(docs.filter("doc_id % 2 = 1"))
+        for e in (e1, e2):
+            bidx.apply_cdc(e)
+            epochs.append(e)
         assert bidx._has_cdc
-        assert _rows(bidx.topk(BM25_QUERY_TERMS, k=10)) == expected
+        got = check()
+        assert _shape(got) == (10, 14, 13, 12)
+        top = _rows(got)
+        # the three best docs deleted
+        e3 = spark.createDataFrame(
+            [(r[0], None, None, None, "d") for r in top if r[4] <= 3],
+            "doc_id bigint, text string, lang string, source string, "
+            "op string",
+        )
+        bidx.apply_cdc(e3)
+        epochs.append(e3)
+        assert _rows(check()) != top
+        bidx.compact()
+        assert not bidx._has_cdc
+        assert _shape(check()) == (2, 8, 0, 12)
     finally:
         bidx.close()
 
@@ -211,7 +286,7 @@ def test_topk_views_drop_on_close(spark, docs):
     bidx = BM25Index(spark)
     bidx.ingest(docs)
     bidx.topk(BM25_QUERY_TERMS, k=10).count()
-    names = [n for (_p, n, _c) in bidx._topk_views.values()]
+    names = [n for (_d, n) in bidx._topk_views.values()]
     assert names and all(
         spark.catalog.tableExists(n) for n in names
     )

@@ -858,9 +858,7 @@ def test_ivf_rebuild_improves_recall_on_clustered_drift(spark):
     def probed_fraction():
         # candidates the exact rerank pays for, per query — the
         # serving cost at fixed nprobe
-        keys = idx.keys
-        if idx._has_cdc:
-            keys = idx._cdc_live(keys, idx._cdc_overlay(idx.vals))
+        keys = idx.live("keys")
         probe = idx._probe_frame(
             q.select(F.col("query_id").alias("vec_id"), "embedding")
         )

@@ -107,7 +107,7 @@ idx.apply_cdc(cdc)
 # by the probe-free path (a VectorIndex with every bucket probed is
 # overkill; brute force = cross score + window). Reuse the live fold
 # the index itself holds so both sides see the identical corpus.
-live = idx._cdc_live(idx.vals, idx._cdc_overlay(idx.vals)).select(
+live = idx.live("vals").select(
     "vec_id", "embedding"
 ).localCheckpoint(eager=True)
 n_live = live.count()
@@ -147,9 +147,7 @@ def probed(idx):
     """mean candidates per query under the CURRENT codebook — the
     exact-rerank cost a query pays; recall divided by this is the
     efficiency of the cell geometry."""
-    keys = idx.keys
-    if idx._has_cdc:
-        keys = idx._cdc_live(keys, idx._cdc_overlay(idx.vals))
+    keys = idx.live("keys")
     probe = idx._probe_frame(
         q.select(F.col("query_id").alias("vec_id"), "embedding")
     )  # (query_id, band, bucket)
@@ -165,9 +163,7 @@ def probed(idx):
 def occupancy(idx):
     """live vectors per cell under the CURRENT codebook (rn=1 keys,
     overlay folded) — max/mean imbalance of the coarse partition."""
-    keys = idx.keys
-    if idx._has_cdc:
-        keys = idx._cdc_live(keys, idx._cdc_overlay(idx.vals))
+    keys = idx.live("keys")
     counts = [
         r["n"]
         for r in keys.groupBy("bucket").agg(F.count("*").alias("n")).collect()
