@@ -1042,7 +1042,7 @@ def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
             n_live = live.count()
             q = (
                 live.orderBy(
-                    h32(F.col("vec_id").cast("string")), "vec_id"
+                    h32("CAST(vec_id AS STRING)"), "vec_id"
                 )
                 .limit(nq)
                 .select(

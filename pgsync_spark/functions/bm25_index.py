@@ -245,7 +245,7 @@ class BM25Index(_AppendOnlyIndex):
             .groupBy("doc_id", "dl", "term")
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
             .select(
-                (h32(F.col("term")) % F.lit(BM25_INDEX_BANDS)).alias("band"),
+                (h32("term") % F.lit(BM25_INDEX_BANDS)).alias("band"),
                 "term",
                 "doc_id",
                 "tf",

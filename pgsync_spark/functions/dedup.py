@@ -34,15 +34,14 @@ from pyspark.sql import functions as F
 
 from ..caching import adopt, owned, release, release_local_checkpoint
 from .hashing import (
-    combine_shingles,
+    combine_shingles_sparksql,
     combine_shingles_sql,
-    h32,
+    h32_sparksql,
     h32_sql,
-    perm,
+    perm_sparksql,
     perm_sql,
     round6,
     round6_sql,
-    tokens,
     tokens_sparksql,
     tokens_sql,
 )
@@ -158,25 +157,36 @@ def dedup_exact_sql() -> str:
     """
 
 
+def _shingle_sets(df: DataFrame) -> DataFrame:
+    """(doc_id, sh): the distinct hashed 3-gram shingle set (bigint)
+    of every doc with >= 3 tokens (the oracle's _shingle_cte). Staged:
+    tokens → per-token md5 (the only string hashing) → rolling 3-gram
+    combine → distinct. Everything stays in whole-stage codegen."""
+    return (
+        df.select("doc_id", F.expr(tokens_sparksql("text")).alias("tok"))
+        .filter(F.size("tok") >= 3)  # combine_shingles precondition
+        .withColumn(
+            "th", F.expr(f"transform(tok, t -> {h32_sparksql('t')})")
+        )
+        .withColumn(
+            "sh",
+            F.expr(
+                f"array_distinct({combine_shingles_sparksql('th', 3)})"
+            ),
+        )
+        .select("doc_id", "sh")
+    )
+
+
 def _signatures(df: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     """doc_id + 16-permutation minhash signature + distinct hashed
-    shingle set (bigint). Staged: tokens → per-token md5 (the only
-    string hashing) → rolling 3-gram combine → distinct → 16 linear
-    permutations. Everything stays in whole-stage codegen.
+    shingle set (bigint): _shingle_sets → 16 linear permutations.
 
     Returns (frame, persisted_intermediates) — the caller owns the
     persisted frames and must register them via caching.owned()."""
-    from .hashing import (
-        combine_shingles_sparksql,
-        h32_sparksql,
-        perm_sparksql,
-        tokens_sparksql,
-    )
-
     # single-parse forms throughout (similarity.cosine6 discipline):
-    # identical trees to the Column/lambda builders, built with one
-    # py4j call each — the 16-permutation sig listcomp alone measured
-    # ~0.7s of driver construction time per invocation
+    # built with one py4j call each — the 16-permutation sig listcomp
+    # alone measured ~0.7s of driver construction time per invocation
     sig = F.expr(
         "array("
         + ", ".join(
@@ -190,21 +200,7 @@ def _signatures(df: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     # Spark's per-operator subexpression elimination, so without a
     # materialization barrier the whole tokenize+hash pipeline would
     # re-run once per permutation (measured 18× slowdown)
-    shs = (
-        df.select("doc_id", F.expr(tokens_sparksql("text")).alias("tok"))
-        .filter(F.size("tok") >= 3)  # combine_shingles precondition
-        .withColumn(
-            "th", F.expr(f"transform(tok, t -> {h32_sparksql('t')})")
-        )
-        .withColumn(
-            "sh",
-            F.expr(
-                f"array_distinct({combine_shingles_sparksql('th', 3)})"
-            ),
-        )
-        .select("doc_id", "sh")
-        .persist()
-    )
+    shs = _shingle_sets(df).persist()
     return shs.select("doc_id", "sh", sig.alias("sig")), [shs]
 
 
@@ -340,11 +336,9 @@ def minhash_lsh_pairs_sql() -> str:
 def simhash(df: DataFrame) -> DataFrame:
     """32-bit SimHash per doc: majority vote per bit over distinct-token
     hashes (Charikar). Pure array expressions — no explode, no shuffle.
-    Built as single-parse F.expr strings (same trees): the 32
-    bit-majority when/filter chains alone were ~1000 py4j calls of
-    construction per invocation (the cosine6 discipline)."""
-    from .hashing import h32_sparksql, tokens_sparksql
-
+    Built as single-parse F.expr strings: the 32 bit-majority
+    when/filter chains alone were ~1000 py4j calls of construction per
+    invocation through the Column API (the cosine6 discipline)."""
     hashed = F.expr(
         f"transform(array_distinct({tokens_sparksql('text')}), "
         f"t -> {h32_sparksql('t')})"
@@ -381,16 +375,12 @@ def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Blocked n-gram Jaccard: block on the 1-perm min-shingle hash
     (docs sharing their rarest shingle), verify exact Jaccard within
     blocks. Blocking keys are uniformly distributed hash values."""
-    tok = tokens(F.col("text"))
     base = (
-        df.select("doc_id", tok.alias("tok"))
-        .filter(F.size("tok") >= 3)  # combine_shingles precondition
-        .withColumn("th", F.transform(F.col("tok"), lambda t: h32(t)))
-        .withColumn("sh", F.array_distinct(combine_shingles(F.col("th"), 3)))
+        _shingle_sets(df)
         .withColumn(
-            "block", F.array_min(F.transform(F.col("sh"), lambda h: perm(h, 0)))
+            "block",
+            F.expr(f"array_min(transform(sh, h -> {perm_sparksql('h', 0)}))"),
         )
-        .select("doc_id", "sh", "block")
         .persist()  # consumed by both sides of the block self-join
     )
     a, b = base.alias("a"), base.alias("b")

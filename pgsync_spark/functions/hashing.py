@@ -7,6 +7,10 @@ JVM-side in codegen, which is fast enough (bench-verified) and keeps the
 correctness gate meaningful. The minhash permutation family is linear
 ``(a_i * h + b_i) mod p`` over the 32-bit md5 prefix — one md5 per
 shingle total, not per permutation.
+
+Each kernel has one Spark form, a Spark-SQL text builder
+(``*_sparksql``); a Column-returning name only parses it. ``*_sql``
+are the DuckDB mirrors (the oracle), ``*_py`` the driver-side ones.
 """
 
 from __future__ import annotations
@@ -36,24 +40,20 @@ def h32_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
-def h32(col: Column) -> Column:
-    """First 8 hex chars of md5 as a bigint in [0, 2^32)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+def h32(expr: str) -> Column:
+    """h32_sparksql over a column name or Spark-SQL fragment."""
+    return F.expr(h32_sparksql(expr))
 
 
 def h32_sparksql(expr: str) -> str:
-    """Spark-SQL text form of h32 (same tree; see tokens for why the
-    single-parse forms exist)."""
+    """First 8 hex chars of md5 as a bigint in [0, 2^32) — the one
+    Spark form (text: one parse builds the tree in-JVM, where a
+    Column-API chain pays a py4j round-trip per node)."""
     return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def h32_sql(expr: str) -> str:
     return f"(('0x' || substring(md5({expr}), 1, 8))::BIGINT)"
-
-
-def perm(col: Column, i: int) -> Column:
-    a, b = perm_params(i)
-    return (col * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
 
 
 def perm_sql(expr: str, i: int) -> str:
@@ -62,9 +62,9 @@ def perm_sql(expr: str, i: int) -> str:
 
 
 def perm_sparksql(expr: str, i: int) -> str:
-    """Spark-SQL text form of perm. Literal typing mirrors F.lit:
-    a/b are < 2^31 (plain INT literals), MERSENNE_P needs the L
-    (bigint) suffix — the arithmetic promotes identically."""
+    """Minhash permutation i of a 32-bit hash, (a_i * h + b_i) mod p.
+    a/b are < 2^31 (plain INT literals); MERSENNE_P needs the L
+    (bigint) suffix."""
     a, b = perm_params(i)
     return f"(({expr} * {a} + {b}) % {MERSENNE_P}L)"
 
@@ -81,23 +81,27 @@ def round6_sql(expr: str) -> str:
     return f"(floor(({expr}) * 1e6 + 0.5) / 1e6)"
 
 
-def tokens(col) -> Column:
-    """Lowercased whitespace tokens, empties dropped.
+# The split regex \s+ (Java's whitespace class) with no backslash in
+# the SQL text. A backslash in a Spark SQL string literal reads one
+# way by default and another under escapedStringLiterals=true ('\\s+'
+# is the regex \\s+ there, so a whole document is one token, no
+# error); chr(92) reads the same under both, and the optimizer folds
+# the concat back to the literal \s+. Raw whitespace characters would
+# parse the same too, but their line breaks would split every plan
+# string that prints the pattern.
+_WS_SPLIT_SQL = "concat(chr(92), 's+')"
 
-    A column NAME (string) takes the single-parse F.expr form — the
-    same filter/split/lower tree built with one py4j round-trip
-    instead of ~30 (lambda builders are the expensive part; measured
-    across the dedup/dsir/ccnet family builds)."""
-    if isinstance(col, str):
-        return F.expr(tokens_sparksql(col))
-    return F.filter(
-        F.split(F.lower(col), r"\s+"), lambda x: x != F.lit("")
-    )
+
+def tokens(expr: str) -> Column:
+    """tokens_sparksql over a column name or Spark-SQL fragment."""
+    return F.expr(tokens_sparksql(expr))
 
 
 def tokens_sparksql(expr: str) -> str:
-    """Spark-SQL text form of tokens (same tree)."""
-    return f"filter(split(lower({expr}), '\\\\s+'), x -> x != '')"
+    """Lowercased whitespace tokens, empties dropped. Text, so one
+    parse builds the filter/split/lower tree (the lambda is ~30 py4j
+    round-trips through the Column API)."""
+    return f"filter(split(lower({expr}), {_WS_SPLIT_SQL}), x -> x != '')"
 
 
 def tokens_sql(expr: str) -> str:
@@ -108,7 +112,7 @@ def tokens_sql(expr: str) -> str:
 # Analyzers — the engine's (tiny) analogue of the reference sink's
 # analyzer surface (ref: pgsync/search_client.py:261-303 index
 # settings; analysis vocabulary pgsync/constants.py:132-162). Each
-# analyzer exists in THREE mirrored forms (Spark Column, DuckDB SQL,
+# analyzer exists in THREE mirrored forms (Spark SQL text, DuckDB SQL,
 # driver-side Python) so an index built with one is oracle-replayable
 # and query terms can be analyzed the same way the corpus was.
 # ---------------------------------------------------------------------------
@@ -163,14 +167,6 @@ _STEM_RULES = (
 )
 
 
-def _stem_chain_spark(tok):
-    from pyspark.sql import functions as _F
-
-    for pat, _, suf in _STEM_RULES:
-        tok = _F.regexp_replace(tok, pat, "$1" + suf)
-    return tok
-
-
 def _stem_chain_sql(expr: str) -> str:
     for pat, _, suf in _STEM_RULES:
         expr = f"regexp_replace({expr}, '{pat}', '\\1{suf}')"
@@ -192,34 +188,19 @@ def _check_analyzer(analyzer: str) -> None:
         )
 
 
-def analyze(col: Column, analyzer: str = "whitespace") -> Column:
-    """Tokenize ``col`` with the named analyzer (array<string>).
-
-    A column NAME / SQL-text fragment (string) takes the single-parse
-    F.expr form (same tree — see tokens); the stop-array and
-    filter/transform lambda builders are ~60 py4j round-trips per
-    construction, paid per ingest epoch on the Column path."""
-    _check_analyzer(analyzer)
-    if isinstance(col, str):
-        return F.expr(analyze_sparksql(col, analyzer))
-    if analyzer == "whitespace":
-        return tokens(col)
-    toks = F.regexp_extract_all(F.lower(col), F.lit(_STANDARD_RE), 0)
-    if analyzer in ("standard_stop", "standard_stem"):
-        stop = F.array(*[F.lit(w) for w in STOPWORDS])
-        toks = F.filter(toks, lambda x: ~F.array_contains(stop, x))
-    if analyzer == "standard_stem":
-        toks = F.transform(toks, _stem_chain_spark)
-    return toks
+def analyze(expr: str, analyzer: str = "whitespace") -> Column:
+    """analyze_sparksql over a column name or Spark-SQL fragment."""
+    return F.expr(analyze_sparksql(expr, analyzer))
 
 
 def analyze_sparksql(expr: str, analyzer: str = "whitespace") -> str:
-    """Spark-SQL text form of ``analyze`` (same tree). Every
-    interpolated constant goes through the _spark_sql_str escaper: the
-    current constants contain no quote/backslash (so the emitted text
-    is unchanged), but a future constant that does must not silently
-    diverge from the Column form (F.lit passes strings verbatim; a
-    raw single-quoted SQL literal processes escapes)."""
+    """Tokenize ``expr`` with the named analyzer (array<string>). Text,
+    so one parse builds the tree (the stop-array and filter/transform
+    lambdas are ~60 py4j round-trips through the Column API, paid per
+    ingest epoch). Every interpolated constant goes through the
+    _spark_sql_str escaper; the current constants contain no quote or
+    backslash, so they read the same under either
+    escapedStringLiterals setting."""
     from ..operators.filters import _spark_sql_str as _sq
 
     _check_analyzer(analyzer)
@@ -396,20 +377,13 @@ CLUSTER_CENTERS = 10
 CLUSTER_SCALE = 1
 
 
-def _h32_sparksql(expr: str) -> str:
-    """Spark-SQL string form of h32 (for generated array literals)."""
-    return (
-        f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
-    )
-
-
 def cluster_center_sparksql(
     expr: str, centers: int = CLUSTER_CENTERS
 ) -> str:
     """Spark-SQL string form of the cluster (center) id in
     [0, centers)."""
     cstr = f"concat(coalesce({expr}, ''), '#c')"
-    return f"({_h32_sparksql(cstr)} % {centers})"
+    return f"({h32_sparksql(cstr)} % {centers})"
 
 
 def cluster_center_sql(expr: str, centers: int = CLUSTER_CENTERS) -> str:
@@ -436,8 +410,8 @@ def cluster_embed_sparksql(
     c = f"CAST({cluster_center_sparksql(expr, centers)} AS STRING)"
     comps = []
     for j in range(dim):
-        ctr = _h32_sparksql(f"concat('ctr:', {c}, '#{j}')")
-        off = _h32_sparksql(f"concat(coalesce({expr}, ''), '#o{j}')")
+        ctr = h32_sparksql(f"concat('ctr:', {c}, '#{j}')")
+        off = h32_sparksql(f"concat(coalesce({expr}, ''), '#o{j}')")
         comps.append(
             f"CAST(({scale} * ({ctr} % {_EMBED_MOD} - {_EMBED_OFF}) + "
             f"({off} % {_EMBED_MOD} - {_EMBED_OFF})) AS DOUBLE)"
@@ -489,32 +463,19 @@ SHINGLE_P = 4294967291
 _MIX = 4099
 
 
-def combine_shingles(th: Column, k: int = 3) -> Column:
+def combine_shingles_sparksql(th: str, k: int = 3) -> str:
     """Rolling-combined hashed word k-grams from a *materialized*
     token-hash column (array<bigint>): one md5 per TOKEN (not per
     shingle), then integer mixing — ~k× fewer hashes than hashing joined
     shingle strings, and bigint sets make the Jaccard set-ops integer
-    comparisons. `th` must be a bound column, not an inline transform —
-    element_at over an expression would re-evaluate it per element.
+    comparisons. `th` must name a bound column, not an inline transform
+    — element_at over an expression would re-evaluate it per element.
+    SHINGLE_P carries the L suffix (bigint arithmetic).
 
     PRECONDITION: rows must be pre-filtered to size(th) >= k. The
-    expression is deliberately unguarded — wrapping it in when()
+    expression is deliberately unguarded — wrapping it in CASE WHEN
     disables codegen/CSE when a downstream filter references it
     (measured 200× slowdown)."""
-
-    def combine(i):
-        c = F.element_at(th, i)
-        for j in range(1, k):
-            c = (c * F.lit(_MIX) + F.element_at(th, i + j)) % F.lit(SHINGLE_P)
-        return c
-
-    return F.transform(F.sequence(F.lit(1), F.size(th) - (k - 1)), combine)
-
-
-def combine_shingles_sparksql(th: str, k: int = 3) -> str:
-    """Spark-SQL text form of combine_shingles (same tree: sequence +
-    element_at rolling mix; SHINGLE_P carries the L suffix to match
-    F.lit's LongType)."""
     c = f"element_at({th}, i)"
     for j in range(1, k):
         c = f"(({c}) * {_MIX} + element_at({th}, i + {j})) % {SHINGLE_P}L"

@@ -38,32 +38,14 @@ PLANES_PER_BAND = 4
 NEARDUP_COS = 0.4
 
 
-def _dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def _dot_sparksql(a: str, b: str) -> str:
-    """Spark-SQL text form of _dot — the SAME left-to-right double
-    fold (aggregate over zip_with), built as one parsed string.
-    Rationale: every F.aggregate/F.zip_with call ships its lambdas
-    through ~30 py4j round-trips; ann_recall_eval builds ~17 cosine
-    expressions per invocation and the construction alone measured
+    """Dot product as a left-to-right double fold (aggregate over
+    zip_with), built as Spark-SQL text. Rationale: every
+    F.aggregate/F.zip_with call ships its lambdas through ~30 py4j
+    round-trips; ann_recall_eval builds ~17 cosine expressions per
+    invocation and the construction alone measured
     ~0.5ms-per-round-trip driver time (guide §7.3 driver-side work).
-    One F.expr parse builds the identical Catalyst tree in-JVM."""
+    One parse builds the Catalyst tree in-JVM."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> "
         "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
@@ -71,7 +53,7 @@ def _dot_sparksql(a: str, b: str) -> str:
 
 
 def _norm_sparksql(a: str) -> str:
-    """Spark-SQL text form of _norm (same fold, same tree)."""
+    """L2 norm: sqrt of the same left-to-right double fold."""
     return (
         f"sqrt(aggregate(transform({a}, x -> "
         "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x))"
@@ -80,20 +62,16 @@ def _norm_sparksql(a: str) -> str:
 
 def cosine6_sparksql(a: str, b: str) -> str:
     """Spark-SQL text of round6(cosine(a, b)) — the fragment cosine6
-    parses, exposed so one-SQL query texts (the recall-eval fast path)
-    embed the identical expression. D suffixes: plain 0.5 would parse
-    as DECIMAL in Spark SQL; the Column form uses F.lit doubles, and
-    the tree must not differ."""
+    parses, and the one every one-SQL query text embeds. D suffix:
+    plain 0.5 would parse as DECIMAL in Spark SQL, and the rounding
+    must stay double arithmetic (the round6 contract)."""
     c = f"{_dot_sparksql(a, b)} / ({_norm_sparksql(a)} * {_norm_sparksql(b)})"
     return f"(floor(({c}) * 1e6 + 0.5D) / 1e6)"
 
 
 def cosine6(a: str, b: str) -> F.Column:
-    """round6(cosine(a, b)) over two array COLUMN NAMES as ONE parsed
-    expression — bit-identical to the Column-API construction
-    round6(_dot(a, b) / (_norm(a) * _norm(b))) (identical Catalyst
-    tree: same fold order, same IEEE ops), built with a single py4j
-    call instead of ~100."""
+    """cosine6_sparksql over two array column names, built with a
+    single py4j call instead of ~100."""
     return F.expr(cosine6_sparksql(a, b))
 
 
@@ -117,10 +95,9 @@ def ann_bruteforce_topk(df: DataFrame) -> DataFrame:
     spark.sql over a view of ``df`` (guide §7.3 — the recall-eval
     one-SQL discipline; ~320 py4j round-trips saved per build); values
     pinned to the DuckDB oracle."""
-    df.createOrReplaceTempView("__annq_emb")
     return df.sparkSession.sql(
         f"SELECT query_id, neighbor_id, cosine, rank FROM "
-        f"{_bruteforce_sparksql('__annq_emb', full=True)}"
+        f"{_bruteforce_sparksql(_annq_view(df, 'emb'), full=True)}"
     )
 
 
@@ -138,28 +115,13 @@ def ann_bruteforce_topk_sql() -> str:
 
 
 def _bucket_sparksql(col: str) -> str:
-    """Spark-SQL text of the sign-LSH bucket expression (the fragment
-    _bucket parses; shared with the one-SQL recall-eval path)."""
+    """Sign-of-leading-dims LSH bucket as Spark-SQL text: bit i =
+    (v[i] >= 0)."""
     return "0 + " + " + ".join(
         f"(CASE WHEN element_at({col}, {i + 1}) >= 0 "
         f"THEN {2 ** i} ELSE 0 END)"
         for i in range(N_PLANES)
     )
-
-
-def _bucket(col) -> F.Column:
-    """Sign-of-leading-dims LSH bucket: bit i = (v[i] >= 0).
-
-    Built as one parsed expression when ``col`` is a column NAME
-    (string) — same tree as the when/otherwise chain, one py4j call
-    instead of ~50 (see cosine6). Column inputs keep the chain form.
-    """
-    if isinstance(col, str):
-        return F.expr(_bucket_sparksql(col))
-    b = F.lit(0)
-    for i in range(N_PLANES):
-        b = b + F.when(F.element_at(col, i + 1) >= 0, F.lit(2 ** i)).otherwise(F.lit(0))
-    return b
 
 
 def _bucket_sql(col: str) -> str:
@@ -196,20 +158,13 @@ def _probe_masks(n_bits: int, hamming: int) -> list[int]:
     return masks
 
 
-def probe_buckets(col, n_bits: int, hamming: int) -> F.Column:
-    """Array of bucket ids to probe for a query bucket column.
-    String input takes the single-parse form (same XOR-chain tree,
-    one py4j call — see cosine6)."""
-    if isinstance(col, str):
-        return F.expr(
-            "array("
-            + ", ".join(
-                f"({col} ^ {m})" for m in _probe_masks(n_bits, hamming)
-            )
-            + ")"
-        )
-    return F.array(
-        *[col.bitwiseXOR(F.lit(m)) for m in _probe_masks(n_bits, hamming)]
+def probe_buckets(col: str, n_bits: int, hamming: int) -> F.Column:
+    """Array of bucket ids to probe for a query bucket column name,
+    one parse (see cosine6)."""
+    return F.expr(
+        "array("
+        + ", ".join(f"({col} ^ {m})" for m in _probe_masks(n_bits, hamming))
+        + ")"
     )
 
 
@@ -225,56 +180,14 @@ def probe_buckets_sql(expr: str, n_bits: int, hamming: int) -> str:
     )
 
 
-def _lsh_probe_topk(df: DataFrame, probes) -> DataFrame:
-    """Shared LSH probe skeleton: bucket the corpus once, expand each
-    query's probe list on the (broadcast) QUERY side via ``probes`` —
-    a function mapping (query_id, qv, qb) to (query_id, qv, pb) rows,
-    one per bucket to probe — then exact-score candidates and keep the
-    per-query top-k. Single-probe and multi-probe differ ONLY in the
-    probe expansion; keeping one body here is what guarantees the
-    recall eval compares like against like."""
-    bucketed = df.select(
-        "vec_id", "embedding", _bucket("embedding").alias("bucket")
-    )
-    q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("bucket").alias("qb"),
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        F.col("bucket").alias("cb"),
-    )
-    scored = (
-        c.join(
-            F.broadcast(probes(q)),
-            (F.col("cb") == F.col("pb"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine6("qv", "cv").alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ann_lsh_topk(df: DataFrame) -> DataFrame:
     """LSH-bucketed approximate top-k: queries probe only their own
     bucket (~1/2^planes of the corpus). Recall < 1 by design; the
-    oracle reproduces the same approximation exactly."""
-    return _lsh_probe_topk(
-        df,
-        lambda q: q.select("query_id", "qv", F.col("qb").alias("pb")),
+    oracle reproduces the same approximation exactly. One spark.sql
+    of the recall eval's lsh leg."""
+    return df.sparkSession.sql(
+        "SELECT query_id, neighbor_id, cosine, rank FROM "
+        + _lsh_leg_sparksql(_annq_view(df, "emb"), None, full=True)
     )
 
 
@@ -306,66 +219,6 @@ IVF_CELLS = 10
 IVF_NPROBE = 3
 
 
-def _cell_scores(df: DataFrame) -> DataFrame:
-    """(vec_id, cell_id, cos) for every vector × codebook centroid."""
-    cent = df.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + IVF_CELLS)
-    ).select(F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cv"))
-    return df.select("vec_id", "embedding").crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cell_id",
-        cosine6("embedding", "cv").alias("cos"),
-    )
-
-
-def _ivf_ranked(df: DataFrame) -> DataFrame:
-    """Per-vector cell ranking (vec_id, cell_id, cos, rn) — rn=1 is
-    the vector's IVF cell, rn<=nprobe its probe set. One corpus-sized
-    window (ann_recall_eval persists its SQL text form,
-    _ivf_ranked_sparksql, ONCE for the ivf / ivfpq / ivfpq_trained
-    legs)."""
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cell_id"))
-    return _cell_scores(df).withColumn("rn", F.row_number().over(w))
-
-
-def _ivf_candidates(ranked: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id) — each query × the members of its
-    IVF_NPROBE nearest cells, self excluded."""
-    assign = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "cell_id"
-    )
-    qprobe = ranked.filter(
-        (F.col("rn") <= IVF_NPROBE) & (F.col("vec_id") < N_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    return (
-        qprobe.join(assign, "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-
-
-def _ivf_exact_rerank(df: DataFrame, cand: DataFrame) -> DataFrame:
-    """Shared IVF serving tail: exact-cosine score the (query,
-    candidate) pairs and keep the per-query top-k — the query side
-    broadcasts, the corpus joins by id, so candidates never drag
-    embeddings through a shuffle."""
-    e1 = df.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    e2 = df.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    scored = cand.join(F.broadcast(e1.filter(F.col("query_id") < N_QUERIES)), "query_id").join(
-        e2, "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine6("qv", "cv").alias("cosine"),
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ann_ivf_topk(df: DataFrame) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their nearest
     codebook cell once; a query probes only its IVF_NPROBE nearest
@@ -374,8 +227,14 @@ def ann_ivf_topk(df: DataFrame) -> DataFrame:
     ~nprobe/cells of the corpus, and the exact re-rank uses the same
     map-side top-k as the brute-force path. Rounded-cosine ties break
     by cell_id, so the approximation itself is engine-deterministic
-    and the DuckDB oracle reproduces it exactly."""
-    return _ivf_exact_rerank(df, _ivf_candidates(_ivf_ranked(df)))
+    and the DuckDB oracle reproduces it exactly. One spark.sql of the
+    recall eval's ivf leg; the cell-ranking subtree is expanded
+    textually at both candidate consumers (assign + qprobe)."""
+    E = _annq_view(df, "emb")
+    return df.sparkSession.sql(
+        "SELECT query_id, neighbor_id, cosine, rank FROM "
+        + _ivf_leg_sparksql(E, f"({_ivf_ranked_sparksql(E)})", full=True)
+    )
 
 
 def ann_ivf_topk_sql() -> str:
@@ -425,24 +284,18 @@ def ann_ivf_topk_sql() -> str:
     """
 
 
-def _band_bucket(col, band: int) -> F.Column:
-    """Sign bucket over the band's PLANES_PER_BAND leading dims.
-    String input takes the single-parse form (see _bucket)."""
-    if isinstance(col, str):
-        return F.expr(
-            "0 + "
-            + " + ".join(
-                f"(CASE WHEN element_at({col}, "
-                f"{band * PLANES_PER_BAND + i + 1}) >= 0 "
-                f"THEN {2 ** i} ELSE 0 END)"
-                for i in range(PLANES_PER_BAND)
-            )
+def _band_bucket(col: str, band: int) -> F.Column:
+    """Sign bucket over the band's PLANES_PER_BAND leading dims of an
+    array column name, one parse (see cosine6)."""
+    return F.expr(
+        "0 + "
+        + " + ".join(
+            f"(CASE WHEN element_at({col}, "
+            f"{band * PLANES_PER_BAND + i + 1}) >= 0 "
+            f"THEN {2 ** i} ELSE 0 END)"
+            for i in range(PLANES_PER_BAND)
         )
-    b = F.lit(0)
-    for i in range(PLANES_PER_BAND):
-        idx = band * PLANES_PER_BAND + i + 1
-        b = b + F.when(F.element_at(col, idx) >= 0, F.lit(2**i)).otherwise(F.lit(0))
-    return b
+    )
 
 
 def _band_bucket_sql(col: str, band: int) -> str:
@@ -731,12 +584,14 @@ def ann_probe_cost_frontier(df: DataFrame) -> DataFrame:
     r11→r12 rebuild measurements hinged on, now priced per probe
     width. Scale shape: ONE widened Arrow assignment pass feeds all
     frontier points (persisted, like ann_recall_eval's shared
-    ranking); each point is a cell_id join + the standard exact
-    rerank over its candidates; aggregates are per-query counts."""
+    ranking); each point is the ivf leg at that nprobe (a cell_id
+    join + the exact rerank over its candidates) read through a view
+    of the persisted ranking; aggregates are per-query counts."""
     from functools import reduce as _reduce
 
     from .. import caching
 
+    spark = df.sparkSession
     exact = (
         ann_bruteforce_topk(df).select("query_id", "neighbor_id").persist()
     )
@@ -744,24 +599,16 @@ def ann_probe_cost_frontier(df: DataFrame) -> DataFrame:
     held = [exact, ranked]
     try:
         qids = exact.select("query_id").distinct()
-        assign = ranked.filter(F.col("rn") == 1).select(
-            F.col("vec_id").alias("neighbor_id"), "cell_id"
-        )
+        E, R = _annq_view(df, "emb"), _annq_view(ranked, "tranked")
         parts = []
         for n in range(1, IVF_FRONTIER_MAX + 1):
-            qp = ranked.filter(
-                (F.col("rn") <= n) & (F.col("vec_id") < N_QUERIES)
-            ).select(F.col("vec_id").alias("query_id"), "cell_id")
-            cand = (
-                qp.join(assign, "cell_id")
-                .filter(F.col("neighbor_id") != F.col("query_id"))
-                .select("query_id", "neighbor_id")
+            ncand = spark.sql(
+                f"SELECT query_id, count(1) AS n_cand FROM "
+                f"{_ivf_cand_sparksql(R, nprobe=n)} GROUP BY query_id"
             )
-            ncand = cand.groupBy("query_id").agg(
-                F.count(F.lit(1)).alias("n_cand")
-            )
-            top = _ivf_exact_rerank(df, cand).select(
-                "query_id", "neighbor_id"
+            top = spark.sql(
+                "SELECT query_id, neighbor_id FROM "
+                + _ivf_leg_sparksql(E, R, nprobe=n)
             )
             hits = (
                 top.join(F.broadcast(exact), ["query_id", "neighbor_id"])
@@ -1089,9 +936,23 @@ def cdc_semantic_probe_sql(probe_hamming: int = PROBE_HAMMING) -> str:
 # was ~6,200 py4j round-trips (~2.2s of pure driver time at a
 # ~0.35ms/call floor — the metric's dominant cost at sf0.1); the text
 # form builds the query in one JVM parse over temp views of the
-# artifact frames. The standalone ANN registry queries (bruteforce /
-# ivf_trained / pq_adc / pq_adc_trained / ivfpq) share the same leg
-# builders.
+# artifact frames. These leg builders are the only Spark form of each
+# ANN method: the standalone registry queries (bruteforce / lsh /
+# lsh_multiprobe / ivf / ivf_trained / pq_adc / pq_adc_trained /
+# ivfpq and the trained variants), cluster_balanced_sample and the
+# probe-cost frontier read the same text over _annq_view views.
+
+
+def _annq_view(frame: DataFrame, name: str) -> str:
+    """Register ``frame`` as the ``__annq_<name>`` temp view a
+    standalone ANN query's one-SQL text reads; returns the view name.
+    The one naming site for these views. Replaced, never dropped:
+    dropping a view over a persisted frame uncaches it (see
+    ann_recall_eval). spark.sql analyzes eagerly, so a view only has
+    to hold between registration and the sql() call."""
+    vname = f"__annq_{name}"
+    frame.createOrReplaceTempView(vname)
+    return vname
 
 
 def _rank_leg_sql(src: str, score: str, order: str, full: bool = False) -> str:
@@ -1128,8 +989,11 @@ def _bruteforce_sparksql(E: str, full: bool = False) -> str:
 
 
 def _ivf_ranked_sparksql(E: str) -> str:
-    """_ivf_ranked as Spark-SQL text over the ``E`` view (the shared
-    per-vector cell ranking the eval persists once)."""
+    """Per-vector cell ranking (vec_id, cell_id, cos, rn) over the
+    ``E`` view: every vector × the codebook cells (the IVF_CELLS
+    vectors after the query range), rn=1 is the vector's IVF cell,
+    rn<=nprobe its probe set. One corpus-sized window; the recall
+    eval persists it once for the ivf / ivfpq legs."""
     cos = cosine6_sparksql("embedding", "cv")
     cent = (
         f"(SELECT vec_id AS cell_id, embedding AS cv FROM {E} "
@@ -1176,21 +1040,26 @@ def _lsh_leg_sparksql(E: str, hamming: int | None, full: bool = False) -> str:
     )
 
 
-def _ivf_cand_sparksql(ranked: str) -> str:
-    """_ivf_candidates as Spark-SQL text over a (vec_id, cell_id, rn)
-    ranking view or subquery expression."""
+def _ivf_cand_sparksql(ranked: str, nprobe: int = IVF_NPROBE) -> str:
+    """(query_id, neighbor_id): each query × the members of its
+    ``nprobe`` nearest cells, self excluded, over a (vec_id, cell_id,
+    rn) ranking view or subquery expression."""
     return f"""(SELECT query_id, neighbor_id FROM
   (SELECT vec_id AS query_id, cell_id FROM {ranked}
-   WHERE rn <= {IVF_NPROBE} AND vec_id < {N_QUERIES}) p
+   WHERE rn <= {nprobe} AND vec_id < {N_QUERIES}) p
   JOIN (SELECT vec_id AS neighbor_id, cell_id FROM {ranked} WHERE rn = 1) a
   USING (cell_id)
   WHERE neighbor_id != query_id)"""
 
 
-def _ivf_leg_sparksql(E: str, ranked: str, full: bool = False) -> str:
-    """IVF candidates + exact-cosine re-rank as Spark-SQL text."""
+def _ivf_leg_sparksql(
+    E: str, ranked: str, full: bool = False, nprobe: int = IVF_NPROBE
+) -> str:
+    """IVF candidates + exact-cosine re-rank as Spark-SQL text: the
+    query side broadcasts, the corpus joins by id, so candidates
+    never drag embeddings through a shuffle."""
     src = f"""(SELECT /*+ BROADCAST(q) */ query_id, neighbor_id, qv, cv
-  FROM {_ivf_cand_sparksql(ranked)} c
+  FROM {_ivf_cand_sparksql(ranked, nprobe)} c
   JOIN (SELECT vec_id AS query_id, embedding AS qv FROM {E}
         WHERE vec_id < {N_QUERIES}) q USING (query_id)
   JOIN (SELECT vec_id AS neighbor_id, embedding AS cv FROM {E}) n
@@ -1243,11 +1112,11 @@ def _adc_topk_sql(spark, codes: DataFrame, qf: DataFrame, cand=None):
     queries: views over the persisted codes frame and the broadcast
     query-table frame, one spark.sql of the ADC leg (full output).
     ``cand``: optional candidate-set SQL text (ivfpq pruning)."""
-    codes.createOrReplaceTempView("__annq_codes")
-    qf.createOrReplaceTempView("__annq_qf")
     return spark.sql(
         "SELECT query_id, neighbor_id, adc_micro, rank FROM "
-        + _adc_leg_sparksql("__annq_codes", "__annq_qf", cand, full=True)
+        + _adc_leg_sparksql(
+            _annq_view(codes, "codes"), _annq_view(qf, "qf"), cand, full=True
+        )
     )
 
 
@@ -1631,13 +1500,10 @@ def ann_lsh_multiprobe_topk(
     side is still bucketed once and never shuffles (the probe list
     explodes on the broadcast QUERY side only). The width dial trades
     candidates for recall: the eval prices Hamming-1 and Hamming-2
-    side by side."""
-    probe_list = probe_buckets("qb", N_PLANES, probe_hamming)
-    return _lsh_probe_topk(
-        df,
-        lambda q: q.select(
-            "query_id", "qv", F.explode(probe_list).alias("pb")
-        ),
+    side by side. One spark.sql of the eval's multiprobe leg."""
+    return df.sparkSession.sql(
+        "SELECT query_id, neighbor_id, cosine, rank FROM "
+        + _lsh_leg_sparksql(_annq_view(df, "emb"), probe_hamming, full=True)
     )
 
 
@@ -1690,14 +1556,9 @@ PQ_KS = 16  # codes per subspace (4 bits)
 PQ_CB_START = N_QUERIES + IVF_CELLS  # after queries + IVF codebook
 
 
-def _normalized(col) -> F.Column:
-    return F.transform(col, lambda x: x.cast("double") / _norm(col))
-
-
 def _normalized_expr(name: str) -> F.Column:
-    """_normalized over a COLUMN NAME as one parsed expression (same
-    tree — the norm sits inside the lambda either way; see cosine6
-    for why the single-parse form exists)."""
+    """L2-normalized double array of an array column name, one parse
+    (see cosine6)."""
     return F.expr(
         f"transform({name}, x -> CAST(x AS DOUBLE) / {_norm_sparksql(name)})"
     )
@@ -2087,13 +1948,9 @@ def ann_ivfpq_topk(df: DataFrame, shared=None, ranked=None) -> DataFrame:
     if ranked is None:
         # the unpersisted cell-ranking subtree is expanded textually
         # twice inside the candidate join (assign + qprobe consumers)
-        df.createOrReplaceTempView("__annq_emb")
-        rsub = f"({_ivf_ranked_sparksql('__annq_emb')})"
+        rsub = f"({_ivf_ranked_sparksql(_annq_view(df, 'emb'))})"
     else:
-        # replaced, never dropped: dropping a view over a persisted
-        # frame uncaches it (see ann_recall_eval)
-        ranked.createOrReplaceTempView("__annq_tranked")
-        rsub = "__annq_tranked"
+        rsub = _annq_view(ranked, "tranked")
     out = _adc_topk_sql(
         df.sparkSession, codes, qf, cand=_ivf_cand_sparksql(rsub)
     )
@@ -2273,7 +2130,7 @@ def _pq_trained_centroids_impl(df: DataFrame) -> list[list[list[int]]]:
 
     sample = (
         df.filter(
-            h32(F.col("vec_id").cast("string")) % PQT_SAMPLE_MOD == 0
+            h32("CAST(vec_id AS STRING)") % PQT_SAMPLE_MOD == 0
         )
         .select("vec_id", _normalized_expr("embedding").alias("nv"))
         # row ORDER is irrelevant to training (int64 sums are
@@ -2646,7 +2503,7 @@ def _ivf_trained_centroids_impl(
     """``init`` selects the codebook initialization:
 
     - "demo": the fixed demo-corpus vectors [N_QUERIES,
-      N_QUERIES + IVF_CELLS) — mirrors the hash-codebook _ivf_ranked
+      N_QUERIES + IVF_CELLS) — mirrors the hash-codebook _ivf_ranked_sparksql
       so the recall-eval legs compare trained-vs-hash on the SAME
       init geometry. Requires those ids to exist (the registry's
       embeddings tables always carry them).
@@ -2679,7 +2536,7 @@ def _ivf_trained_centroids_impl(
         raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
     sample = (
         df.filter(
-            h32(F.col("vec_id").cast("string")) % sample_mod == 0
+            h32("CAST(vec_id AS STRING)") % sample_mod == 0
         )
         .select("vec_id", _normalized_expr("embedding").alias("nv"))
         .limit(PQT_MAX_SAMPLE + 1)
@@ -2765,7 +2622,7 @@ def ivf_assign_trained(
     (default IVF_NPROBE) nearest
     TRAINED cells by integer L2² over quantized normalized vectors
     (unit vectors: ascending L2² = descending cosine, so the probe
-    geometry matches the hash-codebook _ivf_ranked). rn=1 is the
+    geometry matches the hash-codebook _ivf_ranked_sparksql). rn=1 is the
     assignment, rn<=nprobe the probe set; ``with_dist`` adds the
     integer distance itself (cluster_balanced_sample_trained orders
     per-cell centrality by it). One Arrow-batched zero-exchange pass
@@ -2835,12 +2692,11 @@ def ann_ivf_trained_topk(df: DataFrame) -> DataFrame:
     from ..caching import owned
 
     ranked = ivf_assign_trained(df).persist()
-    spark = df.sparkSession
-    df.createOrReplaceTempView("__annq_emb")
-    ranked.createOrReplaceTempView("__annq_tranked")
-    out = spark.sql(
+    out = df.sparkSession.sql(
         "SELECT query_id, neighbor_id, cosine, rank FROM "
-        + _ivf_leg_sparksql("__annq_emb", "__annq_tranked", full=True)
+        + _ivf_leg_sparksql(
+            _annq_view(df, "emb"), _annq_view(ranked, "tranked"), full=True
+        )
     )
     return owned(out, [ranked])
 
@@ -3002,21 +2858,14 @@ def cluster_balanced_sample(df: DataFrame) -> DataFrame:
     partition key, so parallelism = number of cells, and with a real
     trained codebook cell count scales with the corpus (a production
     run sizes cells ≈ sqrt(N)). Rounded-cosine ties break by vec_id —
-    engine-deterministic, oracle reproduces the sample exactly."""
-    scores = _cell_scores(df)
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cell_id"))
-    assign = (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell_id", "cos")
-    )
-    w2 = W.partitionBy("cell_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    return (
-        assign.withColumn("pick", F.row_number().over(w2))
-        .filter(F.col("pick") <= CBS_PER_CELL)
-        .select("vec_id", "cell_id", "cos", "pick")
+    engine-deterministic, oracle reproduces the sample exactly.
+    One spark.sql over the IVF cell ranking (_ivf_ranked_sparksql)."""
+    return df.sparkSession.sql(
+        f"""SELECT vec_id, cell_id, cos, pick FROM (
+  SELECT vec_id, cell_id, cos, ROW_NUMBER() OVER (
+    PARTITION BY cell_id ORDER BY cos DESC, vec_id) AS pick
+  FROM ({_ivf_ranked_sparksql(_annq_view(df, 'emb'))}) WHERE rn = 1)
+WHERE pick <= {CBS_PER_CELL}"""
     )
 
 

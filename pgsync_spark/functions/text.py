@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import (h32, h32_sql, perm, perm_sql, round6, round6_sql, shingles, shingles_sql, tokens, tokens_sql)
+from .hashing import (h32_sparksql, h32_sql, perm_sparksql, perm_sql, round6, round6_sql, shingles, shingles_sql, tokens, tokens_sparksql, tokens_sql)
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS: dict[str, list[str]] = {
@@ -80,7 +80,7 @@ def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language ID with deterministic tiebreak (score desc,
     language code asc). The declared `lang` column rides along so accuracy
     can be inspected; prediction depends only on `text`."""
-    tok = F.array_distinct(tokens(F.col("text")))
+    tok = F.array_distinct(tokens("text"))
     scores = [
         F.size(F.array_intersect(tok, F.array(*[F.lit(w) for w in ws]))).alias(
             f"score_{lang}"
@@ -137,7 +137,7 @@ def quality_filter(df: DataFrame) -> DataFrame:
     word length band, symbol ratio cap, minimum stopword hits. Pure
     columnar expressions; emits the measured features plus the keep
     decision so downstream pipelines can re-threshold without re-scan."""
-    tok = tokens(F.col("text"))
+    tok = tokens("text")
     n = F.size(tok)
     nd = n.cast("double")
     mean_len = F.aggregate(
@@ -240,9 +240,7 @@ def quality_classifier(df: DataFrame) -> DataFrame:
     array alone was ~260 py4j round-trips per build (~1,400 with the
     fold lambdas — ~60% of the benched metric at sf0.1); one
     selectExpr parse builds the same expressions in-JVM. D-suffixed
-    double literals mirror the former F.lit doubles (see cosine6)."""
-    from .hashing import h32_sparksql, tokens_sparksql
-
+    double literals keep the arithmetic in doubles (see cosine6)."""
     w = "array(" + ", ".join(str(x) for x in QC_WEIGHTS_MILLI) + ")"
     ts = tokens_sparksql("text")
     total = (
@@ -293,7 +291,7 @@ def ngram_topk(df: DataFrame) -> DataFrame:
     (TakeOrderedAndProject via orderBy+limit — no global sort of the
     full n-gram space). Deterministic tiebreak (count desc, ngram asc)
     makes the LIMIT boundary engine-independent."""
-    sh = shingles(tokens(F.col("text")), 3)
+    sh = shingles(tokens("text"), 3)
     return (
         df.select(F.explode(sh).alias("ngram"))
         .groupBy("ngram")
@@ -379,13 +377,16 @@ def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints: exact content hash (md5 of lowercased
     text), and a 1-permutation min-shingle hash — the rolling-hash
     fingerprint family (content-defined, stable under suffix edits)."""
-    tok = tokens(F.col("text"))
-    sh = shingles(tok, 3)
-    minsh = F.array_min(F.transform(sh, lambda s: perm(h32(s), 0)))
+    minsh = (
+        f"array_min(transform(sh, s -> "
+        f"{perm_sparksql(h32_sparksql('s'), 0)}))"
+    )
     return df.select(
+        "doc_id", "text", shingles(tokens("text"), 3).alias("sh")
+    ).select(
         "doc_id",
         F.md5(F.lower(F.col("text"))).alias("content_hash"),
-        minsh.alias("min_shingle_hash"),
+        F.expr(minsh).alias("min_shingle_hash"),
     )
 
 

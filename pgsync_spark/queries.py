@@ -961,7 +961,7 @@ def kmv_distinct_parts(spark, sf_dir):
     the merge."""
     df = Catalog(spark, sf_dir).df("lineitem")
     hashes = df.select(
-        hashing.h32(F.col("l_partkey").cast("string")).alias("h")
+        hashing.h32("CAST(l_partkey AS STRING)").alias("h")
     ).dropDuplicates()
     s = (
         hashes.orderBy("h")
@@ -1033,22 +1033,12 @@ def doc_chunks(spark, sf_dir):
 CHUNK_EMB_DIMS = 8
 
 
-def _hash_dim(text_col, i: int):
-    """One dimension of the deterministic hash embedding, as a pure
-    column expression (JVM-side md5 → fixed-point micro-units) —
-    bit-identical to plugin_examples.hash_embedding /
-    hash_embedding_sql."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(text_col, F.lit(f"|{i}"))), 1, 8), 16, 10
-    ).cast("bigint")
-    x = 2.0 * (h / F.lit(4294967296.0)) - 1.0
-    return F.floor(x * 1e6 + 0.5).cast("bigint")
-
-
 def _hash_dim_sparksql(text_sql: str, i: int) -> str:
-    """Spark-SQL text form of _hash_dim (same tree — D-suffixed double
-    literals mirror the F.lit doubles; one parse replaces ~15 py4j
-    round-trips per dimension, guide §7.3)."""
+    """One dimension of the deterministic hash embedding (JVM-side md5
+    → fixed-point micro-units) as Spark-SQL text — bit-identical to
+    plugin_examples.hash_embedding / hash_embedding_sql. D-suffixed
+    literals keep the arithmetic in doubles; one parse replaces ~15
+    py4j round-trips per dimension (guide §7.3)."""
     h = (
         f"CAST(conv(substring(md5(concat({text_sql}, '|{i}')), 1, 8), "
         f"16, 10) AS BIGINT)"
@@ -1099,15 +1089,18 @@ def chunk_embeddings(spark, sf_dir):
     chunk_text = F.col("text").substr(
         (F.col("chunk_id") * CHUNK_STRIDE + 1).cast("int"), F.lit(CHUNK_SIZE)
     )
+    dims = ", ".join(
+        _hash_dim_sparksql("chunk_text", i) for i in range(CHUNK_EMB_DIMS)
+    )
     return chunks.select(
+        "doc_id", "chunk_id", chunk_text.alias("chunk_text")
+    ).select(
         "doc_id",
         "chunk_id",
         # to_json at the registry boundary: the driver's pandas
         # canonicalizer cannot hash list-valued cells (the
         # minhash_signatures precedent, dedup.py:196).
-        F.to_json(
-            F.array(*[_hash_dim(chunk_text, i) for i in range(CHUNK_EMB_DIMS)])
-        ).alias("embedding"),
+        F.expr(f"to_json(array({dims}))").alias("embedding"),
     )
 
 
@@ -1183,7 +1176,7 @@ def dataset_split(spark, sf_dir):
     ones). Pure projection: no shuffle, fully scan-parallel at any
     scale."""
     df = Catalog(spark, sf_dir).df("documents")
-    bucket = hashing.h32(F.col("doc_id").cast("string")) % 100
+    bucket = hashing.h32("CAST(doc_id AS STRING)") % 100
     return df.select(
         "doc_id",
         F.when(bucket < 80, F.lit("train"))
@@ -1413,7 +1406,7 @@ def contamination_check(spark, sf_dir):
     train-frequency cap, one broadcast-or-shuffle join, one final
     aggregate; all partial-aggregated map-side."""
     docs = Catalog(spark, sf_dir).df("documents")
-    bucket = hashing.h32(F.col("doc_id").cast("string")) % 100
+    bucket = hashing.h32("CAST(doc_id AS STRING)") % 100
     base = docs.select(
         "doc_id",
         F.when(bucket < 80, F.lit("train"))
@@ -1533,7 +1526,7 @@ def corpus_mixture_sample(spark, sf_dir):
     for k, v in reversed(_MIXTURE_RATES.items()):
         rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
     keep = (
-        hashing.h32(F.col("doc_id").cast("string")) % _MIXTURE_MOD
+        hashing.h32("CAST(doc_id AS STRING)") % _MIXTURE_MOD
     ) < rate * _MIXTURE_MOD
     return df.filter(keep).select("doc_id", "lang")
 
@@ -1855,7 +1848,7 @@ def group_sample_topk(spark, sf_dir):
     ranking (only ids ride the shuffle here)."""
     df = Catalog(spark, sf_dir).df("documents")
     w = W.partitionBy("lang").orderBy(
-        hashing.h32(F.col("doc_id").cast("string")), "doc_id"
+        hashing.h32("CAST(doc_id AS STRING)"), "doc_id"
     )
     return (
         df.select("doc_id", "lang")
@@ -3968,8 +3961,8 @@ def hybrid_search_rrf(spark, sf_dir):
     rrf = sum(1/(60+rank)) over the lists a doc appears in, snapped to
     fixed-point nano-units so the fusion sum is exact integer
     arithmetic. The doc embedding is the deterministic md5 fixed-point
-    encoder (chunk_embeddings' _hash_dim); a real encoder swaps in via
-    the plugin chain.
+    encoder (chunk_embeddings' _hash_dim_sparksql); a real encoder
+    swaps in via the plugin chain.
 
     Determinism of the cosine leg: every input is integer-valued
     (micro-unit embedding components), |dot| <= 8e12 < 2^53 so the
@@ -4341,7 +4334,7 @@ def corpus_drift_kl(spark, sf_dir):
     corpus). At 100 TB with per-epoch batches this is the same single
     uniform shuffle per epoch."""
     df = Catalog(spark, sf_dir).df("documents")
-    batch = hashing.h32(F.col("doc_id").cast("string")) % DRIFT_BATCHES
+    batch = hashing.h32("CAST(doc_id AS STRING)") % DRIFT_BATCHES
     per = df.groupBy(batch.alias("batch"), "source").agg(
         F.count(F.lit(1)).alias("n")
     )

@@ -42,7 +42,7 @@ def _assigned(docs: DataFrame, budget: int, lanes: int) -> DataFrame:
     sink's full-payload write run through."""
     d = docs.withColumn("lane", F.col("doc_id") % lanes).withColumn(
         "n_tok",
-        F.size(hashing.tokens(F.col("text"))).cast("bigint"),
+        F.size(hashing.tokens("text")).cast("bigint"),
     )
     w = (
         W.partitionBy("lane")

@@ -245,14 +245,12 @@ def test_additivity_holds_for_arbitrary_splits(spark, n_batches):
     sizes, arrival order by hash value — nothing like the %3 oracle
     split) must score bit-identically to one-shot BM25. This is the
     property the oracle's fixed split cannot cover by itself."""
-    from pyspark.sql import functions as F
-
     from pgsync_spark.functions.hashing import h32
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     expected = _oneshot(spark)
     idx = BM25Index(spark)
-    part = h32(F.concat(F.col("doc_id").cast("string"), F.lit(":split")))
+    part = h32("concat(CAST(doc_id AS STRING), ':split')")
     sizes = []
     for k in range(n_batches):
         b = docs.filter(part % n_batches == k)
@@ -276,7 +274,7 @@ def test_band_of_mirrors_h32(spark):
         r["term"]: r["band"]
         for r in df.select(
             "term",
-            (h32(F.col("term")) % F.lit(BM25_INDEX_BANDS)).alias("band"),
+            (h32("term") % F.lit(BM25_INDEX_BANDS)).alias("band"),
         ).collect()
     }
     assert got == {t: _band_of(t) for t in terms}

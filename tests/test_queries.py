@@ -719,6 +719,142 @@ def test_one_production_form_per_query():
     )
 
 
+def test_one_spark_form_per_kernel():
+    """Every expression kernel has ONE Spark body, its Spark-SQL text
+    builder ``X_sparksql``. A same-module ``def X`` may only parse it
+    (a docstring, then ``return F.expr(X_sparksql(...))``); a
+    Column-API body beside the text builder, or an
+    ``isinstance(<arg>, str)`` dispatch choosing between the two forms
+    in ``functions/``, is flagged here."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pgsync_spark"
+
+    def parses_only(fn, builder):
+        body = fn.body
+        if body and isinstance(body[0], ast.Expr) and isinstance(
+            body[0].value, ast.Constant
+        ):
+            body = body[1:]  # docstring
+        if len(body) != 1 or not isinstance(body[0], ast.Return):
+            return False
+        call = body[0].value
+        return (
+            isinstance(call, ast.Call)
+            and ast.unparse(call.func) == "F.expr"
+            and len(call.args) == 1
+            and isinstance(call.args[0], ast.Call)
+            and ast.unparse(call.args[0].func) == builder
+        )
+
+    bad = []
+    n_kernels = 0
+    for f in sorted(pkg.rglob("*.py")):
+        if "__pycache__" in f.parts:
+            continue
+        tree = ast.parse(f.read_text())
+        defs = {
+            n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+        }
+        for name, fn in defs.items():
+            builder = f"{name}_sparksql"
+            if builder in defs:
+                n_kernels += 1
+                if not parses_only(fn, builder):
+                    bad.append(f"{f}:{fn.lineno}: def {name}")
+        if "functions" in f.parts:
+            for n in ast.walk(tree):
+                if (
+                    isinstance(n, ast.Call)
+                    and ast.unparse(n.func) == "isinstance"
+                    and len(n.args) == 2
+                    and ast.unparse(n.args[1]) == "str"
+                ):
+                    bad.append(f"{f}:{n.lineno}: {ast.unparse(n)}")
+    assert n_kernels >= 4, f"kernel scan found only {n_kernels} pairs"
+    assert not bad, (
+        "second Spark body of a kernel (the *_sparksql text builder is "
+        "the one form; a Column name may only F.expr it):\n"
+        + "\n".join(bad)
+    )
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_text_kernels_read_the_same_under_escaped_literals(spark, escaped):
+    """The text builders' string literals must parse to the same
+    values under both spark.sql.parser.escapedStringLiterals settings
+    — a backslash in one reads differently under each (a '\\\\s+'
+    split pattern returned a whole document as ONE token, no error).
+    Tokens, every analyzer, h32, perm and combine_shingles are checked
+    against the driver-side Python mirrors."""
+    from pgsync_spark.functions.hashing import (
+        ANALYZERS,
+        MERSENNE_P,
+        SHINGLE_P,
+        _MIX,
+        analyze_py,
+        analyze_sparksql,
+        combine_shingles_sparksql,
+        h32_py,
+        h32_sparksql,
+        perm_params,
+        perm_sparksql,
+        tokens_sparksql,
+    )
+
+    texts = [
+        "Hello  big\tWorld's\nend of\x0bthe\x0cline\rnow",
+        "The priorities: 1-URGENT classes, dogs and a kiss",
+        "",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        toks = df.selectExpr(
+            "text",
+            f"{tokens_sparksql('text')} AS tok",
+            *[f"{analyze_sparksql('text', a)} AS {a}" for a in ANALYZERS],
+        )
+        hashed = toks.selectExpr(
+            "text", f"transform(tok, t -> {h32_sparksql('t')}) AS th"
+        )
+        rows = toks.collect()
+        mixed = (
+            hashed.filter("size(th) >= 3")
+            .selectExpr(
+                "text",
+                "th",
+                f"{combine_shingles_sparksql('th', 3)} AS sh",
+                f"transform(th, h -> {perm_sparksql('h', 5)}) AS p5",
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    by_text = {r["text"]: r for r in rows}
+    assert len(by_text) == len(texts)
+    for t, r in by_text.items():
+        assert r["tok"] == t.lower().split(), (escaped, t)
+        for a in ANALYZERS:
+            assert r[a] == analyze_py(t, a), (escaped, a, t)
+    a5, b5 = perm_params(5)
+    assert len(mixed) == 2
+    for r in mixed:
+        th = [h32_py(w) for w in r["text"].lower().split()]
+        assert r["th"] == th, escaped
+        sh = []
+        for i in range(len(th) - 2):
+            c = th[i]
+            for j in (1, 2):
+                c = (c * _MIX + th[i + j]) % SHINGLE_P
+            sh.append(c)
+        assert r["sh"] == sh, escaped
+        assert r["p5"] == [(h * a5 + b5) % MERSENNE_P for h in th], escaped
+
+
 @pytest.mark.slow
 def test_clustered_recall_orderings(spark):
     """r11 verdict item 1: on the mixture-of-centers corpus the
@@ -1037,11 +1173,12 @@ def test_clear_trained_cache_retrains(spark):
 
 
 def test_single_parse_scoring_trees_match_column_forms(spark):
-    """r13 optimization guard: bm25_term_micro and _hash_dim moved to
-    single-parse Spark-SQL text builders (driver-side construction
+    """r13 optimization guard: bm25_term_micro and _hash_dim_sparksql
+    are single-parse Spark-SQL text builders (driver-side construction
     cost); the analyzed trees must stay canonically identical to the
-    documented Column-API forms — the fixed-point bit-parity contract
-    (oracle floors) rides on the exact IEEE fold order."""
+    documented Column-API chains kept here as references — the
+    fixed-point bit-parity contract (oracle floors) rides on the exact
+    IEEE fold order."""
     from pyspark.sql import functions as F
 
     from pgsync_spark.queries import (
@@ -1049,7 +1186,6 @@ def test_single_parse_scoring_trees_match_column_forms(spark):
         BM25_K1_PLUS_1,
         BM25_B,
         BM25_ONE_MINUS_B,
-        _hash_dim,
         _hash_dim_sparksql,
         bm25_term_micro,
     )
@@ -1082,6 +1218,16 @@ def test_single_parse_scoring_trees_match_column_forms(spark):
         )
         return F.floor(idf_micro * tfn + F.lit(0.5)).cast("bigint")
 
+    def column_hash_dim(text_col, i):
+        # the pre-r13 Column-API chain, verbatim
+        h = F.conv(
+            F.substring(F.md5(F.concat(text_col, F.lit(f"|{i}"))), 1, 8),
+            16,
+            10,
+        ).cast("bigint")
+        x = 2.0 * (h / F.lit(4294967296.0)) - 1.0
+        return F.floor(x * 1e6 + 0.5).cast("bigint")
+
     def same(a, b):
         return (
             a._jdf.queryExecution()
@@ -1111,26 +1257,35 @@ def test_single_parse_scoring_trees_match_column_forms(spark):
     )
     assert same(old_tm, new_tm)
 
-    old_hd = df.select(_hash_dim(F.col("text"), 3).alias("e"))
+    old_hd = df.select(column_hash_dim(F.col("text"), 3).alias("e"))
     new_hd = df.selectExpr(f"{_hash_dim_sparksql('text', 3)} AS e")
     assert same(old_hd, new_hd)
 
 
 def test_analyze_single_parse_trees_match_column_forms(spark):
-    """r13: analyze() string fast path must build the identical tree
-    as the Column-API analyzer chain, for every analyzer (the frozen
-    index-vocabulary contract rides on token-for-token equality)."""
+    """r13: analyze() must build the identical tree as the Column-API
+    analyzer chain, for every analyzer (the frozen index-vocabulary
+    contract rides on token-for-token equality). Optimized plans: the
+    text form spells the whitespace split pattern as
+    concat(chr(92), 's+') so it reads the same under both
+    escapedStringLiterals settings, and constant folding turns it into
+    the Column chain's literal \\s+."""
     from pyspark.sql import functions as F
 
     from pgsync_spark.functions.hashing import (
         ANALYZERS,
         STOPWORDS,
         _STANDARD_RE,
-        _stem_chain_spark,
+        _STEM_RULES,
         analyze,
     )
 
     df = spark.range(3).selectExpr("CAST(id AS STRING) AS text")
+
+    def stem_chain(tok):
+        for pat, _, suf in _STEM_RULES:
+            tok = F.regexp_replace(tok, pat, "$1" + suf)
+        return tok
 
     def column_analyze(col, analyzer):
         # the pre-r13 Column-API chain, verbatim
@@ -1143,7 +1298,7 @@ def test_analyze_single_parse_trees_match_column_forms(spark):
             stop = F.array(*[F.lit(w) for w in STOPWORDS])
             toks = F.filter(toks, lambda x: ~F.array_contains(stop, x))
         if analyzer == "standard_stem":
-            toks = F.transform(toks, _stem_chain_spark)
+            toks = F.transform(toks, stem_chain)
         return toks
 
     for an in ANALYZERS:
@@ -1155,6 +1310,6 @@ def test_analyze_single_parse_trees_match_column_forms(spark):
         b = df.select(analyze("coalesce(text, \'\')", an).alias("t"))
         assert (
             a._jdf.queryExecution()
-            .analyzed()
-            .sameResult(b._jdf.queryExecution().analyzed())
+            .optimizedPlan()
+            .sameResult(b._jdf.queryExecution().optimizedPlan())
         ), an

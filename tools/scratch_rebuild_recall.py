@@ -112,8 +112,7 @@ live = idx.live("vals").select(
 ).localCheckpoint(eager=True)
 n_live = live.count()
 
-from pgsync_spark.functions.hashing import round6
-from pgsync_spark.functions.similarity import _dot, _norm
+from pgsync_spark.functions.similarity import cosine6
 from pyspark.sql import Window as W
 
 scored = (
@@ -123,7 +122,7 @@ scored = (
     .select(
         "query_id",
         "neighbor_id",
-        round6(_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("cosine"),
+        cosine6("qv", "cv").alias("cosine"),
     )
 )
 w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
