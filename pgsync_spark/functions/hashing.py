@@ -15,6 +15,8 @@ are the DuckDB mirrors (the oracle), ``*_py`` the driver-side ones.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -90,6 +92,11 @@ def round6_sql(expr: str) -> str:
 # parse the same too, but their line breaks would split every plan
 # string that prints the pattern.
 _WS_SPLIT_SQL = "concat(chr(92), 's+')"
+# Java's \s is exactly [ \t\n\x0b\f\r]. The DuckDB and Python mirrors
+# spell that class out: RE2's \s lacks \x0b, and str.split() also
+# splits on \x85, \xa0 and \x1c-\x1f, which Java's \s does not.
+_WS_SPLIT_DUCK = "[\\s\\v]+"
+_WS_SPLIT_PY = re.compile("[ \t\n\x0b\f\r]+")
 
 
 def tokens(expr: str) -> Column:
@@ -105,7 +112,7 @@ def tokens_sparksql(expr: str) -> str:
 
 
 def tokens_sql(expr: str) -> str:
-    return f"list_filter(string_split_regex(lower({expr}), '\\s+'), x -> x <> '')"
+    return f"list_filter(string_split_regex(lower({expr}), '{_WS_SPLIT_DUCK}'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -174,10 +181,8 @@ def _stem_chain_sql(expr: str) -> str:
 
 
 def _stem_py(w: str) -> str:
-    import re as _re
-
     for pat, _, suf in _STEM_RULES:
-        w = _re.sub(pat, r"\1" + suf, w)
+        w = re.sub(pat, r"\1" + suf, w)
     return w
 
 
@@ -242,9 +247,7 @@ def analyze_py(s: str, analyzer: str = "whitespace") -> list[str]:
     only affects driver-side query convenience, never indexed state."""
     _check_analyzer(analyzer)
     if analyzer == "whitespace":
-        return [t for t in s.lower().split()]
-    import re
-
+        return [t for t in _WS_SPLIT_PY.split(s.lower()) if t]
     toks = re.findall(_STANDARD_RE, s.lower())
     if analyzer in ("standard_stop", "standard_stem"):
         toks = [t for t in toks if t not in STOPWORDS]

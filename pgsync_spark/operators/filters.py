@@ -16,6 +16,8 @@ small-set form.
 
 from __future__ import annotations
 
+import re
+
 
 _STRINGY = ("string", "varchar", "char", "uuid")
 
@@ -25,9 +27,20 @@ def _bt(name: str) -> str:
 
 
 def _spark_sql_str(s: str) -> str:
-    # backslash is an escape char in Spark SQL string literals (default
-    # escapedStringLiterals=false), so it needs doubling alongside quotes
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+    """A Spark SQL string expression reading as ``s`` under both
+    spark.sql.parser.escapedStringLiterals settings. Inside a literal a
+    backslash or quote reads differently under each ('it''s' reads as
+    it''s with the setting on), so those characters become chr()
+    pieces of a constant-folded concat; other text stays one plain
+    literal."""
+    if "\\" not in s and "'" not in s:
+        return "'" + s + "'"
+    pieces = [
+        f"chr({ord(p)})" if p in ("\\", "'") else f"'{p}'"
+        for p in re.split(r"([\\'])", s)
+        if p
+    ]
+    return "concat(" + ", ".join(pieces) + ")"
 
 
 class UnrenderableLiteral(ValueError):

@@ -1,36 +1,51 @@
-"""Keyed overlay frame: base + batch-sized delta, compacted on cadence.
+"""Keyed overlay store: base + one batch-sized flagged overlay, compacted on a cadence.
 
-The cost shape every incrementally-maintained store in the engine
-needs: applying a batch must cost O(batch + overlay), never O(store).
-``TableMaterializer`` pioneered the pattern for bronze-layer table
-snapshots; ``KeyedOverlay`` generalizes it for any keyed store
-(the doc store and the lineage reverse index use it), including stores
-with MULTIPLE rows per key (lineage has one row per key column value
-per doc).
+The one store design under every keyed store the engine maintains —
+each CDC-touched table's bronze snapshot (``streaming/cdc.py``), the
+doc store and the lineage reverse index (``streaming/incremental.py``):
+applying a batch costs O(batch + overlay), never O(store). A store may
+hold MULTIPLE rows per key (lineage has one per key column value).
 
-State:
+- ``base``: the big frame — a checkpoint, or the initial lazy scan (a
+  raw parquet table keeps its pushdown and pruning).
+- ``overlay``: ONE eager checkpoint holding, per key touched since the
+  last compaction, one tombstone row (``__live`` false, value columns
+  null) plus that key's replacement rows (``__live`` true); a touched
+  key with no live rows is a delete.
 
-- ``base``  — the big frame, checkpointed (or the initial lazy scan)
-- ``keys``  — touched key tuples since the last compaction (eager ckpt)
-- ``rows``  — current replacement rows for those keys (eager ckpt);
-              a touched key with no rows is a delete
+The view is ``base ⟕anti tombstone-keys ∪ live rows``: depth 1, one
+broadcast-guarded anti-join over the base scan, never a per-batch
+fragment chain (growing lazy union chains were measured to spike). One
+tombstone per touched key keeps the broadcast side exactly the key set,
+so the accumulated ``key_bound`` bounds it however many live rows a key
+has. An apply checkpoints ``prev ⟕anti touched-keys ∪ new`` —
+:func:`apply_parallel` submits several stores' checkpoints in one
+concurrent wave. A store folds into a fresh base after ``compact_every``
+applies, or once its key bound exceeds ``max(4 × batch bound,
+row_cap)``, which keeps the view's anti-join under the broadcast limit.
+Delta/Iceberg mapping: MERGE writing deletion vectors + new files per
+batch, OPTIMIZE on a cadence.
 
-The read view is ``base ⟕anti keys ∪ rows`` — depth is ALWAYS 1, so
-consumers re-execute one broadcast-guarded anti-join over the base
-scan, never a per-batch fragment chain (the r2-measured failure mode of
-letting lazy union chains grow). Folding into a fresh base happens
-every ``compact_every`` applies or when the accumulated key bound
-passes ``max(4x this batch, row_cap)`` — the Delta/Iceberg mapping is
-MERGE writing deletion vectors + new files per batch with OPTIMIZE on a
-cadence.
+Superseded checkpoints go to a ``release`` sink, released at once by
+default. A caller whose concurrent jobs still scan the pre-apply view
+passes a list's ``append`` and releases after its wave: localCheckpoint
+blocks have no lineage, so an unpersist racing a scan loses them.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .. import caching
-from .joins import maybe_broadcast
+from .joins import BROADCAST_ROW_LIMIT, maybe_broadcast
+
+# the overlay flag column; reserved in every store's schema
+LIVE = "__live"
+
+Release = Callable[[DataFrame], object]
 
 
 class KeyedOverlay:
@@ -39,140 +54,167 @@ class KeyedOverlay:
         base: DataFrame,
         key_cols: list[str],
         compact_every: int = 8,
-        row_cap: int = 65_536,
+        row_cap: int = BROADCAST_ROW_LIMIT,
         owns_base: bool = False,
     ):
         """``owns_base``: whether compaction may release ``base``'s
-        checkpoint blocks (False for bases whose blocks are shared with
-        another store, e.g. the full-sync combined frame backing both
-        docs and lineage — the owner releases those)."""
+        checkpoint blocks (False for raw scans, and for bases whose
+        blocks are shared with another store, e.g. the full-sync
+        combined frame backing both docs and lineage — the owner
+        releases those)."""
         self.base = base
         self.key_cols = list(key_cols)
         self.compact_every = compact_every
         self.row_cap = row_cap
         self.owns_base = owns_base
-        self.keys: DataFrame | None = None
-        self.rows: DataFrame | None = None
-        self._key_bound = 0
+        self.overlay: DataFrame | None = None
+        # upper bound of tombstone rows — the view's broadcast guard
+        self.key_bound = 0
+        self._batch_bound = 0
         self._applies = 0
         # bumped whenever base is replaced by a compaction/reset — lets
         # the engine know a shared initial base has been superseded
         self.generation = 0
         self._view: DataFrame | None = None
+        self._tomb_sel: list | None = None
+        self._winner_rows = None
 
     def view(self) -> DataFrame:
         """Current contents; cached so repeated reads (and identity
         checks) between state changes get the same frame."""
         if self._view is None:
-            if self.keys is None:
+            if self.overlay is None:
                 self._view = self.base
             else:
+                live = F.col(LIVE)
+                tombs = self.overlay.filter(~live).select(*self.key_cols)
                 self._view = self.base.join(
-                    maybe_broadcast(self.keys, known_rows=self._key_bound),
+                    maybe_broadcast(tombs, known_rows=self.key_bound),
                     on=self.key_cols,
                     how="left_anti",
-                ).unionByName(self.rows)
+                ).unionByName(self.overlay.filter(live).drop(LIVE))
         return self._view
 
-    def _merged(
-        self, touched_keys: DataFrame, rows: DataFrame, key_bound: int
-    ) -> tuple[DataFrame, DataFrame]:
-        """LAZY merged (keys, rows) overlay frames for one apply —
-        prepare half of apply(); the caller checkpoints them (possibly
-        in one parallel wave with other stores') and hands the results
-        to :meth:`_commit`."""
-        if self.keys is None:
-            return touched_keys, rows
-        guard = maybe_broadcast(touched_keys, known_rows=key_bound)
-        merged_keys = self.keys.join(
-            guard, on=self.key_cols, how="left_anti"
-        ).unionByName(touched_keys)
-        merged_rows = self.rows.join(
-            guard, on=self.key_cols, how="left_anti"
-        ).unionByName(rows)
-        return merged_keys, merged_rows
+    @property
+    def compact_due(self) -> bool:
+        """Whether the cadence or the size rule asks for a compaction."""
+        return self._applies >= self.compact_every or self.key_bound > max(
+            4 * self._batch_bound, self.row_cap
+        )
 
-    def _commit(
-        self, new_keys: DataFrame, new_rows: DataFrame, key_bound: int
-    ) -> None:
-        """Install checkpointed overlay frames from :meth:`_merged`,
-        release the superseded ones, and compact on cadence."""
-        if self.keys is not None:
-            caching.release_local_checkpoint(self.keys)
-            caching.release_local_checkpoint(self.rows)
-        self.keys, self.rows = new_keys, new_rows
-        self._key_bound += key_bound
+    def _tombstone(self) -> list:
+        """A tombstone row's columns over a touched-keys frame (cached:
+        the schema outlives compaction and reset)."""
+        if self._tomb_sel is None:
+            keys = set(self.key_cols)
+            self._tomb_sel = [
+                F.col(f.name) if f.name in keys
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in self.base.schema.fields
+            ] + [F.lit(False).alias(LIVE)]
+        return self._tomb_sel
+
+    def flagged(self, touched_keys: DataFrame, rows: DataFrame) -> DataFrame:
+        """One apply's overlay rows: a tombstone per touched key plus
+        the replacement ``rows``, flagged."""
+        return touched_keys.select(*self._tombstone()).unionByName(
+            rows.withColumn(LIVE, F.lit(True))
+        )
+
+    def flagged_winners(self, winners: DataFrame) -> DataFrame:
+        """One apply's overlay rows from ONE row per touched key: the
+        key's replacement when ``__live``, else a delete. Every key's
+        tombstone and every live row come out of one Generate whose
+        input is every column, so a plan reading the result twice (the
+        merge's touched-key guard and its union) shares one exchange
+        below it."""
+        if self._winner_rows is None:
+            tomb = F.struct(*self._tombstone())
+            image = F.struct(*self.base.columns, F.lit(True).alias(LIVE))
+            self._winner_rows = F.explode(
+                F.when(F.col(LIVE), F.array(tomb, image)).otherwise(F.array(tomb))
+            ).alias("__row")
+        return winners.select(self._winner_rows).select("__row.*")
+
+    def _merged(self, new: DataFrame, key_bound: int) -> DataFrame:
+        """The LAZY next overlay ``prev ⟕anti touched-keys ∪ new`` for
+        flagged rows ``new`` (:meth:`flagged`, :meth:`flagged_winners`)
+        — the prepare half
+        of an apply; the caller checkpoints it and hands the result to
+        :meth:`_commit`."""
+        if self.overlay is None:
+            return new
+        touched = new.filter(~F.col(LIVE)).select(*self.key_cols)
+        return self.overlay.join(
+            maybe_broadcast(touched, known_rows=key_bound),
+            on=self.key_cols,
+            how="left_anti",
+        ).unionByName(new)
+
+    def _commit(self, overlay: DataFrame, key_bound: int, release: Release) -> None:
+        """Install a checkpointed overlay from :meth:`_merged`."""
+        if self.overlay is not None:
+            release(self.overlay)
+        self.overlay = overlay
+        self.key_bound += key_bound
+        self._batch_bound = key_bound
         self._applies += 1
         self._view = None
-        if self._applies >= self.compact_every or self._key_bound > max(
-            4 * key_bound, self.row_cap
-        ):
-            self.compact()
 
     def apply(
         self, touched_keys: DataFrame, rows: DataFrame, key_bound: int
     ) -> None:
-        """Replace every row of ``touched_keys`` with ``rows``
-        (O(batch + overlay): merges into the eager overlay checkpoints,
-        never touches base). ``key_bound`` is an upper bound on
-        touched-key count — the broadcast guard, accumulated into the
-        overlay's own bound."""
-        merged_keys, merged_rows = self._merged(touched_keys, rows, key_bound)
-        new_keys, new_rows = caching.local_checkpoint_parallel(
-            [merged_keys, merged_rows]
-        )
-        self._commit(new_keys, new_rows, key_bound)
+        """Replace every row of ``touched_keys`` with ``rows`` and
+        compact when due. ``key_bound`` is an upper bound on the
+        touched-key count — the merge's broadcast guard, accumulated
+        into the view's."""
+        apply_parallel([(self, self.flagged(touched_keys, rows), key_bound)])
+        if self.compact_due:
+            self.compact()
 
-    def compact(self) -> None:
+    def compact(self, release: Release | None = None) -> None:
         """Fold base+overlay into a fresh base checkpoint (OPTIMIZE
         analog); the only O(store) step, amortized over the cadence."""
         new_base = self.view().localCheckpoint(eager=True)
-        if self.owns_base:
-            caching.release_local_checkpoint(self.base)
-        if self.keys is not None:
-            caching.release_local_checkpoint(self.keys)
-            caching.release_local_checkpoint(self.rows)
-        self.base = new_base
-        self.owns_base = True
-        self.keys = self.rows = None
-        self._key_bound = 0
-        self._applies = 0
-        self.generation += 1
-        self._view = None
+        self.reset(new_base, owns_base=True, release=release)
 
-    def reset(self, base: DataFrame, owns_base: bool = False) -> None:
-        """Swap in a new base (restore / truncate), dropping overlay
-        state and releasing owned frames."""
+    def reset(
+        self,
+        base: DataFrame,
+        owns_base: bool = False,
+        release: Release | None = None,
+    ) -> None:
+        """Swap in a new base (compaction / restore / truncate),
+        dropping the overlay and releasing owned frames."""
+        release = release or caching.release_local_checkpoint
         if self.owns_base:
-            caching.release_local_checkpoint(self.base)
-        if self.keys is not None:
-            caching.release_local_checkpoint(self.keys)
-            caching.release_local_checkpoint(self.rows)
+            release(self.base)
+        if self.overlay is not None:
+            release(self.overlay)
         self.base = base
         self.owns_base = owns_base
-        self.keys = self.rows = None
-        self._key_bound = 0
-        self._applies = 0
+        self.overlay = None
+        self.key_bound = self._batch_bound = self._applies = 0
         self.generation += 1
         self._view = None
 
     def release(self) -> None:
         """Free every owned checkpoint (store teardown)."""
-        self.reset(self.base.limit(0), owns_base=False)
+        self.reset(self.base.limit(0))
 
 
 def apply_parallel(
-    applies: list[tuple["KeyedOverlay", DataFrame, DataFrame, int]],
+    applies: list[tuple[KeyedOverlay, DataFrame, int]],
+    release: Release | None = None,
 ) -> None:
-    """Apply one batch to SEVERAL KeyedOverlay stores with all their
-    overlay checkpoints submitted in ONE concurrent wave (the engine's
-    doc + lineage stores: 4 serial driver round-trips → 1 wave). Each
-    entry is (store, touched_keys, rows, key_bound); the stores must be
-    distinct and their inputs independent."""
-    lazy: list[DataFrame] = []
-    for store, keys, rows, bound in applies:
-        mk, mr = store._merged(keys, rows, bound)
-        lazy += [mk, mr]
-    cks = caching.local_checkpoint_parallel(lazy)
-    for i, (store, _keys, _rows, bound) in enumerate(applies):
-        store._commit(cks[2 * i], cks[2 * i + 1], bound)
+    """Apply one batch to SEVERAL stores: one overlay checkpoint per
+    store, all submitted in ONE concurrent wave. Each entry is
+    (store, flagged rows, key_bound); the stores must be distinct and
+    their inputs independent. Compaction is left to the caller (read
+    ``compact_due``)."""
+    release = release or caching.release_local_checkpoint
+    merged = [store._merged(new, bound) for store, new, bound in applies]
+    for (store, _new, bound), ck in zip(
+        applies, caching.local_checkpoint_parallel(merged)
+    ):
+        store._commit(ck, bound, release)

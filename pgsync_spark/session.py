@@ -15,6 +15,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: $SPARK_GRAFT_DRIVER_MEM when set, else
+    24g capped at half of physical memory (``phys_bytes``, read with
+    os.sysconf when None).
+
+    NOT the whole machine: paired 8-batch CDC profiles at sf0.1 showed
+    a 90g heap spiking individual batches 3-5x (7.3-34.6s, G1 pause
+    outliers) while 24g stays flat at 5.4-6.9s — a heap sized to the
+    working set beats a heap sized to the host, and the balance stays
+    available to the OS page cache the parquet scans live off. The cap
+    matters on small hosts: a 24g default on a 15 GB host let one
+    driver grow until the kernel's OOM killer ended it. On a real
+    cluster this is executor memory sizing, same rule."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, phys_bytes // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "pgsync_spark",
     master: str | None = None,
@@ -47,14 +68,7 @@ def get_spark(
         # driver testdata stores some timestamps as TIMESTAMP(NANOS) which
         # Spark's vectorized reader rejects; read as long, Catalog converts
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # NOT the whole machine: paired 8-batch CDC profiles at sf0.1
-        # showed a 90g heap spiking individual batches 3-5x (7.3-34.6s,
-        # G1 pause outliers) while 24g stays flat at 5.4-6.9s — a heap
-        # sized to the working set beats a heap sized to the host, and
-        # the balance stays available to the OS page cache the parquet
-        # scans live off. On a real cluster this is executor memory
-        # sizing, same rule.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

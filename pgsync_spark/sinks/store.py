@@ -32,8 +32,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .. import caching
-
 
 class DocStore:
     def __init__(self, spark: SparkSession, path: str):
@@ -51,9 +49,9 @@ class DocStore:
     def save(self, engine) -> int:
         """Persist the engine's state as the next version and swap.
 
-        Snapshots: every table the materializer has touched (has a base
-        override or live overlay) writes its CURRENT merged view — the
-        restored catalog then serves post-CDC rows. With a shared
+        Snapshots: every table the materializer holds a snapshot store
+        for writes its CURRENT merged view — the restored catalog then
+        serves post-CDC rows. With a shared
         materializer (SyncRunner), call save on one engine per store
         path; the snapshot set is materializer-wide either way."""
         version = (self._current() or 0) + 1
@@ -63,7 +61,7 @@ class DocStore:
             os.path.join(vdir, "lineage")
         )
         mat = getattr(engine, "materializer", None)
-        touched = sorted(set(mat._base) | set(mat._overlay)) if mat else []
+        touched = mat.tables() if mat else []
         for table in touched:
             engine.catalog.df(table).write.mode("overwrite").parquet(
                 os.path.join(vdir, "tables", table)
@@ -87,7 +85,7 @@ class DocStore:
         """Restore state into an engine; returns False if nothing saved.
 
         Persisted table snapshots re-register into the engine's catalog
-        (and reset the materializer's bookkeeping for those tables), so
+        (through the materializer, whose stores reset onto them), so
         recomputes and further batches run against post-CDC state even
         in a brand-new session/catalog."""
         version = self._current()
@@ -103,19 +101,8 @@ class DocStore:
         mat = getattr(engine, "materializer", None)
         for table in state.get("tables", []):
             df = self.spark.read.parquet(os.path.join(vdir, "tables", table))
-            engine.catalog.register_df(table, df)
             if mat is not None:
-                # release the superseded in-memory state before replacing
-                # it — restoring into a warm engine must not leak the old
-                # base/overlay checkpoint blocks (compact() and the
-                # truncate path release the same way)
-                prev_base = mat._base.get(table)
-                if prev_base is not None:
-                    caching.release_local_checkpoint(prev_base)
-                prev_overlay = mat._overlay.pop(table, None)
-                if prev_overlay is not None:
-                    caching.release_local_checkpoint(prev_overlay)
-                mat._base[table] = df
-                mat._overlay_rows[table] = 0
-                mat._applies[table] = 0
+                mat.restore(table, df)
+            else:
+                engine.catalog.register_df(table, df)
         return True

@@ -7,11 +7,12 @@ parses PostgreSQL test_decoding text into exactly this shape,
 ref: pgsync/base.py:1115-1176 — we skip the text parsing and consume
 structured events, as a Debezium-style source would deliver).
 
-``TableMaterializer`` applies a batch of events to per-table snapshot
-DataFrames (bronze-layer maintenance): UPDATE/DELETE match on the old
-image's PK, INSERT/UPDATE append the new image. All DataFrame ops —
-anti-join by key + union — the Delta-less MERGE equivalent; on a real
-deployment this is a Delta/Iceberg MERGE INTO keyed on the PK.
+``TableMaterializer`` applies a batch of events to per-table bronze
+snapshots: UPDATE/DELETE remove the old image's PK, INSERT/UPDATE add
+the new image. Each snapshot is a ``KeyedOverlay`` store (the one
+base + overlay design, operators/overlay.py) — the Delta-less MERGE
+equivalent; on a real deployment this is a Delta/Iceberg MERGE INTO
+keyed on the PK.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ from pyspark.sql import types as T
 
 from .. import caching, exc
 from ..catalog import Catalog
-from ..operators.joins import maybe_broadcast
+from ..operators.joins import BROADCAST_ROW_LIMIT
+from ..operators.overlay import LIVE, KeyedOverlay, apply_parallel
 
 INSERT, UPDATE, DELETE, TRUNCATE = "INSERT", "UPDATE", "DELETE", "TRUNCATE"
 TG_OPS = (INSERT, UPDATE, DELETE, TRUNCATE)
@@ -123,47 +125,30 @@ def _typed_image(
 
 
 class TableMaterializer:
-    """Keeps per-table snapshots current by applying CDC batches.
+    """Keeps per-table bronze snapshots current by applying CDC batches.
 
-    Overlay design — per-batch cost is proportional to BATCH size, not
-    table size. Each table keeps a fixed ``base`` (initially the raw
-    parquet scan, so predicate pushdown and column pruning still reach
-    the files) plus a small eagerly-checkpointed ``overlay``: one row
-    per key changed since the last compaction, flagged ``__live`` (new
-    image present) or tombstone (DELETEd). The registered snapshot view
-    is::
-
-        base ⟕anti overlay-keys  ∪  overlay[__live]
-
-    Reads re-execute only a broadcast anti-join over the base scan —
-    cheap and pipelined; the base is never rewritten per batch. Every
-    ``compact_every`` applies the view folds into a new base checkpoint
-    and the overlay resets (Delta/Iceberg analog: MERGE appends deletion
-    vectors + new files per batch, OPTIMIZE compacts on a cadence).
-    Superseded checkpoints release immediately — steady-state storage is
-    one base + one bounded overlay per table. An earlier design
-    rewrote the full merged snapshot per batch: correct, but a 600k-row
-    lineitem rewrite for a 50-event batch is the wrong cost shape at
-    scale.
+    Each touched table's snapshot is one ``KeyedOverlay`` keyed on its
+    primary key (operators/overlay.py has the store design: base,
+    flagged overlay, depth-1 view, compaction). The base starts as the
+    raw parquet scan, so predicate pushdown and column pruning still
+    reach the files; the catalog serves the store's view. What is
+    bronze-specific lives here: the last-write-wins fold of a batch's
+    events into one action per key, the TRUNCATE cut, and catalog
+    registration. A touched table's key bound grows by 2 per event (old
+    pk + new pk on a pk change).
     """
 
-    OVERLAY_FLAG = "__live"
     # event-order metadata riding through the LWW fold; reserved names
     # so a synced table's own columns can never collide with them
     META_COLS = ("__cdc_txid", "__cdc_seq", "__cdc_sub")
-    # overlays larger than this always trigger compaction regardless of
-    # cadence (bounds the snapshot view's anti-join for big batches)
-    OVERLAY_ROW_CAP = 65_536
+    # overlays whose key bound passes this always compact, regardless
+    # of cadence (keeps the snapshot view's anti-join broadcast)
+    OVERLAY_ROW_CAP = BROADCAST_ROW_LIMIT
 
     def __init__(self, catalog: Catalog, compact_every: int = 8):
         self.catalog = catalog
         self.compact_every = compact_every
-        self._applies: dict[str, int] = {}
-        self._base: dict[str, DataFrame] = {}
-        self._overlay: dict[str, DataFrame] = {}
-        # upper bound of overlay rows (accumulated event counts) — the
-        # broadcast guard for the view's anti-join
-        self._overlay_rows: dict[str, int] = {}
+        self._stores: dict[str, KeyedOverlay] = {}
         # per-table prebuilt Column trees for the LWW fold (dead/live
         # projections, window spec) — they depend only on the table's
         # schema, which truncate (limit(0)) and compact (re-checkpoint)
@@ -173,14 +158,13 @@ class TableMaterializer:
 
     def _fold_exprs_for(self, table: str, base: DataFrame) -> tuple:
         """(pks, dead_cond, dead_sel, live_cond, live_sel, window) for
-        ``table`` — the event→overlay fold expressions, cached. The
+        ``table`` — the event→action fold expressions, cached. The
         dead/live selects fuse _typed_image's projection with the
-        overlay-shape projection (one Project; same resolved tree)."""
+        action-shape projection (one Project; same resolved tree)."""
         cached = self._fold_exprs.get(table)
         if cached is not None:
             return cached
-        flag = self.OVERLAY_FLAG
-        reserved = set(self.META_COLS) | {flag}
+        reserved = set(self.META_COLS) | {LIVE}
         if reserved & set(base.columns):
             raise exc.SchemaError(
                 f"table {table!r} has columns colliding with CDC "
@@ -194,11 +178,11 @@ class TableMaterializer:
             if c in pks
             else F.lit(None).cast(dtypes[c]).alias(c)
             for c in base.columns
-        ] + [F.lit(False).alias(flag), *meta, F.lit(0).alias("__cdc_sub")]
+        ] + [F.lit(False).alias(LIVE), *meta, F.lit(0).alias("__cdc_sub")]
         live_sel = [
             F.col("new").getItem(c).cast(dtypes[c]).alias(c)
             for c in base.columns
-        ] + [F.lit(True).alias(flag), *meta, F.lit(1).alias("__cdc_sub")]
+        ] + [F.lit(True).alias(LIVE), *meta, F.lit(1).alias("__cdc_sub")]
         w = Window.partitionBy(*pks).orderBy(
             *[F.col(c).desc() for c in self.META_COLS]
         )
@@ -213,64 +197,65 @@ class TableMaterializer:
         self._fold_exprs[table] = out
         return out
 
-    def _snapshot_view(self, table: str, pks: list[str]) -> DataFrame:
-        base = self._base[table]
-        overlay = self._overlay.get(table)
-        if overlay is None:
-            return base
-        keys = overlay.select(*pks)
-        bound = self._overlay_rows.get(table)
-        return base.join(
-            maybe_broadcast(keys, known_rows=bound), on=pks, how="left_anti"
-        ).unionByName(
-            overlay.filter(F.col(self.OVERLAY_FLAG)).drop(self.OVERLAY_FLAG)
+    def tables(self) -> list[str]:
+        """The tables holding a CDC-maintained (or restored) snapshot."""
+        return sorted(self._stores)
+
+    def store(self, table: str) -> KeyedOverlay | None:
+        """``table``'s snapshot store, None while it still reads the
+        raw source."""
+        return self._stores.get(table)
+
+    def restore(self, table: str, df: DataFrame) -> None:
+        """Serve ``df`` (a persisted snapshot) as ``table``: the
+        table's store resets onto it, releasing its owned frames —
+        restoring into a warm engine must not leak them."""
+        store = self._stores.get(table)
+        if store is None:
+            self._stores[table] = self._new_store(table, df)
+        else:
+            store.reset(df)
+        self.catalog.register_df(table, df)
+
+    def _new_store(self, table: str, base: DataFrame) -> KeyedOverlay:
+        return KeyedOverlay(
+            base,
+            list(self.catalog.primary_key(table)),
+            compact_every=self.compact_every,
+            row_cap=self.OVERLAY_ROW_CAP,
         )
 
     def release(self) -> None:
-        """Free every checkpoint this materializer owns (bases that
-        replaced the raw scans, all overlays) and restore the catalog's
-        raw-source resolution for the touched tables. Engines that own
-        their materializer call this from teardown — without it, a
-        process cycling engines (a multi-section benchmark, a re-synced
-        daemon) accumulates superseded snapshot blocks until GC pressure
-        shows up as multi-second batch outliers (measured)."""
-        for table, df in self._base.items():
-            caching.release_local_checkpoint(df)  # no-op for raw scans
+        """Free every checkpoint this materializer owns and restore the
+        catalog's raw-source resolution for the touched tables. Engines
+        that own their materializer call this from teardown — without
+        it, a process cycling engines (a multi-section benchmark, a
+        re-synced daemon) accumulates superseded snapshot blocks until
+        GC pressure shows up as multi-second batch outliers (measured)."""
+        for table, store in self._stores.items():
+            store.release()
             self.catalog.unregister(table)
-        for df in self._overlay.values():
-            caching.release_local_checkpoint(df)
-        self._base.clear()
-        self._overlay.clear()
-        self._overlay_rows.clear()
-        self._applies.clear()
+        self._stores.clear()
 
-    def compact(self, table: str, defer_release: list | None = None) -> None:
-        """Fold base+overlay into a fresh base checkpoint, release the
-        superseded frames (OPTIMIZE analog).
-
-        ``defer_release``: when the caller has OTHER jobs concurrently
-        scanning the pre-compaction snapshot view (process_batch's
-        resolve wave), superseded frames are appended there instead of
-        released — localCheckpoint blocks have no lineage, so an
-        unpersist racing an in-flight scan would lose blocks
-        unrecoverably. The caller releases after its wave completes."""
-        release = (
+    @staticmethod
+    def _release_sink(defer_release: list | None):
+        return (
             defer_release.append
             if defer_release is not None
             else caching.release_local_checkpoint
         )
-        pks = list(self.catalog.primary_key(table))
-        new_base = self._snapshot_view(table, pks).localCheckpoint(eager=True)
-        old_base = self._base.get(table)
-        if old_base is not None:
-            release(old_base)
-        overlay = self._overlay.pop(table, None)
-        if overlay is not None:
-            release(overlay)
-        self._base[table] = new_base
-        self._overlay_rows[table] = 0
-        self._applies[table] = 0
-        self.catalog.register_df(table, new_base)
+
+    def compact(self, table: str, defer_release: list | None = None) -> None:
+        """Fold ``table``'s store into a fresh base checkpoint and serve
+        it (OPTIMIZE analog).
+
+        ``defer_release``: when the caller has OTHER jobs concurrently
+        scanning the pre-compaction snapshot view (process_batch's
+        resolve wave), superseded frames are appended there instead of
+        released; the caller releases after its wave completes."""
+        store = self._stores[table]
+        store.compact(release=self._release_sink(defer_release))
+        self.catalog.register_df(table, store.view())
 
     def apply(
         self,
@@ -285,11 +270,11 @@ class TableMaterializer:
         action for its old-image PK (UPDATE/DELETE) and/or a *live*
         action carrying its new image (INSERT/UPDATE); the latest
         action per key — ordered by txid, then in-batch sequence —
-        decides whether that key is a live overlay row or a tombstone.
-        This matches the reference, which applies events in stream
-        order (ref: pgsync/sync.py:1855-1888 run grouping), so
+        decides whether that key gets a replacement row or only its
+        tombstone. This matches the reference, which applies events in
+        stream order (ref: pgsync/sync.py:1855-1888 run grouping), so
         INSERT→UPDATE→UPDATE on one key in a single micro-batch yields
-        exactly the final image and UPDATE→DELETE yields a tombstone.
+        exactly the final image and UPDATE→DELETE yields a delete.
         TRUNCATE empties the table as of its stream position: events
         ordered AFTER the last TRUNCATE still apply (a batch of
         TRUNCATE→INSERT keeps the re-inserted rows, exactly as serial
@@ -310,9 +295,11 @@ class TableMaterializer:
         ``table`` / ``n`` / ``has_trunc``) when the caller already
         aggregated them (process_batch folds them into the events
         checkpoint via observe) — skips this method's own aggregation
-        action. Per touched table the only job is the small overlay
-        checkpoint, and all touched tables' checkpoints are submitted
-        in ONE concurrent wave."""
+        action. ``defer_release``: as for :meth:`compact` — required
+        whenever the caller runs apply() concurrently with jobs that
+        still scan the PRE-batch snapshot views. Per touched table the
+        only job is its overlay checkpoint, and all touched tables'
+        checkpoints are submitted in ONE concurrent wave."""
         if not materialized:
             # decouple from micro-batch source files that vanish after
             # the epoch
@@ -324,41 +311,26 @@ class TableMaterializer:
                 F.count(F.lit(1)).alias("n"),
                 F.max((F.col("op") == TRUNCATE).cast("int")).alias("has_trunc"),
             ).collect()
-        # ``defer_release``: superseded checkpoint frames append here
-        # instead of releasing immediately — required whenever the
-        # caller runs apply() concurrently with other jobs that still
-        # scan the PRE-batch snapshot views (see compact()'s docstring).
-        release = (
-            defer_release.append
-            if defer_release is not None
-            else caching.release_local_checkpoint
-        )
-        # phase 1 — build every touched table's merged overlay LAZILY
-        pending: list[tuple[str, int, DataFrame, DataFrame | None]] = []
+        release = self._release_sink(defer_release)
+        tables: list[str] = []
+        applies: list[tuple[KeyedOverlay, DataFrame, int]] = []
         for r in stats:
             table, n_ev, has_trunc = r["table"], r["n"], bool(r["has_trunc"])
             if n_ev == 0 and not has_trunc:
                 continue
             snap = self.catalog.df(table)
-            if table not in self._base:
-                self._base[table] = snap
+            store = self._stores.get(table)
+            if store is None:
+                store = self._stores[table] = self._new_store(table, snap)
             pks, dead_cond, dead_sel, live_cond, live_sel, w = (
-                self._fold_exprs_for(table, self._base[table])
+                self._fold_exprs_for(table, snap)
             )
             ev = events.filter(F.col("table") == table)
-            prev = self._overlay.get(table)
             if has_trunc:
-                # TRUNCATE empties base + overlay as of its stream
+                # TRUNCATE empties the snapshot as of its stream
                 # position (ref: _truncate_op); only events ordered
                 # after the LAST truncate survive into the LWW fold
-                old_base = self._base[table]
-                self._base[table] = snap.limit(0)
-                release(old_base)
-                if prev is not None:
-                    release(prev)
-                    self._overlay.pop(table)
-                    prev = None
-                self._overlay_rows[table] = 0
+                store.reset(snap.limit(0), release=release)
                 cut = ev.filter(F.col("op") == TRUNCATE).select(
                     F.max(
                         F.struct(
@@ -382,47 +354,18 @@ class TableMaterializer:
             dead = ev.filter(dead_cond).select(*dead_sel)
             live = ev.filter(live_cond).select(*live_sel)
             # one window shuffle over a batch-sized frame: last action
-            # per key wins (LWW)
-            delta = (
+            # per key wins (LWW), a live winner replaces the key's rows
+            winners = (
                 dead.unionByName(live)
                 .withColumn("__cdc_rn", F.row_number().over(w))
                 .filter(F.col("__cdc_rn") == 1)
                 .drop("__cdc_rn", *self.META_COLS)
             )
-            # ≤ 2 distinct keys per event (old pk + new pk)
-            if prev is not None:
-                merged = prev.join(
-                    maybe_broadcast(delta.select(*pks), known_rows=2 * n_ev),
-                    on=pks,
-                    how="left_anti",
-                ).unionByName(delta)
+            tables.append(table)
+            applies.append((store, store.flagged_winners(winners), 2 * n_ev))
+        apply_parallel(applies, release=release)
+        for table, (store, *_rest) in zip(tables, applies):
+            if store.compact_due:
+                self.compact(table, defer_release=defer_release)
             else:
-                merged = delta
-            pending.append((table, n_ev, merged, prev))
-        if not pending:
-            return
-        # phase 2 — ONE concurrent checkpoint wave over all touched
-        # tables (serial per-table round-trips dominated batch time)
-        overlays = caching.local_checkpoint_parallel([m for _, _, m, _ in pending])
-        compact_tables = []
-        for (table, n_ev, _m, prev), overlay in zip(pending, overlays):
-            if prev is not None:
-                release(prev)
-            self._overlay[table] = overlay
-            # ≤ 2 overlay keys per event (old pk + new pk on a pk change)
-            self._overlay_rows[table] = self._overlay_rows.get(table, 0) + 2 * n_ev
-            self._applies[table] = self._applies.get(table, 0) + 1
-            # compact on cadence OR when the overlay outgrows the batch —
-            # a run of large batches must not grow the per-read anti-join
-            # between cadence points (size analog of Delta's OPTIMIZE
-            # trigger; keeps steady-state read cost O(batch), not O(run))
-            if (
-                self._applies[table] >= self.compact_every
-                or self._overlay_rows[table] > max(8 * n_ev, self.OVERLAY_ROW_CAP)
-            ):
-                compact_tables.append(table)
-            else:
-                pks = list(self.catalog.primary_key(table))
-                self.catalog.register_df(table, self._snapshot_view(table, pks))
-        for table in compact_tables:
-            self.compact(table, defer_release=defer_release)
+                self.catalog.register_df(table, store.view())

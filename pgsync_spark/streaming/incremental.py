@@ -27,12 +27,9 @@ Spark-first shape of each reference mechanism:
   a child marks every doc referencing the table, TRUNCATE of the root
   empties the store.
 
-The doc store and lineage index are ``KeyedOverlay`` frames (base +
-batch-sized overlay, depth-1 read view, compacted on a cadence), so a
-batch's store maintenance costs O(batch + overlay) — never a full
-store rewrite. On a cluster the stores are Delta/Iceberg tables:
-overlay apply ≙ MERGE, compaction ≙ OPTIMIZE; the semantics are
-identical.
+The doc store and lineage index are ``KeyedOverlay`` stores
+(operators/overlay.py), like the bronze snapshots, so a batch's store
+maintenance costs O(batch + overlay) — never a full store rewrite.
 """
 
 from __future__ import annotations
@@ -300,15 +297,10 @@ class IncrementalEngine:
                     (is_t & (F.col("op") == TRUNCATE)).cast("int")
                 ).alias(f"nt_{i}"),
             ]
-        # doc store and lineage reverse index: base + batch-sized keyed
-        # overlay (KeyedOverlay), so a batch's store maintenance costs
-        # O(batch + overlay), never O(store). An earlier design
-        # re-checkpointed the full anti-join∪union store every batch —
-        # correct, but a 150k-doc store rewrite for a 3.3k-event batch
-        # is the wrong cost shape at scale (the read view here stays
-        # depth-1, avoiding the fragment-chain re-evaluation that made
-        # lazy store chains spike in earlier measurements). Cluster
-        # mapping: Delta/Iceberg MERGE per batch + OPTIMIZE on cadence.
+        # doc store and lineage reverse index, keyed on _id. An earlier
+        # design re-checkpointed the full store every batch — correct,
+        # but a 150k-doc store rewrite for a 3.3k-event batch is the
+        # wrong cost shape at scale.
         self._docs_store: KeyedOverlay | None = None
         self._lineage_store: KeyedOverlay | None = None
         # the full-sync combined checkpoint backs BOTH stores' initial
@@ -382,14 +374,7 @@ class IncrementalEngine:
 
     @docs.setter
     def docs(self, df: DataFrame | None) -> None:
-        if df is None:
-            self._docs_store = None
-        elif self._docs_store is None:
-            self._docs_store = KeyedOverlay(
-                df, ["_id"], compact_every=self.STORE_COMPACT_EVERY
-            )
-        else:
-            self._docs_store.reset(df)
+        self._docs_store = self._store_onto(self._docs_store, df)
         self._maybe_release_shared()
 
     @property
@@ -402,15 +387,20 @@ class IncrementalEngine:
 
     @lineage.setter
     def lineage(self, df: DataFrame | None) -> None:
-        if df is None:
-            self._lineage_store = None
-        elif self._lineage_store is None:
-            self._lineage_store = KeyedOverlay(
-                df, ["_id"], compact_every=self.STORE_COMPACT_EVERY
-            )
-        else:
-            self._lineage_store.reset(df)
+        self._lineage_store = self._store_onto(self._lineage_store, df)
         self._maybe_release_shared()
+
+    def _store_onto(
+        self, store: KeyedOverlay | None, df: DataFrame | None
+    ) -> KeyedOverlay | None:
+        """The doc/lineage store holding ``df``: ``store`` reset onto
+        it, or a new store keyed on ``_id``."""
+        if df is None:
+            return None
+        if store is None:
+            return KeyedOverlay(df, ["_id"], compact_every=self.STORE_COMPACT_EVERY)
+        store.reset(df)
+        return store
 
     def _teardown_stores(self) -> None:
         for store in (self._docs_store, self._lineage_store):
@@ -484,12 +474,8 @@ class IncrementalEngine:
         )
         docs, lineage, combined = materialize_combined(combined_plan, keys_cols)
         self._teardown_stores()
-        self._docs_store = KeyedOverlay(
-            docs, ["_id"], compact_every=self.STORE_COMPACT_EVERY
-        )
-        self._lineage_store = KeyedOverlay(
-            lineage, ["_id"], compact_every=self.STORE_COMPACT_EVERY
-        )
+        self._docs_store = self._store_onto(None, docs)
+        self._lineage_store = self._store_onto(None, lineage)
         self._shared_base = combined
         return self.docs
 
@@ -1036,14 +1022,19 @@ class IncrementalEngine:
             # recompute simply has no replacement rows — the implicit
             # delete). New-insert ids ride in via the rows side; they were
             # never in the base, so the touched-key anti-join is exact.
-            # Both stores' overlay checkpoints go out in ONE concurrent wave
-            # (4 serial driver round-trips → 1).
-            apply_overlays_parallel(
-                [
-                    (self._docs_store, affected_ids, new_docs, n_affected),
-                    (self._lineage_store, affected_ids, new_lineage, n_affected),
-                ]
-            )
+            # Both stores' overlay checkpoints (one each) go out in ONE
+            # concurrent wave.
+            applies = [
+                (store, store.flagged(affected_ids, rows), n_affected)
+                for store, rows in (
+                    (self._docs_store, new_docs),
+                    (self._lineage_store, new_lineage),
+                )
+            ]
+            apply_overlays_parallel(applies)
+            for store, *_rest in applies:
+                if store.compact_due:
+                    store.compact()
             mark("stores_overlay")
             self._maybe_release_shared()
             if self.doc_consumers:

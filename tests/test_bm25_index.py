@@ -826,6 +826,37 @@ def test_analyzer_three_form_parity_property():
     check()
 
 
+def test_whitespace_tokens_agree_across_spark_duckdb_python(spark):
+    """The whitespace tokenizer's three mirrors split on exactly Java's
+    \\s class [ \\t\\n\\x0b\\f\\r]: RE2's \\s lacks \\x0b, and
+    Python's str.split() also splits on \\x85, \\xa0 and \\x1c-\\x1f
+    — an index built in one engine would then disagree with its
+    oracle or its driver-side query terms."""
+    import duckdb
+
+    from pgsync_spark.functions.hashing import (
+        analyze_py,
+        tokens_sparksql,
+        tokens_sql,
+    )
+
+    text = "A\tb\nc\x0bd\x0ce\rf\x85g\xa0h\x1ci\x1dj\x1ek\x1fl  m "
+    want = ["a", "b", "c", "d", "e", "f\x85g\xa0h\x1ci\x1dj\x1ek\x1fl", "m"]
+    got_spark = (
+        spark.createDataFrame([(text,)], "text string")
+        .selectExpr(f"{tokens_sparksql('text')} AS tok")
+        .collect()[0]["tok"]
+    )
+    con = duckdb.connect()
+    try:
+        got_duck = con.execute("SELECT " + tokens_sql("?"), [text]).fetchone()[0]
+    finally:
+        con.close()
+    assert got_spark == want
+    assert got_duck == want
+    assert analyze_py(text, "whitespace") == want
+
+
 def test_standard_stem_analyzer_plural_matches_singular(spark, tmp_path):
     """r11 verdict item 5: the "standard_stem" analyzer (standard_stop
     + the Harman S-removal stemmer) folds plural query terms onto

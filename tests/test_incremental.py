@@ -529,7 +529,7 @@ def test_overlay_size_cap_triggers_compaction(spark, engine):
     # before the apply cadence (compact_every=8) was reached, and the
     # bound counter stayed small
     assert "orders" in compactions
-    assert mat._overlay_rows.get("orders", 0) <= 8
+    assert mat.store("orders").key_bound <= 8
     rows = engine.catalog.df("orders").filter(F.col("o_orderkey") == 17).collect()
     assert len(rows) == 1 and rows[0]["o_orderpriority"] == "C-4"
     assert _docs_equal(
@@ -869,7 +869,7 @@ def test_materializer_defer_release_keeps_blocks_alive(spark):
         )
 
     mat.apply(batch(1, "A"))  # creates the first overlay
-    first_overlay = mat._overlay["orders"]
+    first_overlay = mat.store("orders").overlay
     deferred = []
     mat.apply(batch(2, "B"), defer_release=deferred)
     # the superseded overlay was deferred, not released: still readable
@@ -880,9 +880,55 @@ def test_materializer_defer_release_keeps_blocks_alive(spark):
     assert row["o_orderpriority"] == "B"
     caching.release_local_checkpoints(deferred)
     # immediate mode: a third apply with no defer list releases inline
-    second_overlay = mat._overlay["orders"]
+    second_overlay = mat.store("orders").overlay
     mat.apply(batch(3, "C"))
-    assert mat._overlay["orders"] is not second_overlay
+    assert mat.store("orders").overlay is not second_overlay
+
+
+def test_bronze_overlay_checkpoint_runs_the_lww_window_once(spark, monkeypatch):
+    """A bronze apply's overlay checkpoint reads the batch's LWW fold
+    twice (the merge's touched-key guard and its union); both readers
+    must share ONE window exchange — the final executed plan holds one
+    hashpartitioning Exchange, the other reader a ReusedExchange."""
+    from pgsync_spark import caching
+    from pgsync_spark.streaming.cdc import TableMaterializer
+
+    mat = TableMaterializer(Catalog(spark, SF_DIR), compact_every=99)
+    lazy: list = []
+    wave = caching.local_checkpoint_parallel
+    monkeypatch.setattr(
+        caching,
+        "local_checkpoint_parallel",
+        lambda frames: lazy.extend(frames) or wave(frames),
+    )
+
+    def batch(txid, prio):
+        return payloads_from_rows(
+            spark,
+            [
+                {"op": "UPDATE", "table": "orders",
+                 "old": {"o_orderkey": "7"},
+                 "new": {"o_orderkey": "7", "o_orderpriority": prio},
+                 "txid": txid},
+                {"op": "INSERT", "table": "orders",
+                 "new": {"o_orderkey": "999999", "o_orderpriority": prio},
+                 "txid": txid},
+            ],
+        )
+
+    mat.apply(batch(1, "A"))
+    deferred: list = []
+    mat.apply(batch(2, "B"), defer_release=deferred)  # keeps the guard's input
+    merged = lazy[-1]
+    assert sum(r["__live"] for r in merged.collect()) == 2
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    windows = [ln for ln in final if "Exchange hashpartitioning" in ln]
+    assert len([ln for ln in windows if "ReusedExchange" not in ln]) == 1, plan
+    assert any("ReusedExchange" in ln for ln in windows), plan
+    caching.release_local_checkpoints(deferred)
+    mat.release()
 
 
 @pytest.mark.slow

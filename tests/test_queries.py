@@ -787,7 +787,10 @@ def test_text_kernels_read_the_same_under_escaped_literals(spark, escaped):
     — a backslash in one reads differently under each (a '\\\\s+'
     split pattern returned a whole document as ONE token, no error).
     Tokens, every analyzer, h32, perm and combine_shingles are checked
-    against the driver-side Python mirrors."""
+    against the driver-side Python mirrors; a root-filter value and a
+    BM25Index.topk term holding both a quote and a backslash must
+    match the row that holds them."""
+    from pgsync_spark.functions.bm25_index import BM25Index
     from pgsync_spark.functions.hashing import (
         ANALYZERS,
         MERSENNE_P,
@@ -802,6 +805,7 @@ def test_text_kernels_read_the_same_under_escaped_literals(spark, escaped):
         perm_sparksql,
         tokens_sparksql,
     )
+    from pgsync_spark.operators.filters import filters_to_spark_sql
 
     texts = [
         "Hello  big\tWorld's\nend of\x0bthe\x0cline\rnow",
@@ -809,6 +813,15 @@ def test_text_kernels_read_the_same_under_escaped_literals(spark, escaped):
         "",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
+    odd = "it's\\b"
+    named = spark.createDataFrame([(1, odd), (2, "its ab")], "id int, name string")
+    idx = BM25Index(spark)
+    idx.ingest(
+        spark.createDataFrame(
+            [(1, f"{odd} plain", "en", "s0"), (2, "plain its ab", "en", "s0")],
+            "doc_id bigint, text string, lang string, source string",
+        )
+    )
     key = "spark.sql.parser.escapedStringLiterals"
     prev = spark.conf.get(key)
     spark.conf.set(key, escaped)
@@ -832,8 +845,14 @@ def test_text_kernels_read_the_same_under_escaped_literals(spark, escaped):
             )
             .collect()
         )
+        pred = filters_to_spark_sql([{"name": odd}], dict(named.dtypes))
+        filtered = [r["id"] for r in named.filter(pred).collect()]
+        hits = [r["doc_id"] for r in idx.topk((odd,)).collect()]
     finally:
         spark.conf.set(key, prev)
+        idx.close()
+    assert filtered == [1], (escaped, pred)
+    assert hits == [1], escaped
     by_text = {r["text"]: r for r in rows}
     assert len(by_text) == len(texts)
     for t, r in by_text.items():

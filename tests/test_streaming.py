@@ -389,3 +389,63 @@ def test_docstore_restores_snapshots_into_fresh_catalog(spark, tmp_path):
     assert eng2.checkpoint == 91
     doc = eng2.docs.filter(F.col("_id") == "27").collect()[0]["doc"]
     assert "P-AGAIN" in doc
+
+
+def test_docstore_load_into_warm_engine(spark, tmp_path):
+    """DocStore.load into a WARM engine — one holding its own full-sync
+    stores and a live bronze overlay on the saved table — serves the
+    restored rows, applies the next batch on top, and releases every
+    checkpoint the warm state held: afterwards the session holds the
+    same persistent RDDs as after loading into a fresh engine (which
+    adds none)."""
+    from pgsync_spark.sinks.store import DocStore
+    from pgsync_spark.streaming import payloads_from_rows
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    tree = schemas.tree("orders_full")
+    cat = Catalog(spark, SF_DIR)
+    row = cat.df("orders").filter(F.col("o_orderkey") == 27).collect()[0].asDict()
+
+    def update(prio: str, txid: int):
+        return payloads_from_rows(
+            spark,
+            [{"op": "UPDATE", "table": "orders", "old": {"o_orderkey": 27},
+              "new": dict(row, o_orderpriority=prio), "txid": txid}],
+        )
+
+    src = IncrementalEngine(spark, tree, cat)
+    src.full_sync()
+    src.process_batch(update("P-SAVED", 90))
+    store = DocStore(spark, str(tmp_path / "store"))
+    store.save(src)
+
+    before = persisted()
+    warm = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+    warm.full_sync()
+    warm.process_batch(update("P-WARM", 91))
+    assert warm.materializer.store("orders").overlay is not None
+    assert persisted() - before  # the warm state holds checkpoints
+    assert store.load(warm)
+    assert persisted() - before == set()
+    fresh = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+    after_warm = persisted()
+    assert store.load(fresh)
+    assert persisted() - after_warm == set()
+
+    # the restored rows are served: bronze snapshot and docs
+    snap = warm.catalog.df("orders").filter(F.col("o_orderkey") == 27).collect()
+    assert [r["o_orderpriority"] for r in snap] == ["P-SAVED"]
+    assert warm.checkpoint == 90
+    full = compile_assembled(warm.catalog, tree)[0]
+    assert warm.docs.select("_id", "doc").subtract(full).count() == 0
+    assert full.subtract(warm.docs.select("_id", "doc")).count() == 0
+    # and the next batch applies on top of them
+    warm.process_batch(update("P-NEXT", 92))
+    snap = warm.catalog.df("orders").filter(F.col("o_orderkey") == 27).collect()
+    assert [r["o_orderpriority"] for r in snap] == ["P-NEXT"]
+    doc = warm.docs.filter(F.col("_id") == "27").collect()[0]["doc"]
+    assert "P-NEXT" in doc
+    for eng in (src, warm, fresh):
+        eng._teardown_stores()
