@@ -169,8 +169,6 @@ class KeyedOverlay:
         touched-key count — the merge's broadcast guard, accumulated
         into the view's."""
         apply_parallel([(self, self.flagged(touched_keys, rows), key_bound)])
-        if self.compact_due:
-            self.compact()
 
     def compact(self, release: Release | None = None) -> None:
         """Fold base+overlay into a fresh base checkpoint (OPTIMIZE
@@ -206,15 +204,21 @@ class KeyedOverlay:
 def apply_parallel(
     applies: list[tuple[KeyedOverlay, DataFrame, int]],
     release: Release | None = None,
+    compact: Callable[[KeyedOverlay], object] | None = None,
 ) -> None:
     """Apply one batch to SEVERAL stores: one overlay checkpoint per
     store, all submitted in ONE concurrent wave. Each entry is
     (store, flagged rows, key_bound); the stores must be distinct and
-    their inputs independent. Compaction is left to the caller (read
-    ``compact_due``)."""
+    their inputs independent. Then every store whose ``compact_due``
+    holds is compacted through ``compact`` (default: its own
+    :meth:`KeyedOverlay.compact` with ``release``)."""
     release = release or caching.release_local_checkpoint
     merged = [store._merged(new, bound) for store, new, bound in applies]
     for (store, _new, bound), ck in zip(
         applies, caching.local_checkpoint_parallel(merged)
     ):
         store._commit(ck, bound, release)
+    compact = compact or (lambda store: store.compact(release))
+    for store, _new, _bound in applies:
+        if store.compact_due:
+            compact(store)

@@ -21,9 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import caching, exc
+from .. import exc
 from ..catalog import Catalog
-from ..operators.joins import BROADCAST_ROW_LIMIT
 from ..operators.overlay import LIVE, KeyedOverlay, apply_parallel
 
 INSERT, UPDATE, DELETE, TRUNCATE = "INSERT", "UPDATE", "DELETE", "TRUNCATE"
@@ -141,9 +140,6 @@ class TableMaterializer:
     # event-order metadata riding through the LWW fold; reserved names
     # so a synced table's own columns can never collide with them
     META_COLS = ("__cdc_txid", "__cdc_seq", "__cdc_sub")
-    # overlays whose key bound passes this always compact, regardless
-    # of cadence (keeps the snapshot view's anti-join broadcast)
-    OVERLAY_ROW_CAP = BROADCAST_ROW_LIMIT
 
     def __init__(self, catalog: Catalog, compact_every: int = 8):
         self.catalog = catalog
@@ -222,7 +218,6 @@ class TableMaterializer:
             base,
             list(self.catalog.primary_key(table)),
             compact_every=self.compact_every,
-            row_cap=self.OVERLAY_ROW_CAP,
         )
 
     def release(self) -> None:
@@ -237,14 +232,6 @@ class TableMaterializer:
             self.catalog.unregister(table)
         self._stores.clear()
 
-    @staticmethod
-    def _release_sink(defer_release: list | None):
-        return (
-            defer_release.append
-            if defer_release is not None
-            else caching.release_local_checkpoint
-        )
-
     def compact(self, table: str, defer_release: list | None = None) -> None:
         """Fold ``table``'s store into a fresh base checkpoint and serve
         it (OPTIMIZE analog).
@@ -254,7 +241,9 @@ class TableMaterializer:
         resolve wave), superseded frames are appended there instead of
         released; the caller releases after its wave completes."""
         store = self._stores[table]
-        store.compact(release=self._release_sink(defer_release))
+        store.compact(
+            release=defer_release.append if defer_release is not None else None
+        )
         self.catalog.register_df(table, store.view())
 
     def apply(
@@ -311,8 +300,8 @@ class TableMaterializer:
                 F.count(F.lit(1)).alias("n"),
                 F.max((F.col("op") == TRUNCATE).cast("int")).alias("has_trunc"),
             ).collect()
-        release = self._release_sink(defer_release)
-        tables: list[str] = []
+        release = defer_release.append if defer_release is not None else None
+        table_of: dict[KeyedOverlay, str] = {}
         applies: list[tuple[KeyedOverlay, DataFrame, int]] = []
         for r in stats:
             table, n_ev, has_trunc = r["table"], r["n"], bool(r["has_trunc"])
@@ -361,11 +350,14 @@ class TableMaterializer:
                 .filter(F.col("__cdc_rn") == 1)
                 .drop("__cdc_rn", *self.META_COLS)
             )
-            tables.append(table)
+            table_of[store] = table
             applies.append((store, store.flagged_winners(winners), 2 * n_ev))
-        apply_parallel(applies, release=release)
-        for table, (store, *_rest) in zip(tables, applies):
-            if store.compact_due:
-                self.compact(table, defer_release=defer_release)
-            else:
-                self.catalog.register_df(table, store.view())
+        apply_parallel(
+            applies,
+            release=release,
+            compact=lambda store: self.compact(
+                table_of[store], defer_release=defer_release
+            ),
+        )
+        for store, table in table_of.items():
+            self.catalog.register_df(table, store.view())

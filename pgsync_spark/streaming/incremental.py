@@ -34,6 +34,7 @@ maintenance costs O(batch + overlay) — never a full store rewrite.
 
 from __future__ import annotations
 
+import gc
 from functools import partial
 
 from pyspark.sql import DataFrame, Observation
@@ -1024,17 +1025,13 @@ class IncrementalEngine:
             # never in the base, so the touched-key anti-join is exact.
             # Both stores' overlay checkpoints (one each) go out in ONE
             # concurrent wave.
-            applies = [
+            apply_overlays_parallel([
                 (store, store.flagged(affected_ids, rows), n_affected)
                 for store, rows in (
                     (self._docs_store, new_docs),
                     (self._lineage_store, new_lineage),
                 )
-            ]
-            apply_overlays_parallel(applies)
-            for store, *_rest in applies:
-                if store.compact_due:
-                    store.compact()
+            ])
             mark("stores_overlay")
             self._maybe_release_shared()
             if self.doc_consumers:
@@ -1076,3 +1073,11 @@ class IncrementalEngine:
             # is fully copied out by the time the body ends, and a
             # raising consumer must not leak them either
             caching.release_local_checkpoints(batch_tmp)
+            # py4j caches each method called on a JavaObject in the
+            # object itself (a reference cycle), so the JVM Dataset
+            # behind every frame this batch executed — its plan,
+            # broadcast relations and shuffle state — stays pinned in
+            # the driver until CPython's next full collection, which may
+            # be many batches away. Collecting here releases the batch's
+            # plans at batch end (~70 ms at cdc_search scale).
+            gc.collect()

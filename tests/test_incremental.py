@@ -490,11 +490,10 @@ def test_lww_delete_then_reinsert_lives(spark, engine):
 
 @pytest.mark.slow
 def test_overlay_size_cap_triggers_compaction(spark, engine):
-    """A batch that outgrows OVERLAY_ROW_CAP compacts immediately even
-    though the apply cadence hasn't been reached — a run of large
-    batches must not accumulate an unbounded overlay anti-join."""
+    """A store whose key bound outgrows its row cap compacts
+    immediately even though the apply cadence hasn't been reached — a
+    run of batches must not accumulate an unbounded overlay anti-join."""
     mat = engine.materializer
-    mat.OVERLAY_ROW_CAP = 2  # instance override: tiny cap
     compactions = []
     orig_compact = mat.compact
     mat.compact = lambda table, **kw: (
@@ -515,8 +514,12 @@ def test_overlay_size_cap_triggers_compaction(spark, engine):
         ],
     )
     engine.process_batch(ev)
-    # 2 events -> overlay bound 4 > max(8*2=16? no: cap=2 -> max(16,2)=16)
-    # bound 4 <= 16: no compact. Force with a second batch to exceed 8*n.
+    store = mat.store("orders")
+    assert store.key_bound == 4 and compactions == []
+    # a cap above 4 × the 1-event batches' bound (2), so the cap itself
+    # is the binding term of max(4 × batch bound, cap)
+    store.row_cap = 9
+    bounds = []
     for i in range(5):
         engine.process_batch(payloads_from_rows(
             spark,
@@ -524,12 +527,11 @@ def test_overlay_size_cap_triggers_compaction(spark, engine):
               "old": {"o_orderkey": 17},
               "new": dict(row, o_orderpriority=f"C-{i}"), "txid": 60 + i}],
         ))
-    # cumulative overlay bound (2 per 1-event batch) exceeded
-    # max(8*1, cap=2) mid-run -> size-triggered compaction fired well
-    # before the apply cadence (compact_every=8) was reached, and the
-    # bound counter stayed small
-    assert "orders" in compactions
-    assert mat.store("orders").key_bound <= 8
+        bounds.append(store.key_bound)
+    # bound 6, 8, then 10 > 9 compacts (reset to 0) on the 4th apply,
+    # well before the cadence (compact_every=8); then 2, 4
+    assert compactions == ["orders"]
+    assert bounds == [6, 8, 0, 2, 4]
     rows = engine.catalog.df("orders").filter(F.col("o_orderkey") == 17).collect()
     assert len(rows) == 1 and rows[0]["o_orderpriority"] == "C-4"
     assert _docs_equal(
