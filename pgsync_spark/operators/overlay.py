@@ -44,8 +44,14 @@ from .joins import BROADCAST_ROW_LIMIT, maybe_broadcast
 
 # the overlay flag column; reserved in every store's schema
 LIVE = "__live"
+DEAD = f"NOT {LIVE}"
 
 Release = Callable[[DataFrame], object]
+
+
+def _bt(name: str) -> str:
+    """Backtick-quote an identifier for a SQL fragment."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class KeyedOverlay:
@@ -76,7 +82,7 @@ class KeyedOverlay:
         # the engine know a shared initial base has been superseded
         self.generation = 0
         self._view: DataFrame | None = None
-        self._tomb_sel: list | None = None
+        self._tomb_sql: list[str] | None = None
         self._winner_rows = None
 
     def view(self) -> DataFrame:
@@ -86,13 +92,12 @@ class KeyedOverlay:
             if self.overlay is None:
                 self._view = self.base
             else:
-                live = F.col(LIVE)
-                tombs = self.overlay.filter(~live).select(*self.key_cols)
+                tombs = self.overlay.filter(DEAD).select(*self.key_cols)
                 self._view = self.base.join(
                     maybe_broadcast(tombs, known_rows=self.key_bound),
                     on=self.key_cols,
                     how="left_anti",
-                ).unionByName(self.overlay.filter(live).drop(LIVE))
+                ).unionByName(self.overlay.filter(LIVE).drop(LIVE))
         return self._view
 
     @property
@@ -102,22 +107,24 @@ class KeyedOverlay:
             4 * self._batch_bound, self.row_cap
         )
 
-    def _tombstone(self) -> list:
-        """A tombstone row's columns over a touched-keys frame (cached:
-        the schema outlives compaction and reset)."""
-        if self._tomb_sel is None:
+    def _tombstone(self) -> list[str]:
+        """A tombstone row's columns over a touched-keys frame, as SQL
+        (cached: the schema outlives compaction and reset). Text, not
+        Column trees: building a store's tombstone from Columns cost
+        about 130 py4j round trips, paid on each store's first apply."""
+        if self._tomb_sql is None:
             keys = set(self.key_cols)
-            self._tomb_sel = [
-                F.col(f.name) if f.name in keys
-                else F.lit(None).cast(f.dataType).alias(f.name)
+            self._tomb_sql = [
+                _bt(f.name) if f.name in keys
+                else f"CAST(NULL AS {f.dataType.simpleString()}) AS {_bt(f.name)}"
                 for f in self.base.schema.fields
-            ] + [F.lit(False).alias(LIVE)]
-        return self._tomb_sel
+            ] + [f"false AS {LIVE}"]
+        return self._tomb_sql
 
     def flagged(self, touched_keys: DataFrame, rows: DataFrame) -> DataFrame:
         """One apply's overlay rows: a tombstone per touched key plus
         the replacement ``rows``, flagged."""
-        return touched_keys.select(*self._tombstone()).unionByName(
+        return touched_keys.selectExpr(*self._tombstone()).unionByName(
             rows.withColumn(LIVE, F.lit(True))
         )
 
@@ -129,10 +136,11 @@ class KeyedOverlay:
         merge's touched-key guard and its union) shares one exchange
         below it."""
         if self._winner_rows is None:
-            tomb = F.struct(*self._tombstone())
-            image = F.struct(*self.base.columns, F.lit(True).alias(LIVE))
-            self._winner_rows = F.explode(
-                F.when(F.col(LIVE), F.array(tomb, image)).otherwise(F.array(tomb))
+            tomb = f"struct({', '.join(self._tombstone())})"
+            cols = ", ".join(map(_bt, self.base.columns))
+            image = f"struct({cols}, true AS {LIVE})"
+            self._winner_rows = F.expr(
+                f"explode(IF({LIVE}, array({tomb}, {image}), array({tomb})))"
             ).alias("__row")
         return winners.select(self._winner_rows).select("__row.*")
 
@@ -144,7 +152,7 @@ class KeyedOverlay:
         :meth:`_commit`."""
         if self.overlay is None:
             return new
-        touched = new.filter(~F.col(LIVE)).select(*self.key_cols)
+        touched = new.filter(DEAD).select(*self.key_cols)
         return self.overlay.join(
             maybe_broadcast(touched, known_rows=key_bound),
             on=self.key_cols,

@@ -1079,5 +1079,6 @@ class IncrementalEngine:
             # broadcast relations and shuffle state — stays pinned in
             # the driver until CPython's next full collection, which may
             # be many batches away. Collecting here releases the batch's
-            # plans at batch end (~70 ms at cdc_search scale).
+            # plans at batch end (67-71 ms a call in a 4-core
+            # cdc_search run).
             gc.collect()
