@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import caching
+from ..plans.docs import _bt
 from .joins import BROADCAST_ROW_LIMIT, maybe_broadcast
 
 # the overlay flag column; reserved in every store's schema
@@ -47,11 +48,6 @@ LIVE = "__live"
 DEAD = f"NOT {LIVE}"
 
 Release = Callable[[DataFrame], object]
-
-
-def _bt(name: str) -> str:
-    """Backtick-quote an identifier for a SQL fragment."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 class KeyedOverlay:
