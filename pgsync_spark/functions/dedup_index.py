@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import owned
+from ..plans.sqlgen import ViewScope
 from .dedup import (
     JACCARD_THRESHOLD,
     _band_frame,
@@ -78,14 +79,6 @@ DEFAULT_OVERLAY_CAP = 65536
 # garbage row was the r8 verdict's parity-gap (a), and truncate is
 # table-level, not per-doc (see _AppendOnlyIndex.truncate).
 UPSERT_OPS = ("u", "c", "i", "r", "a")
-
-# per-instance temp-view name prefixes for the one-SQL topk path
-# (BM25Index/VectorIndex) — fresh per index so concurrent indexes in
-# one session never collide
-import itertools
-
-_AIDX_VIEW_IDS = itertools.count()
-
 
 def _fingerprint(sh):
     """md5 of the sorted hashed-shingle set: equal fingerprint <=>
@@ -184,11 +177,11 @@ class _AppendOnlyIndex:
         # epoch's val rows are ALL overlay rows, so the counter updates
         # before the manifest flip that persists it
         self._pending_overlay_delta = False
-        # one-SQL topk support: global temp views over live(keys) and
-        # live(vals), memoized on the parts (and CDC state) so an
-        # unchanged store re-registers nothing (see _parts_view);
-        # names are per-instance so concurrent indexes never collide
-        self._view_prefix = f"__aidx{next(_AIDX_VIEW_IDS)}"
+        # one-SQL topk support: the index's own view registrar — views
+        # over live(keys) and live(vals), memoized on the parts (and CDC
+        # state) so an unchanged store re-registers nothing (see
+        # _parts_view), and the query-side views leased per topk
+        self._views = ViewScope(spark)
         self._topk_views: dict[str, tuple[tuple, str]] = {}
 
     # -- occupancy-tracking hooks (no-ops here) -------------------------------
@@ -1045,29 +1038,9 @@ class _AppendOnlyIndex:
     # with alias-Project wrappers that stay in the plan. Shared
     # subtrees are expanded textually instead.
 
-    def _global_temp_db(self) -> str:
-        try:
-            return self.spark.conf.get(
-                "spark.sql.globalTempDatabase", "global_temp"
-            )
-        except Exception:  # noqa: BLE001
-            return "global_temp"
-
-    def _register_view(self, df: DataFrame, name: str) -> str:
-        """Register ``df`` as a GLOBAL temp view and return the
-        qualified name to reference in SQL text. Global, not session:
-        in foreachBatch the parts frames are bound to the stream's
-        CLONED SparkSession, whose session-temp-view catalog is
-        isolated from ``self.spark`` — a session view registered
-        there is invisible to the index's own spark.sql (found by
-        test_cdc_through_the_streaming_pipeline). The global-temp
-        catalog is application-shared, so every session sees it."""
-        df.createOrReplaceGlobalTempView(name)
-        return f"{self._global_temp_db()}.{name}"
-
     def _parts_view(self, side: str) -> str:
-        """Register (memoized) ``live(side)`` as the global temp view
-        ``{_view_prefix}_{side}``; returns its qualified name. The memo
+        """Register (memoized) ``live(side)`` as the index scope's
+        ``side`` view; returns its qualified name. The memo
         key is the side's parts, plus the vals parts and the CDC flag
         while the fold applies: a keys fold reads the vals overlay, and
         compact() can clear a stale flag without swapping parts. An
@@ -1082,34 +1055,17 @@ class _AppendOnlyIndex:
             and all(a is b for a, b in zip(cur[0], deps))
         ):
             return cur[1]
-        qname = self._register_view(
-            self.live(side), f"{self._view_prefix}_{side}"
-        )
+        qname = self._views.view_for(side, self.live(side))
         # the memoized tuple holds strong refs, so `is` identity above
         # can never alias a released-and-reallocated frame
         self._topk_views[side] = (deps, qname)
         return qname
 
-    def _drop_topk_views(self) -> None:
-        names = [n for (_d, n) in self._topk_views.values()]
-        names.extend(self._extra_view_names())
-        for qname in names:
-            try:
-                self.spark.catalog.dropGlobalTempView(
-                    qname.rsplit(".", 1)[-1]
-                )
-            except Exception:  # noqa: BLE001 — teardown best-effort
-                pass
-        self._topk_views.clear()
-
-    def _extra_view_names(self) -> list[str]:
-        """Subclass hook: extra per-instance temp views to drop."""
-        return []
-
     def close(self) -> None:
         from .. import caching
 
-        self._drop_topk_views()
+        self._views.release()
+        self._topk_views.clear()
         for f in self._key_parts + self._val_parts:
             # in-memory parts are eager localCheckpoints (blocks freed
             # via the RDD); loaded/compacted parts are persisted scans

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..plans.sqlgen import default_scope
 from .hashing import h32, h32_py, h32_sql, round6, round6_sql
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
@@ -95,10 +96,11 @@ def ann_bruteforce_topk(df: DataFrame) -> DataFrame:
     spark.sql over a view of ``df`` (guide §7.3 — the recall-eval
     one-SQL discipline; ~320 py4j round-trips saved per build); values
     pinned to the DuckDB oracle."""
-    return df.sparkSession.sql(
-        f"SELECT query_id, neighbor_id, cosine, rank FROM "
-        f"{_bruteforce_sparksql(_annq_view(df, 'emb'), full=True)}"
-    )
+    with default_scope(df.sparkSession).lease() as view:
+        return df.sparkSession.sql(
+            f"SELECT query_id, neighbor_id, cosine, rank FROM "
+            f"{_bruteforce_sparksql(view(df, 'emb'), full=True)}"
+        )
 
 
 def ann_bruteforce_topk_sql() -> str:
@@ -185,10 +187,11 @@ def ann_lsh_topk(df: DataFrame) -> DataFrame:
     bucket (~1/2^planes of the corpus). Recall < 1 by design; the
     oracle reproduces the same approximation exactly. One spark.sql
     of the recall eval's lsh leg."""
-    return df.sparkSession.sql(
-        "SELECT query_id, neighbor_id, cosine, rank FROM "
-        + _lsh_leg_sparksql(_annq_view(df, "emb"), None, full=True)
-    )
+    with default_scope(df.sparkSession).lease() as view:
+        return df.sparkSession.sql(
+            "SELECT query_id, neighbor_id, cosine, rank FROM "
+            + _lsh_leg_sparksql(view(df, "emb"), None, full=True)
+        )
 
 
 def ann_lsh_topk_sql() -> str:
@@ -230,11 +233,12 @@ def ann_ivf_topk(df: DataFrame) -> DataFrame:
     and the DuckDB oracle reproduces it exactly. One spark.sql of the
     recall eval's ivf leg; the cell-ranking subtree is expanded
     textually at both candidate consumers (assign + qprobe)."""
-    E = _annq_view(df, "emb")
-    return df.sparkSession.sql(
-        "SELECT query_id, neighbor_id, cosine, rank FROM "
-        + _ivf_leg_sparksql(E, f"({_ivf_ranked_sparksql(E)})", full=True)
-    )
+    with default_scope(df.sparkSession).lease() as view:
+        E = view(df, "emb")
+        return df.sparkSession.sql(
+            "SELECT query_id, neighbor_id, cosine, rank FROM "
+            + _ivf_leg_sparksql(E, f"({_ivf_ranked_sparksql(E)})", full=True)
+        )
 
 
 def ann_ivf_topk_sql() -> str:
@@ -599,46 +603,47 @@ def ann_probe_cost_frontier(df: DataFrame) -> DataFrame:
     held = [exact, ranked]
     try:
         qids = exact.select("query_id").distinct()
-        E, R = _annq_view(df, "emb"), _annq_view(ranked, "tranked")
         parts = []
-        for n in range(1, IVF_FRONTIER_MAX + 1):
-            ncand = spark.sql(
-                f"SELECT query_id, count(1) AS n_cand FROM "
-                f"{_ivf_cand_sparksql(R, nprobe=n)} GROUP BY query_id"
-            )
-            top = spark.sql(
-                "SELECT query_id, neighbor_id FROM "
-                + _ivf_leg_sparksql(E, R, nprobe=n)
-            )
-            hits = (
-                top.join(F.broadcast(exact), ["query_id", "neighbor_id"])
-                .groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("n_hits"))
-            )
-            perq = (
-                qids.join(F.broadcast(ncand), "query_id", "left")
-                .join(F.broadcast(hits), "query_id", "left")
-                .select(
-                    F.coalesce(F.col("n_cand"), F.lit(0)).alias("n_cand"),
-                    F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
+        with default_scope(spark).lease() as view:
+            E, R = view(df, "emb"), view(ranked, "tranked")
+            for n in range(1, IVF_FRONTIER_MAX + 1):
+                ncand = spark.sql(
+                    f"SELECT query_id, count(1) AS n_cand FROM "
+                    f"{_ivf_cand_sparksql(R, nprobe=n)} GROUP BY query_id"
                 )
-            )
-            parts.append(
-                perq.agg(
-                    F.sum("n_cand").alias("sc"),
-                    F.sum("n_hits").alias("sh"),
-                ).select(
-                    F.lit(n).cast("int").alias("nprobe"),
-                    round6(
-                        F.col("sc").cast("double")
-                        / F.lit(float(N_QUERIES))
-                    ).alias("mean_candidates"),
-                    round6(
-                        F.col("sh").cast("double")
-                        / F.lit(float(TOP_K * N_QUERIES))
-                    ).alias("mean_recall"),
+                top = spark.sql(
+                    "SELECT query_id, neighbor_id FROM "
+                    + _ivf_leg_sparksql(E, R, nprobe=n)
                 )
-            )
+                hits = (
+                    top.join(F.broadcast(exact), ["query_id", "neighbor_id"])
+                    .groupBy("query_id")
+                    .agg(F.count(F.lit(1)).alias("n_hits"))
+                )
+                perq = (
+                    qids.join(F.broadcast(ncand), "query_id", "left")
+                    .join(F.broadcast(hits), "query_id", "left")
+                    .select(
+                        F.coalesce(F.col("n_cand"), F.lit(0)).alias("n_cand"),
+                        F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
+                    )
+                )
+                parts.append(
+                    perq.agg(
+                        F.sum("n_cand").alias("sc"),
+                        F.sum("n_hits").alias("sh"),
+                    ).select(
+                        F.lit(n).cast("int").alias("nprobe"),
+                        round6(
+                            F.col("sc").cast("double")
+                            / F.lit(float(N_QUERIES))
+                        ).alias("mean_candidates"),
+                        round6(
+                            F.col("sh").cast("double")
+                            / F.lit(float(TOP_K * N_QUERIES))
+                        ).alias("mean_recall"),
+                    )
+                )
         out = _reduce(DataFrame.unionByName, parts)
     except BaseException:
         for f in held:
@@ -940,19 +945,7 @@ def cdc_semantic_probe_sql(probe_hamming: int = PROBE_HAMMING) -> str:
 # ANN method: the standalone registry queries (bruteforce / lsh /
 # lsh_multiprobe / ivf / ivf_trained / pq_adc / pq_adc_trained /
 # ivfpq and the trained variants), cluster_balanced_sample and the
-# probe-cost frontier read the same text over _annq_view views.
-
-
-def _annq_view(frame: DataFrame, name: str) -> str:
-    """Register ``frame`` as the ``__annq_<name>`` temp view a
-    standalone ANN query's one-SQL text reads; returns the view name.
-    The one naming site for these views. Replaced, never dropped:
-    dropping a view over a persisted frame uncaches it (see
-    ann_recall_eval). spark.sql analyzes eagerly, so a view only has
-    to hold between registration and the sql() call."""
-    vname = f"__annq_{name}"
-    frame.createOrReplaceTempView(vname)
-    return vname
+# probe-cost frontier read the same text over leased views.
 
 
 def _rank_leg_sql(src: str, score: str, order: str, full: bool = False) -> str:
@@ -1111,13 +1104,16 @@ def _adc_topk_sql(spark, codes: DataFrame, qf: DataFrame, cand=None):
     """Shared one-SQL constructor for the standalone PQ-family topk
     queries: views over the persisted codes frame and the broadcast
     query-table frame, one spark.sql of the ADC leg (full output).
-    ``cand``: optional candidate-set SQL text (ivfpq pruning)."""
-    return spark.sql(
-        "SELECT query_id, neighbor_id, adc_micro, rank FROM "
-        + _adc_leg_sparksql(
-            _annq_view(codes, "codes"), _annq_view(qf, "qf"), cand, full=True
+    ``cand``: optional ``view -> candidate-set SQL text`` (ivfpq
+    pruning), its views registered under the same lease."""
+    with default_scope(spark).lease() as view:
+        c = cand(view) if cand else None
+        return spark.sql(
+            "SELECT query_id, neighbor_id, adc_micro, rank FROM "
+            + _adc_leg_sparksql(
+                view(codes, "codes"), view(qf, "qf"), c, full=True
+            )
         )
-    )
 
 
 def _recall_eval_sparksql(
@@ -1220,58 +1216,42 @@ def ann_recall_eval(df: DataFrame) -> DataFrame:
 
     spark = df.sparkSession
 
-    # FIXED view names, createOrReplaceTempView, never dropped: ONE
-    # bounded set per session, replaced on the next eval (the index
-    # topk's memoized-views discipline). dropTempView is NOT an
-    # option here — dropping a view whose definition is a persisted
-    # frame's plan UNCACHES that frame (CacheManager cascade), which
-    # silently made every leg recompute its artifact subtree inline
-    # (measured: 17 InMemoryTableScans → 0). Replacement does not
-    # uncache (probed; pinned by tests/test_recall_eval_sql_parity.py).
-    # Assumes single-threaded query CONSTRUCTION per session (true of
-    # the bench, the oracle harness and the engine): spark.sql
-    # analyzes eagerly, so the views only need to be stable between
-    # registration and the sql() call in this function.
-    def view(frame: DataFrame, name: str) -> str:
-        vname = f"__recall_{name}"
-        frame.createOrReplaceTempView(vname)
-        return vname
-
     held: list[DataFrame] = []
     scoped: list[DataFrame] = []
     try:
-        E = view(df, "emb")
-        exact = (
-            spark.sql(f"SELECT query_id, neighbor_id FROM "
-                      f"{_bruteforce_sparksql(E)}")
-            .persist()
-        )
-        held.append(exact)
-        qcb = _pq_query_codebook_rows(df)
-        pq = _pq_artifacts(df, rows=qcb)
-        held.append(pq[3])
-        scoped.append(pq[2])
-        pqt = _pq_trained_artifacts(df, qrows=qcb[0])
-        held.append(pqt[3])
-        scoped.append(pqt[2])
-        ranked = spark.sql(_ivf_ranked_sparksql(E)).persist()
-        held.append(ranked)
-        tranked = ivf_assign_trained(df).persist()
-        held.append(tranked)
-        qf = _adc_query_frame(spark, pq[1])
-        tqf = _adc_query_frame(spark, pqt[1])
-        out = spark.sql(
-            _recall_eval_sparksql(
-                E=E,
-                X=view(exact, "exact"),
-                R=view(ranked, "ranked"),
-                T=view(tranked, "tranked"),
-                C=view(pq[3], "codes"),
-                TC=view(pqt[3], "tcodes"),
-                QF=view(qf, "qf"),
-                TQF=view(tqf, "tqf"),
+        with default_scope(spark).lease() as view:
+            E = view(df, "emb")
+            exact = (
+                spark.sql(f"SELECT query_id, neighbor_id FROM "
+                          f"{_bruteforce_sparksql(E)}")
+                .persist()
             )
-        )
+            held.append(exact)
+            qcb = _pq_query_codebook_rows(df)
+            pq = _pq_artifacts(df, rows=qcb)
+            held.append(pq[3])
+            scoped.append(pq[2])
+            pqt = _pq_trained_artifacts(df, qrows=qcb[0])
+            held.append(pqt[3])
+            scoped.append(pqt[2])
+            ranked = spark.sql(_ivf_ranked_sparksql(E)).persist()
+            held.append(ranked)
+            tranked = ivf_assign_trained(df).persist()
+            held.append(tranked)
+            qf = _adc_query_frame(spark, pq[1])
+            tqf = _adc_query_frame(spark, pqt[1])
+            out = spark.sql(
+                _recall_eval_sparksql(
+                    E=E,
+                    X=view(exact, "exact"),
+                    R=view(ranked, "ranked"),
+                    T=view(tranked, "tranked"),
+                    C=view(pq[3], "codes"),
+                    TC=view(pqt[3], "tcodes"),
+                    QF=view(qf, "qf"),
+                    TQF=view(tqf, "tqf"),
+                )
+            )
     except BaseException:
         for s in scoped:
             caching.release(s)
@@ -1501,10 +1481,11 @@ def ann_lsh_multiprobe_topk(
     explodes on the broadcast QUERY side only). The width dial trades
     candidates for recall: the eval prices Hamming-1 and Hamming-2
     side by side. One spark.sql of the eval's multiprobe leg."""
-    return df.sparkSession.sql(
-        "SELECT query_id, neighbor_id, cosine, rank FROM "
-        + _lsh_leg_sparksql(_annq_view(df, "emb"), probe_hamming, full=True)
-    )
+    with default_scope(df.sparkSession).lease() as view:
+        return df.sparkSession.sql(
+            "SELECT query_id, neighbor_id, cosine, rank FROM "
+            + _lsh_leg_sparksql(view(df, "emb"), probe_hamming, full=True)
+        )
 
 
 def ann_lsh_multiprobe_topk_sql(probe_hamming: int = PROBE_HAMMING) -> str:
@@ -1945,15 +1926,17 @@ def ann_ivfpq_topk(df: DataFrame, shared=None, ranked=None) -> DataFrame:
         df, rows=_pq_query_codebook_rows(df)
     )
     qf = _adc_query_frame(df.sparkSession, tables)
-    if ranked is None:
-        # the unpersisted cell-ranking subtree is expanded textually
-        # twice inside the candidate join (assign + qprobe consumers)
-        rsub = f"({_ivf_ranked_sparksql(_annq_view(df, 'emb'))})"
-    else:
-        rsub = _annq_view(ranked, "tranked")
-    out = _adc_topk_sql(
-        df.sparkSession, codes, qf, cand=_ivf_cand_sparksql(rsub)
-    )
+
+    def cand(view):
+        if ranked is None:
+            # the unpersisted cell-ranking subtree is expanded textually
+            # twice inside the candidate join (assign + qprobe consumers)
+            return _ivf_cand_sparksql(
+                f"({_ivf_ranked_sparksql(view(df, 'emb'))})"
+            )
+        return _ivf_cand_sparksql(view(ranked, "tranked"))
+
+    out = _adc_topk_sql(df.sparkSession, codes, qf, cand=cand)
     if shared is not None:
         return out  # the caller owns the shared artifacts' lifetime
     from ..caching import adopt, owned
@@ -2692,12 +2675,13 @@ def ann_ivf_trained_topk(df: DataFrame) -> DataFrame:
     from ..caching import owned
 
     ranked = ivf_assign_trained(df).persist()
-    out = df.sparkSession.sql(
-        "SELECT query_id, neighbor_id, cosine, rank FROM "
-        + _ivf_leg_sparksql(
-            _annq_view(df, "emb"), _annq_view(ranked, "tranked"), full=True
+    with default_scope(df.sparkSession).lease() as view:
+        out = df.sparkSession.sql(
+            "SELECT query_id, neighbor_id, cosine, rank FROM "
+            + _ivf_leg_sparksql(
+                view(df, "emb"), view(ranked, "tranked"), full=True
+            )
         )
-    )
     return owned(out, [ranked])
 
 
@@ -2860,13 +2844,14 @@ def cluster_balanced_sample(df: DataFrame) -> DataFrame:
     run sizes cells ≈ sqrt(N)). Rounded-cosine ties break by vec_id —
     engine-deterministic, oracle reproduces the sample exactly.
     One spark.sql over the IVF cell ranking (_ivf_ranked_sparksql)."""
-    return df.sparkSession.sql(
-        f"""SELECT vec_id, cell_id, cos, pick FROM (
+    with default_scope(df.sparkSession).lease() as view:
+        return df.sparkSession.sql(
+            f"""SELECT vec_id, cell_id, cos, pick FROM (
   SELECT vec_id, cell_id, cos, ROW_NUMBER() OVER (
     PARTITION BY cell_id ORDER BY cos DESC, vec_id) AS pick
-  FROM ({_ivf_ranked_sparksql(_annq_view(df, 'emb'))}) WHERE rn = 1)
+  FROM ({_ivf_ranked_sparksql(view(df, 'emb'))}) WHERE rn = 1)
 WHERE pick <= {CBS_PER_CELL}"""
-    )
+        )
 
 
 def cluster_balanced_sample_trained(df: DataFrame) -> DataFrame:

@@ -391,19 +391,17 @@ class VectorIndex(_AppendOnlyIndex):
             k = TOP_K
         if self.keys is None:
             return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        qref = self._register_view(queries, f"{self._view_prefix}_q")
-        return self.spark.sql(
-            self._topk_sql(qref, k, exclude_self, queries)
-        )
-
-    def _extra_view_names(self) -> list[str]:
-        return [f"{self._view_prefix}_q"]
+        with self._views.lease() as view:
+            return self.spark.sql(
+                self._topk_sql(view, queries, k, exclude_self)
+            )
 
     def _topk_sql(
-        self, qview: str, k: int, exclude_self: bool, queries: DataFrame
+        self, view, queries: DataFrame, k: int, exclude_self: bool
     ) -> str:
-        """The whole topk plan as ONE Spark SQL text. The shared query
-        frame is expanded textually, never as a CTE (see
+        """The whole topk plan as ONE Spark SQL text, its query-side
+        views registered through the caller's lease ``view``. The
+        shared query frame is expanded textually, never as a CTE (see
         _AppendOnlyIndex one-SQL notes)."""
         from .similarity import _dot_sparksql, _norm_sparksql
 
@@ -411,9 +409,9 @@ class VectorIndex(_AppendOnlyIndex):
         vsub = self._parts_view("vals")
         q_sub = (
             f"(SELECT CAST(query_id AS BIGINT) AS query_id, "
-            f"embedding AS qv FROM {qview})"
+            f"embedding AS qv FROM {view(queries, 'q')})"
         )
-        probe = self._probe_sql(q_sub, queries)
+        probe = self._probe_sql(q_sub, queries, view)
         self_pred = (
             "\n  WHERE k.neighbor_id != p.query_id" if exclude_self else ""
         )
@@ -436,12 +434,12 @@ class VectorIndex(_AppendOnlyIndex):
   FROM {scored})
 WHERE rank <= {k}"""
 
-    def _probe_sql(self, q_sub: str, queries: DataFrame) -> str:
+    def _probe_sql(self, q_sub: str, queries: DataFrame, view) -> str:
         """(query_id, band, bucket) probe keys as SQL text over the
         ``q_sub`` query subquery (query_id, qv) — the _probe_frame
         scheme: sign-LSH buckets plus every Hamming<=probe_hamming
-        perturbation. ``queries`` is the caller's frame, for
-        subclasses whose probe has no SQL text form."""
+        perturbation. ``queries`` and the topk's lease ``view`` are
+        for subclasses whose probe has no SQL text form."""
         from .similarity import N_BANDS, PLANES_PER_BAND, _probe_masks
 
         P = PLANES_PER_BAND
@@ -825,20 +823,17 @@ class IVFVectorIndex(VectorIndex):
             )
         )
 
-    def _extra_view_names(self) -> list[str]:
-        return super()._extra_view_names() + [f"{self._view_prefix}_p"]
-
-    def _probe_sql(self, q_sub: str, queries: DataFrame) -> str:
+    def _probe_sql(self, q_sub: str, queries: DataFrame, view) -> str:
         """The trained probe is an Arrow (mapInPandas) pass with no
-        SQL text form: it registers as one more per-index view that
-        the shared topk text reads in place of the sign-LSH probe."""
+        SQL text form: it registers as one more leased view that the
+        shared topk text reads in place of the sign-LSH probe."""
         qkeys = queries.select(
             F.col("query_id").cast("bigint").alias("vec_id"), "embedding"
         )
-        pref = self._register_view(
-            self._probe_frame(qkeys), f"{self._view_prefix}_p"
+        return (
+            f"(SELECT query_id, band, bucket FROM "
+            f"{view(self._probe_frame(qkeys), 'p')})"
         )
-        return f"(SELECT query_id, band, bucket FROM {pref})"
 
     def _probe_frame(self, qkeys: DataFrame) -> DataFrame:
         from .similarity import ivf_assign_trained

@@ -46,6 +46,8 @@ from __future__ import annotations
 
 import itertools
 import re
+import threading
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -736,46 +738,95 @@ def _safe(name: str) -> str:
 
 
 class ViewScope:
-    """Caller-owned temp-view cache for repeated compiles (the
-    incremental engine compiles once per micro-batch): stable view
-    names per table, re-registered only when the table's frame object
-    changed since the last compile — unchanged snapshot views cost
-    zero py4j calls per batch. View names embed a fresh ``__sg<N>``
-    prefix, so concurrent engines never collide; names are REUSED
-    across batches (createOrReplaceTempView swaps the plan in place),
-    so nothing accumulates in the session catalog. ``release()`` drops
-    everything (engine teardown)."""
+    """The one temp-view registrar: every view a one-SQL text reads is
+    registered here, under a fresh ``__sg<N>`` prefix per owner.
+
+    Every view is GLOBAL: in foreachBatch the frames are bound to the
+    stream's CLONED SparkSession, whose session-temp-view catalog is
+    isolated from the owner's — a session view registered there is
+    invisible to the owner's spark.sql (found by
+    test_cdc_through_the_streaming_pipeline). The global-temp catalog
+    is application-wide.
+
+    Names are REPLACED, never dropped, while their frames may be live:
+    dropping a view whose definition is a persisted frame's plan
+    uncaches that frame (CacheManager cascade — the recall eval's legs
+    silently recomputed their artifacts, 17 InMemoryTableScans → 0),
+    while replacing it uncaches neither frame. spark.sql analyzes
+    eagerly, so a view has to hold only between registration and the
+    sql() call. Two kinds of name:
+
+    - ``view_for(key, df)``: one owner-level name per key, re-registered
+      only when the key's frame object changed (an unchanged snapshot
+      costs zero py4j calls per batch);
+    - ``lease()``: a slot for one query's construction — concurrent
+      constructions hold distinct slots, so no thread binds another's
+      frames, and the name count is bounded by peak concurrent leases
+      times keys.
+
+    ``release()`` drops every name (owner teardown)."""
 
     def __init__(self, spark):
         self.spark = spark
         self.prefix = f"__sg{next(_VIEW_IDS)}"
-        # table -> (frame, view name); the strong frame ref makes the
-        # identity check sound (an id() after GC could collide)
-        self._views: dict[str, tuple[DataFrame, str]] = {}
+        self._db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
+        self._lock = threading.Lock()
+        self._free: list[int] = []
+        self._slots = itertools.count()
+        # key -> frame; the strong ref makes the identity check sound
+        # (an id() after GC could collide)
+        self._views: dict[str, DataFrame] = {}
+        self._names: set[str] = set()
 
-    def view_for(self, table: str, df: DataFrame) -> str:
-        name = f"{self.prefix}_{_safe(table)}"
-        cur = self._views.get(table)
-        if cur is None or cur[0] is not df:
-            df.createOrReplaceTempView(name)
-            self._views[table] = (df, name)
-        return name
+    def _register(self, df: DataFrame, name: str) -> str:
+        df.createOrReplaceGlobalTempView(name)
+        self._names.add(name)
+        return f"{self._db}.{name}"
 
-    def rk_view(self, df: DataFrame) -> str:
-        """Root-keys view — a fresh frame every batch, so always
-        re-registered (same name, replaced in place)."""
-        name = f"{self.prefix}_rk"
-        df.createOrReplaceTempView(name)
-        self._views["\x00rk"] = (df, name)
-        return name
+    def view_for(self, key: str, df: DataFrame) -> str:
+        name = f"{self.prefix}_{_safe(key)}"
+        if self._views.get(key) is not df:
+            self._views[key] = df
+            self._register(df, name)
+        return f"{self._db}.{name}"
+
+    @contextmanager
+    def lease(self):
+        """Yield ``view(df, key) -> qualified name`` over a slot no other
+        live lease holds; every view one sql() reads goes through one
+        lease."""
+        with self._lock:
+            slot = self._free.pop() if self._free else next(self._slots)
+        try:
+            yield lambda df, key: self._register(
+                df, f"{self.prefix}_{slot}_{_safe(key)}"
+            )
+        finally:
+            with self._lock:
+                self._free.append(slot)
 
     def release(self) -> None:
-        for _df, name in self._views.values():
+        for name in self._names:
             try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:
+                self.spark.catalog.dropGlobalTempView(name)
+            except Exception:  # noqa: BLE001 — teardown best-effort
                 pass
+        self._names.clear()
         self._views.clear()
+
+
+_DEFAULT: ViewScope | None = None
+
+
+def default_scope(spark) -> ViewScope:
+    """The application's scope for stateless queries, which only lease
+    from it; never released. Two threads racing the first call may
+    each make one: their prefixes differ, so nothing collides."""
+    global _DEFAULT
+    sc = spark.sparkContext
+    if _DEFAULT is None or _DEFAULT.spark.sparkContext is not sc:
+        _DEFAULT = ViewScope(spark)
+    return _DEFAULT
 
 
 def compile_assembled(
@@ -816,24 +867,22 @@ def compile_assembled(
     the lineage index.
 
     ``scope``: a caller-owned ViewScope for repeated compiles (the
-    incremental engine passes its own); without one, views are
-    registered under a fresh ``__sg<N>_`` prefix and dropped right
-    after analysis, so concurrent compiles never collide and nothing
-    leaks into the session catalog.
+    incremental engine passes its own; unchanged tables keep their
+    views); without one, the views are leased from the application's
+    default scope.
     """
     spark = catalog.spark
-    owns_scope = scope is None
-    if owns_scope:
-        scope = ViewScope(spark)
-    try:
-        views = {
-            t: scope.view_for(t, catalog.df(t)) for t in sorted(tree.tables())
-        }
+    with (
+        default_scope(spark).lease()
+        if scope is None
+        else nullcontext(lambda df, key: scope.view_for(key, df))
+    ) as view:
+        views = {t: view(catalog.df(t), t) for t in sorted(tree.tables())}
         rk_view = None
         rk_cols: list[str] = []
         broadcast_rk = False
         if root_keys is not None:
-            rk_view = scope.rk_view(root_keys)
+            rk_view = view(root_keys, "\x00rk")
             rk_cols = list(root_keys.columns)
             n = root_keys.count() if root_keys_rows is None else root_keys_rows
             broadcast_rk = n <= _joins.BROADCAST_ROW_LIMIT
@@ -857,6 +906,3 @@ def compile_assembled(
         )
         df = spark.sql(f"SELECT {', '.join(cols)} FROM ({meta.sql})")
         return df, meta
-    finally:
-        if owns_scope:
-            scope.release()

@@ -23,6 +23,7 @@ from .functions.hashing import h32_sql, round6_sql
 from .operators.windows import bounded_rank_window
 from .operators.filters import filters_to_spark_sql, filters_to_sql
 from .plans.oracle import oracle_doc_sql
+from .plans.sqlgen import default_scope
 from . import schemas
 
 
@@ -2324,16 +2325,16 @@ def text_bm25_topk(spark, sf_dir):
 
     Construction is one spark.sql over a documents view (guide
     §7.3)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    df.createOrReplaceTempView("__docq_docs")
-    return spark.sql(
-        f"""SELECT doc_id, lang, source, score_micro,
+    with default_scope(spark).lease() as view:
+        docs = view(Catalog(spark, sf_dir).df("documents"), "docs")
+        return spark.sql(
+            f"""SELECT doc_id, lang, source, score_micro,
   CAST(ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS INT) AS rank
 FROM (SELECT doc_id, lang, source, score_micro
-      FROM ({_bm25_scored_sparksql('__docq_docs')})
+      FROM ({_bm25_scored_sparksql(docs)})
       WHERE score_micro > 0
       ORDER BY score_micro DESC, doc_id LIMIT 10)"""
-    )
+        )
 
 
 @register(
@@ -3608,42 +3609,42 @@ def dsir_select(spark, sf_dir):
     histogram and once for the weight side)."""
     from .operators.filters import _spark_sql_str as _sq
 
-    df = Catalog(spark, sf_dir).df("documents")
-    df.createOrReplaceTempView("__docq_docs")
-    ts = hashing.tokens_sparksql("text")
-    b = (
-        f"(SELECT doc_id, lang, source, "
-        f"({hashing.h32_sparksql('term')} % {DSIR_BUCKETS}) AS bucket FROM "
-        f"(SELECT doc_id, lang, source, explode({ts}) AS term "
-        f"FROM __docq_docs))"
-    )
-    bc = (
-        f"(SELECT bucket, count(1) AS r_b, "
-        f"sum(CAST((lang = {_sq(DSIR_TARGET_LANG)}) AS BIGINT)) AS t_b "
-        f"FROM {b} GROUP BY bucket)"
-    )
-    # corpus totals ride a window over the <= DSIR_BUCKETS-row
-    # histogram itself (single tiny partition) instead of a separate
-    # aggregate branch, which would re-run the whole tokenize+explode
-    # corpus scan inside the broadcast build
-    lr = (
-        f"(SELECT bucket, CAST(floor(ln("
-        f"((t_b + 1.0D) * (sum(r_b) OVER () + {float(DSIR_BUCKETS)!r}D)) / "
-        f"((r_b + 1.0D) * (sum(t_b) OVER () + {float(DSIR_BUCKETS)!r}D))"
-        f") * 1e6 + 0.5D) AS BIGINT) AS lr_micro FROM {bc})"
-    )
-    w = (
-        f"(SELECT /*+ BROADCAST(l) */ doc_id, lang, source, "
-        f"sum(lr_micro) AS weight_micro "
-        f"FROM {b} bb JOIN {lr} l USING (bucket) "
-        f"GROUP BY doc_id, lang, source)"
-    )
-    return spark.sql(
-        f"""SELECT doc_id, lang, source, weight_micro,
+    with default_scope(spark).lease() as view:
+        docs = view(Catalog(spark, sf_dir).df("documents"), "docs")
+        ts = hashing.tokens_sparksql("text")
+        b = (
+            f"(SELECT doc_id, lang, source, "
+            f"({hashing.h32_sparksql('term')} % {DSIR_BUCKETS}) AS bucket FROM "
+            f"(SELECT doc_id, lang, source, explode({ts}) AS term "
+            f"FROM {docs}))"
+        )
+        bc = (
+            f"(SELECT bucket, count(1) AS r_b, "
+            f"sum(CAST((lang = {_sq(DSIR_TARGET_LANG)}) AS BIGINT)) AS t_b "
+            f"FROM {b} GROUP BY bucket)"
+        )
+        # corpus totals ride a window over the <= DSIR_BUCKETS-row
+        # histogram itself (single tiny partition) instead of a separate
+        # aggregate branch, which would re-run the whole tokenize+explode
+        # corpus scan inside the broadcast build
+        lr = (
+            f"(SELECT bucket, CAST(floor(ln("
+            f"((t_b + 1.0D) * (sum(r_b) OVER () + {float(DSIR_BUCKETS)!r}D)) / "
+            f"((r_b + 1.0D) * (sum(t_b) OVER () + {float(DSIR_BUCKETS)!r}D))"
+            f") * 1e6 + 0.5D) AS BIGINT) AS lr_micro FROM {bc})"
+        )
+        w = (
+            f"(SELECT /*+ BROADCAST(l) */ doc_id, lang, source, "
+            f"sum(lr_micro) AS weight_micro "
+            f"FROM {b} bb JOIN {lr} l USING (bucket) "
+            f"GROUP BY doc_id, lang, source)"
+        )
+        return spark.sql(
+            f"""SELECT doc_id, lang, source, weight_micro,
   CAST(ROW_NUMBER() OVER (ORDER BY weight_micro DESC, doc_id) AS INT) AS rank
 FROM (SELECT doc_id, lang, source, weight_micro FROM {w}
       ORDER BY weight_micro DESC, doc_id LIMIT {DSIR_SELECT_N})"""
-    )
+        )
 
 
 PPL_BUCKETS = 256
@@ -3775,15 +3776,15 @@ def ccnet_perplexity_buckets(spark, sf_dir):
 
     Construction is one spark.sql over a documents view (guide
     §7.3)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    df.createOrReplaceTempView("__docq_docs")
-    nt = "ntile(3) OVER (PARTITION BY lang ORDER BY ce_micro, doc_id)"
-    return spark.sql(
-        f"""SELECT doc_id, lang, ce_micro,
+    with default_scope(spark).lease() as view:
+        docs = view(Catalog(spark, sf_dir).df("documents"), "docs")
+        nt = "ntile(3) OVER (PARTITION BY lang ORDER BY ce_micro, doc_id)"
+        return spark.sql(
+            f"""SELECT doc_id, lang, ce_micro,
   CASE WHEN {nt} = 1 THEN 'head' WHEN {nt} = 2 THEN 'middle'
        ELSE 'tail' END AS ppl_bucket
-FROM {_ccnet_scored_sparksql('__docq_docs')}"""
-    )
+FROM {_ccnet_scored_sparksql(docs)}"""
+        )
 
 
 # deterministic threshold-fitting sample: docs whose h32(doc_id) falls
@@ -3856,33 +3857,33 @@ def ccnet_perplexity_buckets_sampled(spark, sf_dir):
     Construction is one spark.sql over a documents view (the scored
     subtree is expanded textually twice, once for the sample and once
     for the corpus side)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    df.createOrReplaceTempView("__docq_docs")
-    ce = _ccnet_scored_sparksql("__docq_docs")
-    h = hashing.h32_sparksql("CAST(doc_id AS STRING)")
-    s = (
-        f"(SELECT lang, ce_micro, doc_id FROM {ce} "
-        f"WHERE ({h} % {PPL_SAMPLE_MOD}) = 0)"
-    )
-    r = (
-        f"(SELECT lang, ce_micro, ROW_NUMBER() OVER ("
-        f"PARTITION BY lang ORDER BY ce_micro, doc_id) AS rn, "
-        f"count(1) OVER (PARTITION BY lang) AS n FROM {s})"
-    )
-    th = (
-        f"(SELECT lang, "
-        f"max(CASE WHEN rn <= CAST((n + 2) div 3 AS BIGINT) "
-        f"THEN ce_micro END) AS t1, "
-        f"max(CASE WHEN rn <= CAST((2 * n + 2) div 3 AS BIGINT) "
-        f"THEN ce_micro END) AS t2 FROM {r} GROUP BY lang)"
-    )
-    return spark.sql(
-        f"""SELECT /*+ BROADCAST(t) */ doc_id, lang, ce_micro,
+    with default_scope(spark).lease() as view:
+        docs = view(Catalog(spark, sf_dir).df("documents"), "docs")
+        ce = _ccnet_scored_sparksql(docs)
+        h = hashing.h32_sparksql("CAST(doc_id AS STRING)")
+        s = (
+            f"(SELECT lang, ce_micro, doc_id FROM {ce} "
+            f"WHERE ({h} % {PPL_SAMPLE_MOD}) = 0)"
+        )
+        r = (
+            f"(SELECT lang, ce_micro, ROW_NUMBER() OVER ("
+            f"PARTITION BY lang ORDER BY ce_micro, doc_id) AS rn, "
+            f"count(1) OVER (PARTITION BY lang) AS n FROM {s})"
+        )
+        th = (
+            f"(SELECT lang, "
+            f"max(CASE WHEN rn <= CAST((n + 2) div 3 AS BIGINT) "
+            f"THEN ce_micro END) AS t1, "
+            f"max(CASE WHEN rn <= CAST((2 * n + 2) div 3 AS BIGINT) "
+            f"THEN ce_micro END) AS t2 FROM {r} GROUP BY lang)"
+        )
+        return spark.sql(
+            f"""SELECT /*+ BROADCAST(t) */ doc_id, lang, ce_micro,
   CASE WHEN ce_micro <= t1 THEN 'head'
        WHEN ce_micro <= t2 THEN 'middle'
        ELSE 'tail' END AS ppl_bucket
 FROM {ce} LEFT JOIN {th} t USING (lang)"""
-    )
+        )
 
 
 HYBRID_QUERY_TEXT = " ".join(BM25_QUERY_TERMS)
@@ -3981,32 +3982,32 @@ def hybrid_search_rrf(spark, sf_dir):
 
     Construction is one spark.sql over a documents view (guide §7.3
     — a Column-API construction was ~1,800 py4j round-trips)."""
-    df = Catalog(spark, sf_dir).df("documents")
-    df.createOrReplaceTempView("__docq_docs")
-    q = _hybrid_query_vec()
-    nq = float(sum(v * v for v in q))
-    rrf_k = f"{float(HYBRID_RRF_K)!r}D"
-    lex = f"""(SELECT doc_id,
+    with default_scope(spark).lease() as view:
+        docs = view(Catalog(spark, sf_dir).df("documents"), "docs")
+        q = _hybrid_query_vec()
+        nq = float(sum(v * v for v in q))
+        rrf_k = f"{float(HYBRID_RRF_K)!r}D"
+        lex = f"""(SELECT doc_id,
   CAST(ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS INT) AS lex_rank
   FROM (SELECT doc_id, score_micro
-        FROM ({_bm25_scored_sparksql('__docq_docs')})
+        FROM ({_bm25_scored_sparksql(docs)})
         WHERE score_micro > 0
         ORDER BY score_micro DESC, doc_id LIMIT {HYBRID_CAND_K}))"""
-    emb = (
-        "(SELECT doc_id, "
-        + ", ".join(
-            f"{_hash_dim_sparksql('text', i)} AS e{i}"
-            for i in range(HYBRID_EMB_DIMS)
+        emb = (
+            "(SELECT doc_id, "
+            + ", ".join(
+                f"{_hash_dim_sparksql('text', i)} AS e{i}"
+                for i in range(HYBRID_EMB_DIMS)
+            )
+            + f" FROM {docs})"
         )
-        + " FROM __docq_docs)"
-    )
-    dot = "CAST(0 AS BIGINT)" + "".join(
-        f" + (e{i} * CAST({q[i]} AS BIGINT))" for i in range(HYBRID_EMB_DIMS)
-    )
-    nd = "CAST(0 AS BIGINT)" + "".join(
-        f" + (e{i} * e{i})" for i in range(HYBRID_EMB_DIMS)
-    )
-    sem = f"""(SELECT doc_id,
+        dot = "CAST(0 AS BIGINT)" + "".join(
+            f" + (e{i} * CAST({q[i]} AS BIGINT))" for i in range(HYBRID_EMB_DIMS)
+        )
+        nd = "CAST(0 AS BIGINT)" + "".join(
+            f" + (e{i} * e{i})" for i in range(HYBRID_EMB_DIMS)
+        )
+        sem = f"""(SELECT doc_id,
   CAST(ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id) AS INT) AS sem_rank
   FROM (SELECT doc_id, cos_sim
         FROM (SELECT doc_id,
@@ -4015,20 +4016,20 @@ def hybrid_search_rrf(spark, sf_dir):
               FROM {emb})
         ORDER BY cos_sim DESC, doc_id LIMIT {HYBRID_CAND_K}))"""
 
-    def leg(rank_col: str) -> str:
-        return (
-            f"COALESCE(CAST(floor(1e9 / ({rrf_k} + {rank_col}) + 0.5D) "
-            f"AS BIGINT), CAST(0 AS BIGINT))"
-        )
+        def leg(rank_col: str) -> str:
+            return (
+                f"COALESCE(CAST(floor(1e9 / ({rrf_k} + {rank_col}) + 0.5D) "
+                f"AS BIGINT), CAST(0 AS BIGINT))"
+            )
 
-    return spark.sql(
-        f"""SELECT doc_id, lex_rank, sem_rank, rrf_micro,
+        return spark.sql(
+            f"""SELECT doc_id, lex_rank, sem_rank, rrf_micro,
   CAST(ROW_NUMBER() OVER (ORDER BY rrf_micro DESC, doc_id) AS INT) AS fused_rank
 FROM (SELECT doc_id, lex_rank, sem_rank,
              ({leg('lex_rank')} + {leg('sem_rank')}) AS rrf_micro
       FROM {lex} l FULL OUTER JOIN {sem} s USING (doc_id)
       ORDER BY rrf_micro DESC, doc_id LIMIT {HYBRID_TOP_N})"""
-    )
+        )
 
 
 # deferred from the engine_sync section: the oracle composes the

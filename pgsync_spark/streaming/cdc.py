@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import exc
+from .. import caching, exc
 from ..catalog import Catalog
 from ..operators.overlay import LIVE, KeyedOverlay, apply_parallel
 
@@ -289,10 +289,11 @@ class TableMaterializer:
         still scan the PRE-batch snapshot views. Per touched table the
         only job is its overlay checkpoint, and all touched tables'
         checkpoints are submitted in ONE concurrent wave."""
+        ckpt = None
         if not materialized:
             # decouple from micro-batch source files that vanish after
             # the epoch
-            events = events.localCheckpoint(eager=True)
+            events = ckpt = events.localCheckpoint(eager=True)
         seq = F.col(seq_col) if seq_col else F.monotonically_increasing_id()
         events = events.withColumn("__cdc_seq", seq.cast("long"))
         if stats is None:
@@ -359,5 +360,8 @@ class TableMaterializer:
                 table_of[store], defer_release=defer_release
             ),
         )
+        if ckpt is not None:
+            # the overlay checkpoints are eager: nothing reads it again
+            (release or caching.release_local_checkpoint)(ckpt)
         for store, table in table_of.items():
             self.catalog.register_df(table, store.view())

@@ -415,9 +415,9 @@ class IncrementalEngine:
             # engine; an owned one must not leak its snapshot blocks
             self.materializer.release()
         # drop the compile-scope temp views too: without this, every
-        # engine leaked one view per tree table plus the __sg<N>_rk
+        # engine leaked one view per tree table plus the root-keys
         # view (holding a strong ref to the last batch's root-keys
-        # frame) into the session catalog for the session's lifetime.
+        # frame) into the global temp catalog for the app's lifetime.
         # Safe mid-lifecycle (full_sync tears down before swapping
         # stores): the memoized full-corpus plan is already resolved,
         # and the next per-batch compile lazily re-registers its views.

@@ -887,6 +887,40 @@ def test_materializer_defer_release_keeps_blocks_alive(spark):
     assert mat.store("orders").overlay is not second_overlay
 
 
+def test_materializer_apply_releases_its_events_checkpoint(spark):
+    """A direct apply() checkpoints the events frame itself; once the
+    overlay checkpoints are taken nothing reads it, so after two
+    batches the session holds only the stores' own checkpoints."""
+    from pgsync_spark.streaming.cdc import TableMaterializer
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def rdd_id(df):
+        node = df._jdf.queryExecution().analyzed()
+        assert node.getClass().getSimpleName() == "LogicalRDD"
+        return node.rdd().id()
+
+    mat = TableMaterializer(Catalog(spark, SF_DIR), compact_every=99)
+    before = persisted()
+    for txid, prio in ((1, "A"), (2, "B")):
+        mat.apply(
+            payloads_from_rows(
+                spark,
+                [{"op": "UPDATE", "table": "orders",
+                  "old": {"o_orderkey": "7"},
+                  "new": {"o_orderkey": "7", "o_orderpriority": prio},
+                  "txid": txid}],
+            )
+        )
+    stores = [mat.store(t) for t in mat.tables()]
+    held = {rdd_id(s.overlay) for s in stores}
+    held |= {rdd_id(s.base) for s in stores if s.owns_base}
+    assert held, "vacuous (no store checkpoint)"
+    assert persisted() - before == held
+    mat.release()
+
+
 def test_bronze_overlay_checkpoint_runs_the_lww_window_once(spark, monkeypatch):
     """A bronze apply's overlay checkpoint reads the batch's LWW fold
     twice (the merge's touched-key guard and its union); both readers

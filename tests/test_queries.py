@@ -719,6 +719,36 @@ def test_one_production_form_per_query():
     )
 
 
+def test_one_view_registrar():
+    """sqlgen.ViewScope is the only code that registers or drops a
+    temp view: a second registrar, or a fixed view name that two
+    threads constructing at once would share, is flagged here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pgsync_spark"
+    registrar = pkg / "plans" / "sqlgen.py"
+    pat = re.compile(
+        r"\b(?:createOrReplace(?:Global)?TempView|create(?:Global)?TempView"
+        r"|drop(?:Global)?TempView|registerTempTable)\b"
+        r"|__(?:annq|recall|docq)_"
+    )
+    bad = []
+    n_files = 0
+    for f in pkg.rglob("*.py"):
+        if "__pycache__" in f.parts or f == registrar:
+            continue
+        n_files += 1
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if pat.search(line):
+                bad.append(f"{f}:{i}: {line.strip()}")
+    assert n_files > 20, f"package scan found only {n_files} files"
+    assert not bad, (
+        "temp view registered outside sqlgen.ViewScope (lease it "
+        "instead):\n" + "\n".join(bad)
+    )
+
+
 def test_one_spark_form_per_kernel():
     """Every expression kernel has ONE Spark body, its Spark-SQL text
     builder ``X_sparksql``. A same-module ``def X`` may only parse it

@@ -286,7 +286,7 @@ def test_topk_views_drop_on_close(spark, docs):
     bidx = BM25Index(spark)
     bidx.ingest(docs)
     bidx.topk(BM25_QUERY_TERMS, k=10).count()
-    names = [n for (_d, n) in bidx._topk_views.values()]
+    names = [f"global_temp.{n}" for n in bidx._views._names]
     assert names and all(
         spark.catalog.tableExists(n) for n in names
     )

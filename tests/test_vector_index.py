@@ -604,12 +604,10 @@ def test_ivf_topk_plan_shape_after_rebuild(spark):
     assert final.count("BroadcastHashJoin") >= 2, final
     assert final.count("Exchange hashpartitioning") <= 2, final
     assert "MapInPandas" in final or "PythonMapInArrow" in final, final
-    views = idx._extra_view_names()
-    assert all(spark.catalog.tableExists(f"global_temp.{v}") for v in views)
+    views = [f"global_temp.{v}" for v in idx._views._names]
+    assert views and all(spark.catalog.tableExists(v) for v in views)
     idx.close()
-    assert not any(
-        spark.catalog.tableExists(f"global_temp.{v}") for v in views
-    )
+    assert not any(spark.catalog.tableExists(v) for v in views)
 
 
 @pytest.mark.slow
