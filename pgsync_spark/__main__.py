@@ -32,6 +32,14 @@ accepted docs + drop decisions (+ per-epoch drift stats with
 index durable and the pipeline exactly-once, ``--compact-every`` runs
 segment maintenance on a cadence.
 
+One mode per invocation: a single-shot mode flag (``--dedup-stream``,
+``--export-shards``, ``--bm25-topk``, ``--ann-stats`` ...), a config
+sub-mode (``--analyze``, ``--validate``, ``--print-mapping``), or, with
+none of them, a sync. ``_modes()`` is the one table of the flags each
+mode requires and reads: a second mode, or a flag given explicitly
+that the chosen mode does not read, exits 2 instead of being silently
+ignored.
+
 There is no singleton/pidfile analog (ref: pgsync/singleton.py:6-39
 guards one process per (database, index)): one SparkSession per driver
 already serializes the engine, and concurrent drivers against one sink
@@ -41,8 +49,10 @@ are a deployment error Spark cannot detect portably.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import sys
+from typing import Callable, NamedTuple
 
 from .catalog import Catalog
 from .config import config_loader
@@ -57,7 +67,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "-c", "--config", default=None,
         help="schema config: local path, http(s) URL, or s3:// URL "
-        "(required for every mode except --dedup-stream)",
+        "(required by a sync and by --analyze/--validate/--print-mapping)",
     )
     p.add_argument(
         "--data-dir",
@@ -474,7 +484,50 @@ def _state_mismatch_msg(path, label, stored, requested) -> str:
     )
 
 
-def _run_dedup_stream(args, spark=None, out=sys.stdout) -> int:
+class _Refused(Exception):
+    """A refusal main() prints to stderr and exits 2 on."""
+
+
+@contextlib.contextmanager
+def _session(spark, app_name: str):
+    """Yield ``spark``; when the caller injected none, a session built
+    for this run and stopped when the mode ends."""
+    if spark is not None:
+        yield spark
+        return
+    from .session import get_spark
+
+    spark = get_spark(app_name=app_name)
+    try:
+        yield spark
+    finally:
+        spark.stop()
+
+
+@contextlib.contextmanager
+def _store(flag: str, load, spark, path: str):
+    """Yield the index ``load(spark, path)`` returns, closed when the
+    mode ends. A missing, unreadable or foreign store refuses the mode
+    with the rc=2 stderr message, never a raw traceback."""
+    try:
+        idx = load(spark, path)
+    except (OSError, ValueError) as e:
+        raise _Refused(f"{flag}: cannot load {path}: {e}") from None
+    try:
+        yield idx
+    finally:
+        idx.close()
+
+
+@contextlib.contextmanager
+def _configured(args, spark):
+    """The config modes' shared setup: a session, the config's trees
+    and a catalog over --data-dir."""
+    with _session(spark, "pgsync_spark_cli") as spark:
+        yield config_loader(args.config), Catalog(spark, args.data_dir)
+
+
+def _run_dedup_stream(args, spark, out) -> int:
     """The --dedup-stream mode: JSON doc stream → incremental dedup
     index probe → accepted/decisions(/stats) under --dedup-out."""
     from .functions.bm25_index import BM25Index
@@ -482,11 +535,17 @@ def _run_dedup_stream(args, spark=None, out=sys.stdout) -> int:
     from .functions.vector_index import IVFVectorIndex, VectorIndex
     from .streaming.stream import DEDUP_DOCS_SCHEMA, start_dedup_stream
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_dedup")
+    if args.store_dir and os.path.abspath(
+        args.dedup_out
+    ) == os.path.abspath(args.store_dir):
+        # both write decisions/epoch=N under their root; the stream
+        # itself also refuses, but fail before a Spark session spins
+        print(
+            "--dedup-out must differ from --store-dir (both hold "
+            "decisions/epoch=N)",
+            file=sys.stderr,
+        )
+        return 2
     cls = {
         "minhash": MinHashIndex,
         "embedding": EmbeddingIndex,
@@ -511,7 +570,7 @@ def _run_dedup_stream(args, spark=None, out=sys.stdout) -> int:
         schema = (
             schema + ", op string" if vec_shaped else CDC_DOCS_SCHEMA
         )
-    try:
+    with _session(spark, "pgsync_spark_dedup") as spark:
         had_manifest = bool(args.store_dir) and os.path.exists(
             os.path.join(args.store_dir, "CURRENT")
         )
@@ -677,10 +736,7 @@ def _run_dedup_stream(args, spark=None, out=sys.stdout) -> int:
                 )
         finally:
             index.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+    return 0
 
 
 def _load_vector_store(spark, store_dir):
@@ -707,6 +763,20 @@ def _load_vector_store(spark, store_dir):
     return cls.load(spark, store_dir)
 
 
+def _load_bm25_store(spark, store_dir):
+    """Load a BM25 store. Raises ValueError on a missing manifest:
+    BM25Index.load returns an EMPTY index for a missing dir, and a
+    typo'd path must not masquerade as zero results."""
+    from .functions.bm25_index import BM25Index
+
+    if not os.path.exists(os.path.join(store_dir, "CURRENT")):
+        raise ValueError(
+            "no CURRENT manifest (not a BM25 store, or the path is "
+            "wrong)"
+        )
+    return BM25Index.load(spark, store_dir)
+
+
 def _store_dim(idx) -> int | None:
     """A vector store's embedding dimension: the trained codebook's
     when there is one, else one peeked live vector (tombstones carry
@@ -727,7 +797,7 @@ def _store_dim(idx) -> int | None:
     return None
 
 
-def _run_hybrid_topk(args, spark=None, out=sys.stdout) -> int:
+def _run_hybrid_topk(args, spark, out) -> int:
     """--hybrid-topk: the read side of running --bm25-store AND
     --vector-store on one engine (the engine_sync_hybrid_topk
     topology): BM25 top-50 from the lexical store ⊎ ANN top-50 from
@@ -735,9 +805,9 @@ def _run_hybrid_topk(args, spark=None, out=sys.stdout) -> int:
     fixed-point nano-units. The fusion runs driver-side over ≤100
     candidate rows — no extra Spark job beyond the two leg reads."""
     import json
+    import math
 
-    from .functions.bm25_index import BM25Index
-    from .functions.hashing import hash_embed_py
+    from .functions.hashing import hash_embed_py, is_hash_embed_sql
 
     # THE fusion constants — imported from the oracle-gated query so
     # the CLI can never silently diverge from the arithmetic
@@ -748,23 +818,19 @@ def _run_hybrid_topk(args, spark=None, out=sys.stdout) -> int:
 
     _HYB_RRF_K = float(HYBRID_RRF_K)
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_hybrid")
-    try:
-        q = args.hybrid_topk.strip()
-        bidx = vidx = None
+    q = args.hybrid_topk.strip()
+    if not q:
+        print("--hybrid-topk needs query text", file=sys.stderr)
+        return 2
+    with (
+        _session(spark, "pgsync_spark_hybrid") as spark,
+        _store("--hybrid-topk", _load_bm25_store, spark, args.store_dir)
+        as bidx,
+        _store(
+            "--hybrid-topk", _load_vector_store, spark, args.ann_store_dir
+        ) as vidx,
+    ):
         try:
-            if not os.path.exists(
-                os.path.join(args.store_dir, "CURRENT")
-            ):
-                raise ValueError("no CURRENT manifest at --store-dir")
-            bidx = BM25Index.load(spark, args.store_dir)
-            vidx = _load_vector_store(spark, args.ann_store_dir)
-            from .functions.hashing import is_hash_embed_sql
-
             if (
                 vidx.feature_expr is not None
                 and not is_hash_embed_sql(vidx.feature_expr)
@@ -803,49 +869,39 @@ def _run_hybrid_topk(args, spark=None, out=sys.stdout) -> int:
         except (OSError, ValueError) as e:
             print(f"--hybrid-topk: {e}", file=sys.stderr)
             return 2
-        finally:
-            if bidx is not None:
-                bidx.close()
-            if vidx is not None:
-                vidx.close()
 
-        def leg(rank):
-            if rank is None:
-                return 0
-            import math
+    def leg(rank):
+        if rank is None:
+            return 0
+        return int(math.floor(1e9 / (_HYB_RRF_K + rank) + 0.5))
 
-            return int(math.floor(1e9 / (_HYB_RRF_K + rank) + 0.5))
-
-        fused = sorted(
+    fused = sorted(
+        (
             (
-                (
-                    leg(lex.get(d)) + leg(sem.get(d)),
-                    d,
-                    lex.get(d),
-                    sem.get(d),
-                )
-                for d in set(lex) | set(sem)
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )[: args.topk_k]
-        for i, (rrf, d, lr, sr) in enumerate(fused, 1):
-            print(
-                json.dumps(
-                    {
-                        "doc_id": d,
-                        "lex_rank": lr,
-                        "sem_rank": sr,
-                        "rrf_micro": rrf,
-                        "fused_rank": i,
-                    },
-                    sort_keys=True,
-                ),
-                file=out,
+                leg(lex.get(d)) + leg(sem.get(d)),
+                d,
+                lex.get(d),
+                sem.get(d),
             )
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+            for d in set(lex) | set(sem)
+        ),
+        key=lambda t: (-t[0], t[1]),
+    )[: args.topk_k]
+    for i, (rrf, d, lr, sr) in enumerate(fused, 1):
+        print(
+            json.dumps(
+                {
+                    "doc_id": d,
+                    "lex_rank": lr,
+                    "sem_rank": sr,
+                    "rrf_micro": rrf,
+                    "fused_rank": i,
+                },
+                sort_keys=True,
+            ),
+            file=out,
+        )
+    return 0
 
 
 def _apply_nprobe(idx, args) -> str | None:
@@ -871,101 +927,92 @@ def _apply_nprobe(idx, args) -> str | None:
     return None
 
 
-def _run_ann_topk(args, spark=None, out=sys.stdout) -> int:
+def _run_ann_topk(args, spark, out) -> int:
     """--ann-topk: load the stored vector index and answer one query —
     the read side of the --vector-store / --dedup-index vector
     maintenance loops. QUERY is a JSON array literal (the vector
     itself) or text for the default hash featurizer."""
     import json
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
+    from .functions.hashing import hash_embed_py, is_hash_embed_sql
 
-        spark = get_spark(app_name="pgsync_spark_ann")
-    try:
-        q = args.ann_topk.strip()
-        vec = None
-        if q.startswith("["):
-            try:
-                vec = [float(x) for x in json.loads(q)]
-            except (ValueError, TypeError) as e:
-                print(
-                    f"--ann-topk: not a JSON number array: {e}",
-                    file=sys.stderr,
-                )
-                return 2
-        from_text = vec is None
-        if from_text:
-            from .functions.hashing import hash_embed_py
-
-            vec = hash_embed_py(q)
+    q = args.ann_topk.strip()
+    if not q:
+        print(
+            "--ann-topk needs query text or a JSON vector",
+            file=sys.stderr,
+        )
+        return 2
+    vec = None
+    if q.startswith("["):
         try:
-            idx = _load_vector_store(spark, args.store_dir)
-        except (OSError, ValueError) as e:
-            print(f"--ann-topk: cannot load {args.store_dir}: {e}",
-                  file=sys.stderr)
-            return 2
-        try:
-            # feature-space gate for TEXT queries: featurizing query
-            # text with the hash embedder is only meaningful against
-            # vectors that are THEMSELVES hash featurizations of some
-            # text — a store stamped with a non-hash featurizer (e.g.
-            # a learned-encoder column) would serve same-dim garbage
-            # cosines (r10 review pass 2). Explicit JSON vectors pass
-            # regardless: the caller owns that contract.
-            from .functions.hashing import is_hash_embed_sql
-
-            if (
-                from_text
-                and idx.feature_expr is not None
-                and not is_hash_embed_sql(idx.feature_expr)
-            ):
-                print(
-                    "--ann-topk: this store's vectors come from "
-                    f"feature_expr={idx.feature_expr!r}, not the hash "
-                    "featurizer — text queries cannot match that "
-                    "space; pass an explicit JSON vector instead",
-                    file=sys.stderr,
-                )
-                return 2
-            err = _apply_nprobe(idx, args)
-            if err:
-                print(f"--ann-topk: {err}", file=sys.stderr)
-                return 2
-            # dimension gate: a short query vector zip_with-pads to
-            # NULL cosines (LSH) or dies in numpy broadcasting (IVF) —
-            # refuse with the numbers instead
-            dim = _store_dim(idx)
-            if dim is not None and dim != len(vec):
-                print(
-                    f"--ann-topk: query vector has {len(vec)} dims "
-                    f"but the store holds {dim}-dim vectors — pass a "
-                    f"{dim}-dim JSON vector (text queries use the "
-                    f"{len(vec)}-dim hash featurizer and only fit "
-                    "stores built with it)",
-                    file=sys.stderr,
-                )
-                return 2
-            qdf = spark.createDataFrame(
-                [(0, vec)], "query_id bigint, embedding array<double>"
+            vec = [float(x) for x in json.loads(q)]
+        except (ValueError, TypeError) as e:
+            print(
+                f"--ann-topk: not a JSON number array: {e}",
+                file=sys.stderr,
             )
-            for r in (
-                idx.topk(qdf, k=args.topk_k)
-                .orderBy("rank")
-                .select("neighbor_id", "cosine", "rank")
-                .collect()
-            ):
-                print(json.dumps(r.asDict(), sort_keys=True), file=out)
-        finally:
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+            return 2
+    from_text = vec is None
+    if from_text:
+        vec = hash_embed_py(q)
+    with (
+        _session(spark, "pgsync_spark_ann") as spark,
+        _store("--ann-topk", _load_vector_store, spark, args.store_dir)
+        as idx,
+    ):
+        # feature-space gate for TEXT queries: featurizing query
+        # text with the hash embedder is only meaningful against
+        # vectors that are THEMSELVES hash featurizations of some
+        # text — a store stamped with a non-hash featurizer (e.g.
+        # a learned-encoder column) would serve same-dim garbage
+        # cosines (r10 review pass 2). Explicit JSON vectors pass
+        # regardless: the caller owns that contract.
+        if (
+            from_text
+            and idx.feature_expr is not None
+            and not is_hash_embed_sql(idx.feature_expr)
+        ):
+            print(
+                "--ann-topk: this store's vectors come from "
+                f"feature_expr={idx.feature_expr!r}, not the hash "
+                "featurizer — text queries cannot match that "
+                "space; pass an explicit JSON vector instead",
+                file=sys.stderr,
+            )
+            return 2
+        err = _apply_nprobe(idx, args)
+        if err:
+            print(f"--ann-topk: {err}", file=sys.stderr)
+            return 2
+        # dimension gate: a short query vector zip_with-pads to
+        # NULL cosines (LSH) or dies in numpy broadcasting (IVF) —
+        # refuse with the numbers instead
+        dim = _store_dim(idx)
+        if dim is not None and dim != len(vec):
+            print(
+                f"--ann-topk: query vector has {len(vec)} dims "
+                f"but the store holds {dim}-dim vectors — pass a "
+                f"{dim}-dim JSON vector (text queries use the "
+                f"{len(vec)}-dim hash featurizer and only fit "
+                "stores built with it)",
+                file=sys.stderr,
+            )
+            return 2
+        qdf = spark.createDataFrame(
+            [(0, vec)], "query_id bigint, embedding array<double>"
+        )
+        for r in (
+            idx.topk(qdf, k=args.topk_k)
+            .orderBy("rank")
+            .select("neighbor_id", "cosine", "rank")
+            .collect()
+        ):
+            print(json.dumps(r.asDict(), sort_keys=True), file=out)
+    return 0
 
 
-def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
+def _run_ann_frontier(args, spark, out) -> int:
     """--ann-frontier: the nprobe frontier of a STORED IVF index —
     per probe width, the mean exact-rerank candidates per query and
     the mean recall@10 vs brute-force exact cosine over the live
@@ -987,20 +1034,11 @@ def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
         cosine6,
     )
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_ann_frontier")
-    try:
-        try:
-            idx = _load_vector_store(spark, args.store_dir)
-        except (OSError, ValueError) as e:
-            print(
-                f"--ann-frontier: cannot load {args.store_dir}: {e}",
-                file=sys.stderr,
-            )
-            return 2
+    with (
+        _session(spark, "pgsync_spark_ann_frontier") as spark,
+        _store("--ann-frontier", _load_vector_store, spark, args.store_dir)
+        as idx,
+    ):
         held = []
         try:
             # each family sweeps ITS probe-width dial: IVF the nprobe
@@ -1140,14 +1178,10 @@ def _run_ann_frontier(args, spark=None, out=sys.stdout) -> int:
 
             for f in held:
                 caching.release_local_checkpoint(f)
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+    return 0
 
 
-def _run_ann_stats(args, spark=None, out=sys.stdout) -> int:
+def _run_ann_stats(args, spark, out) -> int:
     """--ann-stats: operational introspection of a stored vector
     index — the read-only half of the rebuild loop (measure the
     partition, decide, --ann-rebuild). One JSON line; works for both
@@ -1157,95 +1191,80 @@ def _run_ann_stats(args, spark=None, out=sys.stdout) -> int:
     max/mean 1.75 -> 1.40 and probe cost down 19%)."""
     import json
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_ann_stats")
-    try:
-        try:
-            idx = _load_vector_store(spark, args.store_dir)
-        except (OSError, ValueError) as e:
-            print(
-                f"--ann-stats: cannot load {args.store_dir}: {e}",
-                file=sys.stderr,
+    with (
+        _session(spark, "pgsync_spark_ann_stats") as spark,
+        _store("--ann-stats", _load_vector_store, spark, args.store_dir)
+        as idx,
+    ):
+        stats = {
+            "index": type(idx).__name__,
+            "feature_expr": idx.feature_expr,
+            "overlay_rows": idx._overlay_rows,
+            "rebuilds": getattr(idx, "_rebuilds", None),
+            "trained": bool(getattr(idx, "_cents", None))
+            if hasattr(idx, "_cents")
+            else None,
+            "sample_mod": getattr(idx, "sample_mod", None),
+        }
+        tracked = idx.occupancy_counts
+        if tracked is not None:
+            # the store carries the policy's incremental
+            # counters: print their reading too — the gap vs
+            # "imbalance" IS the gross-envelope drift since the
+            # last physical fold (zero at every boundary)
+            ti = type(idx).occupancy_imbalance(tracked)
+            stats["imbalance_tracked"] = (
+                round(ti, 2) if ti is not None else None
             )
-            return 2
-        try:
-            stats = {
-                "index": type(idx).__name__,
-                "feature_expr": idx.feature_expr,
-                "overlay_rows": idx._overlay_rows,
-                "rebuilds": getattr(idx, "_rebuilds", None),
-                "trained": bool(getattr(idx, "_cents", None))
-                if hasattr(idx, "_cents")
-                else None,
-                "sample_mod": getattr(idx, "sample_mod", None),
-            }
-            tracked = idx.occupancy_counts
-            if tracked is not None:
-                # the store carries the policy's incremental
-                # counters: print their reading too — the gap vs
-                # "imbalance" IS the gross-envelope drift since the
-                # last physical fold (zero at every boundary)
-                ti = type(idx).occupancy_imbalance(tracked)
-                stats["imbalance_tracked"] = (
-                    round(ti, 2) if ti is not None else None
+        if args.ann_no_scan:
+            # manifest-only answer: no corpus scan, no exact
+            # imbalance / live_vectors — the cell stats derive
+            # from the tracked counters when the store has them
+            if tracked:
+                n = list(tracked.values())
+                stats.update(
+                    {
+                        "cells_used": len(n),
+                        "occupancy_max": max(n),
+                        "occupancy_mean": round(sum(n) / len(n), 1),
+                    }
                 )
-            if getattr(args, "ann_no_scan", False):
-                # manifest-only answer: no corpus scan, no exact
-                # imbalance / live_vectors — the cell stats derive
-                # from the tracked counters when the store has them
-                if tracked:
-                    n = list(tracked.values())
-                    stats.update(
-                        {
-                            "cells_used": len(n),
-                            "occupancy_max": max(n),
-                            "occupancy_mean": round(sum(n) / len(n), 1),
-                        }
-                    )
-                print(json.dumps(stats, sort_keys=True), file=out)
-                return 0  # the enclosing finally closes the index
-            stats["live_vectors"] = 0
-            if idx.keys is not None:
-                vals = idx.live("vals")
-                # THE occupancy statistic (VectorIndex.occupancy_*):
-                # the exact scan-derived counts here, the maintainer's
-                # rebuild policy reads the incremental-counter form of
-                # the SAME definition — one implementation, two count
-                # sources (equal at every compaction boundary)
-                counts = idx.live_cell_counts()
-                imb = type(idx).occupancy_imbalance(counts)
-                if counts:
-                    n = list(counts.values())
-                    stats.update(
-                        {
-                            "live_vectors": vals.select(
-                                "vec_id"
-                            )
-                            .distinct()
-                            .count()
-                            if vals is not None
-                            else 0,
-                            "cells_used": len(n),
-                            "occupancy_max": max(n),
-                            "occupancy_mean": round(
-                                sum(n) / len(n), 1
-                            ),
-                            "imbalance": round(imb, 2),
-                        }
-                    )
             print(json.dumps(stats, sort_keys=True), file=out)
-        finally:
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+            return 0
+        stats["live_vectors"] = 0
+        if idx.keys is not None:
+            vals = idx.live("vals")
+            # THE occupancy statistic (VectorIndex.occupancy_*):
+            # the exact scan-derived counts here, the maintainer's
+            # rebuild policy reads the incremental-counter form of
+            # the SAME definition — one implementation, two count
+            # sources (equal at every compaction boundary)
+            counts = idx.live_cell_counts()
+            imb = type(idx).occupancy_imbalance(counts)
+            if counts:
+                n = list(counts.values())
+                stats.update(
+                    {
+                        "live_vectors": vals.select(
+                            "vec_id"
+                        )
+                        .distinct()
+                        .count()
+                        if vals is not None
+                        else 0,
+                        "cells_used": len(n),
+                        "occupancy_max": max(n),
+                        "occupancy_mean": round(
+                            sum(n) / len(n), 1
+                        ),
+                        "imbalance": round(imb, 2),
+                    }
+                )
+        print(json.dumps(stats, sort_keys=True), file=out)
+    return 0
 
 
-def _run_ann_rebuild(args, spark=None, out=sys.stdout) -> int:
+def _run_ann_rebuild(args, spark, out) -> int:
     """--ann-rebuild: load the stored vector index, retrain its
     coarse codebook over the CURRENT live corpus, and reassign every
     live vector under it behind ONE atomic manifest flip
@@ -1254,117 +1273,79 @@ def _run_ann_rebuild(args, spark=None, out=sys.stdout) -> int:
     reindex a knn_vector mapping change forces)."""
     import json
 
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_ann_rebuild")
-    try:
-        try:
-            idx = _load_vector_store(spark, args.store_dir)
-        except (OSError, ValueError) as e:
+    with (
+        _session(spark, "pgsync_spark_ann_rebuild") as spark,
+        _store("--ann-rebuild", _load_vector_store, spark, args.store_dir)
+        as idx,
+    ):
+        if not hasattr(idx, "rebuild"):
             print(
-                f"--ann-rebuild: cannot load {args.store_dir}: {e}",
+                "--ann-rebuild applies only to IVF vector stores "
+                "(--dedup-index ivf): this store was written by "
+                f"{type(idx).__name__}, whose sign-LSH keys are "
+                "data-independent and never need retraining",
                 file=sys.stderr,
             )
             return 2
-        try:
-            if not hasattr(idx, "rebuild"):
+        if args.ivf_sample_mod is not None:
+            if args.ivf_sample_mod < 1:
                 print(
-                    "--ann-rebuild applies only to IVF vector stores "
-                    "(--dedup-index ivf): this store was written by "
-                    f"{type(idx).__name__}, whose sign-LSH keys are "
-                    "data-independent and never need retraining",
+                    "--ivf-sample-mod must be >= 1",
                     file=sys.stderr,
                 )
                 return 2
-            if args.ivf_sample_mod is not None:
-                if args.ivf_sample_mod < 1:
-                    print(
-                        "--ivf-sample-mod must be >= 1",
-                        file=sys.stderr,
-                    )
-                    return 2
-                # a rebuild IS the sanctioned moment to change the
-                # training budget — the retrain samples under the new
-                # modulus and the flip persists it as the store's
-                idx.sample_mod = args.ivf_sample_mod
-            try:
-                idx.rebuild()
-            except ValueError as e:
-                # unseeded/empty store, or a corpus too small (or too
-                # large) for the training sample — the rebuild left
-                # the old geometry fully live
-                print(f"--ann-rebuild: {e}", file=sys.stderr)
-                return 2
-            live = idx.vals.count() if idx.vals is not None else 0
-            print(
-                json.dumps(
-                    {
-                        "rebuilt": True,
-                        "live_vectors": live,
-                        "rebuilds": idx._rebuilds,
-                        "cells": len(idx._cents),
-                    },
-                    sort_keys=True,
-                ),
-                file=out,
-            )
-        finally:
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+            # a rebuild IS the sanctioned moment to change the
+            # training budget — the retrain samples under the new
+            # modulus and the flip persists it as the store's
+            idx.sample_mod = args.ivf_sample_mod
+        try:
+            idx.rebuild()
+        except ValueError as e:
+            # unseeded/empty store, or a corpus too small (or too
+            # large) for the training sample — the rebuild left
+            # the old geometry fully live
+            print(f"--ann-rebuild: {e}", file=sys.stderr)
+            return 2
+        live = idx.vals.count() if idx.vals is not None else 0
+        print(
+            json.dumps(
+                {
+                    "rebuilt": True,
+                    "live_vectors": live,
+                    "rebuilds": idx._rebuilds,
+                    "cells": len(idx._cents),
+                },
+                sort_keys=True,
+            ),
+            file=out,
+        )
+    return 0
 
 
-def _run_bm25_topk(args, spark=None, out=sys.stdout) -> int:
+def _run_bm25_topk(args, spark, out) -> int:
     """--bm25-topk: load the stored inverted index and answer one
     query — the read side of the --dedup-stream --dedup-index bm25
     maintenance loop."""
     import json
 
-    from .functions.bm25_index import BM25Index
-
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_bm25")
-    try:
-        try:
-            if not os.path.exists(
-                os.path.join(args.store_dir, "CURRENT")
-            ):
-                # load() returns an EMPTY index for a missing dir —
-                # a typo'd path must not masquerade as zero results
-                raise ValueError(
-                    "no CURRENT manifest (not a BM25 store, or the "
-                    "path is wrong)"
-                )
-            idx = BM25Index.load(spark, args.store_dir)
-        except (OSError, ValueError) as e:
-            # missing/unreadable/foreign store: the rc=2 stderr-message
-            # pattern every other CLI guard uses, not a raw traceback
-            print(f"--bm25-topk: cannot load {args.store_dir}: {e}",
-                  file=sys.stderr)
-            return 2
-        try:
-            # analyze the query with the analyzer THE STORE was built
-            # with (manifest-restored by load) — terms tokenized
-            # differently from the postings match nothing
-            terms = idx.analyze_terms(args.bm25_topk)
-            for r in idx.topk(terms, k=args.topk_k).collect():
-                print(json.dumps(r.asDict(), sort_keys=True), file=out)
-        finally:
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+    if not args.bm25_topk.strip():
+        print("--bm25-topk needs at least one term", file=sys.stderr)
+        return 2
+    with (
+        _session(spark, "pgsync_spark_bm25") as spark,
+        _store("--bm25-topk", _load_bm25_store, spark, args.store_dir)
+        as idx,
+    ):
+        # analyze the query with the analyzer THE STORE was built
+        # with (manifest-restored by load) — terms tokenized
+        # differently from the postings match nothing
+        terms = idx.analyze_terms(args.bm25_topk)
+        for r in idx.topk(terms, k=args.topk_k).collect():
+            print(json.dumps(r.asDict(), sort_keys=True), file=out)
+    return 0
 
 
-def _run_bm25_stats(args, spark=None, out=sys.stdout) -> int:
+def _run_bm25_stats(args, spark, out) -> int:
     """--bm25-stats: operational introspection of a stored lexical
     index — the measure half of the analyzer dial, mirroring
     --ann-stats for the vector side. The df/N column is the signal:
@@ -1380,444 +1361,165 @@ def _run_bm25_stats(args, spark=None, out=sys.stdout) -> int:
 
     from pyspark.sql import functions as F
 
-    from .functions.bm25_index import BM25Index
-
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_bm25_stats")
-    try:
-        try:
-            if not os.path.exists(
-                os.path.join(args.store_dir, "CURRENT")
-            ):
-                raise ValueError(
-                    "no CURRENT manifest (not a BM25 store, or the "
-                    "path is wrong)"
-                )
-            idx = BM25Index.load(spark, args.store_dir)
-        except (OSError, ValueError) as e:
-            print(
-                f"--bm25-stats: cannot load {args.store_dir}: {e}",
-                file=sys.stderr,
+    with (
+        _session(spark, "pgsync_spark_bm25_stats") as spark,
+        _store("--bm25-stats", _load_bm25_store, spark, args.store_dir)
+        as idx,
+    ):
+        keys, vals = idx.live("keys"), idx.live("vals")
+        stats = {
+            "index": "BM25Index",
+            "analyzer": idx.analyzer,
+            "overlay_rows": idx._overlay_rows,
+            "live_docs": 0,
+        }
+        if vals is not None:
+            drow = vals.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.avg("dl").alias("avgdl"),
+            ).first()
+            stats.update(
+                {
+                    "live_docs": drow["n"],
+                    "avgdl": round(drow["avgdl"], 2)
+                    if drow["avgdl"] is not None
+                    else None,
+                }
             )
-            return 2
-        try:
-            keys, vals = idx.live("keys"), idx.live("vals")
-            stats = {
-                "index": "BM25Index",
-                "analyzer": idx.analyzer,
-                "overlay_rows": idx._overlay_rows,
-                "live_docs": 0,
-            }
-            if vals is not None:
-                drow = vals.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg("dl").alias("avgdl"),
+            if keys is not None and drow["n"]:
+                prow = keys.agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.countDistinct("term").alias("vocab"),
                 ).first()
                 stats.update(
                     {
-                        "live_docs": drow["n"],
-                        "avgdl": round(drow["avgdl"], 2)
-                        if drow["avgdl"] is not None
-                        else None,
+                        "postings_rows": prow["rows"],
+                        "vocabulary": prow["vocab"],
                     }
                 )
-                if keys is not None and drow["n"]:
-                    prow = keys.agg(
-                        F.count(F.lit(1)).alias("rows"),
-                        F.countDistinct("term").alias("vocab"),
-                    ).first()
-                    stats.update(
-                        {
-                            "postings_rows": prow["rows"],
-                            "vocabulary": prow["vocab"],
-                        }
-                    )
-                    # postings hold one live row per (term, doc), so
-                    # the per-term row count IS df
-                    stats["top_df"] = [
-                        {
-                            "term": r["term"],
-                            "df": r["df"],
-                            "df_ratio": round(r["df"] / drow["n"], 4),
-                        }
-                        for r in keys.groupBy("term")
-                        .agg(F.count(F.lit(1)).alias("df"))
-                        .orderBy(F.col("df").desc(), "term")
-                        .limit(10)
-                        .collect()
-                    ]
-            print(json.dumps(stats, sort_keys=True), file=out)
-        finally:
-            idx.close()
-        return 0
-    finally:
-        if owns_spark:
-            spark.stop()
+                # postings hold one live row per (term, doc), so
+                # the per-term row count IS df
+                stats["top_df"] = [
+                    {
+                        "term": r["term"],
+                        "df": r["df"],
+                        "df_ratio": round(r["df"] / drow["n"], 4),
+                    }
+                    for r in keys.groupBy("term")
+                    .agg(F.count(F.lit(1)).alias("df"))
+                    .orderBy(F.col("df").desc(), "term")
+                    .limit(10)
+                    .collect()
+                ]
+        print(json.dumps(stats, sort_keys=True), file=out)
+    return 0
 
 
-def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
-    """Run the CLI. ``spark``/``out`` are injectable for tests; when
-    ``spark`` is None a session is built with the engine defaults."""
-    args = build_parser().parse_args(argv)
-    if args.ivf_sample_mod is not None and not (
-        args.ann_rebuild
-        or (args.dedup_stream and args.dedup_index == "ivf")
-        or (args.vector_store and args.vector_index == "ivf")
-    ):
-        # the training-budget dial only matters where a codebook
-        # trains; in every other mode accepting it would read as
-        # "the flag took effect" — same dependent-flag rule as
-        # --vector-index/--vector-expr (r11 advice: plain sync,
-        # --ann-topk and --ann-stats all silently swallowed it)
-        print(
-            "--ivf-sample-mod applies only where a codebook trains: "
-            "--ann-rebuild, --dedup-stream with --dedup-index ivf, "
-            "or a sync with --vector-store --vector-index ivf",
-            file=sys.stderr,
-        )
-        return 2
-    if args.ann_no_scan and not args.ann_stats:
-        # dependent-flag rule: a modifier that silently did nothing
-        # would read as "the stats were manifest-only"
-        print(
-            "--ann-no-scan is a modifier of --ann-stats",
-            file=sys.stderr,
-        )
-        return 2
-    if args.ann_frontier_max_width is not None and not args.ann_frontier:
-        # same rule: a sweep bound with no sweep must refuse, not
-        # silently do nothing
-        print(
-            "--ann-frontier-max-width is a modifier of --ann-frontier",
-            file=sys.stderr,
-        )
-        return 2
-    if args.ann_nprobe is not None and (
-        args.ann_topk is None and args.hybrid_topk is None
-    ):
-        # probe width only means something on a read — same
-        # dependent-flag rule as the rest
-        print(
-            "--ann-nprobe applies only with --ann-topk or "
-            "--hybrid-topk (IVF stores)",
-            file=sys.stderr,
-        )
-        return 2
-    if args.hybrid_topk is not None:
-        if not args.store_dir or not args.ann_store_dir:
-            print(
-                "--hybrid-topk requires --store-dir (BM25 store) AND "
-                "--ann-store-dir (vector store)",
-                file=sys.stderr,
-            )
-            return 2
-        if not args.hybrid_topk.strip():
-            print("--hybrid-topk needs query text", file=sys.stderr)
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.ann_topk is not None
-            or args.bm25_topk is not None
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_stats
-            or args.ann_frontier
-        ):
-            # every other mode flag refuses, not just sync/stream —
-            # dispatch order would otherwise silently ignore the
-            # other single-shot mode (r10 advice)
-            print(
-                "--hybrid-topk is its own mode; remove the other "
-                "mode flags (sync/stream/--ann-topk/--bm25-topk/"
-                "--export-shards/--ann-rebuild)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_hybrid_topk(args, spark, out)
-    if args.ann_topk is not None:
-        if not args.store_dir:
-            print("--ann-topk requires --store-dir", file=sys.stderr)
-            return 2
-        if not args.ann_topk.strip():
-            print(
-                "--ann-topk needs query text or a JSON vector",
-                file=sys.stderr,
-            )
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.bm25_topk is not None
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_stats
-            or args.ann_frontier
-        ):
-            print(
-                "--ann-topk is its own mode; remove the other mode "
-                "flags (sync/stream/--bm25-topk/--export-shards/"
-                "--ann-rebuild)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_ann_topk(args, spark, out)
-    if args.bm25_topk is not None:
-        if not args.store_dir:
-            print("--bm25-topk requires --store-dir", file=sys.stderr)
-            return 2
-        if not args.bm25_topk.strip():
-            print("--bm25-topk needs at least one term", file=sys.stderr)
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_stats
-            or args.ann_frontier
-            or args.bm25_stats
-        ):
-            print(
-                "--bm25-topk is its own mode; remove the other mode "
-                "flags (sync/stream/--export-shards/--ann-rebuild)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_bm25_topk(args, spark, out)
-    if args.bm25_stats:
-        if not args.store_dir:
-            print("--bm25-stats requires --store-dir", file=sys.stderr)
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_stats
-            or args.ann_frontier
-        ):
-            print(
-                "--bm25-stats is its own mode; remove the other mode "
-                "flags (sync/stream/--export-shards/--ann-*)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_bm25_stats(args, spark, out)
-    if args.ann_frontier:
-        if not args.store_dir:
-            print(
-                "--ann-frontier requires --store-dir", file=sys.stderr
-            )
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_stats
-        ):
-            print(
-                "--ann-frontier is its own mode; remove the other "
-                "mode flags (sync/stream/--export-shards/"
-                "--ann-rebuild/--ann-stats)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_ann_frontier(args, spark, out)
-    if args.ann_stats:
-        if not args.store_dir:
-            print("--ann-stats requires --store-dir", file=sys.stderr)
-            return 2
-        if (
-            args.dedup_stream
-            or args.config
-            or args.daemon
-            or args.export_shards
-            or args.ann_rebuild
-            or args.ann_frontier
-        ):
-            print(
-                "--ann-stats is its own mode; remove the other mode "
-                "flags (sync/stream/--export-shards/--ann-rebuild — "
-                "measure first, rebuild as its own invocation)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_ann_stats(args, spark, out)
-    if args.ann_rebuild:
-        if not args.store_dir:
-            print("--ann-rebuild requires --store-dir", file=sys.stderr)
-            return 2
-        if (
-            args.dedup_stream or args.config or args.daemon
-            or args.export_shards or args.ann_frontier
-        ):
-            print(
-                "--ann-rebuild is its own mode; remove the other "
-                "mode flags (sync/stream/--export-shards)",
-                file=sys.stderr,
-            )
-            return 2
-        return _run_ann_rebuild(args, spark, out)
-    if args.dedup_stream:
-        if not (args.checkpoint_dir and args.dedup_out):
-            print(
-                "--dedup-stream requires --checkpoint-dir and --dedup-out",
-                file=sys.stderr,
-            )
-            return 2
-        if args.drift_alert_kl is not None and not args.drift_column:
-            # alerting without a monitored column would arm nothing —
-            # reject like the other dependent-flag guards
-            print(
-                "--drift-alert-kl requires --drift-column",
-                file=sys.stderr,
-            )
-            return 2
-        if args.store_dir and os.path.abspath(
-            args.dedup_out
-        ) == os.path.abspath(args.store_dir):
-            # both write decisions/epoch=N under their root; the stream
-            # itself also refuses, but fail before a Spark session spins
-            print(
-                "--dedup-out must differ from --store-dir (both hold "
-                "decisions/epoch=N)",
-                file=sys.stderr,
-            )
-            return 2
-        conflicts = [
-            flag
-            for flag, val in (
-                ("-c/--config", args.config),
-                ("--daemon", args.daemon),
-                ("--events-dir", args.events_dir),
-                ("--sink-dir", args.sink_dir),
-                ("--search-url", args.search_url),
-                ("--bm25-store", args.bm25_store),
-                ("--vector-store", args.vector_store),
-                # numeric flag: "is not None", so an (invalid-but-present)
-                # 0 is refused here too instead of silently swallowed
-                ("--ann-rebuild-when", args.ann_rebuild_when is not None),
-                ("--analyze", args.analyze),
-                ("--validate", args.validate),
-                ("--print-mapping", args.print_mapping),
-            )
-            if val
-        ]
-        if conflicts:
-            # dropping them silently would read as "daemon plus dedup"
-            # half-working; reject like the other mode guards do
-            print(
-                "--dedup-stream is its own mode; remove: "
-                + ", ".join(conflicts),
-                file=sys.stderr,
-            )
-            return 2
-        return _run_dedup_stream(args, spark, out)
-    if args.export_shards:
-        if not args.export_out:
-            print("--export-shards requires --export-out", file=sys.stderr)
-            return 2
-        conflicts = [
-            flag
-            for flag, val in (
-                ("-c/--config", args.config),
-                ("--daemon", args.daemon),
-                ("--sink-dir", args.sink_dir),
-                ("--search-url", args.search_url),
-                ("--bm25-store", args.bm25_store),
-                ("--vector-store", args.vector_store),
-                # numeric flag: "is not None", so an (invalid-but-present)
-                # 0 is refused here too instead of silently swallowed
-                ("--ann-rebuild-when", args.ann_rebuild_when is not None),
-                ("--analyze", args.analyze),
-                ("--validate", args.validate),
-                ("--print-mapping", args.print_mapping),
-            )
-            if val
-        ]
-        if conflicts:
-            print(
-                "--export-shards is its own mode; remove: "
-                + ", ".join(conflicts),
-                file=sys.stderr,
-            )
-            return 2
-        from .sinks.shards import (
-            SHARD_TOKEN_BUDGET,
-            WRITER_LANES,
-            write_training_shards,
-        )
+def _run_export_shards(args, spark, out) -> int:
+    """--export-shards: parquet docs → token-budgeted training shards
+    + MANIFEST.json under --export-out."""
+    from .sinks.shards import (
+        SHARD_TOKEN_BUDGET,
+        WRITER_LANES,
+        write_training_shards,
+    )
 
-        owns = spark is None
-        if owns:
-            from .session import get_spark
+    with _session(spark, "pgsync_spark_export") as spark:
+        manifest = write_training_shards(
+            spark.read.parquet(args.export_shards),
+            args.export_out,
+            budget=args.shard_budget or SHARD_TOKEN_BUDGET,
+            lanes=args.shard_lanes or WRITER_LANES,
+        )
+    print(
+        f"exported {manifest['n_docs']} docs / "
+        f"{manifest['n_tokens']} tokens as "
+        f"{manifest['n_shards']} shards (v{manifest['version']}) "
+        f"to {args.export_out}",
+        file=out,
+    )
+    return 0
 
-            spark = get_spark(app_name="pgsync_spark_export")
-        try:
-            manifest = write_training_shards(
-                spark.read.parquet(args.export_shards),
-                args.export_out,
-                budget=args.shard_budget or SHARD_TOKEN_BUDGET,
-                lanes=args.shard_lanes or WRITER_LANES,
+
+def _run_analyze(args, spark, out) -> int:
+    """--analyze: join-key/index advice per tree (ref: sync.py:
+    2360-2366 ``sync.analyze()``)."""
+    from .advisor import analyze_report
+
+    with _configured(args, spark) as (trees, catalog):
+        for tree in trees:
+            print(f"== {tree.index or tree.root.table} ==", file=out)
+            print(analyze_report(catalog, tree), file=out)
+    return 0
+
+
+def _run_validate(args, spark, out) -> int:
+    """--validate: the engine's DuckDB-oracle correctness gate as a
+    user command — compile each tree, generate its oracle SQL from
+    the SAME node config, run both against --data-dir, compare row
+    multisets; exit 1 on any mismatch. No reference analog: the
+    reference has no second engine to check against. The Spark side
+    is the same compile every sync runs."""
+    from .plans.oracle import oracle_doc_sql
+    from .plans.sqlgen import compile_assembled
+    from .testing import compare
+
+    with _configured(args, spark) as (trees, catalog):
+
+        def columns_of(t: str) -> list:
+            return catalog.df(t).columns
+
+        def column_type_of(t: str, c: str) -> str:
+            dt = dict(catalog.df(t).dtypes)[c]
+            if dt.startswith("timestamp"):
+                return "timestamp"
+            if dt == "date":
+                return "date"
+            return "other"
+
+        failed = []
+        for tree in trees:
+            name = tree.index or tree.root.table
+            df, _ = compile_assembled(catalog, tree)
+            sql = oracle_doc_sql(
+                tree, catalog.tables, columns_of, column_type_of
             )
-            print(
-                f"exported {manifest['n_docs']} docs / "
-                f"{manifest['n_tokens']} tokens as "
-                f"{manifest['n_shards']} shards (v{manifest['version']}) "
-                f"to {args.export_out}",
-                file=out,
-            )
-            return 0
-        finally:
-            if owns:
-                spark.stop()
-    if args.config is None:
-        print(
-            "-c/--config is required (except with --dedup-stream)",
-            file=sys.stderr,
-        )
-        return 2
-    if args.daemon and not (args.events_dir and args.checkpoint_dir):
-        print(
-            "--daemon requires --events-dir and --checkpoint-dir",
-            file=sys.stderr,
-        )
-        return 2
-    if (
-        args.vector_index is not None or args.vector_expr is not None
-    ) and not args.vector_store:
-        # silently ignoring either would read as "the flag took
-        # effect" — same dependent-flag rule as --drift-alert-kl
-        print(
-            "--vector-index/--vector-expr apply only with "
-            "--vector-store",
-            file=sys.stderr,
-        )
-        return 2
+            ok, msg = compare(df, sql, args.data_dir)
+            print(f"{'PASS' if ok else 'FAIL'} {name}: {msg[:300]}", file=out)
+            if not ok:
+                failed.append(name)
+    return 1 if failed else 0
+
+
+def _run_print_mapping(args, spark, out) -> int:
+    """--print-mapping: the bin/es_mapping analog — emit each index's
+    generated body (settings + mappings) without touching any
+    cluster."""
+    import json
+
+    from .plans.sqlgen import compile_assembled
+    from .sinks.search import build_index_mapping
+
+    with _configured(args, spark) as (trees, catalog):
+        for tree in trees:
+            typed, _ = compile_assembled(catalog, tree, structured=True)
+            body = build_index_mapping(tree, typed.schema)
+            print(f"== {tree.index or tree.root.table} ==", file=out)
+            print(json.dumps(body, indent=2, sort_keys=True), file=out)
+    return 0
+
+
+def _run_sync(args, spark, out) -> int:
+    """The default mode: the reference's one-shot ``pull()`` (full
+    sync, or restore from --store-dir), optionally followed by the
+    --daemon CDC stream, then the sink write and the state save."""
+    from .streaming.runner import SyncRunner
+
     if args.ann_rebuild_when is not None:
-        # same dependent-flag rule: the policy arms the engine-owned
-        # vector maintainer, so without one it would silently do
-        # nothing; and it is meaningless for LSH (data-independent
-        # keys never retrain) — the per-store family check happens at
+        # the policy is meaningless for LSH (data-independent keys
+        # never retrain) — the per-store family check happens at
         # maintainer construction (a loaded store may be IVF without
         # --vector-index), but an EXPLICIT lsh is refusable now
-        if not args.vector_store:
-            print(
-                "--ann-rebuild-when applies only with --vector-store "
-                "(the engine-maintained vector index it automates)",
-                file=sys.stderr,
-            )
-            return 2
         if not args.ann_rebuild_when > 1:
             print(
                 "--ann-rebuild-when must be > 1 (max/mean occupancy "
@@ -1833,117 +1535,194 @@ def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
                 file=sys.stderr,
             )
             return 2
-    if (args.drain or args.polling) and not args.daemon:
-        print(
-            "--drain/--polling only apply in --daemon mode",
-            file=sys.stderr,
-        )
-        return 2
-    if not (
-        args.analyze
-        or args.print_mapping
-        or args.validate
-        or args.sink_dir
-        or args.search_url
-        or args.bm25_store
+    if args.ivf_sample_mod is not None and (
+        args.vector_index != "ivf" or args.ivf_sample_mod < 1
     ):
         print(
-            "nothing to do: pass --analyze, --validate, --print-mapping, "
-            "--sink-dir, --search-url, or --bm25-store",
+            "--ivf-sample-mod needs --vector-index ivf and N >= 1",
             file=sys.stderr,
         )
         return 2
-
-    owns_spark = spark is None
-    if owns_spark:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pgsync_spark_cli")
-    try:
-        trees = config_loader(args.config)
-        catalog = Catalog(spark, args.data_dir)
-
-        if args.analyze:
-            from .advisor import analyze_report
-
-            for tree in trees:
-                name = tree.index or tree.root.table
-                print(f"== {name} ==", file=out)
-                print(analyze_report(catalog, tree), file=out)
-            return 0
-
-        if args.validate:
-            # the engine's DuckDB-oracle correctness gate as a user
-            # command: compile each tree, generate its oracle SQL from
-            # the SAME node config, run both against --data-dir,
-            # compare row multisets. No reference analog — the
-            # reference has no second engine to check against; the
-            # DuckDB oracle compiler makes it a one-flag feature. The
-            # Spark side is the same compile every sync runs.
-            from .plans.oracle import oracle_doc_sql
-            from .plans.sqlgen import compile_assembled
-            from .testing import compare
-
-            def columns_of(t: str) -> list:
-                return catalog.df(t).columns
-
-            def column_type_of(t: str, c: str) -> str:
-                dt = dict(catalog.df(t).dtypes)[c]
-                if dt.startswith("timestamp"):
-                    return "timestamp"
-                if dt == "date":
-                    return "date"
-                return "other"
-
-            failed = []
-            for tree in trees:
-                name = tree.index or tree.root.table
-                df, _ = compile_assembled(catalog, tree)
-                sql = oracle_doc_sql(
-                    tree, catalog.tables, columns_of, column_type_of
-                )
-                ok, msg = compare(df, sql, args.data_dir)
-                print(f"{'PASS' if ok else 'FAIL'} {name}: {msg[:300]}", file=out)
-                if not ok:
-                    failed.append(name)
-            return 1 if failed else 0
-
-        if args.print_mapping:
-            # the bin/es_mapping analog: emit each index's generated
-            # body (settings + mappings) without touching any cluster
-            import json as _json
-
-            from .plans.sqlgen import compile_assembled
-            from .sinks.search import build_index_mapping
-
-            for tree in trees:
-                name = tree.index or tree.root.table
-                typed, _ = compile_assembled(catalog, tree, structured=True)
-                body = build_index_mapping(tree, typed.schema)
-                print(f"== {name} ==", file=out)
-                print(_json.dumps(body, indent=2, sort_keys=True), file=out)
-            return 0
-
-        from .streaming.runner import SyncRunner
-
-        runner = SyncRunner(spark, trees, catalog)
+    with _configured(args, spark) as (trees, catalog):
+        runner = SyncRunner(catalog.spark, trees, catalog)
         try:
-            return _run_sync(runner, args, out)
+            return _sync(runner, args, out)
         finally:
             # error paths too: a failed _write_docs/store.save must not
             # leak the shared materializer's snapshot checkpoints or
             # leave the catalog serving CDC-overlay views (visible when
-            # a long-lived caller injects spark=, where only owns_spark
-            # triggers spark.stop())
+            # a long-lived caller injects spark=, where only an owned
+            # session is stopped)
             runner.close()
-    finally:
-        if owns_spark:
-            spark.stop()
 
 
-def _run_sync(runner, args, out) -> int:
+class _Mode(NamedTuple):
+    """One row of the mode table: the runner, the flags that must be
+    given with the mode (``"a|b"``: at least one of them), and every
+    other flag the mode reads, mapped to the flags it needs beside it
+    (a modifier's parent, same notation)."""
+
+    run: Callable[..., int]
+    requires: tuple[str, ...] = ()
+    reads: dict[str, tuple[str, ...]] = {}
+
+
+def _free(*flags: str) -> dict[str, tuple[str, ...]]:
+    """Flags a mode reads on their own, with no parent flag."""
+    return dict.fromkeys(flags, ())
+
+
+def _modes() -> dict[str | None, _Mode]:
+    """THE mode table, keyed by the flag that selects each mode; None
+    is the default config-driven sync. Built per call, so main()
+    dispatches to whatever each runner name is bound to (a test can
+    stub a runner)."""
+    store = ("store_dir",)
+    config = ("config",)
+    return {
+        "hybrid_topk": _Mode(
+            _run_hybrid_topk,
+            ("store_dir", "ann_store_dir"),
+            _free("topk_k", "ann_nprobe"),
+        ),
+        "ann_topk": _Mode(
+            _run_ann_topk, store, _free("topk_k", "ann_nprobe")
+        ),
+        "bm25_topk": _Mode(_run_bm25_topk, store, _free("topk_k")),
+        "bm25_stats": _Mode(_run_bm25_stats, store),
+        "ann_frontier": _Mode(
+            _run_ann_frontier,
+            store,
+            _free("ann_frontier_queries", "ann_frontier_max_width"),
+        ),
+        "ann_stats": _Mode(_run_ann_stats, store, _free("ann_no_scan")),
+        "ann_rebuild": _Mode(
+            _run_ann_rebuild, store, _free("ivf_sample_mod")
+        ),
+        "dedup_stream": _Mode(
+            _run_dedup_stream,
+            ("checkpoint_dir", "dedup_out"),
+            {
+                **_free(
+                    "store_dir", "dedup_index", "drift_column",
+                    "probe_hamming", "compact_every", "rebind",
+                    "pre_filter", "cdc_ops", "bm25_analyzer",
+                    "ivf_sample_mod", "max_files_per_trigger",
+                    "polling", "drain", "verbose",
+                ),
+                # alerting without a monitored column would arm nothing
+                "drift_alert_kl": ("drift_column",),
+            },
+        ),
+        "export_shards": _Mode(
+            _run_export_shards,
+            ("export_out",),
+            _free("shard_budget", "shard_lanes"),
+        ),
+        "analyze": _Mode(_run_analyze, config, _free("data_dir")),
+        "validate": _Mode(_run_validate, config, _free("data_dir")),
+        "print_mapping": _Mode(
+            _run_print_mapping, config, _free("data_dir")
+        ),
+        None: _Mode(
+            _run_sync,
+            ("config", "sink_dir|search_url|bm25_store"),
+            {
+                **_free("data_dir", "store_dir", "vector_store", "verbose"),
+                "daemon": ("events_dir", "checkpoint_dir"),
+                **dict.fromkeys(
+                    (
+                        "drain", "polling", "events_dir",
+                        "checkpoint_dir", "max_files_per_trigger",
+                    ),
+                    ("daemon",),
+                ),
+                "no_create_index": ("search_url",),
+                **dict.fromkeys(
+                    ("bm25_text_expr", "bm25_analyzer"), ("bm25_store",)
+                ),
+                # the vector maintainer's dials, the codebook-training
+                # budget included
+                **dict.fromkeys(
+                    (
+                        "vector_expr", "vector_index",
+                        "ann_rebuild_when", "ivf_sample_mod",
+                    ),
+                    ("vector_store",),
+                ),
+                # the shared segment-maintenance dial of both
+                # engine-owned stores
+                "compact_every": ("bm25_store|vector_store",),
+            },
+        ),
+    }
+
+
+def _mode_for(argv: list[str] | None) -> _Mode:
+    """The one mode ``argv`` selects, checked against the table: more
+    than one mode, a missing required flag, a flag the mode does not
+    read, or a modifier without its parent refuses. Only flags
+    actually on the command line count — one passed at its default
+    value too, which comparing values with the defaults cannot see."""
+    parser = build_parser()
+    flag = {a.dest: a.option_strings[-1] for a in parser._actions}
+    for a in parser._actions:
+        a.default = argparse.SUPPRESS
+    given = set(vars(parser.parse_args(argv)))
+    modes = _modes()
+
+    def label(key):
+        return flag[key] if key else "sync (no mode flag)"
+
+    def named(mode):
+        return {f for r in mode.requires for f in r.split("|")} | set(
+            mode.reads
+        )
+
+    def missing(req):
+        return not given & set(req.split("|"))
+
+    def alternatives(req):
+        return " or ".join(flag[f] for f in req.split("|"))
+
+    chosen = [key for key in modes if key in given]
+    if len(chosen) > 1:
+        raise _Refused(
+            "one mode per invocation; got "
+            + ", ".join(flag[key] for key in chosen)
+        )
+    key = chosen[0] if chosen else None
+    mode = modes[key]
+    unread = sorted(given - named(mode) - {key})
+    if unread:
+        raise _Refused(
+            f"{label(key)} does not read "
+            f"{', '.join(flag[f] for f in unread)}; remove it"
+        )
+    for req in mode.requires:
+        if missing(req):
+            raise _Refused(f"{label(key)} requires {alternatives(req)}")
+    for f in sorted(given & set(mode.reads)):
+        for req in mode.reads[f]:
+            if missing(req):
+                raise _Refused(f"{flag[f]} requires {alternatives(req)}")
+    return mode
+
+
+def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
+    """Run the CLI. ``spark``/``out`` are injectable for tests; when
+    ``spark`` is None a session is built with the engine defaults."""
+    args = build_parser().parse_args(argv)
+    try:
+        return _mode_for(argv).run(args, spark, out)
+    except _Refused as e:
+        print(e, file=sys.stderr)
+        return 2
+
+
+def _sync(runner, args, out) -> int:
     """The sync body proper (full/restore → optional daemon → write →
-    save). Split out of main() so the caller can guarantee
+    save). Split out of _run_sync() so the caller can guarantee
     runner.close() on EVERY exit path, including raises from
     _write_docs/store.save."""
     spark = runner.spark
@@ -2070,15 +1849,6 @@ def _run_sync(runner, args, out) -> int:
                 if args.vector_index == "ivf"
                 else VectorIndex
             )
-            if args.ivf_sample_mod is not None and (
-                args.vector_index != "ivf" or args.ivf_sample_mod < 1
-            ):
-                print(
-                    "--ivf-sample-mod needs --vector-index ivf "
-                    "and N >= 1",
-                    file=sys.stderr,
-                )
-                return 2
             for name, eng in runner.engines.items():
                 path = os.path.join(args.vector_store, name)
                 fresh = not os.path.exists(

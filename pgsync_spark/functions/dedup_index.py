@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import owned
+from ..operators.joins import BROADCAST_ROW_LIMIT
 from ..plans.sqlgen import ViewScope
 from .dedup import (
     JACCARD_THRESHOLD,
@@ -65,14 +66,6 @@ from .dedup import (
 from .hashing import round6
 
 _DECISION_SCHEMA = "doc_id bigint, dup_of bigint, jaccard double"
-
-# CDC overlay auto-compaction cap (rows of op != 'a' state since the
-# last compact): the overlay folds through one BROADCAST left join,
-# so its size must stay bounded no matter how the operator tunes
-# compact_every — the same rule as the relational engine's
-# KeyedOverlay size cap (streaming/incremental.py, r3 item 10). 64k
-# skinny (id, ver, op) rows is well inside every broadcast limit.
-DEFAULT_OVERLAY_CAP = 65536
 
 # apply_cdc op vocabulary: 'd' deletes; these (or NULL) upsert; 't'
 # and anything else raise — an unrecognized op silently upserting a
@@ -139,15 +132,18 @@ class _AppendOnlyIndex:
         self,
         spark: SparkSession,
         store_dir: str | None = None,
-        overlay_cap: int | None = DEFAULT_OVERLAY_CAP,
+        overlay_cap: int | None = BROADCAST_ROW_LIMIT,
     ):
         self.spark = spark
         self.store_dir = store_dir
-        # auto-compact when CDC overlay rows exceed this (None
+        # auto-compact when CDC overlay rows (op != 'a' state since
+        # the last compact) exceed this: the overlay folds through one
+        # BROADCAST left join, so by default it stays within the
+        # broadcast row limit, the KeyedOverlay row_cap rule. None
         # disables — then compact_every is the operator's only dial
         # and a CDC burst between cadence points grows every query's
         # broadcast fold unboundedly; keep the default unless the
-        # maintenance cadence is owned elsewhere)
+        # maintenance cadence is owned elsewhere
         self.overlay_cap = overlay_cap
         self._key_parts: list[DataFrame] = []
         self._val_parts: list[DataFrame] = []
@@ -1398,7 +1394,7 @@ class EmbeddingIndex(_AppendOnlyIndex):
         spark: SparkSession,
         store_dir: str | None = None,
         probe_hamming: int | None = None,
-        overlay_cap: int | None = DEFAULT_OVERLAY_CAP,
+        overlay_cap: int | None = BROADCAST_ROW_LIMIT,
     ):
         super().__init__(spark, store_dir, overlay_cap=overlay_cap)
         if probe_hamming is None:

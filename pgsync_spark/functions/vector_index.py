@@ -49,7 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup_index import DEFAULT_OVERLAY_CAP, EmbeddingIndex, _AppendOnlyIndex
+from ..operators.joins import BROADCAST_ROW_LIMIT
+from .dedup_index import EmbeddingIndex, _AppendOnlyIndex
 
 _EMPTY_DECISIONS = "vec_id bigint"
 _TOPK_SCHEMA = (
@@ -73,7 +74,7 @@ class VectorIndex(_AppendOnlyIndex):
         spark: SparkSession,
         store_dir: str | None = None,
         probe_hamming: int | None = None,
-        overlay_cap: int | None = DEFAULT_OVERLAY_CAP,
+        overlay_cap: int | None = BROADCAST_ROW_LIMIT,
         feature_expr: str | None = None,
     ):
         super().__init__(spark, store_dir, overlay_cap=overlay_cap)
@@ -502,7 +503,7 @@ class IVFVectorIndex(VectorIndex):
         self,
         spark: SparkSession,
         store_dir: str | None = None,
-        overlay_cap: int | None = DEFAULT_OVERLAY_CAP,
+        overlay_cap: int | None = BROADCAST_ROW_LIMIT,
         feature_expr: str | None = None,
         sample_mod: int | None = None,
         nprobe: int | None = None,

@@ -100,16 +100,17 @@ def validate_remap(
             )
 
 
-def remap_tables(events: DataFrame, remap: dict[str, str]) -> DataFrame:
-    """Retag event table names through ``remap`` (single application —
-    each row matches at most one source name). Pure column expressions;
-    no-op when the mapping is empty."""
+def remap_column(remap: dict[str, str]) -> F.Column | None:
+    """The ``table`` column retagged through ``remap`` (single
+    application — each row matches at most one source name); None when
+    the mapping is empty. Columns are immutable unresolved expressions,
+    so a caller builds this once and reuses it every batch."""
     if not remap:
-        return events
+        return None
     expr = F.col("table")
     for base, target in sorted(remap.items()):
         expr = F.when(F.col("table") == base, F.lit(target)).otherwise(expr)
-    return events.withColumn("table", expr)
+    return expr
 
 
 def lineage_df(combined: DataFrame, keys_cols: dict) -> DataFrame:
@@ -240,12 +241,7 @@ class IncrementalEngine:
         # driver-side construction per batch (guide §7.3)
         self._scope_cond = self._event_scope()
         self._keep_cond = self._keep_event()
-        self._remap_col = None
-        if self._base_remap:
-            expr = F.col("table")
-            for base, target in sorted(self._base_remap.items()):
-                expr = F.when(F.col("table") == base, F.lit(target)).otherwise(expr)
-            self._remap_col = expr
+        self._remap_col = remap_column(self._base_remap)
         # _resolve_old_images' per-(table, pk-tuple) projection trees:
         # (table, filter cond, select Columns) — one lineage-pair
         # branch each, identical every batch
@@ -361,16 +357,21 @@ class IncrementalEngine:
         crossing; store-internal root-pk columns do not (no sink reads
         them)."""
         docs = self.docs
-        if docs is None or not self.plugins:
+        return docs if docs is None else self._through_plugins(docs)
+
+    def _through_plugins(self, docs: DataFrame) -> DataFrame:
+        """``docs`` through the tree's plugin chain — the crossing both
+        sink-facing paths (docs_for_sink, the batch's consumer delta)
+        take; ``_routing`` rides through."""
+        if not self.plugins:
             return docs
         from ..plugin import apply_plugins
 
-        passthrough = tuple(c for c in docs.columns if c == "_routing")
         return apply_plugins(
             docs,
             self.plugins,
             index=self.tree.index or self.tree.root.table,
-            passthrough=passthrough,
+            passthrough=tuple(c for c in docs.columns if c == "_routing"),
         )
 
     @docs.setter
@@ -1048,18 +1049,7 @@ class IncrementalEngine:
                 # scheduling, so serially the indexes took turns idling
                 # the executors (see the doc_consumers contract in
                 # __init__).
-                ups = new_docs
-                if self.plugins:
-                    from ..plugin import apply_plugins
-
-                    ups = apply_plugins(
-                        ups,
-                        self.plugins,
-                        index=self.tree.index or self.tree.root.table,
-                        passthrough=tuple(
-                            c for c in ups.columns if c == "_routing"
-                        ),
-                    )
+                ups = self._through_plugins(new_docs)
                 gone = affected_ids.join(
                     new_docs.select("_id"), "_id", "left_anti"
                 )

@@ -25,7 +25,7 @@ from .. import caching
 from ..catalog import Catalog
 from ..node import Tree
 from .cdc import TableMaterializer
-from .incremental import IncrementalEngine, remap_tables, validate_remap
+from .incremental import IncrementalEngine, remap_column, validate_remap
 
 
 class SyncRunner:
@@ -68,6 +68,7 @@ class SyncRunner:
             for node in eng.tree.root.traverse_post_order()
         }
         validate_remap(self._base_remap, node_tables=node_tables)
+        self._remap_col = remap_column(self._base_remap)
 
     @classmethod
     def from_config(
@@ -96,7 +97,8 @@ class SyncRunner:
         the post-batch snapshots. Old-image resolution reads each
         engine's own lineage index, which is pre-batch by construction,
         so apply-order does not race resolution."""
-        events = remap_tables(events, self._base_remap)
+        if self._remap_col is not None:
+            events = events.withColumn("table", self._remap_col)
         if txmin is not None:
             events = events.filter(F.col("txid") >= txmin)
         if txmax is not None:

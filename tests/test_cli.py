@@ -4,6 +4,7 @@ the suite shares one JVM."""
 
 import glob
 import io
+import itertools
 import json
 import os
 
@@ -164,6 +165,147 @@ def test_cli_arg_validation(spark, tmp_path):
         spark=spark,
     )
     assert rc == 2
+
+
+# -- the mode table, with every runner stubbed: no Spark work runs --
+
+# a minimal valid command line per mode, as (flag, value) pairs so two
+# modes sharing a flag (--store-dir, -c, --checkpoint-dir) merge
+_MODE_FLAGS = {
+    "hybrid_topk": (("--hybrid-topk", "q"), ("--store-dir", "s"),
+                    ("--ann-store-dir", "a")),
+    "ann_topk": (("--ann-topk", "q"), ("--store-dir", "s")),
+    "bm25_topk": (("--bm25-topk", "q"), ("--store-dir", "s")),
+    "bm25_stats": (("--bm25-stats", None), ("--store-dir", "s")),
+    "ann_frontier": (("--ann-frontier", None), ("--store-dir", "s")),
+    "ann_stats": (("--ann-stats", None), ("--store-dir", "s")),
+    "ann_rebuild": (("--ann-rebuild", None), ("--store-dir", "s")),
+    "dedup_stream": (("--dedup-stream", "d"), ("--checkpoint-dir", "ck"),
+                     ("--dedup-out", "o")),
+    "export_shards": (("--export-shards", "d"), ("--export-out", "e")),
+    "analyze": (("-c", "cfg.json"), ("--analyze", None)),
+    "validate": (("-c", "cfg.json"), ("--validate", None)),
+    "print_mapping": (("-c", "cfg.json"), ("--print-mapping", None)),
+    "sync": (("-c", "cfg.json"), ("--sink-dir", "k")),
+    "daemon": (("-c", "cfg.json"), ("--sink-dir", "k"), ("--daemon", None),
+               ("--drain", None), ("--events-dir", "ev"),
+               ("--checkpoint-dir", "ck")),
+}
+_RUNNER = {m: f"_run_{m}" for m in _MODE_FLAGS} | {"daemon": "_run_sync"}
+_PAIRS = [
+    (a, b)
+    for a, b in itertools.combinations(_MODE_FLAGS, 2)
+    if {a, b} != {"sync", "daemon"}  # a daemon IS a sync
+]
+_NO_SPARK = object()  # stubbed runners never touch it
+
+
+def _argv(*modes):
+    pairs = dict.fromkeys(p for m in modes for p in _MODE_FLAGS[m])
+    return [t for pair in pairs for t in pair if t is not None]
+
+
+@pytest.fixture
+def ran(monkeypatch):
+    """Stub every mode runner (and the config loader under the config
+    modes) with a recorder: the list of what ran."""
+    import pgsync_spark.__main__ as cli
+
+    calls = []
+
+    def recorder(name, result):
+        def run(*args, **kwargs):
+            calls.append(name)
+            return result
+
+        return run
+
+    for name in dir(cli):
+        if name.startswith("_run_"):
+            monkeypatch.setattr(cli, name, recorder(name, 0))
+    monkeypatch.setattr(cli, "config_loader", recorder("config_loader", []))
+    return calls
+
+
+@pytest.mark.parametrize("mode", list(_MODE_FLAGS))
+def test_cli_each_mode_runs_its_runner(ran, mode):
+    assert main(_argv(mode), spark=_NO_SPARK) == 0
+    assert ran == [_RUNNER[mode]]
+
+
+@pytest.mark.parametrize(
+    "a,b", _PAIRS, ids=[f"{a}+{b}" for a, b in _PAIRS]
+)
+def test_cli_two_modes_refuse(ran, a, b):
+    """One mode per invocation: any two modes exit 2 before either
+    runs — no dispatch order silently drops the second."""
+    assert main(_argv(a, b), spark=_NO_SPARK) == 2
+    assert ran == []
+
+
+@pytest.mark.parametrize(
+    "mode,extra",
+    [
+        ("bm25_topk", ["--sink-dir", "k"]),
+        ("ann_stats", ["--bm25-analyzer", "standard"]),
+        ("hybrid_topk", ["--compact-every", "4"]),
+        ("ann_frontier", ["--topk-k", "5"]),
+        ("ann_topk", ["--probe-hamming", "1"]),
+        ("analyze", ["--verbose"]),
+        ("dedup_stream", ["--data-dir", "d"]),
+        ("dedup_stream", ["--ann-rebuild-when", "0"]),
+        # the parser's default value, passed explicitly, still counts
+        ("sync", ["--topk-k", "10"]),
+        ("bm25_stats", ["--topk-k", "10"]),
+        # a modifier without its parent
+        ("sync", ["--max-files-per-trigger", "10"]),
+        ("sync", ["--checkpoint-dir", "ck"]),
+        ("sync", ["--no-create-index"]),
+        ("sync", ["--bm25-analyzer", "standard"]),
+        ("sync", ["--compact-every", "4"]),
+        ("sync", ["--vector-index", "ivf"]),
+        ("dedup_stream", ["--drift-alert-kl", "0.1"]),
+    ],
+)
+def test_cli_flag_its_mode_does_not_read_refuses(ran, mode, extra):
+    assert main(_argv(mode) + extra, spark=_NO_SPARK) == 2
+    assert ran == []
+
+
+@pytest.mark.parametrize(
+    "mode,extra",
+    [
+        ("sync", ["--vector-store", "v", "--compact-every", "0"]),
+        ("sync", ["--bm25-store", "b", "--bm25-analyzer", "standard"]),
+        ("sync", ["--search-url", "http://localhost:9200",
+                  "--no-create-index"]),
+        ("daemon", ["--polling", "5 seconds",
+                    "--max-files-per-trigger", "10"]),
+        ("dedup_stream", ["--drain", "--polling", "1 second",
+                          "--compact-every", "4", "--verbose"]),
+        ("ann_stats", ["--ann-no-scan"]),
+        ("bm25_topk", ["--topk-k", "10"]),
+    ],
+)
+def test_cli_flag_its_mode_reads_runs(ran, mode, extra):
+    assert main(_argv(mode) + extra, spark=_NO_SPARK) == 0
+    assert ran == [_RUNNER[mode]]
+
+
+def test_cli_every_flag_is_in_the_mode_table():
+    """Every parser dest is some mode's selector, requirement or read
+    flag — a new flag no mode reads cannot be silently ignored — and
+    the table names no flag the parser lacks."""
+    from pgsync_spark.__main__ import _modes, build_parser
+
+    dests = {a.dest for a in build_parser()._actions} - {"help"}
+    named = set()
+    for key, mode in _modes().items():
+        reqs = list(mode.requires)
+        reqs += [r for needs in mode.reads.values() for r in needs]
+        named |= {key} | set(mode.reads)
+        named |= {f for r in reqs for f in r.split("|")}
+    assert named - {None} == dests
 
 
 def test_cli_search_url_end_to_end(spark, tmp_path):
