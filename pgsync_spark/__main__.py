@@ -472,18 +472,6 @@ def _write_docs(runner, args, out=sys.stdout) -> None:
                 )
 
 
-def _state_mismatch_msg(path, label, stored, requested) -> str:
-    """The ONE wording for every 'this flag is index state' refusal
-    (analyzer, featurizer): a committed store keeps the configuration
-    it was built with — data written under one is unreadable (or
-    silently garbage) under another, so re-seed instead."""
-    return (
-        f"existing index store at {path} was built with "
-        f"{label}={stored!r}; the requested {label} ({requested!r}) "
-        "cannot reinterpret it — re-seed into a fresh DIR"
-    )
-
-
 class _Refused(Exception):
     """A refusal main() prints to stderr and exits 2 on."""
 
@@ -505,12 +493,13 @@ def _session(spark, app_name: str):
 
 
 @contextlib.contextmanager
-def _store(flag: str, load, spark, path: str):
-    """Yield the index ``load(spark, path)`` returns, closed when the
-    mode ends. A missing, unreadable or foreign store refuses the mode
-    with the rc=2 stderr message, never a raw traceback."""
+def _store(flag: str, load, spark, path: str | None, **state):
+    """Yield the index an index class's ``load(spark, path, **state)``
+    opens, closed when the mode ends. A store ``load`` rejects
+    (missing, unreadable, foreign, or built with other state) refuses
+    the mode with the rc=2 stderr message, never a raw traceback."""
     try:
-        idx = load(spark, path)
+        idx = load(spark, path, **state)
     except (OSError, ValueError) as e:
         raise _Refused(f"{flag}: cannot load {path}: {e}") from None
     try:
@@ -532,7 +521,7 @@ def _run_dedup_stream(args, spark, out) -> int:
     index probe → accepted/decisions(/stats) under --dedup-out."""
     from .functions.bm25_index import BM25Index
     from .functions.dedup_index import EmbeddingIndex, MinHashIndex
-    from .functions.vector_index import IVFVectorIndex, VectorIndex
+    from .functions.vector_index import VectorIndex
     from .streaming.stream import DEDUP_DOCS_SCHEMA, start_dedup_stream
 
     if args.store_dir and os.path.abspath(
@@ -540,18 +529,38 @@ def _run_dedup_stream(args, spark, out) -> int:
     ) == os.path.abspath(args.store_dir):
         # both write decisions/epoch=N under their root; the stream
         # itself also refuses, but fail before a Spark session spins
-        print(
+        raise _Refused(
             "--dedup-out must differ from --store-dir (both hold "
-            "decisions/epoch=N)",
-            file=sys.stderr,
+            "decisions/epoch=N)"
         )
-        return 2
-    cls = {
-        "minhash": MinHashIndex,
-        "embedding": EmbeddingIndex,
-        "bm25": BM25Index,
-        "vector": VectorIndex,
-        "ivf": IVFVectorIndex,
+    # arg-only compatibility checks FIRST — an incompatible flag
+    # combination is knowable before paying a store load
+    if args.bm25_analyzer is not None and args.dedup_index != "bm25":
+        raise _Refused("--bm25-analyzer applies only to --dedup-index bm25")
+    if args.ivf_sample_mod is not None and (
+        args.dedup_index != "ivf" or args.ivf_sample_mod < 1
+    ):
+        raise _Refused("--ivf-sample-mod needs --dedup-index ivf and N >= 1")
+    if args.probe_hamming is not None and args.dedup_index not in (
+        "embedding",
+        "vector",
+    ):
+        # the IVF probe set is the nprobe cell list — a Hamming
+        # width would be silently ignored, so refuse that too
+        raise _Refused(
+            "--probe-hamming applies only to --dedup-index embedding/vector"
+        )
+    # each index class with the store state the flags request (None
+    # adopts a committed store's own; a fresh store takes it)
+    cls, state = {
+        "minhash": (MinHashIndex, {}),
+        "embedding": (EmbeddingIndex, {}),
+        "bm25": (BM25Index, {"analyzer": args.bm25_analyzer}),
+        "vector": (VectorIndex, {"family": "lsh"}),
+        "ivf": (
+            VectorIndex,
+            {"family": "ivf", "sample_mod": args.ivf_sample_mod},
+        ),
     }[args.dedup_index]
     vec_shaped = args.dedup_index in ("embedding", "vector", "ivf")
     schema = (
@@ -570,79 +579,38 @@ def _run_dedup_stream(args, spark, out) -> int:
         schema = (
             schema + ", op string" if vec_shaped else CDC_DOCS_SCHEMA
         )
-    with _session(spark, "pgsync_spark_dedup") as spark:
-        had_manifest = bool(args.store_dir) and os.path.exists(
-            os.path.join(args.store_dir, "CURRENT")
-        )
-        # arg-only compatibility checks FIRST — an incompatible flag
-        # combination is knowable before paying a store load (r10
-        # review pass 2)
-        if args.bm25_analyzer is not None and args.dedup_index != "bm25":
-            print(
-                "--bm25-analyzer applies only to --dedup-index bm25",
-                file=sys.stderr,
-            )
-            return 2
-        if args.ivf_sample_mod is not None and (
-            args.dedup_index != "ivf" or args.ivf_sample_mod < 1
-        ):
-            print(
-                "--ivf-sample-mod needs --dedup-index ivf and N >= 1",
-                file=sys.stderr,
-            )
-            return 2
-        if args.probe_hamming is not None and args.dedup_index not in (
-            "embedding",
-            "vector",
-        ):
-            # the IVF probe set is the nprobe cell list — a Hamming
-            # width would be silently ignored, so refuse that too
-            print(
-                "--probe-hamming applies only to "
-                "--dedup-index embedding/vector",
-                file=sys.stderr,
-            )
-            return 2
-        # "has a TRAINED codebook" is manifest CONTENT, not manifest
-        # existence: a truncated IVF store commits ivf_cents=None, so
-        # keying these guards on had_manifest alone would let such a
-        # store slip past and die inside foreachBatch anyway (r10
-        # review pass 4)
-        ivf_trained = False
-        if args.dedup_index == "ivf" and had_manifest:
-            import json as _json
-
-            try:
-                with open(
-                    os.path.join(args.store_dir, "CURRENT")
-                ) as f:
-                    ivf_trained = bool(_json.load(f).get("ivf_cents"))
-            except (OSError, ValueError):
-                # torn/garbage manifest: fall through untrained —
-                # cls.load() below owns the clean torn-store refusal
-                # (rc=2), this probe must not traceback first (r10
-                # advice)
-                pass
-        if args.dedup_index == "ivf" and args.cdc_ops and not ivf_trained:
+    with (
+        _session(spark, "pgsync_spark_dedup") as spark,
+        # load() resumes a committed store, starts fresh on an empty
+        # dir (or store-less without --store-dir), and refuses a torn
+        # or pre-manifest store (a fresh index over one would silently
+        # forget the held corpus), one written by another index class,
+        # or one built with other store state
+        _store("--dedup-stream", cls.load, spark, args.store_dir, **state)
+        as index,
+    ):
+        # "has a TRAINED codebook" is the loaded index's content, not
+        # whether a manifest exists: a truncated IVF store commits
+        # ivf_cents=None and must refuse like a fresh one
+        ivf_untrained = args.dedup_index == "ivf" and not index._cents
+        if ivf_untrained and args.cdc_ops:
             # a CDC stream routes every batch to apply_cdc, which a
             # trained index refuses until a seed ingest trained the
             # codebook — there is no path to train inside a CDC
             # stream, so refuse up front instead of dying in
-            # foreachBatch (r10 review pass 2)
-            print(
+            # foreachBatch
+            raise _Refused(
                 "--dedup-index ivf --cdc-ops needs a TRAINED store: "
                 "seed it first with a plain --dedup-stream run (the "
                 "first batch trains the codebook), then point "
-                "--cdc-ops at the committed --store-dir",
-                file=sys.stderr,
+                "--cdc-ops at the committed --store-dir"
             )
-            return 2
-        if args.dedup_index == "ivf" and not ivf_trained:
+        if ivf_untrained:
             # the codebook trains on the FIRST micro-batch and
             # freezes — and "first batch" is a file-listing prefix
             # bounded by --max-files-per-trigger, not "the seed
             # corpus". Warn loudly: a partial first batch silently
-            # freezes an unrepresentative codebook (r10 review pass 3)
+            # freezes an unrepresentative codebook
             print(
                 "note: --dedup-index ivf trains its frozen codebook "
                 "on the FIRST micro-batch only (at most "
@@ -652,129 +620,37 @@ def _run_dedup_stream(args, spark, out) -> int:
                 "run",
                 file=sys.stderr,
             )
-        if args.store_dir:
-            # ALWAYS via load(): it resumes a committed store, starts
-            # fresh on an empty dir, and loudly refuses a torn or
-            # pre-manifest store (building a fresh index over one
-            # would silently forget the held corpus) or a store
-            # written by the other index class
-            index = cls.load(spark, args.store_dir)
-        else:
-            index = cls(spark)
-        if args.bm25_analyzer is not None:
-            # the analyzer is index state (the --bm25-store contract):
-            # a fresh index takes it, a committed store keeps the one
-            # it was built with and a mismatch refuses (r10 review
-            # finding: the flag was silently ignored here)
-            if had_manifest and index.analyzer != args.bm25_analyzer:
-                print(
-                    _state_mismatch_msg(
-                        args.store_dir, "analyzer",
-                        index.analyzer, args.bm25_analyzer,
-                    ),
-                    file=sys.stderr,
-                )
-                index.close()
-                return 2
-            index.analyzer = args.bm25_analyzer
         if args.probe_hamming is not None:
-            # load() builds with the default; the width is a probe-time
-            # behavior, not store state, so setting it here covers both
-            # construction paths
+            # the width is a probe-time behavior, not store state, so
+            # it is set on the opened index, whichever way it opened
             index.probe_hamming = args.probe_hamming
-        if args.ivf_sample_mod is not None:
-            # the sample modulus is TRAINING state (the manifest
-            # persists it so rebuild re-samples under the same
-            # discipline): a fresh index takes it; a committed store
-            # keeps the one it trained with and a mismatch refuses —
-            # retraining under a different budget is a rebuild
-            # (--ann-rebuild --ivf-sample-mod), not a reload
-            from .functions.similarity import PQT_SAMPLE_MOD
-
-            if had_manifest and (
-                index.sample_mod or PQT_SAMPLE_MOD
-            ) != args.ivf_sample_mod:
-                # None = a store trained before the dial existed,
-                # which trained under the default — passing that
-                # default matches instead of refusing
-                print(
-                    _state_mismatch_msg(
-                        args.store_dir, "sample_mod",
-                        index.sample_mod, args.ivf_sample_mod,
-                    ),
-                    file=sys.stderr,
-                )
-                index.close()
-                return 2
-            index.sample_mod = args.ivf_sample_mod
-        try:
-            q = start_dedup_stream(
-                spark,
-                index,
-                args.dedup_stream,
-                args.checkpoint_dir,
-                args.dedup_out,
-                schema=schema,
-                max_files_per_trigger=args.max_files_per_trigger,
-                drift_column=args.drift_column,
-                compact_every=args.compact_every,
-                rebind=args.rebind,
-                poll_interval=args.polling,
-                pre_filter=args.pre_filter,
-                drift_alert_kl=args.drift_alert_kl,
+        q = start_dedup_stream(
+            spark,
+            index,
+            args.dedup_stream,
+            args.checkpoint_dir,
+            args.dedup_out,
+            schema=schema,
+            max_files_per_trigger=args.max_files_per_trigger,
+            drift_column=args.drift_column,
+            compact_every=args.compact_every,
+            rebind=args.rebind,
+            poll_interval=args.polling,
+            pre_filter=args.pre_filter,
+            drift_alert_kl=args.drift_alert_kl,
+        )
+        if args.drain:
+            q.processAllAvailable()
+            q.stop()
+        else:
+            q.awaitTermination()
+        if args.verbose:
+            print(
+                f"dedup stream over {args.dedup_stream} -> "
+                f"{args.dedup_out}",
+                file=out,
             )
-            if args.drain:
-                q.processAllAvailable()
-                q.stop()
-            else:
-                q.awaitTermination()
-            if args.verbose:
-                print(
-                    f"dedup stream over {args.dedup_stream} -> "
-                    f"{args.dedup_out}",
-                    file=out,
-                )
-        finally:
-            index.close()
     return 0
-
-
-def _load_vector_store(spark, store_dir):
-    """Load a vector store dispatching on the manifest's writing
-    class (both families answer the same topk contract, but keys
-    assigned under one scheme are unreadable under another). Raises
-    ValueError on a missing manifest."""
-    import json
-
-    from .functions.vector_index import IVFVectorIndex, VectorIndex
-
-    manifest = os.path.join(store_dir, "CURRENT")
-    if not os.path.exists(manifest):
-        raise ValueError(
-            "no CURRENT manifest (not a vector store, or the path is "
-            "wrong)"
-        )
-    with open(manifest) as f:
-        written_by = json.load(f).get("index", "VectorIndex")
-    cls = {
-        "VectorIndex": VectorIndex,
-        "IVFVectorIndex": IVFVectorIndex,
-    }.get(written_by, VectorIndex)
-    return cls.load(spark, store_dir)
-
-
-def _load_bm25_store(spark, store_dir):
-    """Load a BM25 store. Raises ValueError on a missing manifest:
-    BM25Index.load returns an EMPTY index for a missing dir, and a
-    typo'd path must not masquerade as zero results."""
-    from .functions.bm25_index import BM25Index
-
-    if not os.path.exists(os.path.join(store_dir, "CURRENT")):
-        raise ValueError(
-            "no CURRENT manifest (not a BM25 store, or the path is "
-            "wrong)"
-        )
-    return BM25Index.load(spark, store_dir)
 
 
 def _store_dim(idx) -> int | None:
@@ -807,7 +683,9 @@ def _run_hybrid_topk(args, spark, out) -> int:
     import json
     import math
 
+    from .functions.bm25_index import BM25Index
     from .functions.hashing import hash_embed_py, is_hash_embed_sql
+    from .functions.vector_index import VectorIndex
 
     # THE fusion constants — imported from the oracle-gated query so
     # the CLI can never silently diverge from the arithmetic
@@ -820,14 +698,16 @@ def _run_hybrid_topk(args, spark, out) -> int:
 
     q = args.hybrid_topk.strip()
     if not q:
-        print("--hybrid-topk needs query text", file=sys.stderr)
-        return 2
+        raise _Refused("--hybrid-topk needs query text")
     with (
         _session(spark, "pgsync_spark_hybrid") as spark,
-        _store("--hybrid-topk", _load_bm25_store, spark, args.store_dir)
-        as bidx,
         _store(
-            "--hybrid-topk", _load_vector_store, spark, args.ann_store_dir
+            "--hybrid-topk", BM25Index.load, spark, args.store_dir,
+            must_exist=True,
+        ) as bidx,
+        _store(
+            "--hybrid-topk", VectorIndex.load, spark, args.ann_store_dir,
+            must_exist=True,
         ) as vidx,
     ):
         try:
@@ -844,8 +724,7 @@ def _run_hybrid_topk(args, spark, out) -> int:
             qvec = hash_embed_py(q)
             err = _apply_nprobe(vidx, args)
             if err:
-                print(f"--hybrid-topk: {err}", file=sys.stderr)
-                return 2
+                raise _Refused(f"--hybrid-topk: {err}")
             dim = _store_dim(vidx)
             if dim is not None and dim != len(qvec):
                 raise ValueError(
@@ -867,8 +746,7 @@ def _run_hybrid_topk(args, spark, out) -> int:
                 for r in vidx.topk(qdf, k=_HYB_CAND_K).collect()
             }
         except (OSError, ValueError) as e:
-            print(f"--hybrid-topk: {e}", file=sys.stderr)
-            return 2
+            raise _Refused(f"--hybrid-topk: {e}")
 
     def leg(rank):
         if rank is None:
@@ -935,31 +813,26 @@ def _run_ann_topk(args, spark, out) -> int:
     import json
 
     from .functions.hashing import hash_embed_py, is_hash_embed_sql
+    from .functions.vector_index import VectorIndex
 
     q = args.ann_topk.strip()
     if not q:
-        print(
-            "--ann-topk needs query text or a JSON vector",
-            file=sys.stderr,
-        )
-        return 2
+        raise _Refused("--ann-topk needs query text or a JSON vector")
     vec = None
     if q.startswith("["):
         try:
             vec = [float(x) for x in json.loads(q)]
         except (ValueError, TypeError) as e:
-            print(
-                f"--ann-topk: not a JSON number array: {e}",
-                file=sys.stderr,
-            )
-            return 2
+            raise _Refused(f"--ann-topk: not a JSON number array: {e}")
     from_text = vec is None
     if from_text:
         vec = hash_embed_py(q)
     with (
         _session(spark, "pgsync_spark_ann") as spark,
-        _store("--ann-topk", _load_vector_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--ann-topk", VectorIndex.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         # feature-space gate for TEXT queries: featurizing query
         # text with the hash embedder is only meaningful against
@@ -973,32 +846,27 @@ def _run_ann_topk(args, spark, out) -> int:
             and idx.feature_expr is not None
             and not is_hash_embed_sql(idx.feature_expr)
         ):
-            print(
+            raise _Refused(
                 "--ann-topk: this store's vectors come from "
                 f"feature_expr={idx.feature_expr!r}, not the hash "
                 "featurizer — text queries cannot match that "
-                "space; pass an explicit JSON vector instead",
-                file=sys.stderr,
+                "space; pass an explicit JSON vector instead"
             )
-            return 2
         err = _apply_nprobe(idx, args)
         if err:
-            print(f"--ann-topk: {err}", file=sys.stderr)
-            return 2
+            raise _Refused(f"--ann-topk: {err}")
         # dimension gate: a short query vector zip_with-pads to
         # NULL cosines (LSH) or dies in numpy broadcasting (IVF) —
         # refuse with the numbers instead
         dim = _store_dim(idx)
         if dim is not None and dim != len(vec):
-            print(
+            raise _Refused(
                 f"--ann-topk: query vector has {len(vec)} dims "
                 f"but the store holds {dim}-dim vectors — pass a "
                 f"{dim}-dim JSON vector (text queries use the "
                 f"{len(vec)}-dim hash featurizer and only fit "
-                "stores built with it)",
-                file=sys.stderr,
+                "stores built with it)"
             )
-            return 2
         qdf = spark.createDataFrame(
             [(0, vec)], "query_id bigint, embedding array<double>"
         )
@@ -1033,11 +901,14 @@ def _run_ann_frontier(args, spark, out) -> int:
         TOP_K,
         cosine6,
     )
+    from .functions.vector_index import VectorIndex
 
     with (
         _session(spark, "pgsync_spark_ann_frontier") as spark,
-        _store("--ann-frontier", _load_vector_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--ann-frontier", VectorIndex.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         held = []
         try:
@@ -1048,11 +919,7 @@ def _run_ann_frontier(args, spark, out) -> int:
             is_ivf = hasattr(idx, "rebuild")
             nq = args.ann_frontier_queries
             if nq < 1:
-                print(
-                    "--ann-frontier-queries must be >= 1",
-                    file=sys.stderr,
-                )
-                return 2
+                raise _Refused("--ann-frontier-queries must be >= 1")
             # the IVF sweep's widest nprobe: the registry eval's
             # IVF_FRONTIER_MAX unless overridden (r12 advice: the
             # hardcoded 5 would silently desync from the constant),
@@ -1061,18 +928,10 @@ def _run_ann_frontier(args, spark, out) -> int:
             if max_width is None:
                 max_width = IVF_FRONTIER_MAX
             elif max_width < 1:
-                print(
-                    "--ann-frontier-max-width must be >= 1",
-                    file=sys.stderr,
-                )
-                return 2
+                raise _Refused("--ann-frontier-max-width must be >= 1")
             vals = idx.live("vals")
             if vals is None:
-                print(
-                    "--ann-frontier: the store holds no vectors",
-                    file=sys.stderr,
-                )
-                return 2
+                raise _Refused("--ann-frontier: the store holds no vectors")
             live = vals.select("vec_id", "embedding").localCheckpoint(
                 eager=True
             )
@@ -1092,12 +951,10 @@ def _run_ann_frontier(args, spark, out) -> int:
             nq = q.count()  # corpus smaller than Q serves them all
             if nq == 0:
                 # vals existed but every row tombstoned away
-                print(
+                raise _Refused(
                     "--ann-frontier: the live corpus is empty "
-                    "(every vector deleted)",
-                    file=sys.stderr,
+                    "(every vector deleted)"
                 )
-                return 2
             # exact ground truth: brute-force cosine over the live
             # corpus, self excluded — bounded by nq broadcast queries
             cos = cosine6("qv", "cv")
@@ -1191,10 +1048,14 @@ def _run_ann_stats(args, spark, out) -> int:
     max/mean 1.75 -> 1.40 and probe cost down 19%)."""
     import json
 
+    from .functions.vector_index import VectorIndex
+
     with (
         _session(spark, "pgsync_spark_ann_stats") as spark,
-        _store("--ann-stats", _load_vector_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--ann-stats", VectorIndex.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         stats = {
             "index": type(idx).__name__,
@@ -1273,27 +1134,25 @@ def _run_ann_rebuild(args, spark, out) -> int:
     reindex a knn_vector mapping change forces)."""
     import json
 
+    from .functions.vector_index import VectorIndex
+
     with (
         _session(spark, "pgsync_spark_ann_rebuild") as spark,
-        _store("--ann-rebuild", _load_vector_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--ann-rebuild", VectorIndex.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         if not hasattr(idx, "rebuild"):
-            print(
+            raise _Refused(
                 "--ann-rebuild applies only to IVF vector stores "
                 "(--dedup-index ivf): this store was written by "
                 f"{type(idx).__name__}, whose sign-LSH keys are "
-                "data-independent and never need retraining",
-                file=sys.stderr,
+                "data-independent and never need retraining"
             )
-            return 2
         if args.ivf_sample_mod is not None:
             if args.ivf_sample_mod < 1:
-                print(
-                    "--ivf-sample-mod must be >= 1",
-                    file=sys.stderr,
-                )
-                return 2
+                raise _Refused("--ivf-sample-mod must be >= 1")
             # a rebuild IS the sanctioned moment to change the
             # training budget — the retrain samples under the new
             # modulus and the flip persists it as the store's
@@ -1304,8 +1163,7 @@ def _run_ann_rebuild(args, spark, out) -> int:
             # unseeded/empty store, or a corpus too small (or too
             # large) for the training sample — the rebuild left
             # the old geometry fully live
-            print(f"--ann-rebuild: {e}", file=sys.stderr)
-            return 2
+            raise _Refused(f"--ann-rebuild: {e}")
         live = idx.vals.count() if idx.vals is not None else 0
         print(
             json.dumps(
@@ -1328,13 +1186,16 @@ def _run_bm25_topk(args, spark, out) -> int:
     maintenance loop."""
     import json
 
+    from .functions.bm25_index import BM25Index
+
     if not args.bm25_topk.strip():
-        print("--bm25-topk needs at least one term", file=sys.stderr)
-        return 2
+        raise _Refused("--bm25-topk needs at least one term")
     with (
         _session(spark, "pgsync_spark_bm25") as spark,
-        _store("--bm25-topk", _load_bm25_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--bm25-topk", BM25Index.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         # analyze the query with the analyzer THE STORE was built
         # with (manifest-restored by load) — terms tokenized
@@ -1361,10 +1222,14 @@ def _run_bm25_stats(args, spark, out) -> int:
 
     from pyspark.sql import functions as F
 
+    from .functions.bm25_index import BM25Index
+
     with (
         _session(spark, "pgsync_spark_bm25_stats") as spark,
-        _store("--bm25-stats", _load_bm25_store, spark, args.store_dir)
-        as idx,
+        _store(
+            "--bm25-stats", BM25Index.load, spark, args.store_dir,
+            must_exist=True,
+        ) as idx,
     ):
         keys, vals = idx.live("keys"), idx.live("vals")
         stats = {
@@ -1521,28 +1386,20 @@ def _run_sync(args, spark, out) -> int:
         # maintainer construction (a loaded store may be IVF without
         # --vector-index), but an EXPLICIT lsh is refusable now
         if not args.ann_rebuild_when > 1:
-            print(
+            raise _Refused(
                 "--ann-rebuild-when must be > 1 (max/mean occupancy "
-                "imbalance; 1.0 is perfectly balanced)",
-                file=sys.stderr,
+                "imbalance; 1.0 is perfectly balanced)"
             )
-            return 2
         if args.vector_index == "lsh":
-            print(
+            raise _Refused(
                 "--ann-rebuild-when needs an IVF store "
                 "(--vector-index ivf): sign-LSH keys are "
-                "data-independent and never retrain",
-                file=sys.stderr,
+                "data-independent and never retrain"
             )
-            return 2
     if args.ivf_sample_mod is not None and (
         args.vector_index != "ivf" or args.ivf_sample_mod < 1
     ):
-        print(
-            "--ivf-sample-mod needs --vector-index ivf and N >= 1",
-            file=sys.stderr,
-        )
-        return 2
+        raise _Refused("--ivf-sample-mod needs --vector-index ivf and N >= 1")
     with _configured(args, spark) as (trees, catalog):
         runner = SyncRunner(catalog.spark, trees, catalog)
         try:
@@ -1626,9 +1483,9 @@ def _modes() -> dict[str | None, _Mode]:
         ),
         None: _Mode(
             _run_sync,
-            ("config", "sink_dir|search_url|bm25_store"),
+            ("config", "sink_dir|search_url|bm25_store|vector_store"),
             {
-                **_free("data_dir", "store_dir", "vector_store", "verbose"),
+                **_free("data_dir", "store_dir", "verbose"),
                 "daemon": ("events_dir", "checkpoint_dir"),
                 **dict.fromkeys(
                     (
@@ -1720,6 +1577,26 @@ def main(argv: list[str] | None = None, spark=None, out=sys.stdout) -> int:
         return 2
 
 
+def _compact_every(args) -> dict:
+    """--compact-every as a maintainer keyword: unset keeps the
+    maintainer's own default cadence."""
+    if args.compact_every is None:
+        return {}
+    return {"compact_every": args.compact_every}
+
+
+def _attach(m, eng, args, out, what: str) -> None:
+    """Hang an engine-owned index maintainer on a tree's engine,
+    seeding it from the synced corpus when its store holds no
+    committed epoch yet."""
+    fresh = m.index.next_epoch() == 0
+    if fresh:
+        m.seed(eng.docs_for_sink())
+    eng.doc_consumers.append(m)
+    if args.verbose:
+        print(f"{what} ({'seeded' if fresh else 'loaded'})", file=out)
+
+
 def _sync(runner, args, out) -> int:
     """The sync body proper (full/restore → optional daemon → write →
     save). Split out of _run_sync() so the caller can guarantee
@@ -1744,8 +1621,7 @@ def _sync(runner, args, out) -> int:
         for name, eng in runner.engines.items():
             print(f"[{name}] synced: {eng.docs.count()} docs", file=out)
 
-    maintainers: dict = {}
-    try:
+    with contextlib.ExitStack() as stores_open:
         if args.bm25_store:
             # engine-owned search index per tree (the reference's
             # sync→index topology with the index state in-engine):
@@ -1753,9 +1629,9 @@ def _sync(runner, args, out) -> int:
             # reload an existing one and let CDC batches carry it
             # forward. Delivery is at-least-once and the maintainer
             # is effect-idempotent (streaming/index_sync.py), so a
-            # replayed batch converges. Inside the try: a failure on
-            # the Nth tree's store must still close the earlier
-            # trees' loaded indexes (review finding).
+            # replayed batch converges. The exit stack closes every
+            # tree's opened index, a refusal on the Nth tree's store
+            # included.
             from .functions.bm25_index import BM25Index
             from .streaming.index_sync import (
                 SearchIndexMaintainer,
@@ -1764,36 +1640,12 @@ def _sync(runner, args, out) -> int:
 
             for name, eng in runner.engines.items():
                 path = os.path.join(args.bm25_store, name)
-                fresh = not os.path.exists(
-                    os.path.join(path, "CURRENT")
-                )
-                idx = (
-                    BM25Index(
-                        spark,
-                        store_dir=path,
-                        analyzer=args.bm25_analyzer or "whitespace",
+                idx = stores_open.enter_context(
+                    _store(
+                        "--bm25-store", BM25Index.load, spark, path,
+                        analyzer=args.bm25_analyzer,
                     )
-                    if fresh
-                    else BM25Index.load(spark, path)
                 )
-                if (
-                    not fresh
-                    and args.bm25_analyzer is not None
-                    and args.bm25_analyzer != idx.analyzer
-                ):
-                    # postings tokenized one way are unreadable under
-                    # another (rc=2 stderr pattern; the finally below
-                    # closes earlier trees' indexes)
-                    idx.close()
-                    print(
-                        f"[{name}] "
-                        + _state_mismatch_msg(
-                            path, "analyzer",
-                            idx.analyzer, args.bm25_analyzer,
-                        ),
-                        file=sys.stderr,
-                    )
-                    return 2
                 m = SearchIndexMaintainer(
                     idx,
                     # schema-derived, so the same tree keys the same
@@ -1805,22 +1657,12 @@ def _sync(runner, args, out) -> int:
                     # the shared segment-maintenance dial: unset keeps
                     # the maintainer's default cadence; 0 disables
                     # (overlay_cap still bounds the fold by size)
-                    **(
-                        {"compact_every": args.compact_every}
-                        if args.compact_every is not None
-                        else {}
-                    ),
+                    **_compact_every(args),
                 )
-                maintainers[name] = m
-                if fresh:
-                    m.seed(eng.docs_for_sink())
-                eng.doc_consumers.append(m)
-                if args.verbose:
-                    print(
-                        f"[{name}] engine-owned BM25 index at {path} "
-                        f"({'seeded' if fresh else 'loaded'})",
-                        file=out,
-                    )
+                _attach(
+                    m, eng, args, out,
+                    f"[{name}] engine-owned BM25 index at {path}",
+                )
 
         if args.vector_store:
             # the Embedding side of the same topology (the reference's
@@ -1828,162 +1670,45 @@ def _sync(runner, args, out) -> int:
             # VectorIndex per tree, vectors derived from doc content
             # (deterministic hash featurizer by default — any encoder
             # emitting array<double> slots into --vector-expr)
-            from .functions.vector_index import VectorIndex
+            from .functions.vector_index import (
+                DEFAULT_FEATURE_EXPR,
+                VectorIndex,
+            )
             from .streaming.index_sync import (
                 VectorIndexMaintainer,
                 default_id_expr,
             )
 
-            from .functions.hashing import hash_embed_sparksql
-            from .functions.similarity import (
-                PQT_SAMPLE_MOD as _PQT_MOD_DEFAULT,
-            )
-            from .functions.vector_index import IVFVectorIndex
-
-            # resolve the featurizer ONCE so the fresh-store stamp and
-            # the reload comparison use the same string (the
-            # maintainer's own default is this exact expression)
-            vec_expr = args.vector_expr or hash_embed_sparksql("doc")
-            fresh_cls = (
-                IVFVectorIndex
-                if args.vector_index == "ivf"
-                else VectorIndex
-            )
+            # the featurizer, family and IVF training budget are store
+            # state: a fresh store takes them, a committed one keeps
+            # its own (an unset family reloads whichever wrote it)
+            vec_expr = args.vector_expr or DEFAULT_FEATURE_EXPR
             for name, eng in runner.engines.items():
                 path = os.path.join(args.vector_store, name)
-                fresh = not os.path.exists(
-                    os.path.join(path, "CURRENT")
+                idx = stores_open.enter_context(
+                    _store(
+                        "--vector-store", VectorIndex.load, spark, path,
+                        family=args.vector_index,
+                        feature_expr=vec_expr,
+                        sample_mod=args.ivf_sample_mod,
+                    )
                 )
-                # reload dispatches on the manifest's writing class
-                # (the --ann-topk rule); the flag then only GUARDS —
-                # a committed store keeps its family, like the
-                # analyzer and the featurizer
-                fresh_kwargs = {"feature_expr": vec_expr}
-                if args.vector_index == "ivf":
-                    fresh_kwargs["sample_mod"] = args.ivf_sample_mod
-                idx = (
-                    fresh_cls(spark, store_dir=path, **fresh_kwargs)
-                    if fresh
-                    else _load_vector_store(spark, path)
-                )
-                if (
-                    not fresh
-                    and args.ivf_sample_mod is not None
-                    and (
-                        getattr(idx, "sample_mod", None)
-                        or _PQT_MOD_DEFAULT
-                    )
-                    != args.ivf_sample_mod
-                ):
-                    # training state: a committed store keeps the
-                    # modulus it trained with (change it via
-                    # --ann-rebuild --ivf-sample-mod)
-                    idx.close()
-                    print(
-                        f"[{name}] "
-                        + _state_mismatch_msg(
-                            path, "sample_mod",
-                            getattr(idx, "sample_mod", None),
-                            args.ivf_sample_mod,
-                        ),
-                        file=sys.stderr,
-                    )
-                    return 2
-                if (
-                    not fresh
-                    and args.vector_index is not None
-                    and type(idx).__name__
-                    != fresh_cls.__name__
-                ):
-                    idx.close()
-                    print(
-                        f"[{name}] "
-                        + _state_mismatch_msg(
-                            path, "vector index family",
-                            type(idx).__name__, fresh_cls.__name__,
-                        ),
-                        file=sys.stderr,
-                    )
-                    return 2
-                if not fresh and idx.feature_expr is None:
-                    # pre-stamp (library-created) store under CLI
-                    # maintenance for the first time. An EXPLICIT
-                    # --vector-expr is adopted as the stamp (the user
-                    # asserted the space; the next epoch commit
-                    # persists it and arms the guard below — r10 pass
-                    # 3). WITHOUT an explicit expr we cannot know the
-                    # store's original space, so we warn instead of
-                    # silently stamping the default hash featurizer
-                    # onto possibly-encoder vectors (r10 pass 4).
-                    if args.vector_expr:
-                        idx.feature_expr = vec_expr
-                        # persist the stamp NOW: a sync run that
-                        # commits no epoch (no doc changes) would
-                        # otherwise leave the store pre-stamp with
-                        # the mismatch guard unarmed while the
-                        # message claimed it was stamped (r10 advice)
-                        idx._commit_manifest()
-                        print(
-                            f"[{name}] note: adopting --vector-expr "
-                            "as this pre-stamp store's featurizer "
-                            "(stamped into the manifest now)",
-                            file=sys.stderr,
-                        )
-                    else:
-                        print(
-                            f"[{name}] warning: pre-stamp vector "
-                            "store maintained with the DEFAULT hash "
-                            "featurizer — if it was built with a "
-                            "different one, upserts will mix feature "
-                            "spaces; pass the original --vector-expr",
-                            file=sys.stderr,
-                        )
-                if (
-                    not fresh
-                    and idx.feature_expr is not None
-                    and idx.feature_expr != vec_expr
-                ):
-                    # vectors from one featurization are garbage under
-                    # another (the manifest stamped the expr the store
-                    # was built with; pre-stamp stores skip the check)
-                    idx.close()
-                    print(
-                        f"[{name}] "
-                        + _state_mismatch_msg(
-                            path, "feature_expr",
-                            idx.feature_expr, vec_expr,
-                        ),
-                        file=sys.stderr,
-                    )
-                    return 2
                 try:
                     m = VectorIndexMaintainer(
                         idx,
                         id_expr=default_id_expr(eng),
                         vec_expr=vec_expr,
                         rebuild_when=args.ann_rebuild_when,
-                        **(
-                            {"compact_every": args.compact_every}
-                            if args.compact_every is not None
-                            else {}
-                        ),
+                        **_compact_every(args),
                     )
                 except ValueError as e:
                     # --ann-rebuild-when against a loaded LSH store:
                     # the maintainer refuses (no rebuild() to fire)
-                    idx.close()
-                    print(f"[{name}] {e}", file=sys.stderr)
-                    return 2
-                maintainers[f"vec:{name}"] = m
-                if fresh:
-                    m.seed(eng.docs_for_sink())
-                eng.doc_consumers.append(m)
-                if args.verbose:
-                    print(
-                        f"[{name}] engine-owned vector index at "
-                        f"{path} ({'seeded' if fresh else 'loaded'})",
-                        file=out,
-                    )
+                    raise _Refused(f"[{name}] {e}") from None
+                _attach(
+                    m, eng, args, out,
+                    f"[{name}] engine-owned vector index at {path}",
+                )
 
         if args.daemon:
             from .streaming.stream import start_cdc_stream
@@ -2009,9 +1734,6 @@ def _sync(runner, args, out) -> int:
             version = store.save(runner.engines[name])
             if args.verbose:
                 print(f"[{name}] saved state v{version}", file=out)
-    finally:
-        for m in maintainers.values():
-            m.index.close()
     if args.verbose and runner.checkpoint is not None:
         print(f"checkpoint: txid {runner.checkpoint}", file=out)
     return 0

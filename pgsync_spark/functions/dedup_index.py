@@ -218,9 +218,11 @@ class _AppendOnlyIndex:
     def _commit_manifest(self) -> None:
         import json
 
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
+        from ..sinks.store import write_atomic
+
+        write_atomic(
+            self._manifest_path(),
+            json.dumps(
                 {
                     "epochs": sorted(self._epochs),
                     "segments": self._segments,
@@ -229,10 +231,9 @@ class _AppendOnlyIndex:
                     "has_cdc": self._has_cdc,
                     "overlay_rows": self._overlay_rows,
                     **self._manifest_extra(),
-                },
-                f,
-            )
-        os.replace(tmp, self._manifest_path())
+                }
+            ),
+        )
 
     # -- CDC overlay (versioned rows + tombstones, Lucene-style) -------------
     #
@@ -630,85 +631,148 @@ class _AppendOnlyIndex:
             return None
         return self.spark.read.parquet(path)
 
+    # -- opening a store -----------------------------------------------------
+    #
+    # A committed store keeps the configuration it was built with, as a
+    # search index keeps the analyzer it was created with (ref:
+    # pgsync/search_client.py:261-303): data written under one
+    # configuration is unreadable, or silently garbage, under another.
+    # load() is the one place that rule is checked.
+
     @classmethod
-    def load(cls, spark: SparkSession, store_dir: str):
+    def _load_class(cls, written_by: str | None, family: str | None):
+        """The class ``load`` builds for a store ``written_by`` that
+        class (None: no store yet): ``cls`` here — a store another
+        class wrote refuses. VectorIndex picks by family."""
+        return cls
+
+    def _adopt(self, key: str, requested) -> None:
+        """Check one requested store-state value against the loaded
+        store's: equal passes, different raises."""
+        stored = getattr(self, key)
+        if stored != requested:
+            raise ValueError(
+                f"existing index store at {self.store_dir} was built "
+                f"with {key}={stored!r}; the requested {key} "
+                f"({requested!r}) cannot reinterpret it — re-seed into "
+                "a fresh DIR"
+            )
+
+    @classmethod
+    def load(
+        cls,
+        spark: SparkSession,
+        store_dir: str | None,
+        *,
+        must_exist: bool = False,
+        **state,
+    ):
+        """Open the index store at ``store_dir``: resume a committed
+        store, or start a fresh one on a dir with no manifest (None: a
+        store-less index).
+
+        ``state`` is the requested store state, the configuration the
+        manifest persists: BM25Index ``analyzer``; VectorIndex
+        ``feature_expr`` and ``family`` ("lsh"/"ivf");
+        IVFVectorIndex ``sample_mod``. A value of None adopts what the
+        store holds, a fresh store takes the requested values, and a
+        committed store whose value differs raises ValueError.
+        ``must_exist`` refuses a dir with no manifest, so a reader's
+        mistyped path does not serve an empty index."""
         import json
 
-        idx = cls(spark, store_dir)
-        manifest = os.path.join(store_dir, "CURRENT")
-        if not os.path.exists(manifest) and (
-            os.path.isdir(os.path.join(store_dir, cls._KEYS_NAME))
-            # vals-only stores are legitimate since the per-side
-            # gating (BM25 stats-only segments) — a torn copy that
-            # kept only docstats must refuse too, not load empty
-            or os.path.isdir(os.path.join(store_dir, cls._VALS_NAME))
-        ):
-            # data dirs without a manifest = a store written by the
-            # pre-manifest append-mode format (or a torn copy).
-            # Loading it as empty would silently forget the whole held
-            # corpus and re-accept every duplicate — refuse instead.
-            raise ValueError(
-                f"{store_dir} has index data but no CURRENT manifest "
-                "(pre-manifest format or torn copy) — re-ingest the "
-                "corpus into a fresh store"
-            )
-        if os.path.exists(manifest):
-            with open(manifest) as f:
-                m = json.load(f)
-            written_by = m.get("index", cls.__name__)
-            if written_by != cls.__name__:
-                # both index classes share the keys layout, so a
-                # mismatched load would otherwise die deep in Spark on
-                # a missing vals path with no hint of the real cause
+        state = {k: v for k, v in state.items() if v is not None}
+        family = state.pop("family", None)
+        manifest = store_dir and os.path.join(store_dir, "CURRENT")
+        if not manifest or not os.path.exists(manifest):
+            if must_exist:
                 raise ValueError(
-                    f"{store_dir} was written by {written_by}, not "
-                    f"{cls.__name__} — load it with the matching index "
-                    "class (CLI: --dedup-index)"
+                    "no CURRENT manifest (not an index store, or the "
+                    "path is wrong)"
                 )
-            idx._epochs = set(m["epochs"])
-            idx._stream_id = m.get("stream_id")
-            idx._has_cdc = m.get("has_cdc", False)
-            idx._load_manifest_extra(m)
-            idx._overlay_rows = m.get("overlay_rows", -1)  # -1: pre-r9
-            # read committed segment dirs individually: an uncommitted
-            # (crashed mid-write) directory is never touched, not even
-            # for schema inference. An epoch whose batch was dropped
-            # entirely committed no survivor files (empty partitioned
-            # writes produce none) — it has no segment, the epoch
-            # still counts as applied via the manifest. Pre-segment
-            # manifests (no "segments" key) fall back to one segment
-            # per applied epoch.
-            idx._segments = m.get(
-                "segments", [f"epoch={e}" for e in sorted(idx._epochs)]
+            if store_dir is not None and (
+                os.path.isdir(os.path.join(store_dir, cls._KEYS_NAME))
+                # vals-only stores are legitimate since the per-side
+                # gating (BM25 stats-only segments) — a torn copy that
+                # kept only docstats must refuse too, not load empty
+                or os.path.isdir(os.path.join(store_dir, cls._VALS_NAME))
+            ):
+                # data dirs without a manifest = a store written by the
+                # pre-manifest append-mode format (or a torn copy).
+                # Loading it as empty would silently forget the whole
+                # held corpus and re-accept every duplicate — refuse.
+                raise ValueError(
+                    f"{store_dir} has index data but no CURRENT manifest "
+                    "(pre-manifest format or torn copy) — re-ingest the "
+                    "corpus into a fresh store"
+                )
+            return cls._load_class(None, family)(spark, store_dir, **state)
+        with open(manifest) as f:
+            m = json.load(f)
+        written_by = m.get("index", cls.__name__)
+        target = cls._load_class(written_by, family)
+        if written_by != target.__name__:
+            # both index classes share the keys layout, so a
+            # mismatched load would otherwise die deep in Spark on a
+            # missing vals path with no hint of the real cause
+            raise ValueError(
+                f"{store_dir} was written by {written_by}, not "
+                f"{target.__name__} — load it with the matching index "
+                "class (CLI: --dedup-index)"
             )
-            for seg in idx._segments:
-                # each side independently (a segment may hold only one:
-                # BM25 batches of stats-only docs write vals, no keys)
-                kp = os.path.join(store_dir, cls._KEYS_NAME, seg)
-                if os.path.isdir(kp):
-                    idx._key_parts.append(
-                        _with_cdc_cols(
-                            spark.read.parquet(kp), op=False
-                        ).persist()
-                    )
-                vp = os.path.join(store_dir, cls._VALS_NAME, seg)
-                if os.path.isdir(vp):
-                    idx._val_parts.append(
-                        _with_cdc_cols(
-                            spark.read.parquet(vp), op=True
-                        ).persist()
-                    )
-            if idx._overlay_rows < 0:
-                # manifest written before the counter existed: one
-                # load-time count re-seeds it (the op != 'a' scan
-                # prunes bulk segments at row-group stats), only
-                # needed when CDC state is actually held
-                vals = idx.vals
-                idx._overlay_rows = (
-                    vals.filter(F.col("op") != "a").count()
-                    if idx._has_cdc and vals is not None
-                    else 0
+        idx = target(spark, store_dir)
+        idx._epochs = set(m["epochs"])
+        idx._stream_id = m.get("stream_id")
+        idx._has_cdc = m.get("has_cdc", False)
+        idx._load_manifest_extra(m)
+        idx._overlay_rows = m.get("overlay_rows", -1)  # -1: pre-r9
+        # read committed segment dirs individually: an uncommitted
+        # (crashed mid-write) directory is never touched, not even
+        # for schema inference. An epoch whose batch was dropped
+        # entirely committed no survivor files (empty partitioned
+        # writes produce none) — it has no segment, the epoch
+        # still counts as applied via the manifest. Pre-segment
+        # manifests (no "segments" key) fall back to one segment
+        # per applied epoch.
+        idx._segments = m.get(
+            "segments", [f"epoch={e}" for e in sorted(idx._epochs)]
+        )
+        for seg in idx._segments:
+            # each side independently (a segment may hold only one:
+            # BM25 batches of stats-only docs write vals, no keys)
+            kp = os.path.join(store_dir, target._KEYS_NAME, seg)
+            if os.path.isdir(kp):
+                idx._key_parts.append(
+                    _with_cdc_cols(
+                        spark.read.parquet(kp), op=False
+                    ).persist()
                 )
+            vp = os.path.join(store_dir, target._VALS_NAME, seg)
+            if os.path.isdir(vp):
+                idx._val_parts.append(
+                    _with_cdc_cols(
+                        spark.read.parquet(vp), op=True
+                    ).persist()
+                )
+        if idx._overlay_rows < 0:
+            # manifest written before the counter existed: one
+            # load-time count re-seeds it (the op != 'a' scan
+            # prunes bulk segments at row-group stats), only
+            # needed when CDC state is actually held
+            vals = idx.vals
+            idx._overlay_rows = (
+                vals.filter(F.col("op") != "a").count()
+                if idx._has_cdc and vals is not None
+                else 0
+            )
+        try:
+            if family is not None:
+                idx._adopt("family", family)
+            for key, requested in state.items():
+                idx._adopt(key, requested)
+        except ValueError:
+            idx.close()
+            raise
         return idx
 
     @property

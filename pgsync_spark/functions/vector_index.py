@@ -46,11 +46,20 @@ EmbeddingIndex.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import BROADCAST_ROW_LIMIT
 from .dedup_index import EmbeddingIndex, _AppendOnlyIndex
+from .hashing import hash_embed_sparksql
+
+log = logging.getLogger(__name__)
+
+# the featurizer a writer gets without naming one (the
+# VectorIndexMaintainer default): the hash embedding of the whole doc
+DEFAULT_FEATURE_EXPR = hash_embed_sparksql("doc")
 
 _EMPTY_DECISIONS = "vec_id bigint"
 _TOPK_SCHEMA = (
@@ -68,6 +77,8 @@ class VectorIndex(_AppendOnlyIndex):
     _KEYS_NAME = "bands"
     _VALS_NAME = "vectors"
     _ID_COL = "vec_id"
+    # the index family: store state, fixed when the store is created
+    family = "lsh"
 
     def __init__(
         self,
@@ -90,9 +101,9 @@ class VectorIndex(_AppendOnlyIndex):
         # from (e.g. the maintainer's vec_expr): cosines across two
         # featurizations are garbage, so writers that know their
         # featurizer stamp it here, the manifest persists it, and
-        # load() restores it for the caller to compare (the CLI
-        # refuses a --vector-expr mismatch the way --bm25-analyzer
-        # does). None = unrecorded (library callers own the contract).
+        # load(feature_expr=...) refuses a mismatch the way it refuses
+        # BM25's analyzer. None = unrecorded (library callers own the
+        # contract).
         self.feature_expr = feature_expr
         # incremental per-(band, bucket) occupancy counters (None =
         # not tracking) — see the occupancy section below
@@ -113,6 +124,43 @@ class VectorIndex(_AppendOnlyIndex):
         cc = m.get("cell_counts")
         self._cell_counts = (
             {(b, k): n for b, k, n in cc} if cc is not None else None
+        )
+
+    @classmethod
+    def _load_class(cls, written_by: str | None, family: str | None):
+        # a store loads as the family that wrote it (both answer the
+        # same topk contract, but keys assigned under one scheme are
+        # unreadable under the other); no store yet: the requested one
+        if written_by is None:
+            return {"lsh": VectorIndex, "ivf": IVFVectorIndex}.get(
+                family, cls
+            )
+        return IVFVectorIndex if written_by == "IVFVectorIndex" else cls
+
+    def _adopt(self, key: str, requested) -> None:
+        if key != "feature_expr" or self.feature_expr is not None:
+            return super()._adopt(key, requested)
+        # a pre-stamp store (library-built with no featurizer record)
+        # adopts an explicit featurizer and stamps it at once, so the
+        # mismatch check is armed even if no epoch commits. The default
+        # is what a writer gets without naming one, so it may not be
+        # the store's original space: warn instead of stamping it
+        if requested == DEFAULT_FEATURE_EXPR:
+            log.warning(
+                "pre-stamp vector store %s maintained with the DEFAULT "
+                "hash featurizer — if it was built with a different "
+                "one, upserts will mix feature spaces; pass the "
+                "original feature_expr",
+                self.store_dir,
+            )
+            return
+        self.feature_expr = requested
+        self._commit_manifest()
+        log.warning(
+            "adopting feature_expr %r as the featurizer of pre-stamp "
+            "vector store %s (stamped into the manifest now)",
+            requested,
+            self.store_dir,
         )
 
     # -- occupancy statistic (THE one implementation) -------------------------
@@ -499,6 +547,8 @@ class IVFVectorIndex(VectorIndex):
     (_manifest_extra) and restored by load(), like BM25's analyzer —
     keys assigned under one codebook are unreadable under another."""
 
+    family = "ivf"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -566,6 +616,14 @@ class IVFVectorIndex(VectorIndex):
         self._cents = m.get("ivf_cents")
         self._rebuilds = m.get("rebuilds", 0)
         self.sample_mod = m.get("sample_mod")
+
+    def _adopt(self, key: str, requested) -> None:
+        if key == "sample_mod" and self.sample_mod is None:
+            # trained before the dial existed, so under the default
+            from .similarity import PQT_SAMPLE_MOD
+
+            self.sample_mod = PQT_SAMPLE_MOD
+        super()._adopt(key, requested)
 
     def _require_cents(self) -> list[list[int]]:
         if self._cents is None:

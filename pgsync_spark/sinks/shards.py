@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions import hashing
+from .store import write_atomic
 
 WRITER_LANES = 4
 SHARD_TOKEN_BUDGET = 512
@@ -153,10 +154,9 @@ def write_training_shards(
             for r in stats
         ],
     }
-    tmp = os.path.join(out_dir, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, manifest_path)
+    write_atomic(
+        manifest_path, json.dumps(manifest, indent=1, sort_keys=True)
+    )
     # superseded versions are unreachable after the flip — best-effort
     # cleanup (a crash here leaves orphans no reader ever touches)
     for name in os.listdir(out_dir):

@@ -33,6 +33,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` in one step: write a sibling
+    ``<path>.tmp``, then os.replace it over ``path`` (atomic on POSIX),
+    so a reader sees the old file or the new one, never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 class DocStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -75,10 +85,7 @@ class DocStore:
                 },
                 f,
             )
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
+        write_atomic(os.path.join(self.path, "CURRENT"), str(version))
         return version
 
     def load(self, engine) -> bool:

@@ -327,9 +327,9 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
     ):
         super().__init__(index, id_expr, compact_every)
         if vec_expr is None:
-            from ..functions.hashing import hash_embed_sparksql
+            from ..functions.vector_index import DEFAULT_FEATURE_EXPR
 
-            vec_expr = hash_embed_sparksql("doc")
+            vec_expr = DEFAULT_FEATURE_EXPR
         self.vec_expr = vec_expr
         if rebuild_when is not None:
             if not hasattr(index, "rebuild"):

@@ -174,6 +174,7 @@ def start_dedup_stream(
     from pyspark.sql import functions as F
 
     from .. import caching
+    from ..sinks.store import write_atomic
 
     # epoch numbers restart at 0 for every new checkpoint dir, so the
     # index's applied-epoch bookkeeping is only honored for the
@@ -217,10 +218,7 @@ def start_dedup_stream(
     index.bind_stream(sid, allow_rebind=rebind)
     if not os.path.exists(sid_path):
         os.makedirs(out_dir, exist_ok=True)
-        tmp = sid_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.replace(tmp, sid_path)
+        write_atomic(sid_path, sid)
 
     docs = (
         spark.readStream.schema(schema)
@@ -296,10 +294,7 @@ def start_dedup_stream(
                 stat["tok_len_p50"] = int(row["q"][0])
                 stat["tok_len_p90"] = int(row["q"][1])
         os.makedirs(stats_dir, exist_ok=True)
-        tmp = stats_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(stat, f, sort_keys=True)
-        os.replace(tmp, stats_path)
+        write_atomic(stats_path, json.dumps(stat, sort_keys=True))
         totals.clear()
         totals.update(merged)
 

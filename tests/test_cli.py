@@ -675,7 +675,7 @@ def test_cli_dedup_stream_drain(spark, tmp_path):
 def test_cli_dedup_stream_embedding_and_class_guard(spark, tmp_path):
     """--dedup-index embedding drives the EmbeddingIndex through the
     CLI; re-opening the same store with the default (minhash) index
-    fails with the manifest's class guard, not a Spark path error."""
+    refuses on the manifest's class guard, not a Spark path error."""
     docs_dir = tmp_path / "vecs"
     docs_dir.mkdir()
     v = [1.0, 0.5, -0.25, 2.0, 1.0, -1.0, 0.125, 3.0,
@@ -710,18 +710,19 @@ def test_cli_dedup_stream_embedding_and_class_guard(spark, tmp_path):
     assert {r["vec_id"]: r["dup_of"]
             for r in decisions.collect()} == {3: 1}
 
-    # same store, wrong (default) index class: loud refusal
-    with pytest.raises(ValueError, match="written by EmbeddingIndex"):
-        main(
-            [
-                "--dedup-stream", str(docs_dir),
-                "--checkpoint-dir", str(tmp_path / "vckpt"),
-                "--dedup-out", out,
-                "--store-dir", store,
-                "--drain",
-            ],
-            spark=spark,
-        )
+    # same store, wrong (default) index class: refused with rc=2 like
+    # every other store mode, not a traceback
+    rc = main(
+        [
+            "--dedup-stream", str(docs_dir),
+            "--checkpoint-dir", str(tmp_path / "vckpt"),
+            "--dedup-out", out,
+            "--store-dir", store,
+            "--drain",
+        ],
+        spark=spark,
+    )
+    assert rc == 2
 
     # --probe-hamming on a minhash index: guarded error, not a silent
     # no-op (minhash buckets carry no Hamming structure)
@@ -1326,6 +1327,47 @@ def test_cli_vector_store_engine_owned_index(spark, tmp_path):
         ["--ann-topk", "x", "--store-dir", store, "--daemon"],
         spark=spark,
     ) == 2
+
+
+def test_cli_vector_store_alone_is_a_sync_target(spark, tmp_path):
+    """The engine-owned vector store is a write target like
+    --bm25-store: a sync with only --vector-store runs and commits
+    each tree's store."""
+    store = tmp_path / "vonly"
+    rc = main(
+        ["-c", _config(tmp_path), "--data-dir", SF_DIR,
+         "--vector-store", str(store)],
+        spark=spark,
+    )
+    assert rc == 0
+    assert (store / "orders_cli" / "CURRENT").is_file()
+
+
+def test_cli_opens_stores_only_through_load():
+    """The index classes' load() is the one code that opens a store
+    and checks its stored configuration: the CLI names no manifest
+    file, parses none, and neither writes one nor words a
+    store-state refusal itself."""
+    import pathlib
+    import re
+
+    import pgsync_spark.__main__ as cli
+
+    pat = re.compile(
+        r"""["']CURRENT["']|json\.load\(|_commit_manifest"""
+        r"|_state_mismatch_msg"
+    )
+    bad = [
+        f"__main__.py:{i}: {line.strip()}"
+        for i, line in enumerate(
+            pathlib.Path(cli.__file__).read_text().splitlines(), 1
+        )
+        if pat.search(line)
+    ]
+    assert not bad, (
+        "store opened or checked outside the index's load() (pass the "
+        "requested state to load instead):\n" + "\n".join(bad)
+    )
 
 
 def test_cli_dedup_stream_ivf_index_and_ann_topk(spark, tmp_path):

@@ -4,7 +4,9 @@ store-backed restart, and the semantics the oracle encodes."""
 import pytest
 from pyspark.sql import functions as F
 
+from pgsync_spark.functions.bm25_index import BM25Index
 from pgsync_spark.functions.dedup_index import MinHashIndex
+from pgsync_spark.functions.vector_index import IVFVectorIndex, VectorIndex
 
 DOC = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -1932,3 +1934,145 @@ def test_cdc_compact_holds_no_extra_blocks(spark, kind):
         assert sizes[1] == sizes[2] == sizes[3], sizes
     finally:
         idx.close()
+
+
+# -- store state: load() is the one open that checks it --------------------
+#
+# A committed store keeps the configuration it was built with. Each row:
+# the class whose load() is asked, the store it opens, the value that
+# store was built with, and a different value.
+_EXPR = "CAST(array(1.0D, 2.0D) AS ARRAY<DOUBLE>)"
+_STATE = {
+    "analyzer": (BM25Index, "bm25", "standard", "whitespace"),
+    "feature_expr": (
+        VectorIndex, "vector", _EXPR, "CAST(x AS ARRAY<DOUBLE>)"
+    ),
+    "sample_mod": (IVFVectorIndex, "ivf", 3, 5),
+    "family": (VectorIndex, "ivf", "ivf", "lsh"),
+}
+
+
+def _vectors(spark, n):
+    from pgsync_spark.functions.hashing import hash_embed_py
+
+    return spark.createDataFrame(
+        [(i, hash_embed_py(f"s{i}")) for i in range(n)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+
+def _build_store(spark, path, kind, **state):
+    """A committed store of ``kind`` (one ingested batch) built with
+    ``state``; returns its path."""
+    if kind == "bm25":
+        idx = BM25Index(spark, store_dir=path, **state)
+        idx.ingest(spark.createDataFrame(
+            [(1, "High-Priority alert", None, None)],
+            "doc_id bigint, text string, lang string, source string",
+        ))
+    elif kind == "vector":
+        idx = VectorIndex(spark, store_dir=path, **state)
+        idx.ingest(_vectors(spark, 1))
+    else:  # enough hash-sampled ids to train the codebook
+        idx = IVFVectorIndex(spark, store_dir=path, **state)
+        idx.ingest(_vectors(spark, 60))
+    idx.close()
+    return path
+
+
+@pytest.fixture(scope="module")
+def state_stores(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("state")
+    return {
+        "bm25": _build_store(
+            spark, str(root / "bm25"), "bm25", analyzer="standard"
+        ),
+        "vector": _build_store(
+            spark, str(root / "vector"), "vector", feature_expr=_EXPR
+        ),
+        "ivf": _build_store(spark, str(root / "ivf"), "ivf", sample_mod=3),
+    }
+
+
+@pytest.mark.parametrize("mode", ["fresh", "same", "different", "omitted"])
+@pytest.mark.parametrize("key", list(_STATE))
+def test_load_checks_store_state(spark, tmp_path, state_stores, key, mode):
+    """load(**state): a fresh dir takes the requested value, a
+    committed store reloads under its own value, refuses a different
+    one, and an omitted value adopts the stored one."""
+    cls, kind, stored, other = _STATE[key]
+    load = cls.load
+    if mode == "different":
+        with pytest.raises(ValueError, match=f"was built with {key}="):
+            load(spark, state_stores[kind], **{key: other})
+        return
+    if mode == "fresh":
+        idx, want = load(spark, str(tmp_path / "new"), **{key: other}), other
+        assert idx.next_epoch() == 0
+    elif mode == "same":
+        idx, want = load(spark, state_stores[kind], **{key: stored}), stored
+    else:
+        idx, want = load(spark, state_stores[kind]), stored
+    try:
+        assert getattr(idx, key) == want
+        assert mode == "fresh" or idx.next_epoch() == 1
+    finally:
+        idx.close()
+
+
+def test_load_family_dispatch_and_foreign_class(spark, state_stores):
+    """VectorIndex.load opens an IVF store as IVFVectorIndex; a store
+    another class wrote refuses; a read that needs a store refuses a
+    dir with no manifest."""
+    idx = VectorIndex.load(spark, state_stores["ivf"])
+    assert type(idx) is IVFVectorIndex and idx._cents
+    idx.close()
+    with pytest.raises(ValueError, match="written by VectorIndex"):
+        IVFVectorIndex.load(spark, state_stores["vector"])
+    with pytest.raises(ValueError, match="written by BM25Index"):
+        VectorIndex.load(spark, state_stores["bm25"])
+    with pytest.raises(ValueError, match="no CURRENT manifest"):
+        VectorIndex.load(
+            spark, state_stores["ivf"] + "-missing", must_exist=True
+        )
+
+
+def test_load_ivf_sample_mod_unset_matches_default(spark, tmp_path):
+    """A store trained before the sample_mod dial existed (stored
+    None) trained under PQT_SAMPLE_MOD: requesting that default
+    matches, another modulus refuses."""
+    from pgsync_spark.functions.similarity import PQT_SAMPLE_MOD
+
+    store = _build_store(spark, str(tmp_path / "ivf0"), "ivf")
+    idx = IVFVectorIndex.load(spark, store, sample_mod=PQT_SAMPLE_MOD)
+    assert idx.sample_mod == PQT_SAMPLE_MOD
+    idx.close()
+    with pytest.raises(ValueError, match="was built with sample_mod="):
+        IVFVectorIndex.load(spark, store, sample_mod=PQT_SAMPLE_MOD + 1)
+
+
+def test_load_pre_stamp_store_adopts_explicit_feature_expr(
+    spark, tmp_path, caplog
+):
+    """A pre-stamp vector store (no featurizer recorded) adopts an
+    explicit feature_expr and stamps the manifest at once, so the next
+    load refuses a different one; the default featurizer only warns
+    and leaves the store unstamped."""
+    from pgsync_spark.functions.vector_index import DEFAULT_FEATURE_EXPR
+
+    store = _build_store(spark, str(tmp_path / "pre"), "vector")
+    with caplog.at_level("WARNING"):
+        VectorIndex.load(
+            spark, store, feature_expr=DEFAULT_FEATURE_EXPR
+        ).close()
+    assert "pre-stamp" in caplog.text
+    idx = VectorIndex.load(spark, store)
+    assert idx.feature_expr is None
+    idx.close()
+
+    VectorIndex.load(spark, store, feature_expr=_EXPR).close()
+    idx = VectorIndex.load(spark, store)  # stamped on disk, no epoch ran
+    assert idx.feature_expr == _EXPR and idx.next_epoch() == 1
+    idx.close()
+    with pytest.raises(ValueError, match="was built with feature_expr="):
+        VectorIndex.load(spark, store, feature_expr=DEFAULT_FEATURE_EXPR)
