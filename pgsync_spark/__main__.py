@@ -1597,118 +1597,128 @@ def _attach(m, eng, args, out, what: str) -> None:
         print(f"{what} ({'seeded' if fresh else 'loaded'})", file=out)
 
 
-def _sync(runner, args, out) -> int:
-    """The sync body proper (full/restore → optional daemon → write →
-    save). Split out of _run_sync() so the caller can guarantee
-    runner.close() on EVERY exit path, including raises from
-    _write_docs/store.save."""
+def _maintainers(runner, args, stores_open) -> list:
+    """Open every engine-owned index store and build its maintainer,
+    as (engine, maintainer, label) triples — BEFORE the sync, so a
+    store that refuses (other analyzer, featurizer or family, a
+    foreign class, --ann-rebuild-when on an LSH store) exits 2 without
+    paying for a full sync first; seeding needs the synced corpus and
+    runs after it (_attach). ``stores_open`` closes every opened
+    index, a refusal on the Nth tree's store included."""
     spark = runner.spark
-    stores: dict = {}
-    if args.store_dir:
-        from .sinks.store import DocStore
+    out = []
+    if args.bm25_store:
+        # engine-owned search index per tree (the reference's
+        # sync→index topology with the index state in-engine): seed a
+        # fresh store from the just-synced corpus, or reload an
+        # existing one and let CDC batches carry it forward. Delivery
+        # is at-least-once and the maintainer is effect-idempotent
+        # (streaming/index_sync.py), so a replayed batch converges.
+        from .functions.bm25_index import BM25Index
+        from .streaming.index_sync import (
+            SearchIndexMaintainer,
+            default_id_expr,
+        )
 
         for name, eng in runner.engines.items():
-            store = DocStore(spark, os.path.join(args.store_dir, name))
-            stores[name] = store
-            if store.load(eng):
-                if args.verbose:
-                    print(f"[{name}] restored saved state", file=out)
-            else:
-                eng.full_sync()
-    else:
-        runner.full_sync()
-    if args.verbose:
-        for name, eng in runner.engines.items():
-            print(f"[{name}] synced: {eng.docs.count()} docs", file=out)
-
-    with contextlib.ExitStack() as stores_open:
-        if args.bm25_store:
-            # engine-owned search index per tree (the reference's
-            # sync→index topology with the index state in-engine):
-            # seed a fresh store from the just-synced corpus, or
-            # reload an existing one and let CDC batches carry it
-            # forward. Delivery is at-least-once and the maintainer
-            # is effect-idempotent (streaming/index_sync.py), so a
-            # replayed batch converges. The exit stack closes every
-            # tree's opened index, a refusal on the Nth tree's store
-            # included.
-            from .functions.bm25_index import BM25Index
-            from .streaming.index_sync import (
-                SearchIndexMaintainer,
-                default_id_expr,
+            path = os.path.join(args.bm25_store, name)
+            idx = stores_open.enter_context(
+                _store(
+                    "--bm25-store", BM25Index.load, spark, path,
+                    analyzer=args.bm25_analyzer,
+                )
+            )
+            m = SearchIndexMaintainer(
+                idx,
+                # schema-derived, so the same tree keys the same store
+                # identically every run: integral single-PK trees cast
+                # _id directly; composite/string PKs take the 60-bit
+                # hash recipe (HASH64_ID_EXPR)
+                id_expr=default_id_expr(eng),
+                text_expr=args.bm25_text_expr or "doc",
+                # the shared segment-maintenance dial: unset keeps the
+                # maintainer's default cadence; 0 disables
+                # (overlay_cap still bounds the fold by size)
+                **_compact_every(args),
+            )
+            out.append(
+                (eng, m, f"[{name}] engine-owned BM25 index at {path}")
             )
 
-            for name, eng in runner.engines.items():
-                path = os.path.join(args.bm25_store, name)
-                idx = stores_open.enter_context(
-                    _store(
-                        "--bm25-store", BM25Index.load, spark, path,
-                        analyzer=args.bm25_analyzer,
-                    )
+    if args.vector_store:
+        # the Embedding side of the same topology (the reference's
+        # embedding plugin → dense_vector/knn_vector kNN): a
+        # VectorIndex per tree, vectors derived from doc content
+        # (deterministic hash featurizer by default — any encoder
+        # emitting array<double> slots into --vector-expr)
+        from .functions.vector_index import (
+            DEFAULT_FEATURE_EXPR,
+            VectorIndex,
+        )
+        from .streaming.index_sync import (
+            VectorIndexMaintainer,
+            default_id_expr,
+        )
+
+        # the featurizer, family and IVF training budget are store
+        # state: a fresh store takes them, a committed one keeps its
+        # own (an unset family reloads whichever wrote it)
+        vec_expr = args.vector_expr or DEFAULT_FEATURE_EXPR
+        for name, eng in runner.engines.items():
+            path = os.path.join(args.vector_store, name)
+            idx = stores_open.enter_context(
+                _store(
+                    "--vector-store", VectorIndex.load, spark, path,
+                    family=args.vector_index,
+                    feature_expr=vec_expr,
+                    sample_mod=args.ivf_sample_mod,
                 )
-                m = SearchIndexMaintainer(
+            )
+            try:
+                m = VectorIndexMaintainer(
                     idx,
-                    # schema-derived, so the same tree keys the same
-                    # store identically every run: integral single-PK
-                    # trees cast _id directly; composite/string PKs
-                    # take the 60-bit hash recipe (HASH64_ID_EXPR)
                     id_expr=default_id_expr(eng),
-                    text_expr=args.bm25_text_expr or "doc",
-                    # the shared segment-maintenance dial: unset keeps
-                    # the maintainer's default cadence; 0 disables
-                    # (overlay_cap still bounds the fold by size)
+                    vec_expr=vec_expr,
+                    rebuild_when=args.ann_rebuild_when,
                     **_compact_every(args),
                 )
-                _attach(
-                    m, eng, args, out,
-                    f"[{name}] engine-owned BM25 index at {path}",
-                )
-
-        if args.vector_store:
-            # the Embedding side of the same topology (the reference's
-            # embedding plugin → dense_vector/knn_vector kNN): a
-            # VectorIndex per tree, vectors derived from doc content
-            # (deterministic hash featurizer by default — any encoder
-            # emitting array<double> slots into --vector-expr)
-            from .functions.vector_index import (
-                DEFAULT_FEATURE_EXPR,
-                VectorIndex,
+            except ValueError as e:
+                # --ann-rebuild-when against a loaded LSH store: the
+                # maintainer refuses (no rebuild() to fire)
+                raise _Refused(f"[{name}] {e}") from None
+            out.append(
+                (eng, m, f"[{name}] engine-owned vector index at {path}")
             )
-            from .streaming.index_sync import (
-                VectorIndexMaintainer,
-                default_id_expr,
-            )
+    return out
 
-            # the featurizer, family and IVF training budget are store
-            # state: a fresh store takes them, a committed one keeps
-            # its own (an unset family reloads whichever wrote it)
-            vec_expr = args.vector_expr or DEFAULT_FEATURE_EXPR
+
+def _sync(runner, args, out) -> int:
+    """The sync body proper (open index stores → full/restore →
+    attach → optional daemon → write → save). Split out of
+    _run_sync() so the caller can guarantee runner.close() on EVERY
+    exit path, including raises from _write_docs/store.save."""
+    spark = runner.spark
+    with contextlib.ExitStack() as stores_open:
+        maintainers = _maintainers(runner, args, stores_open)
+        stores: dict = {}
+        if args.store_dir:
+            from .sinks.store import DocStore
+
             for name, eng in runner.engines.items():
-                path = os.path.join(args.vector_store, name)
-                idx = stores_open.enter_context(
-                    _store(
-                        "--vector-store", VectorIndex.load, spark, path,
-                        family=args.vector_index,
-                        feature_expr=vec_expr,
-                        sample_mod=args.ivf_sample_mod,
-                    )
-                )
-                try:
-                    m = VectorIndexMaintainer(
-                        idx,
-                        id_expr=default_id_expr(eng),
-                        vec_expr=vec_expr,
-                        rebuild_when=args.ann_rebuild_when,
-                        **_compact_every(args),
-                    )
-                except ValueError as e:
-                    # --ann-rebuild-when against a loaded LSH store:
-                    # the maintainer refuses (no rebuild() to fire)
-                    raise _Refused(f"[{name}] {e}") from None
-                _attach(
-                    m, eng, args, out,
-                    f"[{name}] engine-owned vector index at {path}",
-                )
+                store = DocStore(spark, os.path.join(args.store_dir, name))
+                stores[name] = store
+                if store.load(eng):
+                    if args.verbose:
+                        print(f"[{name}] restored saved state", file=out)
+                else:
+                    eng.full_sync()
+        else:
+            runner.full_sync()
+        if args.verbose:
+            for name, eng in runner.engines.items():
+                print(f"[{name}] synced: {eng.docs.count()} docs", file=out)
+        for eng, m, what in maintainers:
+            _attach(m, eng, args, out, what)
 
         if args.daemon:
             from .streaming.stream import start_cdc_stream

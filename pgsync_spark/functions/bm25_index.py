@@ -21,8 +21,8 @@ segments, atomic CURRENT manifest, epoch bookkeeping, `compact()`,
   one row per ingested doc VERSION. Docs with zero tokens hold no
   postings but still count toward N / avgdl, exactly like the
   one-shot scorer. ``op`` is 'a' for bulk ``ingest()`` rows, 'u' for
-  ``apply_cdc`` upserts, 'd' for delete tombstones (dl=0, lang/source
-  NULL).
+  ``apply_cdc`` upserts, 'd' for delete tombstones (dl, lang and
+  source NULL — every reader folds the overlay first).
 
 UPDATE/DELETE (the reference's entire reason to exist is keeping a
 search index in sync under CDC — ref: pgsync/sync.py:1254-1343 delete
@@ -65,8 +65,6 @@ from .hashing import analyze, h32, h32_py
 # |terms| / BM25_INDEX_BANDS of the directory tree
 BM25_INDEX_BANDS = 32
 
-_EMPTY_DECISIONS = "doc_id bigint"
-
 
 def _band_of(term: str) -> int:
     """Python-side mirror of h32(term) % BM25_INDEX_BANDS for query
@@ -75,10 +73,11 @@ def _band_of(term: str) -> int:
 
 
 class BM25Index(_AppendOnlyIndex):
-    """See module docstring. ingest() never drops docs (a search index
-    accepts everything) — decisions are structurally empty, which
-    keeps the base class's exactly-once epoch replay semantics intact
-    for streaming front-ends.
+    """See module docstring. Rows: (doc_id, text, lang, source).
+    ingest() never drops docs (a search index accepts everything) —
+    decisions are structurally empty, which keeps the base class's
+    exactly-once epoch replay semantics intact for streaming
+    front-ends; apply_cdc's decisions are the deleted doc_ids.
 
     ``analyzer`` names the tokenizer (hashing.ANALYZERS): "whitespace"
     (lowercase + whitespace split — the historical default) or
@@ -93,6 +92,7 @@ class BM25Index(_AppendOnlyIndex):
 
     _KEYS_NAME = "postings"
     _VALS_NAME = "docstats"
+    _PAYLOAD = ("dl", "lang", "source")
 
     def __init__(self, *args, analyzer: str = "whitespace", **kwargs):
         from .hashing import _check_analyzer
@@ -115,93 +115,11 @@ class BM25Index(_AppendOnlyIndex):
 
         return tuple(analyze_py(text, self.analyzer))
 
-    def ingest(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Index ``batch_df`` (doc_id, text, lang, source): append its
-        postings + doc stats as one epoch. Returns the (empty)
-        decisions frame for contract symmetry with the dedup indexes."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        self._check_cdc_readd(batch_df)
-        decisions = self.spark.createDataFrame([], _EMPTY_DECISIONS)
-        self._append_docs(batch_df, decisions, epoch, op="a")
-        return decisions
-
-    def apply_cdc(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Apply one CDC micro-batch: rows with ``op='d'`` delete
-        their doc (text/lang/source ignored); ``op`` in UPSERT_OPS or
-        NULL is an UPSERT (new version of the doc — or a plain
-        insert; both are one appended version, Lucene-style). Any
-        other op RAISES — ``op='t'`` is table-level (use
-        ``truncate()``), and an unrecognized op silently upserting
-        would index a garbage row. ``batch_df``:
-        (doc_id, text, lang, source, op).
-
-        Contract: at most ONE row per doc_id — the producer folds
-        multi-event runs per doc first (streaming/cdc.py's LWW fold by
-        (txid, seq) is that producer; a raw batch with two rows for
-        one doc has no deterministic order here, so it raises rather
-        than guessing). Enforced with one O(batch) check.
-
-        Returns the DELETED doc_ids as the decisions frame — the docs
-        this epoch removed from the index, which is exactly what the
-        stream front-end's accepted/decisions split and the
-        stored_decisions replay path need (a replayed committed epoch
-        rebuilds its outputs from these without re-ingesting)."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        # persist a DERIVED frame, never the caller's own object: in
-        # foreachBatch the caller already persisted batch_df, and a
-        # persist/unpersist pair on the same plan would evict the
-        # stream's cache mid-epoch (r8 review finding)
-        cdc = batch_df.select(
-            "doc_id", "text", "lang", "source", "op"
-        ).persist()
-        try:
-            # ONE driver action: per-id uniqueness, op vocabulary
-            # ('d' deletes, UPSERT_OPS/NULL upsert, anything else —
-            # including table-level 't' — raises), emptiness (an
-            # empty batch must not re-arm the overlay fold)
-            nonempty = self._validate_cdc_batch(cdc)
-            dels = cdc.filter(F.col("op") == "d").select("doc_id")
-            # NULL-safe: a NULL/missing op is an upsert, not a row
-            # that silently vanishes from both branches (r8 review
-            # pass 2 finding)
-            ups = cdc.filter(~F.col("op").eqNullSafe("d"))
-            if nonempty:
-                self._has_cdc = True  # manifest records it at commit
-                self._pending_overlay_delta = True
-            self._append_docs(ups, dels, epoch, op="u", dels=dels)
-            decisions = dels
-        finally:
-            self._pending_overlay_delta = False
-            cdc.unpersist()
-        self._maybe_autocompact()
-        return decisions
-
-    def _delete_decisions(self, ids: DataFrame) -> DataFrame:
-        """truncate() hook: a search index's decisions are just the
-        removed ids (the same shape apply_cdc returns)."""
-        return ids.select("doc_id")
-
-    def _append_docs(
-        self,
-        batch_df: DataFrame,
-        decisions: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None = None,
-    ) -> None:
+    def _prepare(self, ups: DataFrame) -> tuple[DataFrame, list]:
         # ONE tokenize pass feeds both frames (r7 review: independent
-        # plans re-ran the scan+tokenize per _append materialization);
-        # _append eagerly checkpoints both, so the base releases here
+        # plans re-ran the scan+tokenize per _append materialization)
         base = (
-            batch_df.select(
+            ups.select(
                 "doc_id",
                 # NULL text tokenizes as empty, never as a NULL toks
                 # whose size(-1/NULL) would silently poison sum_dl /
@@ -217,30 +135,10 @@ class BM25Index(_AppendOnlyIndex):
             .withColumn("dl", F.size("toks"))
             .persist()
         )
-        ver = F.lit(epoch).cast("long")
-        docstats = base.select(
-            "doc_id",
-            "dl",
-            "lang",
-            "source",
-            ver.alias("ver"),
-            F.lit(op).alias("op"),
-        )
-        if dels is not None:
-            # delete tombstones: versioned docstats rows with no
-            # postings — the overlay fold reads "tombstone on top" as
-            # "doc is dead" until compact() drops the doc physically
-            docstats = docstats.unionByName(
-                dels.select(
-                    "doc_id",
-                    F.lit(0).cast("int").alias("dl"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("string").alias("source"),
-                    ver.alias("ver"),
-                    F.lit("d").alias("op"),
-                )
-            )
-        postings = (
+        return base, [base]
+
+    def _key_frame(self, base: DataFrame) -> DataFrame:
+        return (
             base.select("doc_id", "dl", F.explode("toks").alias("term"))
             .groupBy("doc_id", "dl", "term")
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
@@ -250,13 +148,8 @@ class BM25Index(_AppendOnlyIndex):
                 "doc_id",
                 "tf",
                 "dl",
-                ver.alias("ver"),
             )
         )
-        try:
-            self._append(postings, docstats, decisions, epoch)
-        finally:
-            base.unpersist()
 
     def topk(self, terms: tuple[str, ...], k: int = 10) -> DataFrame:
         """BM25 top-k over the held corpus for ``terms`` — the same

@@ -65,8 +65,6 @@ from .dedup import (
 )
 from .hashing import round6
 
-_DECISION_SCHEMA = "doc_id bigint, dup_of bigint, jaccard double"
-
 # apply_cdc op vocabulary: 'd' deletes; these (or NULL) upsert; 't'
 # and anything else raise — an unrecognized op silently upserting a
 # garbage row was the r8 verdict's parity-gap (a), and truncate is
@@ -105,10 +103,13 @@ def _with_cdc_cols(df: DataFrame, op: bool) -> DataFrame:
 
 
 class _AppendOnlyIndex:
-    """State discipline shared by the stateful dedup indexes: per-batch
+    """State discipline shared by every engine-owned index: per-batch
     persisted frames in memory (held batches never re-cached; unioned
-    lazily), append-only parquet on disk. Subclasses define the frame
-    names and the probe.
+    lazily), append-only parquet on disk, and ONE write path —
+    ``ingest`` and ``apply_cdc`` are defined here alone. A subclass
+    says only what its rows are (``_PAYLOAD``, ``_DECISIONS``,
+    ``_prepare``, ``_key_frame``) and, for a dedup probe, how it pairs
+    candidates (``_verified_pairs``).
 
     On-disk commits are ATOMIC per epoch (the sinks/store.py CURRENT
     discipline): each ingest writes its survivor keys/vals AND its
@@ -127,6 +128,19 @@ class _AppendOnlyIndex:
     _VALS_NAME = "vals"  # fat per-id payload — verify only
     _DEC_NAME = "decisions"
     _ID_COL = "doc_id"  # the per-row identity (EmbeddingIndex: vec_id)
+    # the vals payload next to the id: each upsert's version carries
+    # it, a delete tombstone holds it NULL (typed from these columns)
+    _PAYLOAD: tuple[str, ...] = ()
+    # an epoch's decisions: the removed id, plus a dedup probe's
+    # (dup_of, metric) columns — NULL on a plain removal
+    _DECISIONS = "doc_id bigint"
+    # a payload column an upsert may not leave NULL (the vector
+    # families: a NULL embedding would index bucket-0 keys serving
+    # NULL cosines); None: no such column
+    _REQUIRED: str | None = None
+    # the dedup probes' hook (see _probe); None: a search index, which
+    # accepts every upsert and removes exactly the deleted ids
+    _verified_pairs = None
 
     def __init__(
         self,
@@ -237,9 +251,9 @@ class _AppendOnlyIndex:
 
     # -- CDC overlay (versioned rows + tombstones, Lucene-style) -------------
     #
-    # apply_cdc (BM25Index today; MinHash/Embedding via their probe
-    # fold) appends NEW-VERSION rows (op='u', ver=epoch) and delete
-    # tombstones (op='d') instead of rewriting held state. Readers
+    # apply_cdc (every index class, through _append_rows) appends
+    # NEW-VERSION rows (op='u', ver=epoch) and delete tombstones
+    # (op='d') instead of rewriting held state. Readers
     # fold the overlay (_cdc_live, one broadcast left join on the id):
     # rows of untouched ids pass; touched ids keep only rows matching
     # their latest version (a tombstone on top = dead). The overlay is
@@ -291,29 +305,26 @@ class _AppendOnlyIndex:
                 "the overlay and dropped at the next compact"
             )
 
-    def _validate_cdc_batch(
-        self,
-        cdc: DataFrame,
-        bad_payload=None,
-        payload_msg: str = "invalid payload",
-    ) -> bool:
+    def _validate_cdc_batch(self, cdc: DataFrame) -> bool:
         """apply_cdc's entry contract in ONE driver action: per-id
         uniqueness (LWW-folded upstream), op vocabulary ('d' deletes,
         UPSERT_OPS or NULL upsert, anything else RAISES — an unknown
         op silently upserting a garbage row was the r8 verdict's
-        parity gap; 't' gets a pointer to truncate()), and batch
-        emptiness (the return value: True iff rows exist — an EMPTY
-        micro-batch must never set _has_cdc and re-arm the overlay
-        fold the last compact turned off, r8 advice).
-
-        ``bad_payload`` (optional Column): a subclass's payload-shape
-        predicate folded into the SAME action — rows matching it
-        raise with ``payload_msg`` (r10: VectorIndex rejects NULL
-        embeddings on upsert rows, which would otherwise index
-        bucket-0 keys serving NULL cosines)."""
+        parity gap; 't' gets a pointer to truncate()), a NULL
+        ``_REQUIRED`` payload on an upsert row (delete tombstones
+        carry NULL payloads by design), and batch emptiness (the
+        return value: True iff rows exist — an EMPTY micro-batch must
+        never set _has_cdc and re-arm the overlay fold the last
+        compact turned off, r8 advice)."""
         idc = self._ID_COL
         bad = F.col("op").isNotNull() & ~F.col("op").isin(
             *UPSERT_OPS, "d", "t"
+        )
+        req = self._REQUIRED
+        bad_payload = (
+            F.col(req).isNull() & ~F.col("op").eqNullSafe("d")
+            if req is not None
+            else F.lit(False)
         )
         row = (
             cdc.groupBy(idc)
@@ -321,13 +332,7 @@ class _AppendOnlyIndex:
                 F.count(F.lit(1)).alias("c"),
                 F.max(F.when(bad, F.col("op"))).alias("bad_op"),
                 F.max((F.col("op") == "t").cast("int")).alias("trunc"),
-                F.max(
-                    (
-                        bad_payload
-                        if bad_payload is not None
-                        else F.lit(False)
-                    ).cast("int")
-                ).alias("bad_pay"),
+                F.max(bad_payload.cast("int")).alias("bad_pay"),
             )
             .agg(
                 F.sum("c").alias("n"),
@@ -373,12 +378,245 @@ class _AppendOnlyIndex:
                 "would index a garbage row)"
             )
         if row["bad_pay"]:
-            raise ValueError(f"apply_cdc batch: {payload_msg}")
+            raise ValueError(
+                f"apply_cdc batch: NULL {req} on an upsert row — the "
+                f"index cannot hold a missing {req}; fix the producer "
+                f"(delete tombstones carry NULL {req} by design)"
+            )
         return row["n"] is not None
 
-    def _maybe_autocompact(
-        self, decisions: DataFrame | None = None
-    ) -> DataFrame | None:
+    # -- the one write path ----------------------------------------------------
+    #
+    # ingest (bulk op='a') and apply_cdc (op='u' versions + 'd'
+    # tombstones) are the only entries; both end in _write_epoch, the
+    # one hook that writes an epoch. The paper's sink keeps its search
+    # index in sync the same way, one bulk path that upserts changed
+    # docs and deletes vanished ones (ref: pgsync/sync.py:1254-1343,
+    # search_client.py:100-212).
+
+    def _entry_epoch(self, epoch: int | None) -> int:
+        if epoch is None:
+            epoch = self.next_epoch()
+        self._check_epoch(epoch)
+        return epoch
+
+    def ingest(
+        self, batch_df: DataFrame, epoch: int | None = None
+    ) -> DataFrame:
+        """Bulk-add ``batch_df`` (the id plus the class's source
+        columns) as ONE epoch of op='a' rows. Returns the decisions: a
+        search index accepts everything (empty), a dedup probe returns
+        the docs it dropped as near-duplicates of the held corpus —
+        (id, dup_of, metric), dup_of the smallest surviving earlier
+        doc it verified against. ``epoch`` labels the commit for
+        replay detection (default: the next unused number)."""
+        epoch = self._entry_epoch(epoch)
+        self._check_cdc_readd(batch_df)
+        req = self._REQUIRED
+        if req is not None:
+            # every bulk row is an upsert, so a NULL payload is always
+            # invalid; the guard fires inside the epoch's own jobs, at
+            # zero extra driver actions
+            batch_df = batch_df.withColumn(
+                req,
+                F.when(
+                    F.col(req).isNull(),
+                    F.raise_error(
+                        F.lit(
+                            f"NULL {req} on ingest — the index cannot "
+                            f"hold a missing {req}; filter or fix the "
+                            "producer"
+                        )
+                    ),
+                ).otherwise(F.col(req)),
+            )
+        return self._write_epoch(batch_df, None, epoch, "a")
+
+    def apply_cdc(
+        self, batch_df: DataFrame, epoch: int | None = None
+    ) -> DataFrame:
+        """Apply one CDC micro-batch: ``ingest``'s columns plus
+        ``op``. op='d' deletes the id (payload ignored); UPSERT_OPS or
+        NULL upserts a new version (Lucene-style: the old one is
+        shadowed, nothing is rewritten); anything else RAISES — 't' is
+        table-level (use ``truncate()``), and an unrecognized op
+        silently upserting would index a garbage row. A dedup probe
+        checks each upsert against the live corpus minus this batch's
+        own ids (an update never matches its superseded version); an
+        upsert that drops tombstones its old version too, so the doc
+        leaves the corpus either way.
+
+        Contract: at most ONE row per id — the producer folds
+        multi-event runs first (streaming/cdc.py's LWW fold by (txid,
+        seq)); a batch with two rows for one id has no order here, so
+        it raises. The whole contract is ONE O(batch) action.
+
+        Returns the decisions: every id the epoch removed (deletes
+        with NULL dup_of/metric, plus a probe's dropped upserts with
+        their dup) — what a stream front-end's accepted/decisions
+        split and the stored_decisions replay need. Historical
+        decisions stand: docs already dropped as dups of a now-deleted
+        doc stay dropped (the reference's delete path likewise removes
+        only the doc itself, ref: pgsync/sync.py:1254-1343)."""
+        self._check_cdc_ready()
+        epoch = self._entry_epoch(epoch)
+        # derived persist, never the caller's own frame: in
+        # foreachBatch the stream already persisted batch_df, and a
+        # persist/unpersist pair on the same plan would evict its
+        # cache mid-epoch (r8 review finding). dels stays a lazy plan
+        # over this cache — an eager checkpoint here would leak its
+        # blocks (nothing releases it after the epoch commits).
+        cdc = batch_df.select(*batch_df.columns).persist()
+        try:
+            nonempty = self._validate_cdc_batch(cdc)
+            dels = cdc.filter(F.col("op") == "d").select(self._ID_COL)
+            # NULL-safe: a NULL/missing op is an upsert, never a row
+            # that silently vanishes from both branches (r8 review
+            # pass 2 finding)
+            ups = cdc.filter(~F.col("op").eqNullSafe("d")).drop("op")
+            if nonempty:
+                self._has_cdc = True  # manifest records it at commit
+                self._pending_overlay_delta = True
+            decisions = self._write_epoch(ups, dels, epoch, "u")
+        finally:
+            # _append consumed the delta flag at commit; clearing it
+            # here too covers a write that raised pre-commit (a later
+            # bulk ingest must not count its rows as overlay)
+            self._pending_overlay_delta = False
+            cdc.unpersist()
+        return self._maybe_autocompact(decisions)
+
+    def _check_cdc_ready(self) -> None:
+        """Subclass hook: refuse apply_cdc before any work (no-op)."""
+
+    def _prepare(self, ups: DataFrame) -> tuple[DataFrame, list]:
+        """The batch frame the epoch derives its rows from, and the
+        persisted frames to release after it: by default the id and
+        payload columns, persisted once for both sides."""
+        frame = ups.select(self._ID_COL, *self._PAYLOAD).persist()
+        return frame, [frame]
+
+    def _key_frame(self, frame: DataFrame) -> DataFrame:
+        """The keys rows (without ver) for a ``_prepare`` frame."""
+        raise NotImplementedError
+
+    def _removed(self, ids: DataFrame | None) -> DataFrame:
+        """Decisions that remove ``ids`` not as anyone's duplicate:
+        the ``_DECISIONS`` columns, dup_of/metric NULL (None: an empty
+        frame)."""
+        if ids is None:
+            return self.spark.createDataFrame([], self._DECISIONS)
+        cols = (c.split() for c in self._DECISIONS.split(",")[1:])
+        return ids.select(
+            self._ID_COL, *(F.lit(None).cast(t).alias(n) for n, t in cols)
+        )
+
+    def _write_epoch(
+        self,
+        ups: DataFrame,
+        dels: DataFrame | None,
+        epoch: int,
+        op: str,
+    ) -> DataFrame:
+        """Write one epoch from upserts ``ups`` (as ``op`` rows) and
+        deleted ids ``dels`` (None on a bulk ingest); return its
+        decisions. A search index removes exactly ``dels``; a dedup
+        probe over a non-empty held corpus also drops the upserts that
+        verify as near-duplicates, and only the survivors enter."""
+        batch, cached = self._prepare(ups)
+        try:
+            if self._verified_pairs is None or self.keys is None:
+                decisions, surv = self._removed(dels), batch
+            else:
+                decisions = self._probe(batch, dels, op)
+                surv = batch.join(
+                    decisions.select(self._ID_COL), self._ID_COL, "left_anti"
+                )
+            self._append_rows(surv, decisions, epoch, op)
+        finally:
+            # _append installed eager checkpoints of the epoch's rows,
+            # so the batch's own caches release here
+            for c in cached:
+                c.unpersist()
+        return decisions
+
+    def _append_rows(
+        self, frame: DataFrame, decisions: DataFrame, epoch: int, op: str
+    ) -> None:
+        """The one epoch-row builder: ``frame``'s keys and payload as
+        versioned rows (ver=epoch, ``op``), plus on a CDC epoch a
+        delete tombstone (op='d', payload NULL, typed from the payload
+        schema — the parts union is by name AND type) for every id in
+        ``decisions``: each deleted id, and each upsert a probe
+        dropped."""
+        ver = F.lit(epoch).cast("long")
+        vals = frame.select(self._ID_COL, *self._PAYLOAD)
+        rows = vals.withColumn("ver", ver).withColumn("op", F.lit(op))
+        if op != "a":
+            nulls = (
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in vals.schema.fields[1:]
+            )
+            rows = rows.unionByName(
+                decisions.select(
+                    self._ID_COL, *nulls, ver.alias("ver"), F.lit("d").alias("op")
+                )
+            )
+        keys = self._key_frame(frame).withColumn("ver", ver)
+        self._append(keys, rows, decisions, epoch)
+
+    def _probe(
+        self, batch: DataFrame, dels: DataFrame | None, op: str
+    ) -> DataFrame:
+        """The one dedup-probe skeleton: fold the CDC overlay so the
+        probe sees only the LIVE corpus, pair the batch against it
+        (the class's ``_verified_pairs(batch, held_keys, held_vals)``
+        -> (old_id, new_id, metric)), keep each new doc's smallest
+        verified old_id, add the deletes, and materialize.
+
+        On the apply_cdc path (op != 'a') the batch's own ids are dead
+        too — an UPDATE must never match its own superseded version.
+        On a bulk ingest they must NOT be: the held copy of a
+        re-ingested id is still live and must self-block the
+        duplicate, exactly like the append-only path (r8 review pass 2
+        finding). The folds are broadcast joins (_cdc_live) —
+        scan-shaped, no corpus shuffle; skipped entirely on
+        append-only indexes."""
+        idc = self._ID_COL
+        held_keys, held_vals = self.keys, self.vals
+        overlay = None
+        if self._has_cdc:
+            extra_dead = None
+            if op != "a":
+                extra_dead = batch.select(idc)
+                if dels is not None:
+                    extra_dead = extra_dead.unionByName(dels)
+            overlay = self._cdc_overlay().persist()
+            held_keys = self._cdc_live(held_keys, overlay, extra_dead)
+            held_vals = self._cdc_live(held_vals, overlay, extra_dead)
+        pairs = self._verified_pairs(batch, held_keys, held_vals)
+        metric = pairs.columns[-1]
+        # deterministic representative: the struct min orders by
+        # old_id first, so this picks (min old_id, its metric) without
+        # a self-join back onto the pairs
+        decisions = (
+            pairs.groupBy("new_id")
+            .agg(F.min(F.struct("old_id", metric)).alias("m"))
+            .select(
+                F.col("new_id").alias(idc),
+                F.col("m.old_id").alias("dup_of"),
+                F.col(f"m.{metric}").alias(metric),
+            )
+        )
+        if dels is not None:
+            decisions = decisions.unionByName(self._removed(dels))
+        decisions = decisions.persist()
+        decisions.count()
+        if overlay is not None:
+            overlay.unpersist()
+        return owned(decisions, [decisions])
+
+    def _maybe_autocompact(self, decisions: DataFrame) -> DataFrame:
         """compact() once overlay rows exceed ``overlay_cap`` — the
         index analog of the relational engine's KeyedOverlay size cap.
         The epoch-count cadence (a stream's compact_every) bounds the
@@ -389,20 +627,21 @@ class _AppendOnlyIndex:
         compact re-triggers at the next CDC epoch).
 
         ``decisions``: the epoch's about-to-be-returned decisions
-        frame when its LINEAGE references the held parts (the dedup
-        probes' frames do; BM25's dels derive from the batch only).
-        compact's _swap_parts releases those parts' localCheckpoint
-        blocks, after which a lost cached decisions partition is
+        frame. A dedup probe's LINEAGE references the held parts (a
+        search index's is the batch's own deleted ids), and compact's
+        _swap_parts releases those parts' localCheckpoint blocks,
+        after which a lost cached decisions partition is
         unrecoverable (review finding) — so when compaction actually
-        fires, the frame is cut over to an eager localCheckpoint
-        FIRST and the superseded cache released. Returns the frame to
-        hand to the caller (unchanged when no compaction runs)."""
+        fires, a probe's frame is cut over to an eager
+        localCheckpoint FIRST and the superseded cache released.
+        Returns the frame to hand to the caller (unchanged when no
+        compaction runs)."""
         if (
             self.overlay_cap is None
             or self._overlay_rows <= self.overlay_cap
         ):
             return decisions
-        if decisions is not None:
+        if self._verified_pairs is not None:
             from .. import caching
 
             ck = decisions.localCheckpoint(eager=True)
@@ -437,17 +676,10 @@ class _AppendOnlyIndex:
         duplicate), so a stream front-end's accepted/decisions split
         and the stored_decisions replay path treat truncation like
         any other epoch. Cutover is atomic: decisions committed
-        first, then ONE manifest flip to the empty segment list (a
-        crash in between leaves the old corpus fully live and the
-        epoch unapplied); old segment dirs are deleted after the flip
-        and are never read if deletion is interrupted. All CDC
-        overlay state dies with the corpus — the next epoch starts on
-        the append-only fast path."""
-        import shutil
-
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
+        first, then ONE manifest flip to the empty segment list
+        (_cutover). All CDC overlay state dies with the corpus — the
+        next epoch starts on the append-only fast path."""
+        epoch = self._entry_epoch(epoch)
         vals = self.live("vals")
         if vals is None:
             live = self.spark.createDataFrame([], f"{self._ID_COL} bigint")
@@ -456,28 +688,20 @@ class _AppendOnlyIndex:
         # eager checkpoint BEFORE the parts it derives from are
         # released below (the lineage-truncation discipline _append
         # documents); the small block is the ContextCleaner's
-        decisions = self._delete_decisions(live).localCheckpoint(eager=True)
+        decisions = self._removed(live).localCheckpoint(eager=True)
         if self.store_dir is not None:
             decisions.write.mode("overwrite").parquet(
                 os.path.join(self.store_dir, self._DEC_NAME, f"epoch={epoch}")
             )
         else:
             self._last_decisions = (epoch, decisions)
-        old_segments, self._segments = self._segments, []
-        self._epochs.add(epoch)
-        self._has_cdc = False
-        self._overlay_rows = 0
-        self._pending_overlay_delta = False
-        self._track_folded_keys(None)  # empty corpus: counters reset
-        if self.store_dir is not None:
-            self._commit_manifest()
-            for s in old_segments:
-                for name in (self._KEYS_NAME, self._VALS_NAME):
-                    shutil.rmtree(
-                        os.path.join(self.store_dir, name, s),
-                        ignore_errors=True,
-                    )
-        self._swap_parts(None, None)
+        self._cutover(
+            "truncated",
+            None,
+            None,
+            _epochs=self._epochs | {epoch},
+            _pending_overlay_delta=False,
+        )
         return decisions
 
     def _cdc_live(
@@ -942,16 +1166,10 @@ class _AppendOnlyIndex:
         real epoch, so the max-ver fold always prefers genuine CDC
         rows.
 
-        Store-backed cutover is atomic (the same CURRENT discipline as
-        ingest): the folded checkpoints are written as an UNLISTED
-        ghost segment, the read-back is persisted, the manifest flips
-        to the single new segment, then the old segment dirs are
-        deleted (a crash between flip and delete leaves orphans that
-        are never read). Store-less, the checkpoints ARE the new
-        parts. Either way the new frames materialize BEFORE
-        _swap_parts releases the old parts' blocks (a lazy fold over
-        released localCheckpoints has nothing to recompute from). The
-        applied-epoch set and the per-epoch decision dirs are
+        The folded checkpoints replace the held parts through
+        _cutover (one atomic manifest flip; a failed cutover deletes
+        its ghost segment). The applied-epoch set and the per-epoch
+        decision dirs are
         untouched — ``epoch_applied`` / ``stored_decisions`` answer
         identically after compaction, so stream replay semantics
         survive.
@@ -960,8 +1178,6 @@ class _AppendOnlyIndex:
         held segment: a store-backed epoch=N dir must vacate for the
         rebound stream's reused epoch numbers, and a store-less part
         may carry real epoch vers that would collide with them."""
-        import shutil
-
         from pyspark.sql import Observation
 
         from .. import caching
@@ -1022,54 +1238,116 @@ class _AppendOnlyIndex:
         if new_keys is not None and not obs.get["n"]:
             caching.release_local_checkpoint(new_keys)
             new_keys = None
-        if dirty:
-            # the fold materialized the exact live keys — reconcile
-            # the occupancy counters from them (gross append-counting
-            # drifts by at most the overlay folded away here), before
-            # the commit below persists them
-            self._track_folded_keys(new_keys)
-        old_segments: list[str] = []
-        if self.store_dir is not None:
-            seg = f"compacted-{self.next_epoch()}"
-            n = 0
-            while seg in self._segments or os.path.isdir(
-                os.path.join(self.store_dir, self._KEYS_NAME, seg)
+        # the fold materialized the exact live keys — reconcile the
+        # occupancy counters from them (gross append-counting drifts
+        # by at most the overlay folded away here)
+        self._cutover(
+            f"compacted-{self.next_epoch()}", new_keys, new_vals, fold=dirty
+        )
+
+    def _cutover(
+        self,
+        prefix: str,
+        keys: DataFrame | None,
+        vals: DataFrame | None,
+        fold: bool = True,
+        **state,
+    ) -> None:
+        """THE segment cutover (compact, truncate, IVF rebuild):
+        ``keys`` / ``vals`` (None: that side holds nothing) replace
+        every held part behind ONE manifest flip, which also persists
+        ``state`` (attribute values: the epoch set, a codebook) and the
+        now-empty CDC overlay — the overlay is physically empty, so
+        readers and probes return to the append-only fast path
+        (leaving the flag set costs an overlay scan + two joins per
+        query FOREVER, r8 review finding). ``fold``: the frames are a
+        physical overlay fold, so the occupancy counters re-derive
+        from the new keys before the flip persists them.
+
+        Store-backed, the frames are written as an UNLISTED ghost
+        segment ``<prefix>[-n]`` (keys partitioned by band) and read
+        back persisted; a crash before the flip leaves the old corpus
+        fully live and the ghost unread, and any failure before it
+        deletes the ghost and restores every attribute, so no failed
+        cutover leaks a corpus-sized parquet copy. Old segment dirs
+        are deleted after the flip and are never read if that is
+        interrupted. Store-less, the frames ARE the new parts, so
+        they must already be materialized: the old parts' blocks are
+        released here (a lazy fold over released localCheckpoints has
+        nothing to recompute from)."""
+        import shutil
+
+        from .. import caching
+
+        # every attribute this method sets, restored if it fails
+        prev = dict(vars(self))
+        old_segments = self._segments
+        sides = (self._KEYS_NAME, self._VALS_NAME)
+        seg, written = None, []
+        try:
+            self._segments = []
+            if self.store_dir is not None and (
+                keys is not None or vals is not None
             ):
-                # never write into a LISTED segment (a rebound stream's
-                # epoch counter can revisit old numbers); ghost dirs
-                # from crashed compacts are skipped too, harmlessly
-                n += 1
-                seg = f"compacted-{self.next_epoch()}-{n}"
-            if new_keys is not None:
-                path = os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                new_keys.write.mode("overwrite").partitionBy(
-                    "band"
-                ).parquet(path)
-                caching.release_local_checkpoint(new_keys)
-                new_keys = self.spark.read.parquet(path).persist()
-                new_keys.count()
-            if new_vals is not None:
-                path = os.path.join(self.store_dir, self._VALS_NAME, seg)
-                new_vals.write.mode("overwrite").parquet(path)
-                caching.release_local_checkpoint(new_vals)
-                new_vals = self.spark.read.parquet(path).persist()
-                new_vals.count()
-            old_segments, self._segments = self._segments, [seg]
-        # the overlay is now physically empty: readers and probes
-        # return to the append-only fast path (leaving the flag set
-        # costs an overlay scan + two joins per query FOREVER, r8
-        # review finding); the cutover commit persists it
-        self._has_cdc = False
-        self._overlay_rows = 0
-        if self.store_dir is not None:
-            self._commit_manifest()
-        self._swap_parts(new_keys, new_vals)
+                seg, n = prefix, 0
+                while seg in old_segments or any(
+                    os.path.isdir(os.path.join(self.store_dir, side, seg))
+                    for side in sides
+                ):
+                    # never write into a LISTED segment (a rebound
+                    # stream's epoch counter can revisit old numbers),
+                    # nor into a crashed cutover's ghost
+                    n += 1
+                    seg = f"{prefix}-{n}"
+                for side, frame in zip(sides, (keys, vals)):
+                    written.append(self._write_segment(side, seg, frame))
+                keys, vals = written
+                self._segments = [seg]
+            for key, value in state.items():
+                setattr(self, key, value)
+            self._has_cdc = False
+            self._overlay_rows = 0
+            if fold:
+                self._track_folded_keys(keys)
+            if self.store_dir is not None:
+                self._commit_manifest()
+        except BaseException:
+            vars(self).update(prev)
+            for f in (keys, vals, *written):
+                if f is not None and not caching.release_local_checkpoint(f):
+                    f.unpersist()
+            if seg is not None:
+                for side in sides:
+                    shutil.rmtree(
+                        os.path.join(self.store_dir, side, seg),
+                        ignore_errors=True,
+                    )
+            raise
+        self._swap_parts(keys, vals)
         for s in old_segments:
-            for name in (self._KEYS_NAME, self._VALS_NAME):
+            for side in sides:
                 shutil.rmtree(
-                    os.path.join(self.store_dir, name, s),
-                    ignore_errors=True,
+                    os.path.join(self.store_dir, side, s), ignore_errors=True
                 )
+
+    def _write_segment(
+        self, side: str, seg: str, frame: DataFrame | None
+    ) -> DataFrame | None:
+        """Write ``frame`` as ``side``/``seg`` and return the persisted
+        read-back (a checkpointed ``frame`` is released once written)."""
+        from .. import caching
+
+        if frame is None:
+            return None
+        path = os.path.join(self.store_dir, side, seg)
+        writer = frame.write.mode("overwrite")
+        if side == self._KEYS_NAME:
+            writer = writer.partitionBy("band")
+        writer.parquet(path)
+        caching.release_local_checkpoint(frame)
+        back = self.spark.read.parquet(path).persist()
+        back.count()
+        return back
 
     def _swap_parts(
         self, new_keys: DataFrame | None, new_vals: DataFrame | None
@@ -1136,13 +1414,17 @@ class _AppendOnlyIndex:
 
 
 class MinHashIndex(_AppendOnlyIndex):
-    """Stateful near-dup index over documents. In-memory state lives as
-    per-batch persisted DataFrames; pass ``store_dir`` to also append
-    accepted docs' band keys + shingle sets to parquet (``load``
-    restores)."""
+    """Stateful near-dup index over documents (doc_id, text, ...):
+    ingest/apply_cdc drop a doc iff it verifies as a near-duplicate of
+    a surviving earlier doc (decisions: doc_id, dup_of, jaccard — the
+    pair's exact shingle Jaccard). In-memory state lives as per-batch
+    persisted DataFrames; pass ``store_dir`` to also append accepted
+    docs' band keys + shingle sets to parquet (``load`` restores)."""
 
     _KEYS_NAME = "bands"
     _VALS_NAME = "shingles"
+    _PAYLOAD = ("sh", "fp")
+    _DECISIONS = "doc_id bigint, dup_of bigint, jaccard double"
 
     @property
     def bands(self) -> DataFrame | None:
@@ -1152,118 +1434,17 @@ class MinHashIndex(_AppendOnlyIndex):
     def shingles(self) -> DataFrame | None:
         return self.vals
 
-    # -- the operator -------------------------------------------------------
-
-    def ingest(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Probe ``batch_df`` (documents schema: doc_id, text, ...)
-        against the index, extend the index with the survivors, and
-        return the DROP decisions: (doc_id, dup_of, jaccard) where
-        dup_of is the smallest surviving earlier doc the new doc
-        verified against (deterministic representative) and jaccard is
-        that pair's exact shingle Jaccard. ``epoch`` labels the commit
-        for replay detection (defaults to the next unused number)."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        self._check_cdc_readd(batch_df)
-        return self._probe_and_append(batch_df, epoch, "a", None)
-
-    def apply_cdc(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Apply one CDC micro-batch (doc_id, text, lang, source, op):
-        rows with op='d' DELETE their doc from the live corpus (its
-        keys/shingles stop blocking future near-dups — a removed doc
-        is not grounds to drop new arrivals); every other row is an
-        UPSERT — the doc's old version stops blocking, the NEW text is
-        probed against the live index (minus this batch's own ids, so
-        an update never matches its own superseded version) and enters
-        iff it survives. An upsert whose new text IS a near-dup of a
-        live doc drops (decision row) AND tombstones the old version —
-        the doc leaves the corpus either way.
-
-        Historical decisions stand (docs already dropped as dups of a
-        now-deleted doc stay dropped — the stream already emitted
-        them; the reference's delete path likewise only removes the
-        doc itself, ref: pgsync/sync.py:1254-1343).
-
-        Contract and mechanics shared with BM25Index.apply_cdc: at
-        most one row per doc_id (LWW-fold upstream), decisions carry
-        the removed ids (deletes with NULL dup_of/jaccard + dropped
-        upserts with their dup), versioned rows + tombstones fold at
-        probe/compact time via the base overlay."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        # derived persist, never the caller's own frame: in
-        # foreachBatch the stream already persisted batch_df, and a
-        # persist/unpersist pair on the same plan would evict its
-        # cache mid-epoch (r8 review finding). dels stays a lazy plan
-        # over this cache — an eager checkpoint here would leak its
-        # blocks (nothing releases it after the epoch commits).
-        cdc = batch_df.select(*batch_df.columns).persist()
-        try:
-            # ONE driver action: per-id uniqueness, op vocabulary,
-            # emptiness (an empty batch must not re-arm the fold)
-            nonempty = self._validate_cdc_batch(cdc)
-            dels = cdc.filter(F.col("op") == "d").select(self._ID_COL)
-            # NULL-safe: NULL/missing op is an upsert (see
-            # BM25Index.apply_cdc), never a silently-vanished row
-            ups = cdc.filter(~F.col("op").eqNullSafe("d")).drop("op")
-            if nonempty:
-                self._has_cdc = True  # manifest records it at commit
-                self._pending_overlay_delta = True
-            decisions = self._probe_and_append(ups, epoch, "u", dels)
-        finally:
-            # _append consumed the delta flag at commit; clearing it
-            # here too covers a probe that raised pre-commit (a later
-            # bulk ingest must not count its rows as overlay)
-            self._pending_overlay_delta = False
-            cdc.unpersist()
-        return self._maybe_autocompact(decisions)
-
-    def _probe_and_append(
-        self,
-        batch_df: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None,
-    ) -> DataFrame:
-        sigs, cached = _signatures(batch_df)
+    def _prepare(self, ups: DataFrame) -> tuple[DataFrame, list]:
+        sigs, cached = _signatures(ups)
         sigs = sigs.withColumn("fp", _fingerprint(F.col("sh"))).persist()
-        cached = cached + [sigs]
-        new_bands = _band_frame(sigs)
+        return sigs, cached + [sigs]
 
-        held_bands, held_sh = self.bands, self.shingles
-        if held_bands is None:
-            decisions = self._dedup_decisions_empty(dels)
-            self._append_versioned(sigs, decisions, epoch, op, dels)
-            for c in cached:
-                c.unpersist()
-            return decisions
+    def _key_frame(self, sigs: DataFrame) -> DataFrame:
+        return _band_frame(sigs)
 
-        overlay = None
-        if self._has_cdc:
-            # fold the CDC overlay so the probe sees only the LIVE
-            # corpus: shadowed versions and tombstoned docs never
-            # block. On the apply_cdc path (op != 'a') the batch's own
-            # ids are excluded too — an UPDATE must never match its
-            # own superseded version. On a bulk ingest the exclusion
-            # must NOT apply: the held copy of a re-ingested id is
-            # still live and must self-block the duplicate, exactly
-            # like the append-only path (r8 review pass 2 finding).
-            # Broadcast joins (_cdc_live) — scan-shaped, no corpus
-            # shuffle; skipped entirely on append-only indexes.
-            extra_dead = None
-            if op != "a":
-                extra_dead = sigs.select(self._ID_COL)
-                if dels is not None:
-                    extra_dead = extra_dead.unionByName(dels)
-            overlay = self._cdc_overlay().persist()
-            held_bands = self._cdc_live(held_bands, overlay, extra_dead)
-            held_sh = self._cdc_live(held_sh, overlay, extra_dead)
+    def _verified_pairs(
+        self, sigs: DataFrame, held_bands: DataFrame, held_sh: DataFrame
+    ) -> DataFrame:
         # candidate generation: shared with minhash_crosscorpus_pairs —
         # one grouped shuffle on (band, bucket), per-side hot-bucket
         # caps, inline index-side × batch-side pair expansion, drops
@@ -1273,12 +1454,12 @@ class MinHashIndex(_AppendOnlyIndex):
             # slim to the banding triple: held keys carry ver (the CDC
             # version column) which the two-sided union must not see
             held_bands.select("doc_id", "band", "bucket"),
-            new_bands,
+            _band_frame(sigs),
             "old_id",
             "new_id",
             "minhash_index_probe",
         )
-        ver = (
+        lsh = (
             cand.join(
                 held_sh.select(
                     F.col("doc_id").alias("old_id"), F.col("sh").alias("sh1")
@@ -1311,9 +1492,9 @@ class MinHashIndex(_AppendOnlyIndex):
         # its near-dup index. Jaccard of identical sets is exactly 1.0.
         # The held side pre-aggregates to ONE representative per fp
         # (min doc_id — exactly the representative the decision agg
-        # below would pick anyway): within-batch duplicates all enter
-        # the index, so a hot boilerplate fp can hold thousands of
-        # copies, and joining every copy against every new copy would
+        # would pick anyway): within-batch duplicates all enter the
+        # index, so a hot boilerplate fp can hold thousands of copies,
+        # and joining every copy against every new copy would
         # reintroduce the quadratic blow-up this lane exists to dodge.
         exact = (
             held_sh.groupBy("fp")
@@ -1324,97 +1505,9 @@ class MinHashIndex(_AppendOnlyIndex):
         # UNION (distinct): an exact pair in an un-capped bucket shows
         # up in BOTH lanes with jaccard 1.0 — collapsing duplicates
         # keeps the representative join from fanning out.
-        ver = ver.unionByName(exact).dropDuplicates(
+        return lsh.unionByName(exact).dropDuplicates(
             ["old_id", "new_id", "jaccard"]
         )
-        # deterministic representative: the struct min orders by
-        # old_id first, so this picks (min old_id, its jaccard) without
-        # a self-join back onto ver.
-        decisions = (
-            ver.groupBy("new_id")
-            .agg(F.min(F.struct("old_id", "jaccard")).alias("m"))
-            .select(
-                F.col("new_id").alias("doc_id"),
-                F.col("m.old_id").alias("dup_of"),
-                F.col("m.jaccard").alias("jaccard"),
-            )
-        )
-        if dels is not None:
-            decisions = decisions.unionByName(
-                self._dedup_decisions_empty(dels)
-            )
-        decisions = decisions.persist()
-        decisions.count()
-        if overlay is not None:
-            overlay.unpersist()
-
-        surv_sigs = sigs.join(
-            decisions.select("doc_id"), "doc_id", "left_anti"
-        )
-        self._append_versioned(surv_sigs, decisions, epoch, op, dels)
-        for c in cached:
-            c.unpersist()
-        return owned(decisions, [decisions])
-
-    def _delete_decisions(self, ids: DataFrame) -> DataFrame:
-        """truncate() hook: removal decisions for ``ids``."""
-        return self._dedup_decisions_empty(ids)
-
-    def _dedup_decisions_empty(self, dels: DataFrame | None) -> DataFrame:
-        """Decisions for a probe with no duplicate drops: empty, plus
-        — in CDC mode — one row per DELETED doc (NULL dup_of/jaccard:
-        removed from the corpus, but not as anyone's duplicate), so
-        the stream's accepted/decisions split and stored_decisions
-        replay carry deletes like any other removal."""
-        empty = self.spark.createDataFrame([], _DECISION_SCHEMA)
-        if dels is None:
-            return empty
-        return empty.unionByName(
-            dels.select(
-                "doc_id",
-                F.lit(None).cast("bigint").alias("dup_of"),
-                F.lit(None).cast("double").alias("jaccard"),
-            )
-        )
-
-    def _append_versioned(
-        self,
-        surv_sigs: DataFrame,
-        decisions: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None,
-    ) -> None:
-        """Append survivors with (ver=epoch, op) + delete/dropped-
-        upsert tombstones. In CDC mode every DROPPED upsert tombstones
-        too: the doc was updated, its old version is superseded, and
-        the new version lost to a live dup — the doc leaves the corpus
-        either way."""
-        ver = F.lit(epoch).cast("long")
-        vals = (
-            surv_sigs.select("doc_id", "sh", "fp")
-            .withColumn("ver", ver)
-            .withColumn("op", F.lit(op))
-        )
-        if op != "a":
-            # tombstone column types mirror the survivors' (the parts
-            # union is by name AND type)
-            sh_t = surv_sigs.schema["sh"].dataType
-            fp_t = surv_sigs.schema["fp"].dataType
-            vals = vals.unionByName(
-                decisions.select(
-                    "doc_id",
-                    F.lit(None).cast(sh_t).alias("sh"),
-                    F.lit(None).cast(fp_t).alias("fp"),
-                    ver.alias("ver"),
-                    F.lit("d").alias("op"),
-                )
-            )
-        keys = _band_frame(surv_sigs).withColumn("ver", ver)
-        self._append(keys, vals, decisions, epoch)
-
-
-_SEM_DECISION_SCHEMA = "vec_id bigint, dup_of bigint, cosine double"
 
 
 class EmbeddingIndex(_AppendOnlyIndex):
@@ -1452,6 +1545,9 @@ class EmbeddingIndex(_AppendOnlyIndex):
     _KEYS_NAME = "bands"
     _VALS_NAME = "vectors"
     _ID_COL = "vec_id"
+    _PAYLOAD = ("embedding",)
+    _DECISIONS = "vec_id bigint, dup_of bigint, cosine double"
+    _REQUIRED = "embedding"
 
     def __init__(
         self,
@@ -1486,142 +1582,23 @@ class EmbeddingIndex(_AppendOnlyIndex):
             ).alias("band", "bucket"),
         )
 
-    def ingest(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Probe ``batch_df`` (vec_id, embedding) against the index,
-        extend the index with the survivors, and return the DROP
-        decisions (vec_id, dup_of, cosine) — dup_of the smallest
-        accepted vector the new one verified against."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        self._check_cdc_readd(batch_df)
-        return self._probe_and_append(batch_df, epoch, "a", None)
+    def _key_frame(self, batch: DataFrame) -> DataFrame:
+        return self._band_keys(batch)
 
-    def apply_cdc(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Apply one CDC micro-batch (vec_id, embedding, op): op='d'
-        deletes the vector from the live corpus (it stops blocking
-        future near-dups); an UPSERT_OPS/NULL op is an UPSERT — old version
-        stops blocking, the new embedding is probed against the live
-        index (minus this batch's own ids) and enters iff it survives;
-        a dropped upsert tombstones the old version too. Same
-        contract/mechanics as MinHashIndex.apply_cdc (one row per
-        vec_id, LWW-folded upstream)."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        # derived persist + lazy dels — see MinHashIndex.apply_cdc
-        cdc = batch_df.select(*batch_df.columns).persist()
-        try:
-            nonempty = self._validate_cdc_batch(cdc)
-            dels = cdc.filter(F.col("op") == "d").select("vec_id")
-            # NULL-safe (see BM25Index.apply_cdc)
-            ups = cdc.filter(~F.col("op").eqNullSafe("d")).drop("op")
-            if nonempty:
-                self._has_cdc = True  # manifest records it at commit
-                self._pending_overlay_delta = True
-            decisions = self._probe_and_append(ups, epoch, "u", dels)
-        finally:
-            self._pending_overlay_delta = False
-            cdc.unpersist()
-        return self._maybe_autocompact(decisions)
-
-    def _delete_decisions(self, ids: DataFrame) -> DataFrame:
-        """truncate() hook: removal decisions for ``ids``."""
-        return self._sem_decisions_empty(ids)
-
-    def _sem_decisions_empty(self, dels: DataFrame | None) -> DataFrame:
-        empty = self.spark.createDataFrame([], _SEM_DECISION_SCHEMA)
-        if dels is None:
-            return empty
-        return empty.unionByName(
-            dels.select(
-                "vec_id",
-                F.lit(None).cast("bigint").alias("dup_of"),
-                F.lit(None).cast("double").alias("cosine"),
-            )
-        )
-
-    def _append_versioned(
-        self,
-        surv: DataFrame,
-        decisions: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None,
-    ) -> None:
-        ver = F.lit(epoch).cast("long")
-        vals = (
-            surv.select("vec_id", "embedding")
-            .withColumn("ver", ver)
-            .withColumn("op", F.lit(op))
-        )
-        if op != "a":
-            # tombstone embedding type mirrors the batch's (float vs
-            # double element type must match for the parts union)
-            emb_t = surv.schema["embedding"].dataType
-            vals = vals.unionByName(
-                decisions.select(
-                    "vec_id",
-                    F.lit(None).cast(emb_t).alias("embedding"),
-                    ver.alias("ver"),
-                    F.lit("d").alias("op"),
-                )
-            )
-        keys = self._band_keys(surv).withColumn("ver", ver)
-        self._append(keys, vals, decisions, epoch)
-
-    def _probe_and_append(
-        self,
-        batch_df: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None,
+    def _verified_pairs(
+        self, batch: DataFrame, held_keys: DataFrame, held_vecs: DataFrame
     ) -> DataFrame:
         from .similarity import NEARDUP_COS, cosine6
 
-        batch = batch_df.select("vec_id", "embedding").persist()
-        new_keys = self._band_keys(batch)
-
-        held_keys, held_vecs = self.keys, self.vals
-        if held_keys is None:
-            decisions = self._sem_decisions_empty(dels)
-            # the whole first batch survives. _append installs an eager
-            # CHECKPOINT of it as held state, so the batch's own cache
-            # is released here — holding it too would duplicate batch 0
-            # in executor memory for the life of the index (a leak the
-            # old persist()-returns-self contract masked).
-            self._append_versioned(batch, decisions, epoch, op, dels)
-            batch.unpersist()
-            return decisions
-
-        overlay = None
-        if self._has_cdc:
-            # live-corpus fold before the probe (see MinHashIndex):
-            # shadowed/tombstoned vectors never block; own-batch ids
-            # excluded ONLY on the apply_cdc path (an update must not
-            # match its superseded version; a bulk re-ingest must
-            # still be self-blocked by its live held copy)
-            extra_dead = None
-            if op != "a":
-                extra_dead = batch.select("vec_id")
-                if dels is not None:
-                    extra_dead = extra_dead.unionByName(dels)
-            overlay = self._cdc_overlay().persist()
-            held_keys = self._cdc_live(held_keys, overlay, extra_dead)
-            held_vecs = self._cdc_live(held_vecs, overlay, extra_dead)
         # multi-probe expansion on the batch side only: a new key
         # probes its bucket plus every Hamming<=probe_hamming
         # perturbation within its band's sign bits; held keys (and the
-        # survivor keys appended below) are never perturbed
-        probe_keys = new_keys
+        # survivor keys appended) are never perturbed
+        probe_keys = self._band_keys(batch)
         if self.probe_hamming:
             from .similarity import PLANES_PER_BAND, probe_buckets
 
-            probe_keys = new_keys.select(
+            probe_keys = probe_keys.select(
                 "vec_id",
                 "band",
                 F.explode(
@@ -1641,7 +1618,7 @@ class EmbeddingIndex(_AppendOnlyIndex):
             .select("old_id", "new_id")
             .distinct()
         )
-        ver = (
+        return (
             cand.join(
                 held_vecs.select(
                     F.col("vec_id").alias("old_id"),
@@ -1663,25 +1640,3 @@ class EmbeddingIndex(_AppendOnlyIndex):
             )
             .filter(F.col("cosine") >= NEARDUP_COS)
         )
-        decisions = (
-            ver.groupBy("new_id")
-            .agg(F.min(F.struct("old_id", "cosine")).alias("m"))
-            .select(
-                F.col("new_id").alias("vec_id"),
-                F.col("m.old_id").alias("dup_of"),
-                F.col("m.cosine").alias("cosine"),
-            )
-        )
-        if dels is not None:
-            decisions = decisions.unionByName(
-                self._sem_decisions_empty(dels)
-            )
-        decisions = decisions.persist()
-        decisions.count()
-        if overlay is not None:
-            overlay.unpersist()
-
-        surv = batch.join(decisions.select("vec_id"), "vec_id", "left_anti")
-        self._append_versioned(surv, decisions, epoch, op, dels)
-        batch.unpersist()
-        return owned(decisions, [decisions])

@@ -61,22 +61,25 @@ log = logging.getLogger(__name__)
 # VectorIndexMaintainer default): the hash embedding of the whole doc
 DEFAULT_FEATURE_EXPR = hash_embed_sparksql("doc")
 
-_EMPTY_DECISIONS = "vec_id bigint"
 _TOPK_SCHEMA = (
     "query_id bigint, neighbor_id bigint, cosine double, rank int"
 )
 
 
 class VectorIndex(_AppendOnlyIndex):
-    """See module docstring. ingest() never drops vectors (a serving
-    index accepts everything) — decisions are structurally empty,
-    which keeps the base class's exactly-once epoch replay semantics
-    intact for streaming front-ends; apply_cdc returns the deleted
-    ids (the BM25Index convention)."""
+    """See module docstring. Rows: (vec_id, embedding); a NULL
+    embedding on an upsert refuses. ingest() never drops vectors (a
+    serving index accepts everything) — decisions are structurally
+    empty, which keeps the base class's exactly-once epoch replay
+    semantics intact for streaming front-ends; apply_cdc returns the
+    deleted ids."""
 
     _KEYS_NAME = "bands"
     _VALS_NAME = "vectors"
     _ID_COL = "vec_id"
+    _PAYLOAD = ("embedding",)
+    _DECISIONS = "vec_id bigint"
+    _REQUIRED = "embedding"
     # the index family: store state, fixed when the store is created
     family = "lsh"
 
@@ -291,122 +294,6 @@ class VectorIndex(_AppendOnlyIndex):
                 ).alias("bucket"),
             )
         return probe
-
-    def ingest(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Index ``batch_df`` (vec_id, embedding): append its band
-        keys + vectors as one epoch. Returns the (empty) decisions
-        frame for contract symmetry with the dedup indexes."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        self._check_cdc_readd(batch_df)
-        decisions = self.spark.createDataFrame([], _EMPTY_DECISIONS)
-        self._append_vecs(batch_df, decisions, epoch, op="a")
-        return decisions
-
-    def apply_cdc(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
-        """Apply one CDC micro-batch (vec_id, embedding, op): op='d'
-        deletes the vector (embedding ignored); UPSERT_OPS/NULL is an
-        UPSERT (one appended version, Lucene-style); anything else —
-        including table-level 't' — RAISES. Same entry contract as
-        BM25Index.apply_cdc (one row per vec_id, LWW-folded upstream,
-        ONE O(batch) validation action). Returns the deleted ids as
-        the decisions frame."""
-        if epoch is None:
-            epoch = self.next_epoch()
-        self._check_epoch(epoch)
-        # derived persist, never the caller's own object (the r8
-        # foreachBatch cache-eviction finding — see BM25Index)
-        cdc = batch_df.select("vec_id", "embedding", "op").persist()
-        try:
-            nonempty = self._validate_cdc_batch(
-                cdc,
-                # a NULL embedding on an UPSERT would index bucket-0
-                # keys that serve NULL cosines — refuse (deletes carry
-                # NULL embeddings by design); same action, zero cost
-                bad_payload=F.col("embedding").isNull()
-                & ~F.col("op").eqNullSafe("d"),
-                payload_msg="NULL embedding on an upsert row — a "
-                "vector index cannot serve a missing vector; fix the "
-                "producer (delete tombstones carry NULL embeddings by "
-                "design)",
-            )
-            dels = cdc.filter(F.col("op") == "d").select("vec_id")
-            # NULL-safe: a NULL/missing op upserts, never vanishes
-            ups = cdc.filter(~F.col("op").eqNullSafe("d"))
-            if nonempty:
-                self._has_cdc = True  # manifest records it at commit
-                self._pending_overlay_delta = True
-            self._append_vecs(ups, dels, epoch, op="u", dels=dels)
-            decisions = dels
-        finally:
-            self._pending_overlay_delta = False
-            cdc.unpersist()
-        self._maybe_autocompact()
-        return decisions
-
-    def _delete_decisions(self, ids: DataFrame) -> DataFrame:
-        """truncate() hook: removal decisions are just the ids."""
-        return ids.select("vec_id")
-
-    def _append_vecs(
-        self,
-        batch_df: DataFrame,
-        decisions: DataFrame,
-        epoch: int,
-        op: str,
-        dels: DataFrame | None = None,
-    ) -> None:
-        # ONE persisted base feeds both frames; _append eagerly
-        # checkpoints them, so the base releases here. Every base row
-        # is an upsert (delete tombstones append separately below), so
-        # a NULL embedding is ALWAYS invalid here — bucket-0 keys that
-        # would serve NULL cosines. apply_cdc already refuses them in
-        # its entry action; this lazy guard closes the BULK path
-        # (ingest/seed) at zero extra driver actions — it fires inside
-        # the epoch write itself (r10 review finding).
-        base = batch_df.select(
-            "vec_id",
-            F.when(
-                F.col("embedding").isNull(),
-                F.raise_error(
-                    F.lit(
-                        "NULL embedding on ingest — a vector index "
-                        "cannot serve a missing vector; filter or fix "
-                        "the producer"
-                    )
-                ),
-            )
-            .otherwise(F.col("embedding"))
-            .alias("embedding"),
-        ).persist()
-        ver = F.lit(epoch).cast("long")
-        vals = base.withColumn("ver", ver).withColumn("op", F.lit(op))
-        if dels is not None:
-            # tombstone embedding type mirrors the batch's (float vs
-            # double element type must match for the parts union)
-            emb_t = base.schema["embedding"].dataType
-            vals = vals.unionByName(
-                dels.select(
-                    "vec_id",
-                    F.lit(None).cast(emb_t).alias("embedding"),
-                    ver.alias("ver"),
-                    F.lit("d").alias("op"),
-                )
-            )
-        try:
-            # inside the finally scope: IVF's _key_frame collects
-            # eagerly (training / assignment setup) and can raise —
-            # the persisted base must release on that path too (r10
-            # review pass 2)
-            keys = self._key_frame(base).withColumn("ver", ver)
-            self._append(keys, vals, decisions, epoch)
-        finally:
-            base.unpersist()
 
     def topk(
         self,
@@ -634,15 +521,12 @@ class IVFVectorIndex(VectorIndex):
             )
         return self._cents
 
-    def apply_cdc(
-        self, batch_df: DataFrame, epoch: int | None = None
-    ) -> DataFrame:
+    def _check_cdc_ready(self) -> None:
         # a CDC batch must never TRAIN (the codebook froze at seed;
         # training on a mutation batch would silently re-bucket
         # nothing but the batch) — require it up front for a clear
         # error instead of _key_frame training on the wrong corpus
         self._require_cents()
-        return super().apply_cdc(batch_df, epoch)
 
     def truncate(self, epoch: int | None = None) -> DataFrame:
         """Corpus clear is a REBUILD for a trained index: the codebook
@@ -678,18 +562,15 @@ class IVFVectorIndex(VectorIndex):
         SAME integer-exact Lloyd training over it (init="hash" — the
         corpus-agnostic init, so any live corpus with >= IVF_CELLS
         sampled vectors retrains), assign every live vector under the
-        new centroids in one Arrow pass, and cut over atomically: the
-        new keys/vals land as an UNLISTED ghost segment, then ONE
-        manifest flip persists the new segment list AND the new
-        codebook AND the bumped ``rebuilds`` counter together (a
-        crash before the flip leaves the old corpus AND old codebook
-        fully live — keys assigned under one codebook are unreadable
-        under another, so they must travel in the same atomic fact;
-        a retry from the crashed state completes cleanly). Old
-        segments delete after the flip and are never read if
-        deletion is interrupted. All CDC overlay state folds into
-        the rebuild (it is also a compact), so the next epoch starts
-        on the append-only fast path.
+        new centroids in one Arrow pass, and cut over through
+        _cutover: ONE manifest flip persists the new segment AND the
+        new codebook AND the bumped ``rebuilds`` counter together
+        (keys assigned under one codebook are unreadable under
+        another, so they must travel in the same atomic fact; a failed
+        rebuild leaves the old corpus and codebook fully live, in
+        memory too, and deletes its ghost segment). All CDC overlay
+        state folds into the rebuild (it is also a compact), so the
+        next epoch starts on the append-only fast path.
 
         Deliberately EPOCH-LESS maintenance, like ``compact()`` —
         NOT an applied epoch: a rebuild changes no corpus membership
@@ -707,9 +588,6 @@ class IVFVectorIndex(VectorIndex):
         one full-corpus Arrow pass — O(corpus), the cost a rebuild
         fundamentally is, paid only when invoked (CLI:
         --ann-rebuild)."""
-        import os
-        import shutil
-
         from .. import caching
         from .similarity import (
             _ivf_trained_centroids_impl,
@@ -737,10 +615,8 @@ class IVFVectorIndex(VectorIndex):
             # versionless (-1 is strictly older than any real epoch,
             # so later CDC rows always win the max-ver fold)
             ver = F.lit(-1).cast("long")
-            new_vals_df = (
-                live.withColumn("ver", ver).withColumn("op", F.lit("a"))
-            )
-            new_keys_df = (
+            vals = live.withColumn("ver", ver).withColumn("op", F.lit("a"))
+            keys = (
                 ivf_assign_trained(live, new_cents)
                 .filter(F.col("rn") == 1)
                 .select(
@@ -750,101 +626,18 @@ class IVFVectorIndex(VectorIndex):
                 )
                 .withColumn("ver", ver)
             )
-            decisions = self.spark.createDataFrame([], _EMPTY_DECISIONS)
-            if self.store_dir is not None:
-                seg = f"rebuilt-{self._rebuilds + 1}"
-                n = 0
-                while seg in self._segments or os.path.isdir(
-                    os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                ):
-                    # never write into a LISTED segment; ghost dirs
-                    # from crashed rebuilds are skipped, harmlessly
-                    n += 1
-                    seg = f"rebuilt-{self._rebuilds + 1}-{n}"
-                # until the manifest flip below succeeds, the segment
-                # written here is unlisted ghost state — NEVER readable
-                # (load() skips it, the collision loop above dodges it)
-                # — so on ANY failure before the commit point it is
-                # deleted instead of accumulating a full-corpus parquet
-                # copy per failed rebuild (r11 advice)
-                committed = False
-                try:
-                    new_keys_df.write.mode("overwrite").partitionBy(
-                        "band"
-                    ).parquet(
-                        os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                    )
-                    new_vals_df.write.mode("overwrite").parquet(
-                        os.path.join(self.store_dir, self._VALS_NAME, seg)
-                    )
-                    nk = self.spark.read.parquet(
-                        os.path.join(self.store_dir, self._KEYS_NAME, seg)
-                    ).persist()
-                    nk.count()
-                    nv = self.spark.read.parquet(
-                        os.path.join(self.store_dir, self._VALS_NAME, seg)
-                    ).persist()
-                    nv.count()
-                    prev = (
-                        self._cents,
-                        self._segments,
-                        self._has_cdc,
-                        self._overlay_rows,
-                        self._rebuilds,
-                        self._cell_counts,
-                    )
-                    old_segments, self._segments = self._segments, [seg]
-                    self._cents = new_cents
-                    self._has_cdc = False
-                    self._overlay_rows = 0
-                    self._rebuilds += 1
-                    # a rebuild IS a physical fold: occupancy counters
-                    # re-derive exactly from the reassigned keys, in
-                    # the same atomic flip as the codebook they key
-                    self._track_folded_keys(nk)
-                    try:
-                        # THE commit point: segments + codebook +
-                        # rebuild counter in one atomic flip
-                        self._commit_manifest()
-                    except BaseException:
-                        (
-                            self._cents,
-                            self._segments,
-                            self._has_cdc,
-                            self._overlay_rows,
-                            self._rebuilds,
-                            self._cell_counts,
-                        ) = prev
-                        nk.unpersist()
-                        nv.unpersist()
-                        raise
-                    committed = True
-                except BaseException:
-                    if not committed:
-                        for name in (self._KEYS_NAME, self._VALS_NAME):
-                            shutil.rmtree(
-                                os.path.join(self.store_dir, name, seg),
-                                ignore_errors=True,
-                            )
-                    raise
-                for s in old_segments:
-                    for name in (self._KEYS_NAME, self._VALS_NAME):
-                        shutil.rmtree(
-                            os.path.join(self.store_dir, name, s),
-                            ignore_errors=True,
-                        )
-                self._swap_parts(nk, nv)
-            else:
-                nk, nv = caching.local_checkpoint_parallel(
-                    [new_keys_df, new_vals_df]
-                )
-                self._cents = new_cents
-                self._has_cdc = False
-                self._overlay_rows = 0
-                self._rebuilds += 1
-                self._track_folded_keys(nk)
-                self._swap_parts(nk, nv)
-            return decisions
+            if self.store_dir is None:
+                # store-less, the new parts must be materialized
+                # before the old ones release
+                keys, vals = caching.local_checkpoint_parallel([keys, vals])
+            self._cutover(
+                f"rebuilt-{self._rebuilds + 1}",
+                keys,
+                vals,
+                _cents=new_cents,
+                _rebuilds=self._rebuilds + 1,
+            )
+            return self._removed(None)
         finally:
             caching.release_local_checkpoint(live)
 

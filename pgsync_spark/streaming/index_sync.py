@@ -48,7 +48,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
@@ -92,8 +92,8 @@ def default_id_expr(engine) -> str:
 class _DocIndexMaintainer:
     """Shared wire between an IncrementalEngine's per-batch doc delta
     and an _AppendOnlyIndex exposing apply_cdc/ingest/truncate.
-    Subclasses define the payload shape (``_payload_exprs`` /
-    ``_null_payload``) and the index's id column name (``_ID``).
+    Subclasses define the payload shape (``_payload_exprs``) and the
+    index's id column name (``_ID``).
 
     ``id_expr`` is a SQL expression mapping a doc to its index
     identity (BIGINT). It MUST be a function of ``_id`` ALONE: the
@@ -130,10 +130,6 @@ class _DocIndexMaintainer:
         """Aliased SQL expressions for the index payload columns,
         evaluated over the sink-facing doc schema (``_id`` string,
         ``doc`` JSON string, plus the tree's root PKs)."""
-        raise NotImplementedError
-
-    def _null_payload(self) -> list[Column]:
-        """Typed-NULL payload columns for delete tombstone rows."""
         raise NotImplementedError
 
     def _doc_shape(self, docs: DataFrame) -> DataFrame:
@@ -181,16 +177,15 @@ class _DocIndexMaintainer:
         ``deleted_ids`` (single ``_id`` column — docs whose root rows
         vanished) become tombstones. The engine guarantees the two id
         sets are disjoint, satisfying apply_cdc's one-row-per-doc
-        contract."""
+        contract. A delete row is just the id and op='d' (its payload
+        columns fill as typed NULLs)."""
         ups = self._doc_shape(upserts).withColumn("op", F.lit("u"))
         dels = deleted_ids.selectExpr(
-            f"({self.id_expr}) AS {self._ID}"
-        ).select(
-            self._ID,
-            *self._null_payload(),
-            F.lit("d").alias("op"),
+            f"({self.id_expr}) AS {self._ID}", "'d' AS op"
         )
-        self.index.apply_cdc(ups.unionByName(dels))
+        self.index.apply_cdc(
+            ups.unionByName(dels, allowMissingColumns=True)
+        )
         self._applied += 1
         if self.compact_every and self._applied % self.compact_every == 0:
             self.index.compact()
@@ -238,13 +233,6 @@ class SearchIndexMaintainer(_DocIndexMaintainer):
             f"CAST(({self.text_expr}) AS STRING) AS text",
             f"CAST(({self.lang_expr}) AS STRING) AS lang",
             f"CAST(({self.source_expr}) AS STRING) AS source",
-        ]
-
-    def _null_payload(self) -> list[Column]:
-        return [
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("source"),
         ]
 
 
@@ -362,9 +350,6 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
 
     def _payload_exprs(self) -> list[str]:
         return [f"CAST(({self.vec_expr}) AS ARRAY<DOUBLE>) AS embedding"]
-
-    def _null_payload(self) -> list[Column]:
-        return [F.lit(None).cast("array<double>").alias("embedding")]
 
     def _imbalance(self) -> float | None:
         """max/mean cell occupancy from the index's INCREMENTAL

@@ -328,7 +328,7 @@ def start_dedup_stream(
             rejected.write.mode("overwrite").parquet(
                 os.path.join(out_dir, "rejected", f"epoch={epoch_id}")
             )
-            if "op" in batch_df.columns and hasattr(index, "apply_cdc"):
+            if "op" in batch_df.columns:
                 # a CDC upsert whose NEW content fails the quality
                 # gate must not freeze the doc's stale old version in
                 # the index (the same failure class as a swallowed
@@ -370,7 +370,7 @@ def start_dedup_stream(
                 # rejects foreign checkpoints — but never guess
                 batch_df.unpersist()
                 return
-        elif "op" in kept.columns and hasattr(index, "apply_cdc"):
+        elif "op" in kept.columns:
             # CDC-shaped stream (rows carry op: upsert/'d'): updates
             # and deletes flow into the index's versioned/tombstone
             # path; decisions = the deleted doc_ids, so the accepted

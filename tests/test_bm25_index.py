@@ -439,19 +439,6 @@ def test_cdc_all_docs_deleted_then_compact(spark, tmp_path):
     idx2.close()
 
 
-def test_apply_cdc_duplicate_doc_in_batch_raises(spark):
-    idx = BM25Index(spark)
-    batch = spark.createDataFrame(
-        [(1, "a", "en", "s0", "u"), (1, None, None, None, "d")],
-        "doc_id bigint, text string, lang string, source string, op string",
-    )
-    with pytest.raises(ValueError, match="multiple rows for doc_id"):
-        idx.apply_cdc(batch)
-    # the refused batch must not have advanced the epoch bookkeeping
-    assert idx.next_epoch() == 0
-    idx.close()
-
-
 def test_cdc_replay_semantics_store_backed(spark, tmp_path):
     """Exactly-once contract for CDC epochs: the committed epoch's
     decisions (= deleted doc_ids) read back via stored_decisions, and

@@ -1079,12 +1079,16 @@ def test_cli_bm25_store_engine_owned_index(spark, tmp_path):
     idx.close()
 
 
-def test_cli_bm25_analyzer_flag_and_mismatch_guard(spark, tmp_path):
+def test_cli_bm25_analyzer_flag_and_mismatch_guard(
+    spark, tmp_path, monkeypatch
+):
     """--bm25-analyzer standard: a fresh store is built with the
     standard tokenizer (manifest-recorded), --bm25-topk analyzes the
     query the same way ('URGENT!' hits '1-URGENT' docs), and re-running
     over the existing store with a DIFFERENT analyzer is rc=2, not a
-    silent mixed-tokenizer index."""
+    silent mixed-tokenizer index — refused before any full sync runs."""
+    from pgsync_spark.streaming.incremental import IncrementalEngine
+
     store = str(tmp_path / "bmstd")
     args = [
         "-c", _config(tmp_path),
@@ -1109,8 +1113,19 @@ def test_cli_bm25_analyzer_flag_and_mismatch_guard(spark, tmp_path):
     rows = [json.loads(ln) for ln in buf.getvalue().splitlines()]
     assert rows and all(r["score_micro"] > 0 for r in rows)
 
-    # mismatched analyzer over the existing store: refuse (rc=2)
+    # mismatched analyzer over the existing store: refuse (rc=2), and
+    # refuse before the sync — the store check needs no synced docs
+    synced = []
+    full_sync = IncrementalEngine.full_sync
+
+    def spy(self, *a, **kw):
+        synced.append(self)
+        return full_sync(self, *a, **kw)
+
+    monkeypatch.setattr(IncrementalEngine, "full_sync", spy)
     assert main(args + ["--bm25-analyzer", "whitespace"], spark=spark) == 2
+    assert synced == []
+    monkeypatch.setattr(IncrementalEngine, "full_sync", full_sync)
     # and no flag at all keeps serving with the store's own analyzer
     assert main(args, spark=spark) == 0
 

@@ -1,6 +1,8 @@
 """MinHashIndex (incremental ingestion dedup): state discipline,
 store-backed restart, and the semantics the oracle encodes."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1560,27 +1562,6 @@ def test_pre_filter_failing_update_tombstones_stale_version(
     assert [(r.doc_id, r.text) for r in rej] == [(1, "short")]
     idx.close()
 
-@pytest.mark.slow
-def test_apply_cdc_unknown_op_raises(spark):
-    """r9 (r8 verdict parity gap a): the op contract is a closed
-    vocabulary — an unrecognized op raises instead of silently
-    upserting a garbage row, and op='t' points at truncate()."""
-    idx = MinHashIndex(spark)
-    idx.ingest(_docs(spark, [(1, DOC)]))
-    with pytest.raises(ValueError, match="unknown CDC op 'x'"):
-        idx.apply_cdc(_cdc(spark, [(2, OTHER, "x")]))
-    with pytest.raises(ValueError, match="truncate"):
-        idx.apply_cdc(_cdc(spark, [(2, None, "t")]))
-    # the refused epochs never committed
-    assert idx.next_epoch() == 1
-    # the documented upsert letters all work
-    idx.apply_cdc(_cdc(spark, [(2, OTHER, "c")]))
-    idx.apply_cdc(_cdc(spark, [(3, THIRD, "i")]))
-    held = {r.doc_id for r in idx.shingles.select("doc_id").collect()}
-    assert held == {1, 2, 3}
-    idx.close()
-
-
 def test_empty_cdc_batch_does_not_arm_overlay(spark, tmp_path):
     """r8 advice: an EMPTY micro-batch must not set _has_cdc — the
     epoch still commits (stream bookkeeping), but readers stay on the
@@ -1756,23 +1737,6 @@ def test_pre_filter_null_op_row_gated_not_vanished(spark, tmp_path):
     assert [(r.doc_id, r.text) for r in rej] == [(1, "tiny")]
     idx.close()
 
-def test_apply_cdc_null_id_raises(spark):
-    """r9 review finding: the one-action validator's max(when(c>1,
-    id)) is NULL for a NULL-keyed duplicate group — NULL ids must
-    raise outright (single or duplicated), never index as garbage
-    identities."""
-    idx = MinHashIndex(spark)
-    idx.ingest(_docs(spark, [(1, DOC)]))
-    with pytest.raises(ValueError, match="NULL doc_id"):
-        idx.apply_cdc(_cdc(spark, [(None, OTHER, "u"), (None, THIRD, "u")]))
-    with pytest.raises(ValueError, match="NULL doc_id"):
-        idx.apply_cdc(_cdc(spark, [(None, OTHER, "u")]))
-    assert idx.next_epoch() == 1  # nothing committed
-    held = {r.doc_id for r in idx.shingles.select("doc_id").collect()}
-    assert held == {1}
-    idx.close()
-
-
 def test_pre_filter_does_not_demote_unknown_ops(spark, tmp_path):
     """r9 review finding: a rejected row with an op OUTSIDE the
     closed vocabulary must keep its op and raise in apply_cdc — the
@@ -1863,10 +1827,16 @@ def _dirty_index(spark, kind, rounds=1):
 
         def payload(i, r):
             return (f"alpha w{i} w{i % 7} r{r}", None, None)
-    else:
-        from pgsync_spark.functions.vector_index import VectorIndex
+    elif kind == "minhash":
+        idx = MinHashIndex(spark)
+        schema = "doc_id bigint, text string"
 
-        idx = VectorIndex(spark)
+        def payload(i, r):
+            return (f"alpha beta w{i} w{i % 7} r{r} gamma delta",)
+    else:
+        from pgsync_spark.functions.dedup_index import EmbeddingIndex
+
+        idx = (VectorIndex if kind == "vector" else EmbeddingIndex)(spark)
         schema = "vec_id bigint, embedding array<double>"
 
         def payload(i, r):
@@ -1912,6 +1882,47 @@ def test_cdc_compact_job_count(spark, kind):
         idx.close()
 
 
+def _settled_jobs(spark):
+    """The scheduler's job total once the MinHash probe's hot-bucket
+    logger thread is done (its fallback count is a job of its own)."""
+    from pgsync_spark.functions.dedup import HOT_BUCKET_PROBES
+
+    probe = HOT_BUCKET_PROBES.get("minhash_index_probe")
+    if probe is not None:
+        probe.thread.join(60)
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+@pytest.mark.parametrize(
+    "kind,plain,adaptive",
+    [("bm25", 3, 8), ("vector", 3, 6),
+     ("minhash", 10, None), ("embedding", 10, 33)],
+)
+def test_apply_cdc_job_count(spark, kind, plain, adaptive):
+    """One dirty apply_cdc epoch (20 upserts + 1 delete over a held,
+    already-dirty corpus) runs a pinned number of Spark jobs on every
+    index class: ``plain`` with adaptive execution off (actions and
+    broadcasts only, deterministic), ``adaptive`` with it on (every
+    query stage is a job). The MinHash probe's adaptive count is not
+    pinned: its re-planning races add a stage job on some runs."""
+    idx, cdc = _dirty_index(spark, kind)
+    key = "spark.sql.adaptive.enabled"
+    counts = []
+    try:
+        for r, aqe in ((1, "false"), (2, "true")):
+            spark.conf.set(key, aqe)
+            jobs0 = _settled_jobs(spark)
+            cdc(r)
+            counts.append(_settled_jobs(spark) - jobs0)
+        assert counts[0] == plain
+        if adaptive is not None:
+            assert counts[1] == adaptive
+        assert idx._has_cdc and idx.next_epoch() == 4
+    finally:
+        spark.conf.set(key, "true")
+        idx.close()
+
+
 @pytest.mark.parametrize("kind", ["bm25", "vector"])
 def test_cdc_compact_holds_no_extra_blocks(spark, kind):
     """Leak guard: rounds of apply_cdc + compact() on one index leave
@@ -1934,6 +1945,177 @@ def test_cdc_compact_holds_no_extra_blocks(spark, kind):
         assert sizes[1] == sizes[2] == sizes[3], sizes
     finally:
         idx.close()
+
+
+def _entry_index(spark, kind):
+    """A store-less ``kind`` index holding ids 1 and 2 (epoch 0), and
+    ``rows(pairs)``: a CDC batch of (id, op) pairs whose payloads are
+    pairwise far apart (no probe ever drops one)."""
+    from pgsync_spark.functions.dedup_index import EmbeddingIndex
+
+    if kind == "bm25":
+        idx = BM25Index(spark)
+        schema = "doc_id bigint, text string, lang string, source string"
+
+        def payload(i):
+            return (f"w{i}a w{i}b", None, None)
+    elif kind == "minhash":
+        idx = MinHashIndex(spark)
+        schema = "doc_id bigint, text string"
+
+        def payload(i):
+            return (" ".join(f"w{i}{c}" for c in "abcdef"),)
+    else:
+        idx = (VectorIndex if kind == "vector" else EmbeddingIndex)(spark)
+        schema = "vec_id bigint, embedding array<double>"
+
+        def payload(i):  # one-hot: cosine 0 between distinct ids
+            return ([1.0 if d == (i or 0) else 0.0 for d in range(16)],)
+
+    def rows(pairs):
+        return spark.createDataFrame(
+            [(i,) + payload(i) + (op,) for i, op in pairs],
+            schema + ", op string",
+        )
+
+    idx.ingest(rows([(1, "a"), (2, "a")]).drop("op"))
+    return idx, rows
+
+
+@pytest.mark.parametrize("kind", ["bm25", "vector", "minhash", "embedding"])
+def test_apply_cdc_entry_contract(spark, kind):
+    """apply_cdc's one entry, on every index class: a NULL id (alone
+    or duplicated), a duplicate id, table-level 't' and an unknown op
+    refuse without committing an epoch or arming the overlay; an empty
+    batch commits its epoch without arming it; a NULL op and the
+    documented upsert letters upsert; CDC history blocks a bulk
+    re-add (the overlay would shadow it)."""
+    idx, rows = _entry_index(spark, kind)
+    idc = idx._ID_COL
+    try:
+        for pairs, msg in (
+            ([(None, "u")], f"NULL {idc}"),
+            ([(None, "u"), (None, "u")], f"NULL {idc}"),
+            ([(3, "u"), (3, "d")], f"multiple rows for {idc} 3"),
+            ([(3, "t")], "truncate"),
+            ([(3, "x")], "unknown CDC op 'x'"),
+        ):
+            with pytest.raises(ValueError, match=msg):
+                idx.apply_cdc(rows(pairs))
+        assert idx.next_epoch() == 1
+        assert not idx._has_cdc and idx._overlay_rows == 0
+        idx.apply_cdc(rows([]))
+        assert idx.epoch_applied(1)
+        assert not idx._has_cdc and idx._overlay_rows == 0
+        idx.apply_cdc(rows([(3, None), (4, "c"), (5, "i"), (1, "d")]))
+        assert idx._has_cdc and idx._overlay_rows == 4
+        live = idx.live("vals").select(idc).collect()
+        assert sorted(r[idc] for r in live) == [2, 3, 4, 5]
+        with pytest.raises(ValueError, match="CDC history"):
+            idx.ingest(rows([(1, None)]).drop("op"))
+    finally:
+        idx.close()
+
+
+def test_failed_compact_leaves_no_ghost_segment(
+    spark, tmp_path, monkeypatch
+):
+    """A store-backed compact() whose vals write fails after its keys
+    write deletes its ghost segment — it is never listed, so nothing
+    else ever would — and the index keeps serving the old corpus, in
+    memory and after a reload."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    schema = "doc_id bigint, text string, lang string, source string"
+    store = str(tmp_path / "bm25")
+    idx = BM25Index(spark, store_dir=store)
+    idx.ingest(
+        spark.createDataFrame([(1, "spark engine", None, None)], schema)
+    )
+    idx.apply_cdc(
+        spark.createDataFrame(
+            [(2, "spark index", None, None, "u"),
+             (1, None, None, None, "d")],
+            schema + ", op string",
+        )
+    )
+    before = [tuple(r) for r in idx.topk(("spark",), k=5).collect()]
+    assert [r[0] for r in before] == [2]
+    listed = sorted(idx._segments)
+    parquet = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if os.path.join("docstats", "compacted") in path:
+            raise OSError("disk full")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="disk full"):
+        idx.compact()
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    for side in ("postings", "docstats"):
+        assert sorted(os.listdir(os.path.join(store, side))) == listed
+    assert sorted(idx._segments) == listed and idx._has_cdc
+    assert [tuple(r) for r in idx.topk(("spark",), k=5).collect()] == before
+    idx.close()
+    idx2 = BM25Index.load(spark, store)
+    assert [tuple(r) for r in idx2.topk(("spark",), k=5).collect()] == before
+    idx2.close()
+
+
+def test_one_index_write_path():
+    """_AppendOnlyIndex owns the index family's write path: no subclass
+    defines its own entry, epoch-row or removal-decision builder, and
+    outside functions/dedup_index.py no function runs the CDC entry
+    validation, or deletes a segment dir or commits the manifest
+    around a segment swap (the one cutover is _cutover)."""
+    import ast
+    import pathlib
+
+    from pgsync_spark.functions.dedup_index import _AppendOnlyIndex
+
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            if sub.__module__.startswith("pgsync_spark."):
+                yield sub
+                yield from subclasses(sub)
+
+    base_only = {
+        "ingest", "apply_cdc", "_write_epoch", "_append_rows",
+        "_append_versioned", "_delete_decisions", "_removed", "_probe",
+        "_cutover", "_validate_cdc_batch",
+    }
+    bad = [
+        f"{sub.__name__}.{name}"
+        for sub in subclasses(_AppendOnlyIndex)
+        for name in sorted(base_only & set(vars(sub)))
+    ]
+    assert len(list(subclasses(_AppendOnlyIndex))) >= 5
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pgsync_spark"
+    owner = pkg / "functions" / "dedup_index.py"
+    segment = {"_segments", "_swap_parts", "_KEYS_NAME", "_VALS_NAME"}
+    n_files = 0
+    for f in pkg.rglob("*.py"):
+        if "__pycache__" in f.parts or f == owner:
+            continue
+        n_files += 1
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            names = {
+                n.attr if isinstance(n, ast.Attribute) else n.id
+                for n in ast.walk(fn)
+                if isinstance(n, (ast.Attribute, ast.Name))
+            }
+            if "_validate_cdc_batch" in names or (
+                names & segment and names & {"rmtree", "_commit_manifest"}
+            ):
+                bad.append(f"{f.name}:{fn.lineno}: {fn.name}")
+    assert n_files > 20, f"package scan found only {n_files} files"
+    assert not bad, (
+        "index write path written outside _AppendOnlyIndex (use its "
+        "hooks instead):\n" + "\n".join(bad)
+    )
 
 
 # -- store state: load() is the one open that checks it --------------------

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pgsync_spark.functions.dedup_index import EmbeddingIndex
 from pgsync_spark.functions.similarity import N_QUERIES
 from pgsync_spark.functions.vector_index import VectorIndex
 
@@ -181,29 +182,6 @@ def test_truncate_clears_and_fresh_ingest_restarts(spark, tmp_path):
     idx2.close()
 
 
-def test_entry_contracts(spark):
-    emb = _emb(spark).filter(F.col("vec_id") < 30)
-    idx = VectorIndex(spark)
-    idx.ingest(emb)
-    one = emb.filter(F.col("vec_id") == 9)
-    dup = one.select("vec_id", "embedding", F.lit("u").alias("op"))
-    with pytest.raises(ValueError, match="multiple rows"):
-        idx.apply_cdc(dup.unionByName(dup))
-    with pytest.raises(ValueError, match="truncate"):
-        idx.apply_cdc(
-            one.select("vec_id", "embedding", F.lit("t").alias("op"))
-        )
-    with pytest.raises(ValueError, match="unknown CDC op"):
-        idx.apply_cdc(
-            one.select("vec_id", "embedding", F.lit("x").alias("op"))
-        )
-    # CDC history blocks bulk re-adds (the overlay would shadow them)
-    idx.apply_cdc(one.select("vec_id", "embedding", F.lit("d").alias("op")))
-    with pytest.raises(ValueError, match="CDC history"):
-        idx.ingest(one)
-    idx.close()
-
-
 def test_empty_index_topk_is_typed_empty(spark):
     idx = VectorIndex(spark)
     out = idx.topk(_queries(_emb(spark)))
@@ -220,27 +198,29 @@ def test_empty_index_topk_is_typed_empty(spark):
 def test_null_embedding_upsert_raises(spark):
     """r10 review: a NULL embedding on an upsert would index bucket-0
     keys serving NULL cosines — the one-action validator refuses it
-    (delete tombstones carry NULL embeddings by design)."""
+    (delete tombstones carry NULL embeddings by design). Both vector
+    families share the entry: the dedup probe would otherwise hold the
+    NULL copy under bucket-0 keys, where two NULL copies never dedup."""
     emb = _emb(spark).filter(F.col("vec_id") < 20)
     emb_t = emb.schema["embedding"].dataType
-    idx = VectorIndex(spark)
-    idx.ingest(emb)
-    bad = spark.createDataFrame([(9,)], "vec_id bigint").select(
-        "vec_id",
-        F.lit(None).cast(emb_t).alias("embedding"),
-        F.lit("u").alias("op"),
-    )
-    with pytest.raises(ValueError, match="NULL embedding"):
-        idx.apply_cdc(bad)
-    # a delete with NULL embedding stays legal
-    idx.apply_cdc(
-        spark.createDataFrame([(9,)], "vec_id bigint").select(
+
+    def row(op):
+        return spark.createDataFrame([(9,)], "vec_id bigint").select(
             "vec_id",
             F.lit(None).cast(emb_t).alias("embedding"),
-            F.lit("d").alias("op"),
+            F.lit(op).alias("op"),
         )
-    )
-    idx.close()
+
+    for cls in (VectorIndex, EmbeddingIndex):
+        idx = cls(spark)
+        try:
+            idx.ingest(emb)
+            with pytest.raises(ValueError, match="NULL embedding"):
+                idx.apply_cdc(row("u"))
+            # a delete with NULL embedding stays legal
+            idx.apply_cdc(row("d"))
+        finally:
+            idx.close()
 
 
 def test_ivf_codebook_freezes_and_survives_restart(spark, tmp_path):
@@ -308,17 +288,18 @@ def test_null_embedding_bulk_ingest_raises(spark):
     """r10 review finding: the NULL-embedding refusal covered only
     apply_cdc — the BULK path (ingest/seed) admitted NULLs that index
     bucket-0 keys serving NULL cosines. The lazy guard fires inside
-    the epoch write."""
+    the epoch write, for both vector families."""
     df = spark.createDataFrame(
         [(1, [1.0] * 16), (2, None)],
         "vec_id bigint, embedding array<double>",
     )
-    idx = VectorIndex(spark)
-    try:
-        with pytest.raises(Exception, match="NULL embedding on ingest"):
-            idx.ingest(df)
-    finally:
-        idx.close()
+    for cls in (VectorIndex, EmbeddingIndex):
+        idx = cls(spark)
+        try:
+            with pytest.raises(Exception, match="NULL embedding on ingest"):
+                idx.ingest(df)
+        finally:
+            idx.close()
 
 
 def test_ivf_truncate_drops_codebook_and_retrains(spark, tmp_path):
