@@ -525,7 +525,7 @@ class _AppendOnlyIndex:
         verify as near-duplicates, and only the survivors enter."""
         batch, cached = self._prepare(ups)
         try:
-            if self._verified_pairs is None or self.keys is None:
+            if self._verified_pairs is None or not self._key_parts:
                 decisions, surv = self._removed(dels), batch
             else:
                 decisions = self._probe(batch, dels, op)
