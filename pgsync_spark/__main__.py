@@ -984,7 +984,6 @@ def _run_ann_frontier(args, spark, out) -> int:
                 .filter(F.col("rank") <= TOP_K)
                 .collect()
             }
-            keys = idx.live("keys")
             widths = (
                 [
                     ("nprobe", n)
@@ -995,16 +994,15 @@ def _run_ann_frontier(args, spark, out) -> int:
             )
             for dial, n in widths:
                 setattr(idx, dial, n)
-                probe = idx._probe_frame(
-                    q.select(F.col("query_id").alias("vec_id"), "embedding")
-                )
-                n_cand = (
-                    keys.join(F.broadcast(probe), ["band", "bucket"])
-                    .filter(F.col("vec_id") != F.col("query_id"))
-                    .select("query_id", "vec_id")
-                    .distinct()
-                    .count()
-                )
+                # the candidate set topk re-ranks, counted from the
+                # same probe text
+                with idx._views.lease() as view:
+                    _, cand = idx._candidates_sql(
+                        view, q, exclude_self=True
+                    )
+                    n_cand = spark.sql(
+                        f"SELECT count(*) FROM {cand}"
+                    ).first()[0]
                 hits = {
                     (r["query_id"], r["neighbor_id"])
                     for r in idx.topk(q, exclude_self=True).collect()

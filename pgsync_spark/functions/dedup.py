@@ -178,6 +178,14 @@ def _shingle_sets(df: DataFrame) -> DataFrame:
     )
 
 
+def _unshingled(df: DataFrame) -> DataFrame:
+    """(doc_id) of every doc _shingle_sets leaves out: under 3 tokens,
+    or NULL text. With no shingles it is never a duplicate (the
+    oracle's _shingle_cte) and there is nothing to hold."""
+    has = F.size(F.expr(tokens_sparksql("text"))) >= 3
+    return df.filter(~F.coalesce(has, F.lit(False))).select("doc_id")
+
+
 def _signatures(df: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     """doc_id + 16-permutation minhash signature + distinct hashed
     shingle set (bigint): _shingle_sets → 16 linear permutations.

@@ -62,6 +62,7 @@ from .dedup import (
     _band_frame,
     _crosscorpus_candidates,
     _signatures,
+    _unshingled,
 )
 from .hashing import round6
 
@@ -500,6 +501,12 @@ class _AppendOnlyIndex:
         """The keys rows (without ver) for a ``_prepare`` frame."""
         raise NotImplementedError
 
+    def _unheld(self, ups: DataFrame) -> DataFrame | None:
+        """Ids of upserts ``ups`` that ``_prepare`` leaves out: accepted
+        (never a decision) but not held, so a CDC epoch still
+        tombstones their old versions. None: every upsert is held."""
+        return None
+
     def _removed(self, ids: DataFrame | None) -> DataFrame:
         """Decisions that remove ``ids`` not as anyone's duplicate:
         the ``_DECISIONS`` columns, dup_of/metric NULL (None: an empty
@@ -525,14 +532,15 @@ class _AppendOnlyIndex:
         verify as near-duplicates, and only the survivors enter."""
         batch, cached = self._prepare(ups)
         try:
+            unheld = None if op == "a" else self._unheld(ups)
             if self._verified_pairs is None or not self._key_parts:
                 decisions, surv = self._removed(dels), batch
             else:
-                decisions = self._probe(batch, dels, op)
+                decisions = self._probe(batch, dels, op, unheld)
                 surv = batch.join(
                     decisions.select(self._ID_COL), self._ID_COL, "left_anti"
                 )
-            self._append_rows(surv, decisions, epoch, op)
+            self._append_rows(surv, decisions, epoch, op, unheld)
         finally:
             # _append installed eager checkpoints of the epoch's rows,
             # so the batch's own caches release here
@@ -541,32 +549,45 @@ class _AppendOnlyIndex:
         return decisions
 
     def _append_rows(
-        self, frame: DataFrame, decisions: DataFrame, epoch: int, op: str
+        self,
+        frame: DataFrame,
+        decisions: DataFrame,
+        epoch: int,
+        op: str,
+        unheld: DataFrame | None,
     ) -> None:
         """The one epoch-row builder: ``frame``'s keys and payload as
         versioned rows (ver=epoch, ``op``), plus on a CDC epoch a
         delete tombstone (op='d', payload NULL, typed from the payload
         schema — the parts union is by name AND type) for every id in
-        ``decisions``: each deleted id, and each upsert a probe
-        dropped."""
+        ``decisions`` (each deleted id, and each upsert a probe
+        dropped) and in ``unheld``."""
+        idc = self._ID_COL
         ver = F.lit(epoch).cast("long")
-        vals = frame.select(self._ID_COL, *self._PAYLOAD)
+        vals = frame.select(idc, *self._PAYLOAD)
         rows = vals.withColumn("ver", ver).withColumn("op", F.lit(op))
         if op != "a":
+            gone = decisions.select(idc)
+            if unheld is not None:
+                gone = gone.unionByName(unheld)
             nulls = (
                 F.lit(None).cast(f.dataType).alias(f.name)
                 for f in vals.schema.fields[1:]
             )
             rows = rows.unionByName(
-                decisions.select(
-                    self._ID_COL, *nulls, ver.alias("ver"), F.lit("d").alias("op")
+                gone.select(
+                    idc, *nulls, ver.alias("ver"), F.lit("d").alias("op")
                 )
             )
         keys = self._key_frame(frame).withColumn("ver", ver)
         self._append(keys, rows, decisions, epoch)
 
     def _probe(
-        self, batch: DataFrame, dels: DataFrame | None, op: str
+        self,
+        batch: DataFrame,
+        dels: DataFrame | None,
+        op: str,
+        unheld: DataFrame | None,
     ) -> DataFrame:
         """The one dedup-probe skeleton: fold the CDC overlay so the
         probe sees only the LIVE corpus, pair the batch against it
@@ -575,7 +596,8 @@ class _AppendOnlyIndex:
         verified old_id, add the deletes, and materialize.
 
         On the apply_cdc path (op != 'a') the batch's own ids are dead
-        too — an UPDATE must never match its own superseded version.
+        too, ``unheld`` upserts included — an UPDATE must never match
+        its own superseded version.
         On a bulk ingest they must NOT be: the held copy of a
         re-ingested id is still live and must self-block the
         duplicate, exactly like the append-only path (r8 review pass 2
@@ -589,8 +611,9 @@ class _AppendOnlyIndex:
             extra_dead = None
             if op != "a":
                 extra_dead = batch.select(idc)
-                if dels is not None:
-                    extra_dead = extra_dead.unionByName(dels)
+                for ids in (dels, unheld):
+                    if ids is not None:
+                        extra_dead = extra_dead.unionByName(ids)
             overlay = self._cdc_overlay().persist()
             held_keys = self._cdc_live(held_keys, overlay, extra_dead)
             held_vals = self._cdc_live(held_vals, overlay, extra_dead)
@@ -1441,6 +1464,9 @@ class MinHashIndex(_AppendOnlyIndex):
 
     def _key_frame(self, sigs: DataFrame) -> DataFrame:
         return _band_frame(sigs)
+
+    def _unheld(self, ups: DataFrame) -> DataFrame:
+        return _unshingled(ups)
 
     def _verified_pairs(
         self, sigs: DataFrame, held_bands: DataFrame, held_sh: DataFrame

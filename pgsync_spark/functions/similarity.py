@@ -116,13 +116,16 @@ def ann_bruteforce_topk_sql() -> str:
     """
 
 
-def _bucket_sparksql(col: str) -> str:
-    """Sign-of-leading-dims LSH bucket as Spark-SQL text: bit i =
-    (v[i] >= 0)."""
+def _sign_bucket_sparksql(col: str, first: int, n: int) -> str:
+    """Sign-LSH bucket as Spark-SQL text over the ``n`` dims of array
+    column ``col`` from 0-based ``first``: bit i = (v[first + i] >= 0).
+    The one Spark text of the sign bucket: the whole-vector LSH legs
+    (the N_PLANES leading dims), the banded keys and VectorIndex's
+    probe all render it here."""
     return "0 + " + " + ".join(
-        f"(CASE WHEN element_at({col}, {i + 1}) >= 0 "
+        f"(CASE WHEN element_at({col}, {first + i + 1}) >= 0 "
         f"THEN {2 ** i} ELSE 0 END)"
-        for i in range(N_PLANES)
+        for i in range(n)
     )
 
 
@@ -292,13 +295,7 @@ def _band_bucket(col: str, band: int) -> F.Column:
     """Sign bucket over the band's PLANES_PER_BAND leading dims of an
     array column name, one parse (see cosine6)."""
     return F.expr(
-        "0 + "
-        + " + ".join(
-            f"(CASE WHEN element_at({col}, "
-            f"{band * PLANES_PER_BAND + i + 1}) >= 0 "
-            f"THEN {2 ** i} ELSE 0 END)"
-            for i in range(PLANES_PER_BAND)
-        )
+        _sign_bucket_sparksql(col, band * PLANES_PER_BAND, PLANES_PER_BAND)
     )
 
 
@@ -1006,7 +1003,8 @@ def _lsh_leg_sparksql(E: str, hamming: int | None, full: bool = False) -> str:
     (hamming None = single-probe; 1/2 = multi-probe widths)."""
     bucketed = (
         f"(SELECT vec_id, embedding, "
-        f"{_bucket_sparksql('embedding')} AS bucket FROM {E})"
+        f"{_sign_bucket_sparksql('embedding', 0, N_PLANES)} AS bucket "
+        f"FROM {E})"
     )
     q = (
         f"(SELECT vec_id AS query_id, embedding AS qv, bucket AS qb "

@@ -274,27 +274,6 @@ class VectorIndex(_AppendOnlyIndex):
         """(vec_id, band, bucket) stored keys for a batch."""
         return self._band_keys(df)
 
-    def _probe_frame(self, qkeys: DataFrame) -> DataFrame:
-        """(query_id, band, bucket) probe keys for a query frame
-        shaped (vec_id=query_id, embedding) — sign-LSH buckets plus
-        every Hamming<=probe_hamming perturbation."""
-        from .similarity import PLANES_PER_BAND, probe_buckets
-
-        probe = self._band_keys(qkeys).select(
-            F.col("vec_id").alias("query_id"), "band", "bucket"
-        )
-        if self.probe_hamming:
-            probe = probe.select(
-                "query_id",
-                "band",
-                F.explode(
-                    probe_buckets(
-                        "bucket", PLANES_PER_BAND, self.probe_hamming
-                    )
-                ).alias("bucket"),
-            )
-        return probe
-
     def topk(
         self,
         queries: DataFrame,
@@ -341,20 +320,8 @@ class VectorIndex(_AppendOnlyIndex):
         _AppendOnlyIndex one-SQL notes)."""
         from .similarity import _dot_sparksql, _norm_sparksql
 
-        ksub = self._parts_view("keys")
+        q_sub, cand = self._candidates_sql(view, queries, exclude_self)
         vsub = self._parts_view("vals")
-        q_sub = (
-            f"(SELECT CAST(query_id AS BIGINT) AS query_id, "
-            f"embedding AS qv FROM {view(queries, 'q')})"
-        )
-        probe = self._probe_sql(q_sub, queries, view)
-        self_pred = (
-            "\n  WHERE k.neighbor_id != p.query_id" if exclude_self else ""
-        )
-        cand = f"""(SELECT DISTINCT query_id, neighbor_id FROM (
-  SELECT /*+ BROADCAST(p) */ query_id, neighbor_id
-  FROM (SELECT vec_id AS neighbor_id, band, bucket FROM {ksub}) k
-  JOIN {probe} p USING (band, bucket){self_pred}))"""
         c = (
             f"{_dot_sparksql('qv', 'cv')} / "
             f"({_norm_sparksql('qv')} * {_norm_sparksql('cv')})"
@@ -370,22 +337,44 @@ class VectorIndex(_AppendOnlyIndex):
   FROM {scored})
 WHERE rank <= {k}"""
 
+    def _candidates_sql(
+        self, view, queries: DataFrame, exclude_self: bool
+    ) -> tuple[str, str]:
+        """(q_sub, cand) as SQL text over the lease ``view``: the query
+        subquery (query_id, qv), and the distinct (query_id,
+        neighbor_id) pairs its probe keys reach in the live keys —
+        what topk re-ranks and what ``--ann-frontier`` counts."""
+        ksub = self._parts_view("keys")
+        q_sub = (
+            f"(SELECT CAST(query_id AS BIGINT) AS query_id, "
+            f"embedding AS qv FROM {view(queries, 'q')})"
+        )
+        probe = self._probe_sql(q_sub, queries, view)
+        self_pred = (
+            "\n  WHERE k.neighbor_id != p.query_id" if exclude_self else ""
+        )
+        cand = f"""(SELECT DISTINCT query_id, neighbor_id FROM (
+  SELECT /*+ BROADCAST(p) */ query_id, neighbor_id
+  FROM (SELECT vec_id AS neighbor_id, band, bucket FROM {ksub}) k
+  JOIN {probe} p USING (band, bucket){self_pred}))"""
+        return q_sub, cand
+
     def _probe_sql(self, q_sub: str, queries: DataFrame, view) -> str:
         """(query_id, band, bucket) probe keys as SQL text over the
-        ``q_sub`` query subquery (query_id, qv) — the _probe_frame
-        scheme: sign-LSH buckets plus every Hamming<=probe_hamming
+        ``q_sub`` query subquery (query_id, qv): sign-LSH buckets (the
+        stored keys' banding) plus every Hamming<=probe_hamming
         perturbation. ``queries`` and the topk's lease ``view`` are
         for subclasses whose probe has no SQL text form."""
-        from .similarity import N_BANDS, PLANES_PER_BAND, _probe_masks
+        from .similarity import (
+            N_BANDS,
+            PLANES_PER_BAND,
+            _probe_masks,
+            _sign_bucket_sparksql,
+        )
 
         P = PLANES_PER_BAND
         bands = ", ".join(
-            "0 + "
-            + " + ".join(
-                f"(CASE WHEN element_at(embedding, {b * P + i + 1}) >= 0 "
-                f"THEN {2 ** i} ELSE 0 END)"
-                for i in range(P)
-            )
+            _sign_bucket_sparksql("embedding", b * P, P)
             for b in range(N_BANDS)
         )
         bk = (

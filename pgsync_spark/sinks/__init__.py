@@ -1,2 +1,2 @@
 from .jsonl import write_jsonl  # noqa: F401
-from .search import SearchSink, build_index_mapping  # noqa: F401
+from .search import build_index_mapping  # noqa: F401

@@ -1,6 +1,6 @@
 """Elasticsearch/OpenSearch sink.
 
-Three layers, mirroring the reference's SearchClient:
+Two layers, mirroring the reference's SearchClient:
 
 - ``build_index_mapping``: derive the index mapping from the node tree's
   declared transform/mapping blocks + inferred field types
@@ -15,8 +15,6 @@ Three layers, mirroring the reference's SearchClient:
   (ref: pgsync/search_client.py:100-212). Each partition streams its
   own chunks, so bulk throughput scales with executors exactly like
   the reference's multi-threaded parallel_bulk scales with threads.
-- ``SearchSink``: optional elasticsearch-spark connector path when the
-  jar is on the classpath, JSONL dry-run otherwise.
 """
 
 from __future__ import annotations
@@ -466,35 +464,3 @@ class BulkHttpWriter:
             )
         )
 
-
-class SearchSink:
-    """Bulk doc writer; falls back to JSONL dry-run without a cluster."""
-
-    def __init__(self, index: str, es_nodes: str | None = None, **conf: str):
-        self.index = index
-        self.es_nodes = es_nodes
-        self.conf = conf
-
-    def write(self, docs: DataFrame, mode: str = "append") -> None:
-        if self.es_nodes is None:
-            raise RuntimeError(
-                "no es.nodes configured — use write_dry_run or configure a cluster"
-            )
-        (
-            docs.write.format("org.elasticsearch.spark.sql")
-            .option("es.nodes", self.es_nodes)
-            .option("es.resource", self.index)
-            .option("es.mapping.id", "_id")
-            .option("es.write.operation", "upsert")
-            .options(**self.conf)
-            .mode(mode)
-            .save()
-        )
-
-    def write_dry_run(self, docs: DataFrame, path: str) -> None:
-        from .jsonl import write_jsonl
-
-        write_jsonl(docs, path)
-
-    def index_body(self, tree: Tree, doc_schema: T.StructType) -> str:
-        return json.dumps(build_index_mapping(tree, doc_schema))

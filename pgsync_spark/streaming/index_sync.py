@@ -255,8 +255,7 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
     ``rebuild_when`` (r11 verdict item 2 — the automated half of the
     measure→act loop ``--ann-stats`` / ``--ann-rebuild`` exposed
     manually): a max/mean cell-occupancy threshold (> 1). After each
-    applied batch (every ``rebuild_check_every``-th, default every
-    batch) the maintainer reads the SAME occupancy statistic
+    applied batch the maintainer reads the SAME occupancy statistic
     ``--ann-stats`` prints (one definition for both:
     VectorIndex.occupancy_imbalance) and, when the imbalance exceeds
     the threshold, fires ``index.rebuild()`` — logged as one event and
@@ -311,7 +310,6 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
         vec_expr: str | None = None,
         compact_every: int | None = 8,
         rebuild_when: float | None = None,
-        rebuild_check_every: int = 1,
     ):
         super().__init__(index, id_expr, compact_every)
         if vec_expr is None:
@@ -332,13 +330,7 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
                     f"imbalance; 1.0 is perfectly balanced), got "
                     f"{rebuild_when}"
                 )
-        if rebuild_check_every < 1:
-            raise ValueError(
-                f"rebuild_check_every must be >= 1, got "
-                f"{rebuild_check_every}"
-            )
         self.rebuild_when = rebuild_when
-        self.rebuild_check_every = rebuild_check_every
         self.policy_rebuilds = 0
         self._post_rebuild_imb: float | None = None
         if rebuild_when is not None:
@@ -367,8 +359,6 @@ class VectorIndexMaintainer(_DocIndexMaintainer):
     def apply(self, upserts: DataFrame, deleted_ids: DataFrame) -> None:
         super().apply(upserts, deleted_ids)
         if self.rebuild_when is None:
-            return
-        if self._applied % self.rebuild_check_every:
             return
         imb = self._imbalance()
         if imb is None or imb <= self.rebuild_when:

@@ -2091,7 +2091,7 @@ def test_cli_ann_rebuild_when_fires_in_daemon(spark, tmp_path):
 
     # the drift: 1200 inserts whose priority texts all hash to the
     # mode that crowds an existing cell hardest (mode 0 -> 5-LOW's
-    # cell; the scratch_soak_rebuild_policy selection, pinned here)
+    # cell, pinned here)
     hot, j = [], 0
     while len(hot) < 1200:
         t = f"drift{j}"

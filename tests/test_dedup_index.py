@@ -1196,6 +1196,23 @@ def test_minhash_cdc_update_into_dup_drops_and_tombstones(spark):
     idx.close()
 
 
+def test_minhash_cdc_short_upsert_leaves_the_corpus(spark):
+    """An upsert whose new text is under 3 tokens has no shingles: it is
+    accepted (no decision, as the one-shot _shingle_cte never calls a
+    short doc a duplicate), and its OLD version still leaves the live
+    corpus, so the old text stops blocking. A bulk short doc stays
+    accepted and unheld."""
+    old = " ".join(DOC.split()[:10])
+    idx = MinHashIndex(spark)
+    assert idx.ingest(_docs(spark, [(1, old), (3, "two words")])).count() == 0
+    assert idx.apply_cdc(_cdc(spark, [(1, "tiny text", "u")])).count() == 0
+    assert idx.live("vals").filter("doc_id IN (1, 3)").count() == 0
+    assert idx.ingest(_docs(spark, [(2, old)])).count() == 0
+    d = idx.ingest(_docs(spark, [(4, old)])).collect()
+    assert [(r.doc_id, r.dup_of) for r in d] == [(4, 2)]
+    idx.close()
+
+
 @pytest.mark.slow
 def test_minhash_cdc_compact_folds_and_reloads(spark, tmp_path):
     """compact() drops shadowed versions + tombstones physically; the

@@ -494,8 +494,6 @@ def test_vector_maintainer_rebuild_policy(spark):
     ivf_g = IVFVectorIndex(spark)
     with pytest.raises(ValueError, match="must be > 1"):
         VectorIndexMaintainer(ivf_g, rebuild_when=1.0)
-    with pytest.raises(ValueError, match="rebuild_check_every"):
-        VectorIndexMaintainer(ivf_g, rebuild_when=2.5, rebuild_check_every=0)
     ivf_g.close()
 
     # driver-side mode buckets over the mirrored clustered featurizer

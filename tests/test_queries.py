@@ -1,18 +1,30 @@
-"""Every registry query hash-matches its oracle at sf0.001 (the driver
-does the same at sf0.01) + plan-shape assertions for scale."""
+"""Every registry query hash-matches its oracle at sf0.001, and in the
+slow tier at sf0.01 (the scale the driver samples) + plan-shape
+assertions for scale."""
 
 import pytest
 
+from pgsync_spark import caching
 from pgsync_spark.queries import PPL_SAMPLE_MOD, REGISTRY
 from pgsync_spark.testing import compare
 
-from conftest import SF_DIR
+from conftest import SF_DIR, SF_DIR_01
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(spark, name):
+# sf0.001 cases keep the bare query name as their id; the sf0.01
+# sweep runs in the slow tier:
+#     pytest tests/test_queries.py -m slow -k test_query_matches_oracle
+@pytest.mark.parametrize(
+    "sf_dir, name",
+    [pytest.param(SF_DIR, n, id=n) for n in sorted(REGISTRY)]
+    + [
+        pytest.param(SF_DIR_01, n, id=f"sf0.01-{n}", marks=pytest.mark.slow)
+        for n in sorted(REGISTRY)
+    ],
+)
+def test_query_matches_oracle(spark, sf_dir, name):
     qdef = REGISTRY[name]
-    df = qdef.fn(spark, SF_DIR)
+    df = qdef.fn(spark, sf_dir)
     # Output contract: atomic columns only. The driver's pandas
     # canonicalizer (multi-column sort_values) cannot hash list/
     # struct/map cells — emit to_json(...) at the registry boundary
@@ -31,9 +43,10 @@ def test_query_matches_oracle(spark, name):
     )
     if qdef.oracle is None:
         assert df.count() >= 0
-        return
-    ok, msg = compare(df, qdef.oracle, SF_DIR)
-    assert ok, msg
+    else:
+        ok, msg = compare(df, qdef.oracle, sf_dir)
+        assert ok, msg
+    caching.release(df)
 
 
 def test_projection_pushdown_reaches_scan(spark):
@@ -746,6 +759,26 @@ def test_one_view_registrar():
     assert not bad, (
         "temp view registered outside sqlgen.ViewScope (lease it "
         "instead):\n" + "\n".join(bad)
+    )
+
+
+def test_no_scratch_scripts():
+    """Every check lives in a test tier and every measurement in
+    perfbench: no tools/ directory, and no scratch_*.py anywhere in the
+    repo (a one-shot script no suite runs guards nothing)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    assert (root / "pgsync_spark").is_dir() and (root / "tests").is_dir()
+    assert not (root / "tools").exists(), "tools/ is back"
+    bad = sorted(
+        str(f.relative_to(root))
+        for f in root.rglob("scratch_*.py")
+        if ".git" not in f.parts
+    )
+    assert not bad, (
+        "one-shot scratch script(s) in the repo (move the check into a "
+        "test or the measurement into perfbench):\n" + "\n".join(bad)
     )
 
 

@@ -599,9 +599,11 @@ def test_vector_cdc_fuzz_matches_oneshot(spark, family, seed):
     bm25 fuzz's contract on the embedding side): interleaved bulk
     ingests, vector-moving updates, deletes, CDC inserts,
     resurrections, truncates (with the IVF retrain-on-reseed rule),
-    and a mid-sequence compact — after every sequence the held state
-    must answer bit-identically to a one-shot index over the model
-    corpus (for IVF: one-shot under the SAME frozen codebook)."""
+    a mid-sequence compact, and for IVF a rebuild after epoch 0 —
+    after every CDC epoch and at the end the held state must answer
+    bit-identically to a one-shot index over the model corpus (for
+    IVF: one-shot under the SAME current codebook, so the CDC epochs
+    after the rebuild check assignment under the retrained one)."""
     import random
 
     from pgsync_spark.functions.hashing import hash_embed_py
@@ -636,6 +638,31 @@ def test_vector_cdc_fuzz_matches_oneshot(spark, family, seed):
             model[did] = v
             rows.append((did, v))
         idx.ingest(spark.createDataFrame(rows, schema))
+
+    q = spark.createDataFrame(
+        [(i, hash_embed_py(w)) for i, w in enumerate(vocab[:3])],
+        "query_id bigint, embedding array<double>",
+    )
+
+    def assert_matches_oneshot(at):
+        corpus = spark.createDataFrame(list(model.items()), schema)
+        got = [
+            tuple(r)
+            for r in idx.topk(q, k=5).orderBy("query_id", "rank").collect()
+        ]
+        ref = cls(spark)
+        if family == "ivf":
+            # the one-shot baseline serves under the SAME current
+            # codebook — a fresh training over the model corpus is a
+            # different (legal) index, not this one's contract
+            ref._cents = [row[:] for row in idx._cents]
+        ref.ingest(corpus)
+        want = [
+            tuple(r)
+            for r in ref.topk(q, k=5).orderBy("query_id", "rank").collect()
+        ]
+        ref.close()
+        assert got == want, (family, seed, at)
 
     seed_batch()
     for epoch in range(7):
@@ -693,32 +720,18 @@ def test_vector_cdc_fuzz_matches_oneshot(spark, family, seed):
                     list(batch.values()), schema + ", op string"
                 )
             )
+            assert_matches_oneshot(epoch)
+        if epoch == 0 and family == "ivf":
+            # a retrain over the grown corpus moves the codebook; both
+            # seeds run a CDC epoch before their first truncate
+            cents = [row[:] for row in idx._cents]
+            idx.rebuild()
+            assert idx._cents != cents, seed
         if epoch == 3:
             idx.compact()
 
-    corpus = spark.createDataFrame(list(model.items()), schema)
-    q = spark.createDataFrame(
-        [(i, hash_embed_py(w)) for i, w in enumerate(vocab[:3])],
-        "query_id bigint, embedding array<double>",
-    )
-    got = [
-        tuple(r)
-        for r in idx.topk(q, k=5).orderBy("query_id", "rank").collect()
-    ]
-    ref = cls(spark)
-    if family == "ivf":
-        # the one-shot baseline serves under the SAME frozen codebook
-        # — a fresh training over the final corpus is a different
-        # (legal) index, not this one's contract
-        ref._cents = [row[:] for row in idx._cents]
-    ref.ingest(corpus)
-    want = [
-        tuple(r)
-        for r in ref.topk(q, k=5).orderBy("query_id", "rank").collect()
-    ]
-    ref.close()
+    assert_matches_oneshot("end")
     idx.close()
-    assert got == want, (family, seed)
 
 
 def test_hash_embed_recognizer_pins_generator():
