@@ -188,6 +188,11 @@ class _AppendOnlyIndex:
         # epoch's val rows are ALL overlay rows, so the counter updates
         # before the manifest flip that persists it
         self._pending_overlay_delta = False
+        # the val parts apply_cdc appended since the last cutover, by
+        # segment name (store-less: the same epoch=N label): the only
+        # parts the overlay reads (_cdc_overlay). The manifest lists
+        # the names; _cutover empties it
+        self._cdc_parts: dict[str, DataFrame] = {}
         # one-SQL topk support: the index's own view registrar — views
         # over live(keys) and live(vals), memoized on the parts (and CDC
         # state) so an unchanged store re-registers nothing (see
@@ -245,6 +250,7 @@ class _AppendOnlyIndex:
                     "index": type(self).__name__,
                     "has_cdc": self._has_cdc,
                     "overlay_rows": self._overlay_rows,
+                    "cdc_segments": list(self._cdc_parts),
                     **self._manifest_extra(),
                 }
             ),
@@ -254,31 +260,36 @@ class _AppendOnlyIndex:
     #
     # apply_cdc (every index class, through _append_rows) appends
     # NEW-VERSION rows (op='u', ver=epoch) and delete tombstones
-    # (op='d') instead of rewriting held state. Readers
-    # fold the overlay (_cdc_live, one broadcast left join on the id):
-    # rows of untouched ids pass; touched ids keep only rows matching
-    # their latest version (a tombstone on top = dead). The overlay is
-    # sized by CDC traffic since the last compact() — compact folds it
-    # physically (shadowed versions and tombstones dropped, op reset
-    # to 'a') and the overlay returns to zero. On disk the op != 'a'
-    # scan prunes bulk segments at the parquet row-group level (op
-    # constant 'a').
+    # (op='d') instead of rewriting held state, each epoch as its own
+    # val part. The overlay is the latest (ver, op) of every id those
+    # parts touch, read from those parts alone (_cdc_parts), never
+    # from the bulk or compacted corpus (the dedup probe excepted, see
+    # _probe). Readers fold it (_cdc_live,
+    # one broadcast left join on the id): rows of untouched ids pass;
+    # touched ids keep only rows matching their latest version (a
+    # tombstone on top = dead). The overlay is sized by CDC traffic
+    # since the last cutover — compact() folds it physically
+    # (shadowed versions and tombstones dropped, op reset to 'a'),
+    # and the cutover empties _cdc_parts.
 
-    def _cdc_overlay(self) -> DataFrame:
-        """(id, ver, op) of each CDC-touched id's LATEST version —
-        max-ver per id over the held vals' op != 'a' rows (ver is
-        unique per id across epochs; within an epoch apply_cdc
-        enforces one row per id)."""
+    def _cdc_overlay(self, parts: list | None = None) -> DataFrame:
+        """(id, ver, op) of each CDC-touched id's LATEST version, over
+        the CDC parts only (``parts``: these val parts instead). One
+        part is its own overlay, a projection with no aggregate:
+        apply_cdc enforces one row per id within an epoch. Over several
+        parts, max-ver per id (ver is unique per id across epochs). A
+        flag set with no CDC part recorded (an apply_cdc that raised
+        before its commit) reads every held part."""
+        idc = self._ID_COL
+        parts = parts or list(self._cdc_parts.values()) or self._val_parts
+        rows = reduce(DataFrame.unionByName, parts).filter(F.col("op") != "a")
+        if len(parts) == 1:
+            return rows.select(idc, "ver", "op")
         s = F.max(F.struct("ver", "op")).alias("s")
         return (
-            self.vals.filter(F.col("op") != "a")
-            .groupBy(self._ID_COL)
+            rows.groupBy(idc)
             .agg(s)
-            .select(
-                self._ID_COL,
-                F.col("s.ver").alias("ver"),
-                F.col("s.op").alias("op"),
-            )
+            .select(idc, F.col("s.ver").alias("ver"), F.col("s.op").alias("op"))
         )
 
     def _check_cdc_readd(self, batch_ids: DataFrame) -> None:
@@ -614,7 +625,12 @@ class _AppendOnlyIndex:
                 for ids in (dels, unheld):
                     if ids is not None:
                         extra_dead = extra_dead.unionByName(ids)
-            overlay = self._cdc_overlay().persist()
+            # over every held part: the probe joins are planned from
+            # the overlay's size estimate, and an estimate over the CDC
+            # parts alone sits near the broadcast threshold, so the
+            # MinHash and embedding probes' plans (and job counts)
+            # would vary from run to run
+            overlay = self._cdc_overlay(self._val_parts).persist()
             held_keys = self._cdc_live(held_keys, overlay, extra_dead)
             held_vals = self._cdc_live(held_vals, overlay, extra_dead)
         pairs = self._verified_pairs(batch, held_keys, held_vals)
@@ -984,6 +1000,11 @@ class _AppendOnlyIndex:
         idx._segments = m.get(
             "segments", [f"epoch={e}" for e in sorted(idx._epochs)]
         )
+        # a manifest written before the CDC part record: every held
+        # part may carry CDC rows, so the overlay reads them all
+        cdc_segments = m.get(
+            "cdc_segments", idx._segments if idx._has_cdc else []
+        )
         for seg in idx._segments:
             # each side independently (a segment may hold only one:
             # BM25 batches of stats-only docs write vals, no keys)
@@ -1001,6 +1022,8 @@ class _AppendOnlyIndex:
                         spark.read.parquet(vp), op=True
                     ).persist()
                 )
+                if seg in cdc_segments:
+                    idx._cdc_parts[seg] = idx._val_parts[-1]
         if idx._overlay_rows < 0:
             # manifest written before the counter existed: one
             # load-time count re-seeds it (the op != 'a' scan
@@ -1110,6 +1133,8 @@ class _AppendOnlyIndex:
             caching.release_local_checkpoint(keys)
         if n_vals:
             self._val_parts.append(vals)
+            if self._pending_overlay_delta:
+                self._cdc_parts[f"epoch={epoch}"] = vals
         else:
             caching.release_local_checkpoint(vals)
         if self.store_dir is None:
@@ -1164,20 +1189,22 @@ class _AppendOnlyIndex:
         one frame per batch, growing every probe's plan linearly.
 
         One fold, one wave. With CDC state held (the exact
-        ``_overlay_rows`` counter is non-zero — no emptiness job), the
-        overlay is aggregated ONCE into a small leaf checkpoint, and
-        each side folds against it (_cdc_live: one single-key
+        ``_overlay_rows`` counter is non-zero — no emptiness job), each
+        side folds against the overlay (_cdc_live: one single-key
         broadcast) in the same projection that finalizes it: shadowed
         versions and tombstoned ids drop, survivors get op='a' and
-        ver=-1. Without CDC state the fold is
-        just that projection over the parts union. Both folded sides
-        then checkpoint in ONE concurrent wave
-        (caching.local_checkpoint_parallel); the keys row count rides
-        that checkpoint as an Observation (an empty keys side is
-        dropped — a partitioned write of an empty frame leaves an
-        unreadable dir, and _append gates the same way). The vals side
-        stays even when empty: an all-deleted corpus must still flip
-        the manifest off the old segments.
+        ver=-1. The overlay reads the CDC parts alone, never the
+        compacted corpus: one CDC part is its own overlay, a leaf
+        projection both sides broadcast directly; over several, the
+        max-ver aggregate runs ONCE into a small leaf checkpoint.
+        Without CDC state the fold is just that projection over the
+        parts union. Both folded sides then checkpoint in ONE
+        concurrent wave (caching.local_checkpoint_parallel); the keys
+        row count rides that checkpoint as an Observation (an empty
+        keys side is dropped — a partitioned write of an empty frame
+        leaves an unreadable dir, and _append gates the same way). The
+        vals side stays even when empty: an all-deleted corpus must
+        still flip the manifest off the old segments.
 
         Every rewrite resets ver to the -1 sentinel (the value the
         pre-CDC load shim uses): compacted rows are all live and
@@ -1237,10 +1264,13 @@ class _AppendOnlyIndex:
         # either side may be None (one-sided segments: BM25 batches of
         # stats-only docs hold vals, no keys)
         keys, vals = self.keys, self.vals
-        overlay = None
+        ck = None
         try:
             if dirty:
-                overlay = self._cdc_overlay().localCheckpoint(eager=True)
+                overlay = self._cdc_overlay()
+                if len(self._cdc_parts) != 1:
+                    # an aggregate: run it once for both sides
+                    overlay = ck = overlay.localCheckpoint(eager=True)
                 vals = self._cdc_live(vals, overlay).withColumn(
                     "op", F.lit("a")
                 )
@@ -1254,8 +1284,8 @@ class _AppendOnlyIndex:
                 [f for f in (keys, vals) if f is not None]
             )
         finally:
-            if overlay is not None:
-                caching.release_local_checkpoint(overlay)
+            if ck is not None:
+                caching.release_local_checkpoint(ck)
         new_keys = frames.pop(0) if keys is not None else None
         new_vals = frames.pop(0) if vals is not None else None
         if new_keys is not None and not obs.get["n"]:
@@ -1330,6 +1360,7 @@ class _AppendOnlyIndex:
                 setattr(self, key, value)
             self._has_cdc = False
             self._overlay_rows = 0
+            self._cdc_parts = {}
             if fold:
                 self._track_folded_keys(keys)
             if self.store_dir is not None:
@@ -1434,6 +1465,7 @@ class _AppendOnlyIndex:
                 f.unpersist()
         self._key_parts = []
         self._val_parts = []
+        self._cdc_parts = {}
 
 
 class MinHashIndex(_AppendOnlyIndex):

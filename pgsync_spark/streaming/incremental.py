@@ -330,12 +330,16 @@ class IncrementalEngine:
         # SearchIndexMaintainer): each gets apply(upserts, deleted_ids)
         # after the stores commit, and truncate() on a root TRUNCATE —
         # the reference's sync→search-index leg with the index owned
-        # by the engine (ref: pgsync/sync.py:1495-1528). The consumers
-        # of one batch run CONCURRENTLY, one thread each: they must
-        # own disjoint state (no shared view names or files) and must
-        # not read each other's effects within the batch. Every call
-        # returns before process_batch does; the first failure (in
-        # registration order) re-raises after all of them finished.
+        # by the engine (ref: pgsync/sync.py:1495-1528). Every consumer
+        # of a batch gets the same two frames, leaf projections of one
+        # per-batch checkpoint (the delta is materialized once, not
+        # per consumer), valid until process_batch returns. The
+        # consumers of one batch run CONCURRENTLY, one thread each:
+        # they must own disjoint state (no shared view names or files)
+        # and must not read each other's effects within the batch.
+        # Every call returns before process_batch does; the first
+        # failure (in registration order) re-raises after all of them
+        # finished.
         self.doc_consumers: list = []
 
     # -- store plumbing ------------------------------------------------
@@ -1017,24 +1021,10 @@ class IncrementalEngine:
                 combined_plan, cmeta.keys_cols, count_obs=count_obs
             )
             batch_tmp.append(new_combined)
-            self.stats["recomputed_docs"] += int(count_obs.get["n_docs"])
+            n_docs = int(count_obs.get["n_docs"])
+            self.stats["recomputed_docs"] += n_docs
             mark("recompute_tree")
-            # store maintenance is O(batch + overlay): replace the affected
-            # keys' rows in each overlay store (a key whose doc did not
-            # recompute simply has no replacement rows — the implicit
-            # delete). New-insert ids ride in via the rows side; they were
-            # never in the base, so the touched-key anti-join is exact.
-            # Both stores' overlay checkpoints (one each) go out in ONE
-            # concurrent wave.
-            apply_overlays_parallel([
-                (store, store.flagged(affected_ids, rows), n_affected)
-                for store, rows in (
-                    (self._docs_store, new_docs),
-                    (self._lineage_store, new_lineage),
-                )
-            ])
-            mark("stores_overlay")
-            self._maybe_release_shared()
+            delta = None
             if self.doc_consumers:
                 # the sink-facing doc DELTA: recomputed docs through the
                 # tree's plugin chain (a plugin-dropped doc is simply not
@@ -1042,17 +1032,64 @@ class IncrementalEngine:
                 # leaving whatever the sink held; ref: pgsync/sync.py:
                 # 1571-1572), plus the ids whose docs vanished (root row
                 # gone — the engine's implicit delete, made explicit for
-                # consumers). Both frames derive from this batch's eager
-                # checkpoints (new_combined / affected), so consumers run
-                # BEFORE the release below — as ONE concurrent wave: each
+                # consumers). Both go into ONE checkpoint, flagged by
+                # __gone, so the plugin chain and the anti join run once
+                # per batch, not once per consumer, and each consumer
+                # reads projections of that leaf. It keeps the recompute
+                # output's partitioning: each projection carries all of
+                # the leaf's partitions into every consumer's epoch, so
+                # extra partitions from the affected set would multiply
+                # the epochs' tasks.
+                vanished = affected_ids.join(
+                    maybe_broadcast(new_docs.select("_id"), known_rows=n_docs),
+                    "_id",
+                    "left_anti",
+                )
+                delta = (
+                    self._through_plugins(new_docs)
+                    .withColumn("__gone", F.lit(False))
+                    .unionByName(
+                        vanished.withColumn("__gone", F.lit(True)),
+                        allowMissingColumns=True,
+                    )
+                    .coalesce(max(1, new_docs.rdd.getNumPartitions()))
+                )
+            # store maintenance is O(batch + overlay): replace the affected
+            # keys' rows in each overlay store (a key whose doc did not
+            # recompute simply has no replacement rows — the implicit
+            # delete). New-insert ids ride in via the rows side; they were
+            # never in the base, so the touched-key anti-join is exact.
+            # Both stores' overlay checkpoints (one each) go out in ONE
+            # concurrent wave, and the doc delta's checkpoint (its two
+            # jobs: the broadcast and the checkpoint) runs beside it: it
+            # reads only this batch's checkpoints, never a store.
+            with ThreadPoolExecutor(1) as ex:
+                pending = None
+                if delta is not None:
+                    pending = ex.submit(delta.localCheckpoint, eager=True)
+                try:
+                    apply_overlays_parallel([
+                        (store, store.flagged(affected_ids, rows), n_affected)
+                        for store, rows in (
+                            (self._docs_store, new_docs),
+                            (self._lineage_store, new_lineage),
+                        )
+                    ])
+                finally:
+                    if pending is not None:
+                        delta = pending.result()
+                        batch_tmp.append(delta)
+            mark("stores_overlay")
+            self._maybe_release_shared()
+            if delta is not None:
+                # the consumers run as ONE concurrent wave, after the
+                # stores commit and before the release below: each
                 # index's apply + compaction is mostly driver-side
                 # scheduling, so serially the indexes took turns idling
                 # the executors (see the doc_consumers contract in
-                # __init__).
-                ups = self._through_plugins(new_docs)
-                gone = affected_ids.join(
-                    new_docs.select("_id"), "_id", "left_anti"
-                )
+                # __init__)
+                ups = delta.filter(~F.col("__gone")).drop("__gone")
+                gone = delta.filter(F.col("__gone")).select("_id")
                 _consumer_wave(
                     [partial(c.apply, ups, gone) for c in self.doc_consumers]
                 )

@@ -177,8 +177,11 @@ class _DocIndexMaintainer:
         ``deleted_ids`` (single ``_id`` column — docs whose root rows
         vanished) become tombstones. The engine guarantees the two id
         sets are disjoint, satisfying apply_cdc's one-row-per-doc
-        contract. A delete row is just the id and op='d' (its payload
-        columns fill as typed NULLs)."""
+        contract, and hands every consumer of a batch the same two
+        frames: leaf projections of one per-batch checkpoint, so the
+        shaping here and apply_cdc's validation read materialized
+        rows, never the recompute plan. A delete row is just the id and
+        op='d' (its payload columns fill as typed NULLs)."""
         ups = self._doc_shape(upserts).withColumn("op", F.lit("u"))
         dels = deleted_ids.selectExpr(
             f"({self.id_expr}) AS {self._ID}", "'d' AS op"

@@ -1876,27 +1876,168 @@ def _dirty_index(spark, kind, rounds=1):
     return idx, cdc
 
 
-@pytest.mark.parametrize("kind", ["bm25", "vector"])
-def test_cdc_compact_job_count(spark, kind):
-    """A CDC-dirty compaction is one overlay checkpoint plus one
-    concurrent wave folding both sides, each through one broadcast —
-    no emptiness job, no second overlay aggregation, no keys count, no
-    ver-reset rewrite. Counted as jobs the scheduler handed out around
-    compact()."""
-    idx, _ = _dirty_index(spark, kind)
+def _leaf_rdds(df):
+    """Ids of the checkpointed RDDs ``df``'s analyzed plan reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+@pytest.mark.parametrize(
+    "kind,rounds,jobs",
+    [
+        pytest.param("bm25", 1, 4, id="bm25"),
+        pytest.param("vector", 1, 4, id="vector"),
+        pytest.param("bm25", 3, 6, id="bm25-3parts"),
+        pytest.param("vector", 3, 6, id="vector-3parts"),
+    ],
+)
+def test_cdc_compact_job_count(spark, kind, rounds, jobs):
+    """A CDC-dirty compaction folds both sides in one concurrent wave,
+    each through one broadcast of an overlay read from the CDC parts
+    alone, never the compacted corpus. One CDC part is its own overlay
+    (4 jobs: no aggregate, no overlay checkpoint); several aggregate
+    once into one overlay checkpoint (6). No emptiness job, no keys
+    count, no ver-reset rewrite. Counted as jobs the scheduler handed
+    out around compact()."""
+    idx, cdc = _dirty_index(spark, kind)
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     try:
-        assert idx._has_cdc and idx._overlay_rows == 21
+        idx.compact()
+        corpus = _leaf_rdds(idx.vals)
+        for r in range(1, rounds + 1):
+            cdc(r)
+        assert idx._has_cdc and idx._overlay_rows == 21 * rounds
+        overlay = _leaf_rdds(idx._cdc_overlay())
+        assert len(overlay) == rounds and not overlay & corpus
         jobs0 = sched.numTotalJobs()
         idx.compact()
-        assert sched.numTotalJobs() - jobs0 == 6
+        assert sched.numTotalJobs() - jobs0 == jobs
         assert not idx._has_cdc and idx._overlay_rows == 0
         assert len(idx._key_parts) == len(idx._val_parts) == 1
         ver_op = idx.vals.groupBy("ver", "op").count().collect()
-        assert [(r.ver, r.op, r["count"]) for r in ver_op] == [(-1, "a", 199)]
+        live = 200 - 1 - rounds
+        assert [(r.ver, r.op, r["count"]) for r in ver_op] == [(-1, "a", live)]
         assert {r.ver for r in idx.keys.select("ver").distinct().collect()} == {-1}
+        ids = {r[0] for r in idx.vals.select(idx._ID_COL).collect()}
+        assert ids == set(range(200)) - set(range(150, 151 + rounds))
     finally:
         idx.close()
+
+
+@pytest.mark.parametrize("kind", ["bm25", "vector"])
+def test_cdc_overlay_parts_survive_reload(spark, tmp_path, kind):
+    """The overlay's CDC-part record across a store's life: a bulk
+    ingest, a CDC epoch, a bulk ingest of new ids (a clean part between
+    two dirty ones) and a second CDC epoch. The in-memory index, a
+    fresh load() of its store, and a load() of a copy whose manifest
+    lacks the record (every held part is then an overlay candidate)
+    all serve what a one-shot index over the live docs serves, before
+    and after a compact."""
+    import json
+    import random
+    import shutil
+
+    rnd = random.Random(11)
+    if kind == "bm25":
+        cls = BM25Index
+        schema = "doc_id bigint, text string, lang string, source string"
+
+        def payload(i, r):
+            return (f"alpha w{i % 5} r{r} w{i}", None, None)
+
+        def top(idx):
+            terms = ("alpha", "w1", "r1", "r3")
+            return [tuple(r) for r in idx.topk(terms, k=10).collect()]
+    else:
+        cls = VectorIndex
+        schema = "vec_id bigint, embedding array<double>"
+
+        def payload(i, r):
+            return ([rnd.uniform(-1, 1) for _ in range(16)],)
+
+        q = spark.createDataFrame(
+            [(0, payload(0, 0)[0]), (1, payload(0, 0)[0])],
+            "query_id bigint, embedding array<double>",
+        )
+
+        def top(idx):
+            return [
+                tuple(r)
+                for r in idx.topk(q, k=10).orderBy("query_id", "rank").collect()
+            ]
+
+    store = str(tmp_path / "store")
+    idx = cls(spark, store_dir=store)
+    live: dict = {}
+    tomb = (None,) * len(payload(0, 0))
+
+    def ingest(ids, r):
+        rows = [(i,) + payload(i, r) for i in ids]
+        live.update((row[0], row) for row in rows)
+        idx.ingest(spark.createDataFrame(rows, schema))
+
+    def cdc(ups, dels, r):
+        rows = [(i,) + payload(i, r) for i in ups]
+        live.update((row[0], row) for row in rows)
+        for i in dels:
+            live.pop(i)
+        idx.apply_cdc(
+            spark.createDataFrame(
+                [row + ("u",) for row in rows]
+                + [(i,) + tomb + ("d",) for i in dels],
+                schema + ", op string",
+            )
+        )
+
+    def oneshot():
+        ref = cls(spark)
+        ref.ingest(spark.createDataFrame(list(live.values()), schema))
+        out = top(ref)
+        ref.close()
+        return out
+
+    def live_vals(i):
+        return sorted(
+            tuple(r) for r in i.live("vals").drop("ver", "op").collect()
+        )
+
+    ingest(range(40), 0)
+    cdc(range(10), [30], 1)
+    ingest(range(100, 120), 2)
+    cdc([*range(5, 15), *range(100, 105)], [31, 110], 3)
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(store, legacy)
+    with open(os.path.join(legacy, "CURRENT")) as f:
+        m = json.load(f)
+    assert m.pop("cdc_segments") == ["epoch=1", "epoch=3"]
+    with open(os.path.join(legacy, "CURRENT"), "w") as f:
+        json.dump(m, f)
+    want = oneshot()
+    assert top(idx) == want
+    loaded, old = cls.load(spark, store), cls.load(spark, legacy)
+    try:
+        assert list(loaded._cdc_parts) == ["epoch=1", "epoch=3"]
+        assert list(old._cdc_parts) == old._segments
+        assert top(loaded) == top(old) == want
+        assert live_vals(loaded) == live_vals(old) == live_vals(idx)
+        assert [r[0] for r in live_vals(idx)] == sorted(live)
+        old.compact()
+        assert top(old) == want
+    finally:
+        loaded.close()
+        old.close()
+    idx.compact()
+    assert not idx._cdc_parts and top(idx) == want
+    idx.close()
+    loaded = cls.load(spark, store)
+    try:
+        assert not loaded._cdc_parts and top(loaded) == want
+    finally:
+        loaded.close()
 
 
 def _settled_jobs(spark):

@@ -172,6 +172,34 @@ def test_root_truncate_clears_engine_owned_index(spark, synced):
     assert {t[0] for t in got} == {777003}
 
 
+def test_plugin_chain_reaches_consumers(spark):
+    """With a plugin chain declared, the batch's doc delta reaches the
+    consumers through it (ref: pgsync/sync.py:1571-1572): the
+    maintained index serves what a one-shot index over
+    ``docs_for_sink()`` serves, the update ranked and the delete
+    gone."""
+    from pgsync_spark.plugin import load_plugins
+
+    tree = schemas.tree("orders_full")
+    eng = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+    eng.plugins = load_plugins(["slug"])
+    eng.full_sync()
+    idx = BM25Index(spark)
+    m = SearchIndexMaintainer(idx, text_expr=TEXT_EXPR)
+    m.seed(eng.docs_for_sink())
+    eng.doc_consumers.append(m)
+    try:
+        eng.process_batch(_cdc_batch(spark, eng.catalog, 90))
+        got = [tuple(r) for r in idx.topk(QUERY, k=10).collect()]
+        assert got == _oneshot_topk(spark, eng.docs_for_sink())
+        assert 7 in {t[0] for t in got}
+        live = idx.topk(("1-urgent",), k=10000).collect()
+        assert 5 not in {r.doc_id for r in live}
+    finally:
+        idx.close()
+        eng._teardown_stores()
+
+
 def test_seed_rejects_null_ids(spark):
     """r9 review finding: a NULL-producing id_expr (composite/string
     root PK) would silently collapse every doc onto one NULL identity
@@ -1009,6 +1037,132 @@ def test_concurrent_maintainers_compact_every_batch(spark):
             assert got_sem == _oneshot_ann(spark, post, q)
         assert 7 not in {t[0] for t in got_lex}
         assert 777010 in {t[0] for t in got_lex}
+    finally:
+        bidx.close()
+        vidx.close()
+        eng._teardown_stores()
+
+
+class _PhaseJobs(dict):
+    """A ``process_batch(timings=)`` dict that also records the Spark
+    jobs each phase ran: every phase end writes its timing, so the
+    scheduler's job total between two writes is that phase's."""
+
+    def __init__(self, sched):
+        super().__init__()
+        self.sched = sched
+        self.last = sched.numTotalJobs()
+        self.jobs: dict[str, int] = {}
+
+    def __setitem__(self, label, seconds):
+        n = self.sched.numTotalJobs()
+        self.jobs[label] = self.jobs.get(label, 0) + n - self.last
+        self.last = n
+        super().__setitem__(label, seconds)
+
+
+def test_doc_consumer_job_budget(spark, monkeypatch):
+    """The Spark jobs of one seeded CDC batch (an order update, an
+    order delete and a customer rename) through an engine with a BM25
+    and a vector maintainer, every compaction cadence at 1, are
+    pinned per phase and per maintainer: an added job shows up here as
+    a diff with a reason. The doc delta is materialized once per batch
+    (2 jobs, beside the stores' overlay wave), each maintainer's apply
+    reads it as leaves, and each compaction reads its overlay from its
+    one CDC part. The wave runs serially here, so each job is
+    attributed to its maintainer. The recompute tree runs 10 or 11
+    jobs: adaptive execution folds one shuffle stage into the final
+    job on some runs."""
+    from pgsync_spark.streaming import TableMaterializer, incremental
+
+    monkeypatch.setattr(
+        incremental, "_consumer_wave", lambda calls: [c() for c in calls]
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    cat = Catalog(spark, SF_DIR)
+    eng = IncrementalEngine(
+        spark,
+        schemas.tree("orders_full"),
+        cat,
+        TableMaterializer(cat, compact_every=1),
+    )
+    eng.STORE_COMPACT_EVERY = 1
+    eng.full_sync()
+    text = (
+        "concat_ws(' ', get_json_object(doc, '$.customer.c_name'), "
+        f"{TEXT_EXPR})"
+    )
+    bidx, vidx = BM25Index(spark), VectorIndex(spark)
+    bm = SearchIndexMaintainer(bidx, text_expr=text, compact_every=1)
+    vm = VectorIndexMaintainer(
+        vidx, vec_expr=hash_embed_sparksql(text), compact_every=1
+    )
+    docs = eng.docs_for_sink()
+    bm.seed(docs)
+    vm.seed(docs)
+    eng.doc_consumers.extend([bm, vm])
+    applies = {}
+    for name, m in (("bm25", bm), ("vector", vm)):
+
+        def counted(ups, gone, apply=m.apply, name=name):
+            jobs0 = sched.numTotalJobs()
+            apply(ups, gone)
+            applies[name] = sched.numTotalJobs() - jobs0
+
+        monkeypatch.setattr(m, "apply", counted)
+    try:
+        o7 = _order_row(cat, 7)
+        cust = (
+            cat.df("customer")
+            .filter(F.col("c_custkey") == o7["o_custkey"])
+            .collect()[0]
+            .asDict()
+        )
+        ev = payloads_from_rows(
+            spark,
+            [
+                {"op": "UPDATE", "table": "orders",
+                 "old": {"o_orderkey": 7},
+                 "new": dict(o7, o_orderpriority="incrementalpriority"),
+                 "txid": 80},
+                {"op": "DELETE", "table": "orders",
+                 "old": {"o_orderkey": 5}, "txid": 81},
+                {"op": "UPDATE", "table": "customer",
+                 "old": {"c_custkey": cust["c_custkey"]},
+                 "new": dict(cust, c_name="renamed customer"),
+                 "txid": 82},
+            ],
+        ).localCheckpoint(eager=True)
+        phases = _PhaseJobs(sched)
+        eng.process_batch(ev, timings=phases)
+        jobs = phases.jobs
+        assert jobs.pop("recompute_tree") in (10, 11)
+        assert jobs == {
+            "events_ckpt": 1,
+            "resolve_build": 0,
+            "bronze_resolve_wave": 15,
+            "ids_count": 0,
+            "affected_ckpt": 2,
+            "stores_overlay": 8,
+            "doc_consumers": 22,
+        }
+        assert applies == {"bm25": 12, "vector": 10}
+        # the same answers as a one-shot index over the post-batch docs
+        terms = ("incrementalpriority", "renamed", "1-urgent")
+        ref = BM25Index(spark)
+        ref.ingest(
+            eng.docs_for_sink().selectExpr(
+                "CAST(_id AS BIGINT) AS doc_id",
+                f"{text} AS text",
+                "CAST(NULL AS STRING) AS lang",
+                "CAST(NULL AS STRING) AS source",
+            )
+        )
+        want = [tuple(r) for r in ref.topk(terms, k=10).collect()]
+        ref.close()
+        got = [tuple(r) for r in bidx.topk(terms, k=10).collect()]
+        assert got == want
+        assert 7 in {t[0] for t in got} and 5 not in {t[0] for t in got}
     finally:
         bidx.close()
         vidx.close()

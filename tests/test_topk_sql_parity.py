@@ -174,7 +174,10 @@ def test_vector_topk_sql_parity_cdc_and_compact(spark, emb, queries):
         # the memoized views must re-register over the plain parts
         vidx.compact(force=True)
         assert not vidx._has_cdc
-        assert _shape(check()) == (5, 11, 0, 4)
+        # no runtime bloom filter over the compacted parts: compact's
+        # overlay reads the CDC parts alone, so their size estimate
+        # stays under the optimizer's application-side threshold
+        assert _shape(check()) == (5, 7, 0, 4)
     finally:
         vidx.close()
 
